@@ -257,7 +257,8 @@ final class ChangeJournal(
       .sortWithinPartitions(col("_p"), col("offset"))
       .write.mode("overwrite").partitionBy("_p")
       .option("compression", TableIO.dataCodec)
-      .options(TableIO.stagingWriteOptions).parquet(staging.toString)
+      .options(TableIO.stagingWriteOptions ++ io.writeOptions)
+      .parquet(staging.toString)
 
     // promote each partition's single part file to its offset-keyed name —
     // located by ONE recursive staging listing (no per-partition

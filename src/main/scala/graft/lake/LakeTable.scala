@@ -346,7 +346,6 @@ final class LakeTable(
     // that never saw it; pinning here makes the CAS guard the WHOLE batch.
     val plannedVersion = snap0.map(_.get("version").asLong).getOrElse(-1L)
     val m0 = manifestOf(snap0)
-    val timing = sys.env.contains("GRAFT_TIMING")
     var tMark = System.nanoTime()
     def mark(tag: String): Unit = {
       val now = System.nanoTime()
@@ -356,7 +355,6 @@ final class LakeTable(
       // in eng_cdc_merge is self-diagnosing instead of judge-adjudicated
       LakeTable.phaseSeconds.merge(tag, sec,
         (a, b) => Double.box(a.doubleValue + b.doubleValue)): Unit
-      if (timing) System.err.println(f"[timing]   merge/$tag $sec%.2fs")
       tMark = now
     }
 
@@ -628,7 +626,7 @@ final class LakeTable(
       toWrite
         .write.mode("overwrite").partitionBy("_pp", "_ss")
         .option("compression", TableIO.dataCodec)
-        .options(TableIO.stagingWriteOptions)
+        .options(TableIO.stagingWriteOptions ++ io.writeOptions)
         .parquet(staging.toString)
     } catch {
       case t: Throwable =>
@@ -692,9 +690,7 @@ final class LakeTable(
     // shape paid a per-level listStatus sweep plus an exists + listStatus
     // per touched bucket, O(touched) metadata round-trips per batch on an
     // object store. Loud failure beats silent corruption.
-    val tP0 = System.nanoTime()
     val stagedParts = io.listStagedParts(staging)
-    val tP1 = System.nanoTime()
     val staged = stagedParts.keys.toSeq.flatMap { rel =>
       val m = LakeTable.stagedBucketRe.findFirstMatchIn(rel)
       require(m.isDefined, s"unrecognized staged path $rel under $staging")
@@ -728,13 +724,7 @@ final class LakeTable(
         FileEntry(p, s, rel, schemaId, io.parquetRowCount(dest))
       } // None = bucket emptied by deletes
     }.flatten
-    val tP2 = System.nanoTime()
     io.fs.delete(staging, true)
-    val tP3 = System.nanoTime()
-    if (sys.env.contains("GRAFT_PROMOTE_TIMING")) System.err.println(
-      f"[promote-detail] list=${(tP1 - tP0) / 1e3}%.0fus " +
-        f"fanout=${(tP2 - tP1) / 1e3}%.0fus del=${(tP3 - tP2) / 1e3}%.0fus " +
-        f"n=${stagedParts.size}")
     mark("promote")
 
     val newWm = wm ++ statRows.map { case (p, maxOff, _, _, _) => p -> maxOff }
@@ -1102,7 +1092,7 @@ final class LakeTable(
         val seg = new Path(io.rootPath,
           f"_lineage/seg-$keepFrom%012d-${System.nanoTime()}%016x.parquet")
         spark.createDataFrame(rows).repartition(1)
-          .write.mode("overwrite").parquet(seg.toString)
+          .write.mode("overwrite").options(io.writeOptions).parquet(seg.toString)
       }
       io.fs.delete(legacyArchivePath, false): Unit
     }
@@ -1228,7 +1218,7 @@ final class LakeTable(
       .drop("_sub")
       .write.mode("overwrite").partitionBy("_pp", "_ss")
       .option("compression", TableIO.dataCodec)
-      .options(TableIO.stagingWriteOptions)
+      .options(TableIO.stagingWriteOptions ++ io.writeOptions)
       .parquet(staging.toString)
     // one recursive listing + promote/footer fan-out on the shared metadata
     // pool — the old shape was a SERIAL driver loop of listStatus + rename

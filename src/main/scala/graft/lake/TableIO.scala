@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileSystem, FsConstants, Path}
 import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets
 
@@ -40,6 +41,61 @@ object TableIO {
   private[graft] val stagingWriteOptions: Map[String, String] = Map(
     "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false",
     "mapreduce.fileoutputcommitter.algorithm.version" -> "2")
+
+  /** Whether the engine serves `root` with [[InJvmLocalFileSystem]] — the
+    * ONE place that choice is made. A `file:` root in a session that leaves
+    * the `file:` classes (`fs.file.impl`, `fs.AbstractFileSystem.file.impl`)
+    * at Hadoop's defaults gets it: Hadoop's checksummed local FS with its
+    * `chmod`/`readlink` forks run inside the JVM, so the bytes, `.crc`
+    * sidecars and mode bits on disk are unchanged. Any other root (HDFS,
+    * S3A), and a session that binds its own `file:` class (a counting FS, a
+    * test double), gets exactly what the session configures. `conf` is the
+    * one Spark's writes use (`sessionState.newHadoopConf()`), so a class
+    * bound with `spark.conf.set` counts as the session's own. The same idea
+    * as Delta Lake picking its log store by path scheme.
+    */
+  private[graft] def bindsInJvmLocal(root: Path, conf: Configuration): Boolean = {
+    def unset(key: String, default: String) =
+      Option(conf.getTrimmed(key)).forall(v => v.isEmpty || v == default)
+    val scheme = Option(root.toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    scheme == "file" &&
+      unset("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName) &&
+      unset("fs.AbstractFileSystem.file.impl", classOf[org.apache.hadoop.fs.local.LocalFs].getName)
+  }
+
+  /** The Hadoop FileSystem the engine mutates `root` through (see
+    * [[bindsInJvmLocal]]).
+    */
+  private[graft] def fileSystem(root: Path, conf: Configuration): FileSystem =
+    fileSystem(root, conf, bindsInJvmLocal(root, conf))
+
+  private def fileSystem(root: Path, conf: Configuration,
+      inJvmLocal: Boolean): FileSystem =
+    if (!inJvmLocal) root.getFileSystem(conf)
+    else {
+      val fs = new InJvmLocalFileSystem
+      fs.initialize(FsConstants.LOCAL_FS_URI, conf)
+      fs
+    }
+
+  /** The FileContext (rename with overwrite control) matching `fs`. */
+  private def fileContext(fs: FileSystem, conf: Configuration,
+      inJvmLocal: Boolean): FileContext =
+    if (inJvmLocal) FileContext.getFileContext(new InJvmLocalFs(fs.getUri, conf), conf)
+    else FileContext.getFileContext(fs.getUri, conf)
+
+  /** Hadoop options for a Spark write into a root the engine serves with
+    * [[InJvmLocalFileSystem]]: the write's tasks and committer resolve paths
+    * from its own Hadoop conf, so the class is bound there, per write. The
+    * cache is bypassed because Hadoop caches FileSystems by scheme, not by
+    * class. Empty when the root keeps the session's own FS.
+    */
+  private def writeOptions(inJvmLocal: Boolean): Map[String, String] =
+    if (!inJvmLocal) Map.empty
+    else Map(
+      "fs.file.impl" -> classOf[InJvmLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
 
   /** Parquet codec for DATA files (`graft.lake.codec`, default zstd).
     * A 100-TB lever: storage cost and scan IO trade against write CPU.
@@ -318,9 +374,17 @@ object RenameCommitStore extends CommitStore {
 
 final class TableIO(val root: String, spark: SparkSession,
     store: CommitStore = RenameCommitStore) {
-  private val conf = spark.sparkContext.hadoopConfiguration
+  // the conf Spark's own writes into this root resolve paths with, so the
+  // engine's choice of FileSystem agrees with theirs
+  private val conf = spark.sessionState.newHadoopConf()
   val rootPath = new Path(root)
-  val fs: FileSystem = rootPath.getFileSystem(conf)
+  private val inJvmLocal = TableIO.bindsInJvmLocal(rootPath, conf)
+  val fs: FileSystem = TableIO.fileSystem(rootPath, conf, inJvmLocal)
+
+  /** Hadoop options every Spark write into this root carries (see
+    * [[TableIO.writeOptions]]).
+    */
+  val writeOptions: Map[String, String] = TableIO.writeOptions(inJvmLocal)
 
   /** Bounded retry with jittered exponential backoff for driver-side FS
     * calls at the commit boundary (promote renames, snapshot swaps). Spark's
@@ -372,13 +436,13 @@ final class TableIO(val root: String, spark: SparkSession,
     finally out.close()
   }
 
-  private lazy val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
+  private lazy val fc = TableIO.fileContext(fs, conf, inJvmLocal)
 
   /** Single rename-with-OVERWRITE (FileContext — FileSystem.rename has no
     * overwrite flag). Exposed for [[RenameCommitStore]]; atomic on HDFS and
     * local fs.
     */
-  private[lake] def renameOverwrite(src: Path, dest: Path): Unit =
+  private[graft] def renameOverwrite(src: Path, dest: Path): Unit =
     fc.rename(fs.makeQualified(src), fs.makeQualified(dest),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
 

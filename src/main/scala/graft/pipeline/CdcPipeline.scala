@@ -115,8 +115,6 @@ final class CdcPipeline(
     * was load-bearing only because its two artifacts shared one cursor.
     */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
-    val timing = sys.env.contains("GRAFT_TIMING")
-    val t0 = System.nanoTime()
     if (journalEnabled) {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
@@ -177,8 +175,6 @@ final class CdcPipeline(
         }
       }
     }
-    if (timing) System.err.println(
-      f"[timing] batch $batchId wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
   }
 
   /** Batch-mode driver for tests and bench: split a static, deterministic

@@ -340,8 +340,10 @@ object GzArchive {
       startOffsets: Map[(String, Int), Long]): Unit = {
     require(recordsPerFile > 0, "recordsPerFile must be positive")
     val spark = df.sparkSession
+    // the conf Spark's writes use (context conf + session entries), so the
+    // task-side writer picks the same FileSystem as the driver-side publish
     val conf = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
 
     val base = df.select(col("topic").cast("string").as("topic"),
       col("partition").cast("int").as("partition"),
@@ -397,7 +399,7 @@ object GzArchive {
     // finer fan-out can pre-split its input partitions upstream.
     assigned
       .foreachPartition { rows: Iterator[Row] =>
-        val fs = new Path(root).getFileSystem(conf.value.value)
+        val fs = graft.lake.TableIO.fileSystem(new Path(root), conf.value.value)
         val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
         val tmpDir = new Path(root, s".inprogress/job-$jobTag/attempt-$attempt")
         var curTopic: String = null
@@ -445,7 +447,8 @@ object GzArchive {
     // metadata pool, then advance cursors atomically. Partitions this job
     // did not write keep their existing cursors, and pre-existing orphans
     // stay unacknowledged.
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tio = new graft.lake.TableIO(root, spark)
+    val fs = tio.fs
     val destDir = if (datePrefix.isEmpty) new Path(root) else new Path(root, datePrefix)
     import scala.jdk.CollectionConverters._
     val acks = written.value.asScala.toSeq
@@ -456,8 +459,6 @@ object GzArchive {
     // rename-with-OVERWRITE (FileContext is thread-safe), never
     // delete-then-rename: a crash between the two would leave a
     // cursor-acknowledged index pointing at a vanished data file
-    val fc = org.apache.hadoop.fs.FileContext
-      .getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
     graft.lake.MetaIO.fetchAll(acks) { case (t, p, first, attempt) =>
       val attemptDir = new Path(root, s".inprogress/job-$jobTag/attempt-$attempt")
       Seq(f"$t-$p%05d-$first%012d.gz", f"$t-$p%05d-$first%012d.index.json")
@@ -465,8 +466,7 @@ object GzArchive {
           val tmp = new Path(attemptDir, name)
           val dst = new Path(destDir, name)
           require(fs.exists(tmp), s"attempt $attempt reported $name but left no file")
-          fc.rename(fs.makeQualified(tmp), fs.makeQualified(dst),
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+          tio.renameOverwrite(tmp, dst)
         }
     }
     // atomic cursor swap: readers trust only the cursor, so there must
@@ -474,7 +474,6 @@ object GzArchive {
     // per-attempt-unique tmp + rename-with-overwrite — a FIXED tmp name
     // would let two racing writers (zombie + fenced successor) interleave
     // into one tmp and publish a torn cursor.
-    val tio = new graft.lake.TableIO(root, spark)
     acks.groupBy(a => (a._1, a._2)).foreach { case ((t, p), files) =>
       val latest = files.maxBy(_._3)
       val rel = f"$t-$p%05d-${latest._3}%012d.index.json"
