@@ -40,10 +40,10 @@ import org.apache.spark.sql.functions._
   * a task row — every executor task seeks and decompresses exactly one
   * member's byte range, so a 100 TB archive parallelizes at ~chunkThreshold
   * granularity with no full-file scans and no shuffle. The write side is
-  * FILE-grain parallel: file boundaries are pre-assigned from the archive
-  * offsets, so one task writes one output file (bytes depend only on that
-  * file's records) — a hot partition's backfill no longer serializes on a
-  * single task.
+  * PARTITION-grain parallel, like the reference's one writer per
+  * TopicPartition (S3SinkTask.java:107): one task per round-robin
+  * (topic, partition) streams that partition's files, so a hot partition
+  * is still one task.
   */
 object GzArchive {
 
@@ -232,13 +232,14 @@ object GzArchive {
     * assigned by rank over `sortCol` (which must therefore be unique per
     * partition for a deterministic archive).
     *
-    * Parallelism is FILE-grain: file boundaries are pre-assigned from the
-    * offsets (a file starts at each multiple of `recordsPerFile`), the
-    * batch is shuffled on (partition, file) and each task streams one
-    * file's records into a [[BlockGzWriter]] — a file's bytes depend only
-    * on its own record run, so the output is byte-identical to a serial
-    * per-partition writer while a hot partition's backfill fans out across
-    * tasks. Task commit is temp-write + rename (data first, then index —
+    * Parallelism is PARTITION-grain: file boundaries are pre-assigned from
+    * the offsets (a file starts at each multiple of `recordsPerFile`), the
+    * batch is shuffled once with one task per round-robin (topic,
+    * partition) (see [[archiveWriteFrame]]), and that task streams each of
+    * the partition's files into a [[BlockGzWriter]] — a file's bytes depend
+    * only on its own record run, so the output is byte-identical to a
+    * serial per-partition writer. A hot partition is still one task. Task
+    * commit is temp-write + rename (data first, then index —
     * the reference's upload order, S3Writer.java:61-81), so a speculative
     * or zombie attempt racing its retry never interleaves writes into a
     * published file: attempts write attempt-scoped temp names and the
@@ -329,6 +330,53 @@ object GzArchive {
       startOffsets.map { case (p, o) => (topic, p) -> o })
   }
 
+  /** The write frame: rows of (topic, partition, _file, _aoff, payload),
+    * each task holding whole (topic, partition) runs in ascending `_aoff`.
+    *
+    * Archive offsets come from a window over (topic, partition) ordered by
+    * `_sort`. Its exchange is routed BY ID: `_task = pmod(xxhash64(topic) +
+    * partition, n)` with n = `spark.sql.shuffle.partitions`, so one topic's
+    * densely numbered partitions go round-robin over the tasks (8 partitions
+    * on 4 tasks: 2 each). A hash exchange on (topic, partition) would pile
+    * several onto one task (3/2/2/1 for that shape, and AQE may coalesce
+    * its buckets further; it never coalesces a by-id exchange), and the
+    * busiest task would set the write's wall time. `_task` leads the
+    * window keys and is a function of (topic, partition), so the window's
+    * values are unchanged and it reuses the pass-through exchange instead
+    * of adding its own.
+    */
+  private[graft] def archiveWriteFrame(
+      df: DataFrame,
+      recordsPerFile: Long,
+      startOffsets: Map[(String, Int), Long]): DataFrame = {
+    val spark = df.sparkSession
+    val n = spark.sessionState.conf.numShufflePartitions
+    val base = df.select(col("topic").cast("string").as("topic"),
+      col("partition").cast("int").as("partition"),
+      col("_sort"), col("payload"))
+    val withStart =
+      if (startOffsets.isEmpty) base.withColumn("_start", lit(0L))
+      else {
+        val so = spark.createDataFrame(
+          startOffsets.toSeq.map { case ((t, p), o) => (t, p, o) })
+          .toDF("topic", "partition", "_start")
+        base.join(broadcast(so), Seq("topic", "partition"), "left")
+          .withColumn("_start", coalesce(col("_start"), lit(0L)))
+      }
+    val w = Window.partitionBy(col("_task"), col("topic"), col("partition"))
+      .orderBy(col("_sort"))
+    withStart
+      .withColumn("_task",
+        pmod(xxhash64(col("topic")) + col("partition"), lit(n.toLong)).cast("int"))
+      .repartitionById(n, col("_task"))
+      .withColumn("_aoff", row_number().over(w).cast("long") - 1L + col("_start"))
+      // file first-offset: aligned to multiples of recordsPerFile (for the
+      // default Long.MaxValue this is 0 — one file per topic-partition).
+      // pmod, not div*mul, so Long.MaxValue cannot overflow.
+      .withColumn("_file", col("_aoff") - pmod(col("_aoff"), lit(recordsPerFile)))
+      .select(col("topic"), col("partition"), col("_file"), col("_aoff"), col("payload"))
+  }
+
   private def writeArchivePayload(
       df: DataFrame,
       root: String,
@@ -344,27 +392,6 @@ object GzArchive {
     // task-side writer picks the same FileSystem as the driver-side publish
     val conf = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-
-    val base = df.select(col("topic").cast("string").as("topic"),
-      col("partition").cast("int").as("partition"),
-      col("_sort"), col("payload"))
-    val withStart =
-      if (startOffsets.isEmpty) base.withColumn("_start", lit(0L))
-      else {
-        val so = spark.createDataFrame(
-          startOffsets.toSeq.map { case ((t, p), o) => (t, p, o) })
-          .toDF("topic", "partition", "_start")
-        base.join(broadcast(so), Seq("topic", "partition"), "left")
-          .withColumn("_start", coalesce(col("_start"), lit(0L)))
-      }
-    val w = Window.partitionBy(col("topic"), col("partition")).orderBy(col("_sort"))
-    val assigned = withStart
-      .withColumn("_aoff", row_number().over(w).cast("long") - 1L + col("_start"))
-      // file first-offset: aligned to multiples of recordsPerFile (for the
-      // default Long.MaxValue this is 0 — one file per topic-partition).
-      // pmod, not div*mul, so Long.MaxValue cannot overflow.
-      .withColumn("_file", col("_aoff") - pmod(col("_aoff"), lit(recordsPerFile)))
-      .select(col("topic"), col("partition"), col("_file"), col("_aoff"), col("payload"))
 
     val hdr = header // avoid closing over the outer args object
     val trlr = trailer
@@ -383,21 +410,18 @@ object GzArchive {
     val jobTag = java.util.UUID.randomUUID().toString
     val written = spark.sparkContext
       .collectionAccumulator[(String, Int, Long, Long)]("gzarchive-written")
-    // NO second exchange: the offset window above already shuffled the
-    // payload once, hash-clustered by (topic, partition) and — by WindowExec's
-    // own required ordering — sorted by (topic, partition, _sort) within each
-    // task. `_aoff` is the row_number over that exact order and `_file`
-    // is monotone in `_aoff`, so every task already iterates contiguous
-    // (topic, partition, _file) runs in ascending `_aoff` order — precisely
-    // what the writer loop below needs. The previous
-    // `repartition(topic, partition, _file) + sortWithinPartitions` moved
-    // every payload byte through a SECOND full shuffle and sort only to
-    // re-establish a clustering the first exchange already guarantees
-    // (guide §2.4/§8: heavy bytes cross the wire once). Parallelism is one
-    // task per hash bucket of (topic, partition) — the Kafka-shaped
-    // per-partition writer the reference runs anyway; a backfill that needs
-    // finer fan-out can pre-split its input partitions upstream.
-    assigned
+    // NO second exchange: the frame's by-id exchange shuffled the payload
+    // once, and WindowExec's own required ordering sorted each task by
+    // (_task, topic, partition, _sort). `_aoff` is the row_number over that
+    // exact order and `_file` is monotone in `_aoff`, so every task already
+    // iterates contiguous (topic, partition, _file) runs in ascending `_aoff`
+    // order — precisely what the writer loop below needs, with no
+    // `repartition + sortWithinPartitions` to move every payload byte
+    // through a second shuffle and sort. Parallelism is one task per
+    // round-robin (topic, partition) — the Kafka-shaped per-partition writer
+    // the reference runs; a backfill that needs finer fan-out can pre-split
+    // its input partitions upstream.
+    archiveWriteFrame(df, recordsPerFile, startOffsets)
       .foreachPartition { rows: Iterator[Row] =>
         val fs = graft.lake.TableIO.fileSystem(new Path(root), conf.value.value)
         val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
@@ -465,8 +489,12 @@ object GzArchive {
         .foreach { name =>
           val tmp = new Path(attemptDir, name)
           val dst = new Path(destDir, name)
-          require(fs.exists(tmp), s"attempt $attempt reported $name but left no file")
-          tio.renameOverwrite(tmp, dst)
+          // read-and-catch: the rename itself reports a missing source
+          try tio.renameOverwrite(tmp, dst)
+          catch {
+            case e: java.io.FileNotFoundException => throw new IllegalArgumentException(
+              s"attempt $attempt reported $name but left no file", e)
+          }
         }
     }
     // atomic cursor swap: readers trust only the cursor, so there must
@@ -485,22 +513,27 @@ object GzArchive {
     // UUID-named, so nothing else would ever reclaim it — without this
     // sweep a flaky pipeline accumulates dead .gz bytes forever (the same
     // lazy-reap pattern as Staging.maintain and the journal's tombstones)
-    val inprog = new Path(root, ".inprogress")
-    if (fs.exists(inprog)) {
-      val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
-      // staleness = the NEWEST mtime anywhere under the job dir, not the
-      // top-level dir's (which goes stale as soon as its attempt dirs are
-      // created — a long-running concurrent writer's live staging must not
-      // be swept from under it)
-      def newestMtime(p: Path): Long = {
-        val sts = fs.listStatus(p)
-        (fs.getFileStatus(p).getModificationTime +: sts.toSeq.map { s =>
-          if (s.isDirectory) newestMtime(s.getPath) else s.getModificationTime
-        }).max
-      }
-      fs.listStatus(inprog).foreach { st =>
-        if (newestMtime(st.getPath) < cutoff) fs.delete(st.getPath, true): Unit
-      }
+    val jobs =
+      try fs.listStatus(new Path(root, ".inprogress"))
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
+    // staleness = the NEWEST mtime anywhere under the job dir, not the
+    // top-level dir's (which goes stale as soon as its attempt dirs are
+    // created — a long-running concurrent writer's live staging must not
+    // be swept from under it)
+    def newestMtime(p: Path): Long = {
+      val sts = fs.listStatus(p)
+      (fs.getFileStatus(p).getModificationTime +: sts.toSeq.map { s =>
+        if (s.isDirectory) newestMtime(s.getPath) else s.getModificationTime
+      }).max
+    }
+    jobs.foreach { st =>
+      val newest =
+        try newestMtime(st.getPath)
+        catch { // the owner's own cleanup raced the walk: nothing to reap
+          case _: java.io.FileNotFoundException => Long.MaxValue
+        }
+      if (newest < cutoff) fs.delete(st.getPath, true): Unit
     }
   }
 

@@ -620,6 +620,62 @@ class GzArchiveSpec extends AnyFunSuite {
     // could classify; benign, since every complete member decoded fully)
   }
 
+  test("write tasks split 8 partitions evenly: 2 per task at 4 shuffle partitions") {
+    // the reference runs one writer per TopicPartition. A hash exchange on
+    // (topic, partition) put 3/2/2/1 of these 8 on the 4 tasks, and AQE
+    // coalesced a small write's buckets into a single task.
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    val df = (0 until 800).map(i => (i % 8, (i / 8).toLong, s"record $i"))
+      .toDF("partition", "offset", "line")
+    Seq("true", "false").foreach { coalesce =>
+      val root = SparkTestSession.tempDir("gzbalance")
+      RecordsCreates.created.clear()
+      val keys = Seq("fs.file.impl" -> classOf[RecordingLocalFileSystem].getName,
+        "fs.file.impl.disable.cache" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> coalesce)
+      keys.foreach { case (k, v) => spark.conf.set(k, v) }
+      try GzArchive.writeArchive(df, root, "events", "offset", recordsPerFile = 40)
+      finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+
+      val Staged = (java.util.regex.Pattern.quote(root) +
+        """/\.inprogress/job-[^/]+/attempt-(\d+)/events-(\d{5})-\d{12}\.gz""").r
+      val partitionsByTask = RecordsCreates.created.asScala.toSeq
+        .collect { case Staged(attempt, p) => attempt -> p.toInt }
+        .groupBy(_._1).map { case (_, ps) => ps.map(_._2).toSet }
+      assert(partitionsByTask.toSeq.map(_.size).sorted === Seq(2, 2, 2, 2),
+        s"coalesce=$coalesce: $partitionsByTask")
+      assert(partitionsByTask.flatten.toSet === (0 until 8).toSet)
+      assert(GzArchive.fetchOffsets(spark, root, "events") ===
+        (0 until 8).map(_ -> 100L).toMap)
+    }
+  }
+
+  test("the archive write frame is one by-id Exchange and one Sort") {
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    val payload = spark.range(200).select(lit("events").as("topic"),
+      (col("id") % 8).cast("int").as("partition"), col("id").as("_sort"),
+      encode(col("id").cast("string"), "UTF-8").as("payload"))
+    // with start offsets the only other exchange is their broadcast
+    Seq(Map.empty[(String, Int), Long], Map(("events", 3) -> 40L)).foreach { starts =>
+      val plan = GzArchive.archiveWriteFrame(payload, 10L, starts)
+        .queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }
+      val exchanges = plan.collect { case e: Exchange => e.getClass.getSimpleName }
+      assert(exchanges.sorted === (if (starts.isEmpty) Seq("ShuffleExchangeExec")
+        else Seq("BroadcastExchangeExec", "ShuffleExchangeExec")), plan)
+      assert(plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+        .forall(_.isInstanceOf[ShufflePartitionIdPassThrough]), plan)
+      assert(plan.collect { case s: SortExec => s }.size === 1, plan)
+    }
+  }
+
   test("executor tasks see the session's Hadoop configuration") {
     // the regression this guards: executor-side `new Configuration()` drops
     // session settings (S3A credentials, endpoints) — archive tasks must
