@@ -296,7 +296,6 @@ final class ChangeJournal(
       fileNode.put("partition", p)
       fileNode.put("path", rel)
       fileNode.put("first_record_offset", firstOffset)
-      fileNode.put("num_records", sorted.map(_.getLong(3)).sum)
       fileNode.put("max_offset", sorted.map(_.getLong(4)).max)
       val arr = fileNode.putArray("chunks")
       var byteOffset = 0L // chunks tile the file's byte space from 0
@@ -309,7 +308,7 @@ final class ChangeJournal(
         byteOffset += r.getLong(5)
         arr.add(c)
       }
-      appended += sorted.map(_.getLong(3)).sum
+      appended += statRows
       fileNode
     }
     io.fs.delete(staging, true)
@@ -446,8 +445,7 @@ final class ChangeJournal(
     * the same unreaped garbage every pass); bounded by the grace window
     */
   private def alreadyPending(): Set[String] =
-    if (!io.fs.exists(pendingDir)) Set.empty
-    else MetaIO.fetchAll(io.fs.listStatus(pendingDir).toSeq
+    MetaIO.fetchAll(io.listOrEmpty(pendingDir).toSeq
       .filter(_.getPath.getName.matches("""del-.*\.json"""))) { st => // not .tmp-*
         // fanned out on the shared metadata pool: at a truncate-per-batch
         // cadence with a day's grace this is hundreds of small GETs on an
@@ -481,38 +479,43 @@ final class ChangeJournal(
     */
   private def reapPending(graceMs: Long): Unit = {
     migrateLegacyPending()
-    if (!io.fs.exists(pendingDir)) return
+    val listed = io.listOrEmpty(pendingDir)
+    if (listed.isEmpty) return
     val cutoff = System.currentTimeMillis() - graceMs
-    io.fs.listStatus(pendingDir).toSeq
+    val reaped = listed.count { st =>
       // exact .json names only: a crash-leaked writeAtomic tmp
       // (del-*.json.tmp-*) must not be parsed — or reaped as if complete
-      .filter(_.getPath.getName.matches("""del-.*\.json""")).foreach { st =>
+      st.getPath.getName.matches("""del-.*\.json""") && {
         // a concurrent reaper may have taken this tombstone already —
         // its deletes were idempotent with ours, nothing left to do
         val node = try Json.parse(io.readString(st.getPath))
                    catch { case _: java.io.FileNotFoundException => null }
-        if (node != null && node.get("droppedAt").asLong <= cutoff) {
+        node == null || node.get("droppedAt").asLong <= cutoff && {
           node.get("paths").elements().asScala.foreach(p =>
             io.fs.delete(new Path(io.rootPath, p.asText), false): Unit)
           io.fs.delete(st.getPath, false): Unit
+          true
         }
       }
-    // cosmetic empty-dir cleanup, best-effort ONLY: a concurrent truncator
-    // may add a tombstone between our listing and the delete (non-recursive
-    // delete of a non-empty dir throws), and a concurrent reaper may have
-    // removed the dir already — both races are benign
-    try {
-      if (io.fs.exists(pendingDir) && io.fs.listStatus(pendingDir).isEmpty)
-        io.fs.delete(pendingDir, false): Unit
-    } catch { case _: java.io.IOException => () }
+    }
+    // cosmetic empty-dir cleanup once everything listed is gone, best-effort
+    // ONLY: a concurrent truncator may add a tombstone after our listing
+    // (non-recursive delete of a non-empty dir throws), and a concurrent
+    // reaper may have removed the dir already — both races are benign
+    if (reaped == listed.length)
+      try io.fs.delete(pendingDir, false): Unit
+      catch { case _: java.io.IOException => () }
   }
 
   /** one-time migration of the old read-modify-write pending-delete.json:
     * rewrite each drop-time group as its own immutable tombstone file
     */
   private def migrateLegacyPending(): Unit = {
-    if (!io.fs.exists(legacyPendingPath)) return
-    Json.parse(io.readString(legacyPendingPath)).elements().asScala.toSeq
+    // read-and-catch: one RPC per truncate, no exists probe
+    val legacy =
+      try io.readString(legacyPendingPath)
+      catch { case _: java.io.FileNotFoundException => return }
+    Json.parse(legacy).elements().asScala.toSeq
       .groupBy(_.get("droppedAt").asLong).foreach { case (at, entries) =>
         val o = Json.obj()
         o.put("droppedAt", at)

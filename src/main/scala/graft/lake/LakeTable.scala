@@ -158,12 +158,14 @@ final class LakeTable(
   def currentSchema: Option[StructType] = schemas().lastOption
 
   private case class FileEntry(partition: Int, sub: Int, path: String,
-      schemaId: Int, numRecords: Long)
+      schemaId: Int)
 
+  // manifests written before num_records was dropped still carry it per
+  // entry; it is ignored here like any other unknown field
   private def entriesOf(arr: JsonNode): Seq[FileEntry] =
     arr.elements().asScala.map { f =>
       FileEntry(f.get("partition").asInt, f.get("sub").asInt,
-        f.get("path").asText, f.get("schemaId").asInt, f.get("num_records").asLong)
+        f.get("path").asText, f.get("schemaId").asInt)
     }.toSeq
 
   /** A delta manifest records only the buckets its commit touched; a full
@@ -361,7 +363,7 @@ final class LakeTable(
     val wm = m0.map(wmOf).getOrElse(Map.empty)
     // watermark dedup as an O(1)-per-row literal lookup, not a broadcast
     // join — see LakeTable.offsetGate
-    val deduped0 = LakeTable.offsetGate(batch, wm, strict = true)
+    val deduped = LakeTable.offsetGate(batch, wm, strict = true)
     // The batch is scanned twice (lineage stats + LWW reduce) but NOT
     // persisted: the stats pass prunes to 4 small columns (a fraction of a
     // columnar scan), while a persist would materialize EVERY column into
@@ -371,7 +373,6 @@ final class LakeTable(
     // dominated merge/stats and scaled at <2x from 2 to 8 cores). Sources
     // are deterministic (file-backed or cached upstream), so recompute is
     // safe and the second scan reads only what the write needs.
-    val deduped = deduped0
 
     // schema evolution: merge incoming payload schema into the lake schema.
     // Columns soft-dropped via dropColumn are filtered from the incoming
@@ -412,61 +413,33 @@ final class LakeTable(
       .getOrElse(subBuckets)
     val withSub = deduped.withColumn("_sub", subExpr(sb))
 
-    // The pre-pass cannot disappear entirely: its touched-bucket set gates
-    // the STATE read (file-level pruning — untouched buckets never leave
-    // disk), which must happen before the merge write. But it can shrink:
-    // `observe` mode prunes the pre-pass to the three columns `_sub`
-    // actually needs (partition, repo, path) and a distinct, and collects
-    // the per-partition lineage/watermark stats DURING the write job via a
-    // named observe routed by [[MergeStats]] on the batch side of the union
-    // — the write scans the batch anyway, so those aggregates ride an
-    // existing pass instead of paying their own scan of `offset`/`op`.
-    //
-    // MEASURED (r5, fresh JVMs, interleaved pairs — BENCH/BASELINE.md):
-    // observe wins ~2% on a parquet-backed batch (sf0.1 gate: stats 3.4 →
-    // 2.9 s, write +0.2 s) but LOSES ~12% on the cached-generator ingest
-    // the scaling rule grades (local[8] 2M×4: 20.0 → 22.9 s best-of-3) —
-    // CollectMetricsExec evaluates its conditional aggregates interpreted,
-    // per row, inside the write's hot path, where the separate pre-pass
-    // scan was nearly free against a cached source. Default is therefore
-    // `agg`; `-Dgraft.merge.stats=observe` (or the env var) keeps the
-    // alternative runnable — it is the right trade when batch scans are
-    // expensive relative to write throughput.
-    val statsMode = sys.props.get("graft.merge.stats")
-      .orElse(sys.env.get("GRAFT_MERGE_STATS")).getOrElse("agg")
-    // a typo must not silently select the non-default (measured-slower-for-
-    // the-common-shape) path
-    require(statsMode == "agg" || statsMode == "observe",
-      s"graft.merge.stats must be 'agg' or 'observe', got '$statsMode'")
-    // agg mode fills statRows here; observe mode defers them to the write
-    var aggStatRows: Seq[(Int, Long, Long, Long, Long)] = Nil
-    val touched: Set[(Int, Int)] =
-      if (statsMode == "agg") {
-        val bucketRows = withSub.groupBy(col("partition"), col("_sub")).agg(
-          max(col("offset")).as("maxOff"), min(col("offset")).as("minOff"),
-          count(lit(1)).as("n"),
-          sum(when(col("op") === "upsert", 1L).otherwise(0L)).as("nUp"))
-          .collect()
-        // partition-level rollup: (partition, maxOff, minOff, n, nUp)
-        aggStatRows = bucketRows.groupBy(_.getInt(0)).map { case (p, rs) =>
-          (p, rs.map(_.getLong(2)).max, rs.map(_.getLong(3)).min,
-            rs.map(_.getLong(4)).sum, rs.map(_.getLong(5)).sum)
-        }.toSeq
-        bucketRows.map(r => (r.getInt(0), r.getInt(1))).toSet
-      } else {
-        withSub.select(col("partition"), col("_sub")).distinct().collect()
-          .map(r => (r.getInt(0), r.getInt(1))).toSet
-      }
+    // ONE stats job over the gated batch, a codegen'd hash aggregate. Its
+    // (partition, _sub) groups are the touched-bucket set, which gates the
+    // STATE read (file-level pruning — untouched buckets never leave disk)
+    // and so must be known before the merge write; their per-partition
+    // rollup is the batch's lineage and watermark rows. Collecting these
+    // stats inside the write job instead (a CollectMetrics node) measured
+    // ~12% slower on the cached-generator ingest: CollectMetricsExec
+    // evaluates its aggregates interpreted, per row, in the write's hot
+    // path (BENCH/BASELINE.md r5, r7).
+    val bucketRows = withSub.groupBy(col("partition"), col("_sub")).agg(
+      max(col("offset")).as("maxOff"), min(col("offset")).as("minOff"),
+      count(lit(1)).as("n"),
+      sum(when(col("op") === "upsert", 1L).otherwise(0L)).as("nUp"))
+      .collect()
+    val touched = bucketRows.map(r => (r.getInt(0), r.getInt(1))).toSet
+    // (partition, maxOff, minOff, n, nUp)
+    val statRows = bucketRows.groupBy(_.getInt(0)).map { case (p, rs) =>
+      (p, rs.map(_.getLong(2)).max, rs.map(_.getLong(3)).min,
+        rs.map(_.getLong(4)).sum, rs.map(_.getLong(5)).sum)
+    }.toSeq
     mark("stats")
     if (touched.isEmpty) {
       commit(Delta(Nil, Nil), wm, newSchemas, batchId, Nil, sb,
         plannedVersion)
+      mark("commit")
       return 0L
     }
-    // the partitions this batch touches — bounded by the topic's partition
-    // count (a Kafka-shaped constant, not data volume), so 4 conditional
-    // aggregates per partition in the observe node stay cheap
-    val touchedParts = touched.map(_._1).toSeq.sorted
 
     val touchedFiles =
       liveFilesOf(snap0).filter(f => touched.contains((f.partition, f.sub)))
@@ -499,185 +472,75 @@ final class LakeTable(
     // Within-batch LWW, state-vs-batch preference, and write layout all ride
     // the same single exchange. Partial aggregation still combines hot keys
     // map-side (the implicit salting the north star's skew story needs).
-    // observe mode: the per-partition lineage/watermark stats ride the write
-    // job's existing batch scan as an `Observation` (CollectMetrics) node.
-    // It sits on the BATCH side only (state rows must not count toward batch
-    // lineage) and BEFORE the survivors filter (watermarks must advance over
-    // deletes too). Grouped-by-partition shape is expressed as conditional
-    // aggregates over the touched partitions — bounded by the topic's
-    // partition count, not data volume.
-    // observe mode expresses grouped-by-partition stats as 4 conditional
-    // aggregates PER TOUCHED PARTITION inside one CollectMetrics node —
-    // bounded by the topic's partition count in the Kafka-CDC shape, but a
-    // 10k-partition topic would put 40k interpreted aggregates in the write's
-    // hot path. Past this bound the pre-pass agg (one hash aggregate,
-    // codegen'd, any partition count) is strictly the right plan, so fall
-    // back loudly rather than degrade quietly.
-    val maxObservePartitions = sys.props.get("graft.merge.observe.maxPartitions")
-      .map { v =>
-        try v.toInt catch {
-          case e: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.merge.observe.maxPartitions must be an integer, got '$v'", e)
-        }
-      }.getOrElse(1024)
-    val observeViable = touchedParts.size <= maxObservePartitions
-    if (statsMode == "observe" && !observeViable)
-      System.err.println(s"[graft] WARN: merge stats observe mode requested " +
-        s"but the batch touches ${touchedParts.size} partitions " +
-        s"(> $maxObservePartitions) — CollectMetrics would carry " +
-        s"${4 * touchedParts.size} interpreted aggregates in the write hot " +
-        "path; using the agg pre-pass for this batch")
-    val obs =
-      if (statsMode == "agg" || !observeViable) None
-      else Some(s"merge-$batchId-${java.util.UUID.randomUUID().toString.take(8)}")
-    // EVERYTHING from the expect() inside the fold below through the write
-    // runs under one discard-on-failure guard: an analysis error building
-    // the union, a staging-delete IOException, or a failed write would
-    // otherwise strand the declared handoff (each retried batch uses a
-    // fresh UUID name, so stranded entries would accumulate one per failed
-    // attempt — the exact unbounded-residue mode MergeStats exists to
-    // close). discard after a successful await is a harmless no-op.
+    // The batch side is the union's LEFT operand, so the write runs in the
+    // batch's SparkSession (a union keeps its left operand's): in
+    // foreachBatch that is the streaming query's session and SQL conf, not
+    // the constructor session the state read rides.
+    val newShaped = shape(withSub).withColumn("_new", lit(1))
+    val unioned = state match {
+      case None => newShaped
+      case Some(st) => newShaped.unionByName(
+        shape(st.withColumn("op", lit("upsert"))).withColumn("_new", lit(0)))
+    }
+    // max_by carries a struct buffer, which HashAggregateExec's fixed-width
+    // mutable buffer cannot hold — the LWW reduce is a SortAggregate, fed
+    // by one sort on (partition, _sub, repo, path). That order is EXACTLY
+    // the clustered-write order, so the group keys stay grouping
+    // ATTRIBUTES (only the payload rides the max_by struct): the
+    // aggregate's output ordering then survives alias-aware through the
+    // projections below and the explicit write sort is removed as
+    // redundant (RemoveRedundantSorts) — ONE sort for the whole merge
+    // write instead of two full sorts of the merged payload (measured;
+    // the plan shape is pinned by LakeSpec "the merge write job is one
+    // Exchange and one Sort"). Taking the keys from the grouping side is
+    // value-identical: a group's winner carries the group's own key by
+    // definition.
+    val groupCols = Seq("partition", "_sub", "repo", "path")
+    val mcols = unioned.columns.filter(c => c != "_new" && !groupCols.contains(c))
+    // Explicit partition count, derived from the work's own shape (the
+    // touched-bucket count, capped by the session's tuned shuffle
+    // parallelism) rather than left to AQE: the reduce side of this
+    // exchange ends in one parquet FILE per touched bucket, and AQE's
+    // byte-based advisory coalescing — blind to per-file open/close/
+    // footer cost — collapses a small batch's shuffle to one task that
+    // writes every bucket file serially (measured: the dominant slice of
+    // merge/write at gate scale). min(touched, shuffle.partitions) is
+    // scale-adaptive in both directions: small batches parallelize by
+    // bucket, huge touched sets still respect the cluster-tuned cap.
+    val writeParts = math.min(touched.size,
+      spark.sessionState.conf.numShufflePartitions).max(1)
+    val merged0 = unioned
+      .repartition(writeParts, col("partition"), col("_sub"))
+      .groupBy(col("partition"), col("_sub"), col("repo"), col("path"))
+      .agg(max_by(struct(mcols.map(col).toIndexedSeq: _*),
+        struct(col("_new"), col("offset"))).as("_m"))
+      .select(unioned.columns.filter(_ != "_new").map(c =>
+        if (groupCols.contains(c)) col(c) else col(s"_m.$c")).toIndexedSeq: _*)
+    val survivors = merged0.filter(col("op") === "upsert").drop("op")
+
+    // rewrite each touched bucket as exactly one deterministically named file;
+    // `_pp`/`_ss` duplicate the keys for the directory layout only (files stay
+    // self-contained — partitionBy strips its columns from file contents).
+    // sort prefix (_pp, _ss) satisfies the dynamic-partition write's required
+    // ordering — without it FileFormatWriter would insert its own UNSTABLE
+    // prefix-only sort (nondeterministic bytes on retry). The full
+    // (_pp, _ss, repo, path) key keeps retried batches byte-identical and
+    // the sort itself is ELIMINATED at physical planning whenever the
+    // aggregate's ordering reaches here (see groupCols above).
+    val toWrite = survivors
+      .withColumn("_pp", col("partition")).withColumn("_ss", col("_sub"))
+      .sortWithinPartitions(col("_pp"), col("_ss"), col("repo"), col("path"))
+      .drop("_sub")
     // appId-namespaced: two writers legitimately race one root now (CAS
     // commit), and their staging must never collide on a shared batchId
     val staging = new Path(io.rootPath, s"_staging/merge-$appId-$batchId")
-    try {
-      io.fs.delete(staging, true)
-      val newShaped = obs.fold(shape(withSub)) { name =>
-        val statExprs = touchedParts.flatMap { p =>
-          val in = col("partition") === p
-          Seq(max(when(in, col("offset"))).as(s"max_$p"),
-            min(when(in, col("offset"))).as(s"min_$p"),
-            sum(when(in, 1L).otherwise(0L)).as(s"n_$p"),
-            sum(when(in && col("op") === "upsert", 1L).otherwise(0L)).as(s"nup_$p"))
-        }
-        val framed = shape(withSub)
-        // NAMED observe + MergeStats' one shared per-session listener, not an
-        // `Observation`: Observation's internal listener has no public
-        // unregister, so every starved observation leaked one permanently —
-        // MergeStats removes its handoff on every exit path (timeout
-        // included), keeping residue at zero across N starved merges
-        // (spec-pinned, LakeSpec). Declared interest BEFORE the write action
-        // below, on the frame's own session — the one whose bus delivers.
-        MergeStats.expect(framed.sparkSession, name)
-        framed.observe(name, statExprs.head, statExprs.tail: _*)
-      }.withColumn("_new", lit(1))
-      val unioned = state match {
-        case None => newShaped
-        case Some(st) => newShaped.unionByName(
-          shape(st.withColumn("op", lit("upsert"))).withColumn("_new", lit(0)))
-      }
-      // max_by carries a struct buffer, which HashAggregateExec's fixed-width
-      // mutable buffer cannot hold — the LWW reduce is a SortAggregate, fed
-      // by one sort on (partition, _sub, repo, path). That order is EXACTLY
-      // the clustered-write order, so the group keys stay grouping
-      // ATTRIBUTES (only the payload rides the max_by struct): the
-      // aggregate's output ordering then survives alias-aware through the
-      // projections below and the explicit write sort is removed as
-      // redundant (RemoveRedundantSorts) — ONE sort for the whole merge
-      // write instead of two full sorts of the merged payload (measured +
-      // plan-verified, plans/r08/eng_cdc_merge_write_*.txt). Taking the
-      // keys from the grouping side is value-identical: a group's winner
-      // carries the group's own key by definition.
-      val groupCols = Seq("partition", "_sub", "repo", "path")
-      val mcols = unioned.columns.filter(c => c != "_new" && !groupCols.contains(c))
-      // NOTE the union order above: the BATCH-derived side is the LEFT
-      // operand, so the written dataset keeps the batch's SparkSession. In
-      // streaming foreachBatch the batch rides a cloned session while state
-      // (readFiles) rides the constructor session, and Observation delivery
-      // is per-session (ExecutionListenerBus filters on the executing qe's
-      // sessionUUID) — with state on the left, the stats observation above
-      // would never complete (measured: every streaming merge with non-empty
-      // state starved until the 30s fallback).
-      // Explicit partition count, derived from the work's own shape (the
-      // touched-bucket count, capped by the session's tuned shuffle
-      // parallelism) rather than left to AQE: the reduce side of this
-      // exchange ends in one parquet FILE per touched bucket, and AQE's
-      // byte-based advisory coalescing — blind to per-file open/close/
-      // footer cost — collapses a small batch's shuffle to one task that
-      // writes every bucket file serially (measured: the dominant slice of
-      // merge/write at gate scale). min(touched, shuffle.partitions) is
-      // scale-adaptive in both directions: small batches parallelize by
-      // bucket, huge touched sets still respect the cluster-tuned cap.
-      val writeParts = math.min(touched.size,
-        spark.sessionState.conf.numShufflePartitions).max(1)
-      val merged0 = unioned
-        .repartition(writeParts, col("partition"), col("_sub"))
-        .groupBy(col("partition"), col("_sub"), col("repo"), col("path"))
-        .agg(max_by(struct(mcols.map(col).toIndexedSeq: _*),
-          struct(col("_new"), col("offset"))).as("_m"))
-        .select(unioned.columns.filter(_ != "_new").map(c =>
-          if (groupCols.contains(c)) col(c) else col(s"_m.$c")).toIndexedSeq: _*)
-      val survivors = merged0.filter(col("op") === "upsert").drop("op")
-
-      // rewrite each touched bucket as exactly one deterministically named file;
-      // `_pp`/`_ss` duplicate the keys for the directory layout only (files stay
-      // self-contained — partitionBy strips its columns from file contents).
-      // sort prefix (_pp, _ss) satisfies the dynamic-partition write's required
-      // ordering — without it FileFormatWriter would insert its own UNSTABLE
-      // prefix-only sort (nondeterministic bytes on retry). The full
-      // (_pp, _ss, repo, path) key keeps retried batches byte-identical and
-      // the sort itself is ELIMINATED at physical planning whenever the
-      // aggregate's ordering reaches here (see groupCols above).
-      val toWrite = survivors
-        .withColumn("_pp", col("partition")).withColumn("_ss", col("_sub"))
-        .sortWithinPartitions(col("_pp"), col("_ss"), col("repo"), col("path"))
-        .drop("_sub")
-      LakeTable.planHook("merge-write", toWrite)
-      toWrite
-        .write.mode("overwrite").partitionBy("_pp", "_ss")
-        .option("compression", TableIO.dataCodec)
-        .options(TableIO.stagingWriteOptions ++ io.writeOptions)
-        .parquet(staging.toString)
-    } catch {
-      case t: Throwable =>
-        obs.foreach(MergeStats.discard)
-        throw t
-    }
-    // (partition, maxOff, minOff, n, nUp) — from the pre-pass (agg mode) or
-    // the write job's completed observation. The wait is BOUNDED and
-    // residue-free (MergeStats removes the handoff on timeout too): metrics
-    // normally arrive within milliseconds of the write above, but delivery
-    // is per-session (see the union-order note below) and a library must
-    // not hang on a caller's session plumbing — on timeout fall back
-    // LOUDLY to a dedicated stats scan, under the same deterministic-
-    // source contract as the write's own recompute.
-    def statsScan(): Seq[(Int, Long, Long, Long, Long)] =
-      withSub.groupBy(col("partition")).agg(
-        max(col("offset")), min(col("offset")), count(lit(1)),
-        sum(when(col("op") === "upsert", 1L).otherwise(0L)))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4))).toSeq
-    val statRows: Seq[(Int, Long, Long, Long, Long)] = obs match {
-      // observe requested but over the partition bound: the distinct
-      // pre-pass carried no stats, so pay the dedicated scan (what agg mode
-      // would have cost anyway) — NEVER commit empty stats, which would
-      // freeze watermarks and silently re-admit already-merged offsets
-      case None if statsMode == "observe" => statsScan()
-      case None => aggStatRows
-      case Some(name) =>
-        MergeStats.await(name, 30000) match {
-          case Some(row) =>
-            touchedParts.map { p =>
-              // a null metric means partition p had rows in the touched
-              // pre-pass scan but NONE in the write's recompute of the same
-              // batch — a nondeterministic source. Writing 0s would quietly
-              // REGRESS p's watermark and re-admit already-merged offsets
-              // in later batches; same loud-failure contract as the staged
-              // rogue-bucket check below.
-              require(!row.isNullAt(row.fieldIndex(s"max_$p")),
-                s"merge stats observation saw " +
-                s"no rows for touched partition $p — nondeterministic batch " +
-                "source (rows differed between the stats and write scans)")
-              (p, row.getAs[Long](s"max_$p"), row.getAs[Long](s"min_$p"),
-                row.getAs[Long](s"n_$p"), row.getAs[Long](s"nup_$p"))
-            }
-          case None =>
-            System.err.println("[graft] WARN: merge stats observation not " +
-              "delivered in 30s (listener-starved session plumbing?) — " +
-              "recomputing with a dedicated scan")
-            statsScan()
-        }
-    }
+    io.fs.delete(staging, true)
+    LakeTable.planHook("merge-write", toWrite)
+    toWrite
+      .write.mode("overwrite").partitionBy("_pp", "_ss")
+      .option("compression", TableIO.dataCodec)
+      .options(TableIO.stagingWriteOptions ++ io.writeOptions)
+      .parquet(staging.toString)
     mark("write")
 
     // The write evaluated the batch a second time (no persist): it must
@@ -701,15 +564,13 @@ final class LakeTable(
       s"merge write produced buckets outside the stats scan's touched set " +
         s"(${rogue.take(5)}…): batch source must be deterministic across scans")
 
-    // promote each touched bucket to its deterministic name; per-file row
-    // counts come from the parquet footer (no extra Spark job — the write is
-    // the last job of the batch). Promotes fan out on the SHARED metadata
-    // pool (MetaIO): on an object store each one is a copy+delete, and at
-    // 10^6 micro-batches a per-merge pool would be 10^6 create/destroy
-    // cycles on the driver. fetchAll cancels the queued remainder on
-    // failure, so a failed promote doesn't keep burning doomed copies
-    // before the batch retry touches the same staging dir. Results keep
-    // (p, s) order, so the manifest stays deterministic.
+    // promote each touched bucket to its deterministic name. Promotes fan
+    // out on the SHARED metadata pool (MetaIO): on an object store each one
+    // is a copy+delete, and at 10^6 micro-batches a per-merge pool would be
+    // 10^6 create/destroy cycles on the driver. fetchAll cancels the queued
+    // remainder on failure, so a failed promote doesn't keep burning doomed
+    // copies before the batch retry touches the same staging dir. Results
+    // keep (p, s) order, so the manifest stays deterministic.
     io.fs.mkdirs(new Path(io.rootPath, "data")) // once, not once per file
     val newEntries = MetaIO.fetchAll(touched.toSeq.sorted) { case (p, s) =>
       stagedParts.get(s"_pp=$p/_ss=$s").map { src =>
@@ -719,9 +580,8 @@ final class LakeTable(
         // that commits are CAS'd — can never overwrite this writer's
         // promoted files out from under its committed manifest
         val rel = f"data/part-$p%05d-s$s%04d-$appId-b$batchId%012d.parquet"
-        val dest = new Path(io.rootPath, rel)
-        io.promoteListedFile(src, dest)
-        FileEntry(p, s, rel, schemaId, io.parquetRowCount(dest))
+        io.promoteListedFile(src, new Path(io.rootPath, rel))
+        FileEntry(p, s, rel, schemaId)
       } // None = bucket emptied by deletes
     }.flatten
     io.fs.delete(staging, true)
@@ -802,7 +662,6 @@ final class LakeTable(
     val n = Json.obj()
     n.put("partition", f.partition); n.put("sub", f.sub)
     n.put("path", f.path); n.put("schemaId", f.schemaId)
-    n.put("num_records", f.numRecords)
     n
   }
 
@@ -844,13 +703,9 @@ final class LakeTable(
       }
   }
 
-  private def listShardRels(): Set[String] = {
-    val d = new Path(io.rootPath, "shards")
-    // list-and-catch: this runs on the checkpoint-commit path (writeShards
-    // + verifyShards), where the exists probe was a pure extra RPC
-    try io.fs.listStatus(d).map(s => s"shards/${s.getPath.getName}").toSet
-    catch { case _: java.io.FileNotFoundException => Set.empty }
-  }
+  private def listShardRels(): Set[String] =
+    io.listOrEmpty(new Path(io.rootPath, "shards"))
+      .map(s => s"shards/${s.getPath.getName}").toSet
 
   private def writeFreshShard(version: Long, fs: Seq[FileEntry]): String = {
     val p = fs.head.partition
@@ -1052,15 +907,12 @@ final class LakeTable(
     val superseded: Set[String] =
       (horizon until keepFrom).flatMap(pathsOf).toSet -- live
     var dataDeleted = superseded.count(rel => io.fs.delete(new Path(io.rootPath, rel), false))
-    val dataDir = new Path(io.rootPath, "data")
-    if (io.fs.exists(dataDir)) {
-      val cutoff = System.currentTimeMillis() - orphanGraceMs
-      val referenced = live ++ superseded
-      dataDeleted += io.fs.listStatus(dataDir).count { st =>
-        val rel = s"data/${st.getPath.getName}"
-        !referenced.contains(rel) && st.getModificationTime < cutoff &&
-          io.fs.delete(st.getPath, false)
-      }
+    val dataCutoff = System.currentTimeMillis() - orphanGraceMs
+    val referenced = live ++ superseded
+    dataDeleted += io.listOrEmpty(new Path(io.rootPath, "data")).count { st =>
+      val rel = s"data/${st.getPath.getName}"
+      !referenced.contains(rel) && st.getModificationTime < dataCutoff &&
+        io.fs.delete(st.getPath, false)
     }
     // The audit trail outlives snapshot retention: roll the lineage rows of
     // manifests about to be GC'd into an APPEND-ONLY PARQUET SEGMENT before
@@ -1075,12 +927,10 @@ final class LakeTable(
     // archive is GBs, which is exactly the shape parquet segments are for.
     // A legacy lineage-archive.json (earlier layout: one rewritten-in-full
     // JSON array) is folded into this pass's segment and removed.
-    if (doomed.nonEmpty || io.fs.exists(legacyArchivePath)) {
+    val legacyRows = legacyArchiveRows()
+    if (doomed.nonEmpty || legacyRows.isDefined) {
       val doomedRows = doomed.flatMap(m => lineageRowsOf(m.get("lineage")))
-      val legacyRows =
-        if (!io.fs.exists(legacyArchivePath)) Seq.empty
-        else lineageRowsOf(Json.parse(io.readString(legacyArchivePath))).toSeq
-      val rows = (doomedRows ++ legacyRows).distinct
+      val rows = (doomedRows ++ legacyRows.getOrElse(Nil)).distinct
       if (rows.nonEmpty) {
         // UNIQUE segment name, never overwrite: a crash mid-manifest-delete
         // followed by a rerun recomputes `doomed` from the SURVIVING
@@ -1094,7 +944,7 @@ final class LakeTable(
         spark.createDataFrame(rows).repartition(1)
           .write.mode("overwrite").options(io.writeOptions).parquet(seg.toString)
       }
-      io.fs.delete(legacyArchivePath, false): Unit
+      if (legacyRows.isDefined) io.fs.delete(legacyArchivePath, false): Unit
     }
     // delete-and-count, not exists-then-delete: FileSystem.delete already
     // returns false for a missing path, so the probe was a second metadata
@@ -1111,12 +961,12 @@ final class LakeTable(
     // past the mtime grace window, which by then covers any commit that
     // could have planned a reuse. Shards are small; delayed reclamation is
     // the cheap price of staying safe next to a live writer.
-    val shardDir = new Path(io.rootPath, "shards")
-    if (io.fs.exists(shardDir)) {
+    val shards = io.listOrEmpty(new Path(io.rootPath, "shards"))
+    if (shards.nonEmpty) {
       val keptShards: Set[String] = (keepFrom to cur)
         .flatMap(v => manifestAt(v).toSeq.flatMap(shardMapOf(_).values)).toSet
       val cutoff = System.currentTimeMillis() - orphanGraceMs
-      io.fs.listStatus(shardDir).foreach { st =>
+      shards.foreach { st =>
         val rel = s"shards/${st.getPath.getName}"
         if (!keptShards.contains(rel) && st.getModificationTime < cutoff)
           io.fs.delete(st.getPath, false): Unit
@@ -1164,6 +1014,13 @@ final class LakeTable(
   }
 
   private def legacyArchivePath = new Path(io.rootPath, "lineage-archive.json")
+
+  /** rows of a legacy lineage-archive.json, None when there is none
+    * (read-and-catch: one RPC on every vacuum, no exists probe)
+    */
+  private def legacyArchiveRows(): Option[Seq[graft.model.LineageRow]] =
+    try Some(lineageRowsOf(Json.parse(io.readString(legacyArchivePath))).toSeq)
+    catch { case _: java.io.FileNotFoundException => None }
   private def lineageSegDir = new Path(io.rootPath, "_lineage")
   private def horizonPath = new Path(io.rootPath, "gc-horizon.txt")
 
@@ -1220,7 +1077,7 @@ final class LakeTable(
       .option("compression", TableIO.dataCodec)
       .options(TableIO.stagingWriteOptions ++ io.writeOptions)
       .parquet(staging.toString)
-    // one recursive listing + promote/footer fan-out on the shared metadata
+    // one recursive listing + promote fan-out on the shared metadata
     // pool — the old shape was a SERIAL driver loop of listStatus + rename
     // + footer read per bucket (the r7 VERDICT's measured 100×-scale
     // bottleneck: ~800k sequential driver RPCs at the published sizing);
@@ -1234,9 +1091,8 @@ final class LakeTable(
             s"unrecognized staged path $relDir under $staging"))
         val (p, sub) = (m.group(1).toInt, m.group(2).toInt)
         val rel = f"data/part-$p%05d-s$sub%04d-$appId-c$version%012d.parquet"
-        val dest = new Path(io.rootPath, rel)
-        io.promoteListedFile(src, dest)
-        FileEntry(p, sub, rel, ss.size - 1, io.parquetRowCount(dest))
+        io.promoteListedFile(src, new Path(io.rootPath, rel))
+        FileEntry(p, sub, rel, ss.size - 1)
     }.sortBy(f => (f.partition, f.sub))
     io.fs.delete(staging, true)
     io.sweepStaleStaging()
@@ -1272,13 +1128,9 @@ final class LakeTable(
     * or in two overlapping segments from a crashed-then-rerun vacuum.
     */
   def lineage(): DataFrame = {
-    val segs =
-      if (!io.fs.exists(lineageSegDir)) Seq.empty
-      else io.fs.listStatus(lineageSegDir).toSeq
-        .filter(_.getPath.getName.startsWith("seg-")).map(_.getPath.toString)
-    val legacy =
-      if (!io.fs.exists(legacyArchivePath)) Seq.empty
-      else lineageRowsOf(Json.parse(io.readString(legacyArchivePath))).toSeq
+    val segs = io.listOrEmpty(lineageSegDir).toSeq
+      .filter(_.getPath.getName.startsWith("seg-")).map(_.getPath.toString)
+    val legacy = legacyArchiveRows().getOrElse(Nil)
     val liveRows = (gcHorizon to currentVersion).flatMap(v =>
       manifestAt(v).toSeq.flatMap(m => lineageRowsOf(m.get("lineage"))))
     val driverSide = spark.createDataFrame(legacy ++ liveRows)
@@ -1383,8 +1235,8 @@ object LakeTable {
   /** Audit seam: receives the merge's final write frame just before its
     * write action, so ExplainAudit can dump the foreachBatch job's physical
     * plan (the union→repartition→max_by→clustered-write chain) into
-    * PLANS.md — making the one-exchange claim artifact-verifiable instead
-    * of comment-verifiable. A no-op lambda in production.
+    * PLANS.md and LakeSpec can assert its one-exchange shape. A no-op
+    * lambda in production.
     */
   @volatile private[graft] var planHook: (String, DataFrame) => Unit =
     (_, _) => ()

@@ -599,6 +599,13 @@ final class TableIO(val root: String, spark: SparkSession,
 
   def exists(rel: String): Boolean = fs.exists(new Path(rootPath, rel))
 
+  /** list-and-catch: a missing directory lists as empty — one RPC, where
+    * an exists probe before the listing would be two
+    */
+  def listOrEmpty(dir: Path): Array[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(dir)
+    catch { case _: java.io.FileNotFoundException => Array.empty }
+
   /** ONE recursive listing of a staged write tree → relative bucket dir
     * (e.g. `_pp=3/_ss=7`, or `_p=2` for the journal) → that dir's single
     * part file. Replaces the per-bucket exists + listStatus probes the
@@ -620,10 +627,7 @@ final class TableIO(val root: String, spark: SparkSession,
     val base = fs.makeQualified(staging).toString
     val out = scala.collection.mutable.HashMap.empty[String, Path]
     def walk(dir: Path): Unit = {
-      val entries =
-        try fs.listStatus(dir)
-        catch { case _: java.io.FileNotFoundException => return }
-      entries.foreach { st =>
+      listOrEmpty(dir).foreach { st =>
         val p = st.getPath
         if (st.isDirectory) {
           if (p.getName != "_temporary") walk(p)
@@ -694,20 +698,13 @@ final class TableIO(val root: String, spark: SparkSession,
     // younger than its own publish.
     val cutoff = System.currentTimeMillis() - graceMs
     Seq(rootPath, new Path(rootPath, "_cas")).foreach { d =>
-      val listed =
-        try fs.listStatus(d)
-        catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
-      listed.foreach { st =>
+      listOrEmpty(d).foreach { st =>
         if (st.isFile && st.getPath.getName.matches(""".*\.tmp-\d+-\d+""") &&
             st.getModificationTime < cutoff)
           try fs.delete(st.getPath, false): Unit catch { case _: Throwable => () }
       }
     }
-    val dir = new Path(rootPath, "_staging")
-    val entries =
-      try fs.listStatus(dir)
-      catch { case _: java.io.FileNotFoundException => return }
-    entries.foreach { st =>
+    listOrEmpty(new Path(rootPath, "_staging")).foreach { st =>
       // files are the SOLE age authority when any exist: folding in a
       // fake-dir mtime that reports probe time would read as forever-fresh
       // and the entry would never reclaim. The top-level mtime is only the
@@ -726,10 +723,9 @@ final class TableIO(val root: String, spark: SparkSession,
     }
   }
 
-  /** Exact row count from the parquet footer — manifest stats without a
-    * Spark job (the footer is the file's own ChunkDescriptor: the writer
-    * already recorded per-block row counts, so a count(*) scan would be
-    * redundant work).
+  /** Exact row count from the parquet footer, without a Spark job. The
+    * journal's append compares it with its stats pass's count, so a batch
+    * source that differs between its two scans fails loudly.
     */
   def parquetRowCount(p: Path): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)

@@ -39,125 +39,117 @@ class LakeSpec extends AnyFunSuite {
     assertMatchesOracle(lake, changes)
   }
 
-  test("observe stats mode: identical state, watermarks, and lineage") {
-    // the measured-alternative stats path (LakeTable.merge `observe` mode:
-    // 3-column distinct pre-pass + Observation riding the write job) must be
-    // indistinguishable from the default `agg` pre-pass in everything the
-    // commit records — state rows, per-partition watermarks, lineage counts.
-    // Runs multi-batch through the pipeline (state-present merges), then
-    // one merge whose BATCH rides a CLONED session against state from the
-    // constructor session — the streaming-foreachBatch delivery case the
-    // merge's union order exists for (Observation delivery is per-session).
-    // A regression of that order starves the observation; the 30s loud
-    // fallback keeps the result correct, so the wall-clock bound below is
-    // what actually pins the fix.
+  test("lineage rows equal a groupBy over the gate-admitted input") {
+    // every committed (batchId, partition) lineage row, merge's return value
+    // and the watermarks against an independent recomputation from the
+    // batch itself: overlapping slices redeliver offsets the offset gate
+    // must drop, deletes count separately, a full redelivery commits no
+    // lineage, and a batch from another SparkSession merges against state
+    // read through the constructor session
+    import org.apache.spark.sql.DataFrame
     val changes = ChangeGen.changes(spark, 2500, nKeys = 200, partitions = 4,
       deletePct = 15)
-    def run(mode: String, tag: String) = {
-      System.setProperty("graft.merge.stats", mode)
-      try {
-        val p = new CdcPipeline(spark, SparkTestSession.tempDir(s"jo-$tag"),
-          SparkTestSession.tempDir(s"lo-$tag"), chunkBytes = 4096,
-          subBuckets = 4, journalEnabled = false)
-        p.runBatches(changes, 5)
-        p.lake
-      } finally System.clearProperty("graft.merge.stats"): Unit
+    val lake = new LakeTable(SparkTestSession.tempDir("lakelin"), spark,
+      subBuckets = 4)
+    type Lin = (Long, Int, Long, Long, Long, Long, Long)
+    def expected(batch: DataFrame, batchId: Long): Set[Lin] = {
+      val wm = lake.watermarks()
+      val admitted = wm.foldLeft(lit(true)) { case (acc, (p, w)) =>
+        acc && (col("partition") =!= p || col("offset") > w)
+      }
+      batch.filter(admitted).groupBy("partition").agg(
+        min("offset"), max("offset"), count(lit(1)),
+        sum(when(col("op") === "upsert", 1L).otherwise(0L)),
+        sum(when(col("op") === "delete", 1L).otherwise(0L)))
+        .collect().map(r => (batchId, r.getInt(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getLong(5))).toSet
     }
-    val aggLake = run("agg", "agg")
-    val obsLake = run("observe", "obs")
-    assertMatchesOracle(obsLake, changes)
-    assert(obsLake.watermarks() === aggLake.watermarks())
-    def lineage(l: LakeTable) = l.lineage()
+    def committed(batchId: Long): Set[Lin] = lake.lineage()
+      .filter(col("batchId") === batchId)
       .select("batchId", "partition", "firstOffset", "lastOffset",
         "numEvents", "numUpserts", "numDeletes")
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(lineage(obsLake).toSeq === lineage(aggLake).toSeq)
-
-    // cloned-session delivery: ChangeGen is a pure function of (seed, id),
-    // so the 3500-event log is a strict superset of the 2500 already merged
-    // — the suffix survives watermark dedup and merges against real state.
-    // LWW over (2500 ∪ 3500) == LWW over 3500, so `more` alone is the oracle.
-    // cloneSession is private[sql]; newSession() gives the same structure
-    // the delivery filter keys on — a second session with its own UUID
-    val clone = spark.newSession()
-    val more = ChangeGen.changes(clone, 3500, nKeys = 200, partitions = 4,
-      deletePct = 15)
-    System.setProperty("graft.merge.stats", "observe")
-    val t0 = System.nanoTime()
-    try obsLake.merge(more, 99L): Unit
-    finally System.clearProperty("graft.merge.stats"): Unit
-    val sec = (System.nanoTime() - t0) / 1e9
-    assert(sec < 25.0, s"cloned-session observation starved ($sec s — the " +
-      "30s fallback engaged; union order regressed?)")
-    assertMatchesOracle(obsLake, more)
-  }
-
-  test("observe stats plumbing leaves zero residue, bounded listeners, even starved") {
-    // the r5 "what's wrong #1" closed: Observation leaked one unregisterable
-    // listener per starved observation; MergeStats keeps ONE routing
-    // listener per session and removes the per-observation handoff on every
-    // exit path — N starved waits leave zero residue
-    import graft.lake.MergeStats
-    val pendingBefore = MergeStats.pendingCount
-    MergeStats.expect(spark, "starved-probe")
-    val listeners = MergeStats.listenerCount
-    assert(MergeStats.await("starved-probe", 1) === None)
-    (1 to 20).foreach { i =>
-      MergeStats.expect(spark, s"starved-$i")
-      assert(MergeStats.await(s"starved-$i", 1) === None, "must starve")
-      assert(MergeStats.listenerCount === listeners,
-        "starved observations must not grow the listener set")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toSet
+    def mergeAndCheck(batch: DataFrame, batchId: Long): Long = {
+      val want = expected(batch, batchId)
+      val applied = lake.merge(batch, batchId)
+      assert(committed(batchId) === want, s"lineage of batch $batchId")
+      assert(applied === want.toSeq.map(_._5).sum,
+        s"merge($batchId) must return its lineage's numEvents sum")
+      applied
     }
-    assert(MergeStats.pendingCount === pendingBefore, "zero handoff residue")
+    // per-partition offsets run 0..624; each slice re-delivers the previous
+    // slice's last 40 offsets
+    (0 until 5).foreach { b =>
+      val batch = changes.filter(
+        col("offset") >= math.max(0, b * 120 - 40) && col("offset") < (b + 1) * 120)
+      assert(mergeAndCheck(batch, b.toLong) > 0L)
+      assertMatchesOracle(lake, changes.filter(col("offset") < (b + 1) * 120))
+    }
+    assert(expected(changes.filter(col("offset") < 600), 5L).isEmpty)
 
-    // the delivered path routes by name and cleans up the same way
-    MergeStats.expect(spark, "delivered-1")
-    spark.range(10).observe("delivered-1", count(lit(1)).as("n")).collect(): Unit
-    val row = MergeStats.await("delivered-1", 30000)
-    assert(row.exists(_.getAs[Long]("n") === 10L), s"metrics must deliver: $row")
-    assert(MergeStats.pendingCount === pendingBefore)
-    assert(MergeStats.listenerCount === listeners)
+    // a full redelivery applies nothing, keeps the watermarks, commits no
+    // lineage, and its commit is still timed
+    val wmBefore = lake.watermarks()
+    def commitSeconds: Double =
+      Option(LakeTable.phaseSeconds.get("commit")).fold(0.0)(_.doubleValue)
+    val commitBefore = commitSeconds
+    assert(mergeAndCheck(changes.filter(col("offset") < 600), 5L) === 0L)
+    assert(lake.watermarks() === wmBefore)
+    assert(commitSeconds > commitBefore,
+      "the all-rows-gated commit must be recorded in phaseSeconds")
 
-    // a failed OBSERVED MERGE (write throws before the await) must discard
-    // its declared interest too — the real engine path, not just plumbing
-    System.setProperty("graft.merge.stats", "observe")
-    try {
-      val lake = new LakeTable(SparkTestSession.tempDir("obsfail"), spark,
-        subBuckets = 2)
-      val bad = ChangeGen.changes(spark, 100, nKeys = 20, partitions = 2)
-        .withColumn("content", // evaluation-time failure inside the write job
-          when(col("offset") >= 0, raise_error(lit("injected write failure")))
-            .otherwise(col("content")))
-      intercept[Throwable](lake.merge(bad, 0L))
-      assert(MergeStats.pendingCount === pendingBefore,
-        "a failed observed write must not strand its handoff")
-    } finally System.clearProperty("graft.merge.stats"): Unit
+    // ChangeGen is a pure function of (seed, id): the 3500-event log built
+    // on a second session is a superset of the 2500 already merged, and
+    // LWW over both equals LWW over the 3500 alone
+    val more = ChangeGen.changes(spark.newSession(), 3500, nKeys = 200,
+      partitions = 4, deletePct = 15)
+    assert(mergeAndCheck(more, 6L) > 0L)
+    assert(lake.watermarks() === more.groupBy("partition").agg(max("offset"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    assertMatchesOracle(lake, more)
   }
 
-  test("observe mode over the partition bound falls back with REAL stats") {
-    // CollectMetrics carries 4 interpreted aggregates per touched partition;
-    // past the bound the merge must fall back to a dedicated scan — and the
-    // fallback must commit real watermarks/lineage, never empty stats
-    // (empty stats would freeze watermarks and re-admit merged offsets)
-    val changes = ChangeGen.changes(spark, 600, nKeys = 80, partitions = 4,
+  test("the merge write job is one Exchange and one Sort") {
+    // the plan-shape half of the merge's one-exchange design: the union of
+    // batch and touched state, the LWW reduce and the clustered write share
+    // one hash exchange on the file key and one sort; the offset gate is a
+    // literal (no broadcast), and no interpreted CollectMetrics node sits in
+    // the write's hot path
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{CollectMetricsExec, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    val changes = ChangeGen.changes(spark, 800, nKeys = 100, partitions = 4,
       deletePct = 10)
-    System.setProperty("graft.merge.stats", "observe")
-    System.setProperty("graft.merge.observe.maxPartitions", "2") // 4 > 2
+    val lake = new LakeTable(SparkTestSession.tempDir("lakeplan"), spark,
+      subBuckets = 4)
+    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    LakeTable.planHook = (tag, df) => if (tag == "merge-write") frames += df
     try {
-      val lake = new LakeTable(SparkTestSession.tempDir("obsbound"), spark,
-        subBuckets = 2)
-      lake.merge(changes, 0L)
-      assert(lake.watermarks().size === 4, "fallback must advance all watermarks")
-      assert(lake.watermarks().values.forall(_ >= 0L))
-      assertMatchesOracle(lake, changes)
-      // a second batch's dedup depends on those watermarks being real
-      assert(lake.merge(changes, 1L) === 0L,
-        "a full redelivery must dedup to zero applied rows")
-      assertMatchesOracle(lake, changes)
-    } finally {
-      System.clearProperty("graft.merge.stats")
-      System.clearProperty("graft.merge.observe.maxPartitions"): Unit
+      lake.merge(changes.filter(col("offset") < 100), 0L) // no state yet
+      lake.merge(changes.filter(col("offset") >= 100), 1L) // gated, with state
+    } finally LakeTable.planHook = (_, _) => ()
+    assert(frames.size === 2)
+    frames.foreach { df =>
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size === 1, plan)
+      val keys = shuffles.head.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+        case other => fail(s"expected a hash exchange, got $other\n$plan")
+      }
+      assert(keys === Seq("partition", "_sub"), plan)
+      assert(plan.collect { case s: SortExec => s }.size === 1, plan)
+      assert(plan.collect { case c: CollectMetricsExec => c }.isEmpty, plan)
+      assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan)
     }
+    assertMatchesOracle(lake, changes)
   }
 
   test("multi-batch merge equals oracle; watermarks advance") {
