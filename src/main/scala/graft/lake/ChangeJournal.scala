@@ -414,7 +414,7 @@ final class ChangeJournal(
     }
     reapPending(graceMs)
     // crashed peers' abandoned staging reclaims at maintenance cadence,
-    // not per-append — off the commit hot path (CommitProtocolBench)
+    // not per-append — off the commit hot path (BENCH/BASELINE.md, r07)
     io.sweepStaleStaging()
     dead.size
   }

@@ -976,7 +976,7 @@ final class LakeTable(
       io.writeAtomic(horizonPath, keepFrom.toString)
     // crashed peers' abandoned staging reclaims at maintenance cadence,
     // not per-merge: the sweep's listStatus belongs with the other GC
-    // passes, off the commit hot path (measured: CommitProtocolBench)
+    // passes, off the commit hot path (BENCH/BASELINE.md, r07 claim protocol)
     io.sweepStaleStaging()
     (dataDeleted, manifestsDeleted)
   }
@@ -1233,10 +1233,9 @@ object LakeTable {
   }
 
   /** Audit seam: receives the merge's final write frame just before its
-    * write action, so ExplainAudit can dump the foreachBatch job's physical
-    * plan (the union→repartition→max_by→clustered-write chain) into
-    * PLANS.md and LakeSpec can assert its one-exchange shape. A no-op
-    * lambda in production.
+    * write action, so LakeSpec can assert the foreachBatch job's physical
+    * plan (the union→repartition→max_by→clustered-write chain) is one
+    * Exchange and one Sort. A no-op lambda in production.
     */
   @volatile private[graft] var planHook: (String, DataFrame) => Unit =
     (_, _) => ()

@@ -99,8 +99,8 @@ object TableIO {
 
   /** Parquet codec for DATA files (`graft.lake.codec`, default zstd).
     * A 100-TB lever: storage cost and scan IO trade against write CPU.
-    * Measured on the full pipeline shape (CodecBench, BENCH/BASELINE.md
-    * r07): zstd stores 43% fewer bytes than snappy at indistinguishable
+    * Measured on the full pipeline shape (BENCH/BASELINE.md, "r07: parquet
+    * codec"): zstd stores 43% fewer bytes than snappy at indistinguishable
     * ingest and scan time — on an object store those bytes are also the
     * transfer and request cost, so zstd dominates. Manifests and snapshots
     * are tiny JSON and unaffected.
@@ -242,8 +242,8 @@ object RenameCommitStore extends CommitStore {
     lock.synchronized {
       // no exists() pre-check: the no-overwrite rename is the authority
       // (throws FileAlreadyExists on both HDFS and local FileContext), and
-      // the commit path pays for every metadata RPC here (measured:
-      // CommitProtocolBench)
+      // the commit path pays for every metadata RPC here (measured in
+      // BENCH/BASELINE.md, "r07: the claim protocol's driver-side cost")
       val tmp = new Path(dest.getParent, dest.getName +
         s".tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
       try {
@@ -290,8 +290,8 @@ object RenameCommitStore extends CommitStore {
         else None
       }
       // list-and-catch / read-and-catch, not exists-then-act: each probe
-      // is one metadata RPC the commit path pays every swap
-      // (CommitProtocolBench), and the catch closes the probe→act TOCTOU
+      // is one metadata RPC the commit path pays every swap (BENCH/BASELINE.md,
+      // r07 claim protocol), and the catch closes the probe→act TOCTOU
       def listMarkers(): Seq[(Path, Long)] =
         try io.fs.listStatus(casDir).toSeq.map(_.getPath)
           .flatMap(p => markerVersion(p).map(p -> _))
@@ -430,7 +430,7 @@ final class TableIO(val root: String, spark: SparkSession,
   def writeString(p: Path, s: String): Unit = {
     // no mkdirs: FileSystem.create makes parents (Hadoop contract, all
     // impls here), and the commit path pays 3 writeStrings per commit —
-    // the redundant mkdirs was one metadata RPC each (CommitProtocolBench)
+    // the redundant mkdirs was one metadata RPC each (BENCH/BASELINE.md r07)
     val out = fs.create(p, true)
     try out.write(s.getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -686,7 +686,7 @@ final class TableIO(val root: String, spark: SparkSession,
     * mtime) never reclaims. Staging is transient and small next to the
     * data it produces; reclaiming it a week late costs nothing, and the
     * per-entry recursive listing runs at maintenance cadence, not on the
-    * commit path (CommitProtocolBench).
+    * commit path (BENCH/BASELINE.md, r07 claim protocol).
     */
   def sweepStaleStaging(graceMs: Long = 7L * 24 * 3600 * 1000): Unit = {
     // crashed writers also leak `*.tmp-{pid}-{nanos}` files from the

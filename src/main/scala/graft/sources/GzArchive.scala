@@ -3,10 +3,11 @@ package graft.sources
 import java.io.{BufferedReader, ByteArrayInputStream, ByteArrayOutputStream, InputStreamReader, OutputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-import graft.lake.Json
+import graft.functions.RecordFormats.{ByteLengthFormat, Framed}
+import graft.lake.{Json, TableIO}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -56,18 +57,10 @@ object GzArchive {
       byteLengthUncompressed: Long)
 
   final case class Index(chunks: Seq[Chunk]) {
-    /** compressed size of the data file = end of the last member */
-    def totalSize: Long = chunks.lastOption.map(c => c.byteOffset + c.byteLength).getOrElse(0L)
-    def lastOffset: Long =
-      chunks.lastOption.map(c => c.firstRecordOffset + c.numRecords - 1).getOrElse(-1L)
     /** next offset after this file's records — the sink-resume arithmetic
       * (S3Writer.java:123-127) */
     def nextOffset: Long =
       chunks.lastOption.map(c => c.firstRecordOffset + c.numRecords).getOrElse(0L)
-    /** first chunk whose record range covers `offset`
-      * (source/.../json/ChunksIndex.java chunkContaining) */
-    def chunkContaining(offset: Long): Option[Chunk] =
-      chunks.find(c => c.firstRecordOffset + c.numRecords > offset)
   }
 
   /** golden-order serialization: byte_length_uncompressed, num_records,
@@ -168,7 +161,7 @@ object GzArchive {
       // whole files for header init, S3FilesReader.java:236-243, and
       // non-header chunk offsets are derived arithmetically); fatal for our
       // ranged chunk reads, so deliberately fixed. The read side still
-      // accepts reference-written (misaligned) files — see readTasks.
+      // accepts reference-written (misaligned) files — see chunkBytes.
       chunks.head.byteOffset = fileStream.numBytes
       gzipStream = new GZIPOutputStream(fileStream)
     }
@@ -238,12 +231,9 @@ object GzArchive {
     * partition) (see [[archiveWriteFrame]]), and that task streams each of
     * the partition's files into a [[BlockGzWriter]] — a file's bytes depend
     * only on its own record run, so the output is byte-identical to a
-    * serial per-partition writer. A hot partition is still one task. Task
-    * commit is temp-write + rename (data first, then index —
-    * the reference's upload order, S3Writer.java:61-81), so a speculative
-    * or zombie attempt racing its retry never interleaves writes into a
-    * published file: attempts write attempt-scoped temp names and the
-    * rename of identical bytes is idempotent.
+    * serial per-partition writer. A hot partition is still one task, and
+    * tasks write only attempt-scoped temp files that the driver publishes
+    * (the job-commit protocol in [[writeArchivePayload]]).
     *
     * After the job, one cursor file per partition is published at the root
     * (`last_chunk_index.{topic}-{p%05d}.txt`, S3Writer.java:138-153)
@@ -263,13 +253,9 @@ object GzArchive {
       header: Array[Byte] = Array.emptyByteArray,
       trailer: Array[Byte] = Array.emptyByteArray,
       startOffsets: Map[Int, Long] = Map.empty): Unit =
-    writeArchivePayload(
-      df.select(lit(topic).as("topic"), col("partition"), col(sortCol).as("_sort"),
-        // text framing: record bytes = line + trailing newline, UTF-8 (the
-        // reference's text format emits its own delimiter)
-        encode(concat(col("line"), lit("\n")), "UTF-8").as("payload")),
-      root, chunkThreshold, recordsPerFile, datePrefix, header,
-      trailer, startOffsets.map { case (p, o) => (topic, p) -> o })
+    writeArchiveTopics(df.withColumn("topic", lit(topic)), root, sortCol,
+      chunkThreshold, recordsPerFile, datePrefix, header, trailer,
+      startOffsets.map { case (p, o) => (topic, p) -> o })
 
   /** Multi-topic archive write: one bucket holding several topics' file
     * families, the layout the reference's source reads with a topic-SET
@@ -291,6 +277,8 @@ object GzArchive {
       startOffsets: Map[(String, Int), Long] = Map.empty): Unit =
     writeArchivePayload(
       df.select(col("topic"), col("partition"), col(sortCol).as("_sort"),
+        // text framing: record bytes = line + trailing newline, UTF-8 (the
+        // reference's text format emits its own delimiter)
         encode(concat(col("line"), lit("\n")), "UTF-8").as("payload")),
       root, chunkThreshold, recordsPerFile, datePrefix, header,
       trailer, startOffsets)
@@ -393,9 +381,6 @@ object GzArchive {
     val conf = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
 
-    val hdr = header // avoid closing over the outer args object
-    val trlr = trailer
-    val thr = chunkThreshold
     // JOB-COMMIT PROTOCOL (the FileOutputCommitter shape): tasks write ONLY
     // inside their own attempt directory under a job-unique staging area
     // and never touch published paths, so a zombie or speculative attempt —
@@ -410,20 +395,15 @@ object GzArchive {
     val jobTag = java.util.UUID.randomUUID().toString
     val written = spark.sparkContext
       .collectionAccumulator[(String, Int, Long, Long)]("gzarchive-written")
-    // NO second exchange: the frame's by-id exchange shuffled the payload
-    // once, and WindowExec's own required ordering sorted each task by
-    // (_task, topic, partition, _sort). `_aoff` is the row_number over that
-    // exact order and `_file` is monotone in `_aoff`, so every task already
-    // iterates contiguous (topic, partition, _file) runs in ascending `_aoff`
-    // order — precisely what the writer loop below needs, with no
-    // `repartition + sortWithinPartitions` to move every payload byte
-    // through a second shuffle and sort. Parallelism is one task per
-    // round-robin (topic, partition) — the Kafka-shaped per-partition writer
-    // the reference runs; a backfill that needs finer fan-out can pre-split
-    // its input partitions upstream.
+    // NO second exchange: WindowExec already sorted each task by (_task,
+    // topic, partition, _sort), `_aoff` is the row_number over that order
+    // and `_file` is monotone in `_aoff`, so every task iterates contiguous
+    // (topic, partition, _file) runs in ascending `_aoff` — what the writer
+    // loop below needs. A backfill that needs finer fan-out than one task
+    // per (topic, partition) can pre-split its input partitions upstream.
     archiveWriteFrame(df, recordsPerFile, startOffsets)
       .foreachPartition { rows: Iterator[Row] =>
-        val fs = graft.lake.TableIO.fileSystem(new Path(root), conf.value.value)
+        val fs = TableIO.fileSystem(new Path(root), conf.value.value)
         val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
         val tmpDir = new Path(root, s".inprogress/job-$jobTag/attempt-$attempt")
         var curTopic: String = null
@@ -431,7 +411,7 @@ object GzArchive {
         var curFile = -1L
         var bw: BlockGzWriter = null
         def commitW(): Unit = if (bw != null) {
-          if (trlr.nonEmpty) bw.writeRaw(trlr, 0L) // format trailer, 0 records
+          if (trailer.nonEmpty) bw.writeRaw(trailer, 0L) // format trailer, 0 records
           bw.close() // data then index, inside the attempt dir only
           written.add((curTopic, curPart, bw.firstRecordOffset, attempt))
           bw = null
@@ -443,19 +423,16 @@ object GzArchive {
           val aoff = r.getLong(3)
           if (t != curTopic || p != curPart || file != curFile) {
             commitW()
-            // topics now arrive as DATA (writeArchiveTopics), not a caller
-            // literal: validate at the file boundary (cheap — once per
-            // file). Kafka's own topic charset; anything else (null, a
-            // '/', spaces) would break the flat bucket layout or the
-            // FileName/CursorName parse and silently lose the topic's
-            // records from cursor-trusted reads.
+            // topics arrive as DATA: validate once per file. Outside Kafka's
+            // topic charset (null, a '/', spaces) the bucket layout or the
+            // FileName/CursorName parse breaks, silently losing records.
             require(t != null && t.matches("[A-Za-z0-9._-]+"),
               s"invalid archive topic name '$t' — must match [A-Za-z0-9._-]+")
             curTopic = t; curPart = p; curFile = file
             // the file is NAMED by its first actual record offset (= `file`
             // except for the very first file of a partition with a non-zero
             // start, which begins mid-boundary)
-            bw = new BlockGzWriter(fs, tmpDir, f"$t-$p%05d", aoff, thr, hdr)
+            bw = new BlockGzWriter(fs, tmpDir, f"$t-$p%05d", aoff, chunkThreshold, header)
           }
           val payload = r.getAs[Array[Byte]](4) // full framed record bytes
           require(payload != null,
@@ -471,7 +448,7 @@ object GzArchive {
     // metadata pool, then advance cursors atomically. Partitions this job
     // did not write keep their existing cursors, and pre-existing orphans
     // stay unacknowledged.
-    val tio = new graft.lake.TableIO(root, spark)
+    val tio = new TableIO(root, spark)
     val fs = tio.fs
     val destDir = if (datePrefix.isEmpty) new Path(root) else new Path(root, datePrefix)
     import scala.jdk.CollectionConverters._
@@ -513,23 +490,19 @@ object GzArchive {
     // UUID-named, so nothing else would ever reclaim it — without this
     // sweep a flaky pipeline accumulates dead .gz bytes forever (the same
     // lazy-reap pattern as Staging.maintain and the journal's tombstones)
-    val jobs =
-      try fs.listStatus(new Path(root, ".inprogress"))
-      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    val jobs = tio.listOrEmpty(new Path(root, ".inprogress"))
     val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
     // staleness = the NEWEST mtime anywhere under the job dir, not the
     // top-level dir's (which goes stale as soon as its attempt dirs are
     // created — a long-running concurrent writer's live staging must not
     // be swept from under it)
-    def newestMtime(p: Path): Long = {
-      val sts = fs.listStatus(p)
-      (fs.getFileStatus(p).getModificationTime +: sts.toSeq.map { s =>
-        if (s.isDirectory) newestMtime(s.getPath) else s.getModificationTime
+    def newestMtime(st: FileStatus): Long =
+      (st.getModificationTime +: fs.listStatus(st.getPath).toSeq.map { s =>
+        if (s.isDirectory) newestMtime(s) else s.getModificationTime
       }).max
-    }
     jobs.foreach { st =>
       val newest =
-        try newestMtime(st.getPath)
+        try newestMtime(st)
         catch { // the owner's own cleanup raced the walk: nothing to reap
           case _: java.io.FileNotFoundException => Long.MaxValue
         }
@@ -556,7 +529,6 @@ object GzArchive {
       headerLen: Long,
       isLast: Boolean)
 
-  final case class GzRecord(topic: String, partition: Int, offset: Long, value: String)
   final case class GzRecordH(topic: String, partition: Int, offset: Long,
       value: String, header: String)
   /** per-FILE format metadata: header and trailer are init/finish hooks of
@@ -569,56 +541,44 @@ object GzArchive {
   private val CursorName = """last_chunk_index\.(.+)-(\d{5})\.txt""".r
 
   private final case class IndexFile(
-      status: FileStatus, rel: String, topic: String, partition: Int, firstOffset: Long)
+      status: FileStatus, topic: String, partition: Int, firstOffset: Long)
 
   /** Recursive metadata-scale listing of index files: a real connector
     * bucket nests data/index under `yyyy-MM-dd` prefixes (S3Writer.java:129-136),
     * and its source lists across prefixes (S3FilesReader.java:140-157) — so
     * recurse through subdirectories (dot-dirs like `.inprogress` excluded).
     */
-  private def listIndexFiles(fs: FileSystem, root: Path): Seq[IndexFile] = {
-    if (!fs.exists(root)) return Nil
-    val qRoot = fs.makeQualified(root)
-    def walk(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) {
-          if (s.getPath.getName.startsWith(".")) Nil else walk(s.getPath)
-        } else Seq(s)
+  private def listIndexFiles(tio: TableIO): Seq[IndexFile] = {
+    // a never-written root lists as empty (list-and-catch, no exists probe)
+    def walk(sts: Array[FileStatus]): Seq[FileStatus] =
+      sts.toSeq.flatMap { s =>
+        if (!s.isDirectory) Seq(s)
+        else if (s.getPath.getName.startsWith(".")) Nil
+        else walk(tio.fs.listStatus(s.getPath))
       }
-    walk(root).flatMap { s =>
+    walk(tio.listOrEmpty(tio.rootPath)).flatMap { s =>
       s.getPath.getName match {
         case FileName(topic, part, off) =>
-          val rel = qRoot.toUri.relativize(fs.makeQualified(s.getPath).toUri).getPath
-          Some(IndexFile(s, rel, topic, part.toInt, off.toLong))
+          Some(IndexFile(s, topic, part.toInt, off.toLong))
         case _ => None
       }
     }
   }
 
-  /** driver-side index parse → chunk task rows (metadata-scale). Index
-    * fetches fan out on a bounded pool: a 100 TB archive has thousands of
-    * index files, and on an object store each is a small GET — serial
-    * driver reads would be the listing's bottleneck (the same pattern as
-    * the lake's sharded-checkpoint cold resolution). Order is restored
-    * from the listing sequence, so the result stays deterministic.
+  /** driver-side index parse → chunk task rows (metadata-scale), the index
+    * GETs fanned out on the bounded metadata pool: a 100 TB archive has
+    * thousands of index files. Order follows the listing, so it is stable.
     */
   private def listTasks(spark: SparkSession, root: String): Seq[ChunkTask] = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fetchTasks(fs, root, listIndexFiles(fs, new Path(root)))
+    val tio = new TableIO(root, spark)
+    fetchTasks(tio.fs, listIndexFiles(tio))
   }
 
-  private def fetchTasks(fs: FileSystem, root: String,
-      files: Seq[IndexFile]): Seq[ChunkTask] =
-    graft.lake.MetaIO.fetchAll(files)(f => tasksOf(fs, root, f)).flatten
+  private def fetchTasks(fs: FileSystem, files: Seq[IndexFile]): Seq[ChunkTask] =
+    graft.lake.MetaIO.fetchAll(files)(f => tasksOf(fs, f)).flatten
 
-  private def tasksOf(fs: FileSystem, root: String, f: IndexFile): Seq[ChunkTask] = {
-    val len = f.status.getLen
-    require(len <= Int.MaxValue, s"index file ${f.rel} larger than 2 GiB")
-    val in = fs.open(f.status.getPath)
-    val bytes = new Array[Byte](len.toInt)
-    in.readFully(0, bytes)
-    in.close()
-    val idx = parseIndex(new String(bytes, "UTF-8"))
+  private def tasksOf(fs: FileSystem, f: IndexFile): Seq[ChunkTask] = {
+    val idx = parseIndex(readSmall(fs, f.status.getPath))
     val dataFile = new Path(f.status.getPath.getParent,
       f.status.getPath.getName.stripSuffix(".index.json") + ".gz").toString
     val headerLen = idx.chunks.headOption.map(_.byteOffset).getOrElse(0L)
@@ -628,9 +588,6 @@ object GzArchive {
         headerLen, isLast = i == idx.chunks.size - 1)
     }
   }
-
-  private def gzipMagic(buf: Array[Byte]): Boolean =
-    buf.length >= 2 && (buf(0) & 0xff) == 0x1f && (buf(1) & 0xff) == 0x8b
 
   /** Pluggable chunk decode — the reference reader's input-filter seam
     * (source/.../S3FilesReader.java:333-337: the reader takes an
@@ -645,11 +602,9 @@ object GzArchive {
     */
   trait InputFilter extends Serializable {
     /** Wrap one chunk's raw byte stream with the decode — the STREAMING
-      * primitive: the text read path consumes records straight off this
-      * stream, so executor memory stays at buffer scale even for a chunk
-      * whose UNCOMPRESSED size exceeds the 2 GiB array bound (only the
-      * compressed range is materialized; the ranged-read guard bounds
-      * that side).
+      * primitive: the text read takes lines straight off this stream, so no
+      * single array holds a chunk's UNCOMPRESSED bytes (only the compressed
+      * range is materialized; the ranged-read guard bounds that side).
       */
     def wrap(in: java.io.InputStream): java.io.InputStream
 
@@ -657,14 +612,8 @@ object GzArchive {
       * where the record format needs the whole array (the binary
       * length-prefixed decode)
       */
-    def decode(chunk: Array[Byte]): Array[Byte] = {
-      val out = new ByteArrayOutputStream()
-      val in = wrap(new ByteArrayInputStream(chunk))
-      val b = new Array[Byte](8192)
-      var n = in.read(b)
-      while (n >= 0) { out.write(b, 0, n); n = in.read(b) }
-      out.toByteArray
-    }
+    def decode(chunk: Array[Byte]): Array[Byte] =
+      wrap(new ByteArrayInputStream(chunk)).readAllBytes()
     /** tolerant variant for ranged HEADER reads, which on reference-written
       * gzip files may end on a bare member boundary (the off-by-10 case);
       * encodings without that failure shape keep the strict default
@@ -683,7 +632,8 @@ object GzArchive {
       new GZIPInputStream(in)
     override def decodeTolerant(chunk: Array[Byte]): Array[Byte] =
       gunzipTolerant(chunk)
-    override def framed(chunk: Array[Byte]): Boolean = gzipMagic(chunk)
+    override def framed(chunk: Array[Byte]): Boolean =
+      chunk.length >= 2 && (chunk(0) & 0xff) == 0x1f && (chunk(1) & 0xff) == 0x8b
   }
 
   /** uncompressed archives: index byte ranges ARE the record bytes */
@@ -774,71 +724,114 @@ object GzArchive {
     buf
   }
 
-  private def readTasks(spark: SparkSession, tasks: Seq[ChunkTask],
-      withHeader: Boolean = false,
-      filter: InputFilter = GunzipFilter): DataFrame = {
-    import spark.implicits._
+  /** A record format's chunk decode: the chunk's first `numRecords` records
+    * (fewer if its bytes run out) and the bytes past them, the format
+    * trailer. The reference picks its reader the same way, by
+    * `Configure.createFormat`'s `text`/`binary` aliases
+    * (common/.../Configure.java:20-23).
+    */
+  private type Decoder[V] =
+    (InputFilter, Array[Byte], Long) => (collection.IndexedSeq[V], Array[Byte])
+
+  /** newline-terminated UTF-8 lines, read straight off the filter's stream */
+  private val textLines: Decoder[String] = (filter, chunk, numRecords) => {
+    val r = new BufferedReader(new InputStreamReader(
+      filter.wrap(new ByteArrayInputStream(chunk)), "UTF-8"))
+    val records = scala.collection.mutable.ArrayBuffer.empty[String]
+    val trailer = new StringBuilder
+    var line = r.readLine()
+    while (line != null) {
+      if (records.size < numRecords) records += line
+      else trailer.append(line).append('\n')
+      line = r.readLine()
+    }
+    (records, trailer.toString.getBytes("UTF-8"))
+  }
+
+  /** length-prefixed records ([[writeArchiveBinary]]'s framing) */
+  private def lengthPrefixed(includeKeys: Boolean): Decoder[Framed] =
+    (filter, chunk, numRecords) => {
+      val data = filter.decode(chunk)
+      val (records, consumed) = new ByteLengthFormat(includeKeys).decodeUpTo(data, numRecords)
+      (records.toIndexedSeq, java.util.Arrays.copyOfRange(data, consumed, data.length))
+    }
+
+  /** The one chunk scan behind every read: one row per chunk, which the
+    * local scan of `tasks` already slices over `defaultParallelism`
+    * partitions (no exchange). Each task reads exactly its member's byte
+    * range. For every format a chunk must decode exactly `numRecords`, and
+    * bytes past them are the format TRAILER (written through the record
+    * path with recordCount 0, S3SinkTask.java:213-215), which only a file's
+    * LAST chunk may carry; both rules stay loud. Records at or below the
+    * resume floor are dropped. `emit` makes rows from the remaining
+    * (offset, record) pairs, the file's header ("" unless `withHeader`;
+    * memoized per file) and the trailer. Tasks resolve the filesystem as
+    * the writer does, from the session's Hadoop conf.
+    */
+  private def scan[V, R: Encoder](spark: SparkSession, root: String,
+      tasks: Seq[ChunkTask], filter: InputFilter, decode: Decoder[V],
+      withHeader: Boolean = false)(
+      emit: (ChunkTask, String, Iterator[(Long, V)], Array[Byte]) => Iterator[R]): Dataset[R] = {
     val conf = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    val n = math.max(1, math.min(tasks.size, spark.sparkContext.defaultParallelism))
-    val ds: Dataset[GzRecordH] =
-      spark.createDataset(tasks).repartition(n).mapPartitions { it =>
-        // per-task ranged read: seek to the member, read EXACTLY byteLength
-        // bytes, decompress just that member — never the whole file
-        var fs: FileSystem = null
-        // headers are per FILE but tasks are per CHUNK: memoize the decoded
-        // header per file within the task partition, or a thousand-chunk
-        // file would re-GET and re-gunzip its header a thousand times
-        val headerCache = scala.collection.mutable.HashMap.empty[String, String]
-        it.flatMap { t =>
-          if (fs == null)
-            fs = new Path(t.file).getFileSystem(conf.value.value)
-          val buf = chunkBytes(fs, t.file, t.byteOffset, t.byteLength, filter)
-          val header =
-            if (!withHeader || t.headerLen == 0) ""
-            else headerCache.getOrElseUpdate(t.file, new String(
-              filter.decodeTolerant(rangedRead(fs, t.file, 0L, t.headerLen)),
-              "UTF-8"))
-          val r = new BufferedReader(new InputStreamReader(
-            filter.wrap(new ByteArrayInputStream(buf)), "UTF-8"))
-          val out = scala.collection.mutable.ArrayBuffer.empty[GzRecordH]
-          // Lines past num_records in the file's LAST chunk are FORMAT
-          // TRAILER bytes, not records: the reference writes `format.finish`
-          // through the record path with recordCount 0
-          // (S3SinkTask.java:213-215), so they share the chunk's byte space
-          // but not its record count — skipped here, surfaced per file by
-          // [[fileMeta]]. In any NON-last chunk surplus lines can only mean
-          // corruption (a trailer lives at file end by construction), and
-          // decoding FEWER lines than the index declares is corruption
-          // anywhere — both stay loud.
-          var line = r.readLine()
-          var off = t.firstRecordOffset
-          var surplus = 0L
-          while (line != null) {
-            if (off - t.firstRecordOffset < t.numRecords) {
-              if (off > t.minOffsetExclusive)
-                out += GzRecordH(t.topic, t.partition, off, line, header)
-              off += 1
-            } else surplus += 1
-            line = r.readLine()
-          }
-          require(off - t.firstRecordOffset == t.numRecords,
-            s"chunk ${t.file}@${t.byteOffset} decoded ${off - t.firstRecordOffset} records, " +
-              s"index says ${t.numRecords}")
-          require(t.isLast || surplus == 0L,
-            s"chunk ${t.file}@${t.byteOffset} decoded $surplus surplus lines " +
-              "in a non-final chunk — corrupt data (an embedded line " +
-              "terminator?); only the last chunk may carry trailer bytes")
-          out
-        }
+      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+    spark.createDataset(tasks)(Encoders.product[ChunkTask]).mapPartitions { it =>
+      var fs: FileSystem = null
+      val headers = scala.collection.mutable.HashMap.empty[String, String]
+      it.flatMap { t =>
+        if (fs == null) fs = TableIO.fileSystem(new Path(root), conf.value.value)
+        val (records, trailer) = decode(filter,
+          chunkBytes(fs, t.file, t.byteOffset, t.byteLength, filter), t.numRecords)
+        require(records.size == t.numRecords,
+          s"chunk ${t.file}@${t.byteOffset} decoded ${records.size} records, " +
+            s"index says ${t.numRecords}")
+        require(t.isLast || trailer.isEmpty,
+          s"chunk ${t.file}@${t.byteOffset} has ${trailer.length} surplus bytes " +
+            "in a non-final chunk — corrupt data (an embedded line " +
+            "terminator?); only the last chunk may carry trailer bytes")
+        val header =
+          if (!withHeader || t.headerLen == 0) ""
+          else headers.getOrElseUpdate(t.file, new String(
+            filter.decodeTolerant(rangedRead(fs, t.file, 0L, t.headerLen)), "UTF-8"))
+        emit(t, header, records.iterator.zipWithIndex
+          .map { case (v, i) => (t.firstRecordOffset + i, v) }
+          .filter(_._1 > t.minOffsetExclusive), trailer)
       }
+    }
+  }
+
+  /** text records: (topic, partition, offset, value), plus the file's
+    * `header` column when `withHeader`
+    */
+  private def readText(spark: SparkSession, root: String, tasks: Seq[ChunkTask],
+      filter: InputFilter, withHeader: Boolean = false): DataFrame = {
+    import spark.implicits._
+    val ds = scan(spark, root, tasks, filter, textLines, withHeader) {
+      (t, header, records, _) =>
+        records.map { case (off, line) => GzRecordH(t.topic, t.partition, off, line, header) }
+    }
     if (withHeader) ds.toDF() else ds.drop("header")
   }
+
+  /** Resume past committed floors (`floor(t)`; None replays the chunk
+    * fully): whole chunks at or below the floor are PRUNED on the driver
+    * from the index alone (never opened — the ranged-GET skip,
+    * S3FilesReader.java:215-261); only the boundary chunk filters records
+    * below the floor after decode.
+    */
+  private def above(tasks: Seq[ChunkTask])(floor: ChunkTask => Option[Long]): Seq[ChunkTask] =
+    tasks.flatMap { t =>
+      floor(t) match {
+        case None => Some(t)
+        case Some(c) if t.firstRecordOffset + t.numRecords > c + 1 =>
+          Some(t.copy(minOffsetExclusive = c))
+        case _ => None // chunk entirely at or below the committed offset
+      }
+    }
 
   /** full archive scan (still chunk-parallel) */
   def read(spark: SparkSession, root: String,
       filter: InputFilter = GunzipFilter): DataFrame =
-    readTasks(spark, listTasks(spark, root), withHeader = false, filter)
+    readFrom(spark, root, Map.empty, filter)
 
   /** like [[read]], plus each record carries its file's decoded format
     * header (empty when the file has none) — the distributed analogue of
@@ -847,12 +840,7 @@ object GzArchive {
     */
   def readWithHeader(spark: SparkSession, root: String,
       filter: InputFilter = GunzipFilter): DataFrame =
-    readTasks(spark, listTasks(spark, root), withHeader = true, filter)
-
-  final case class FileMetaTask( // public: Dataset encoder codegen needs access
-      file: String, topic: String, partition: Int, firstRecordOffset: Long,
-      headerLen: Long, lastByteOffset: Long, lastByteLength: Long,
-      lastNumRecords: Long, totalRecords: Long)
+    readText(spark, root, listTasks(spark, root), filter, withHeader = true)
 
   /** Per-FILE format metadata: decoded header member and trailer bytes
     * (the init/finish hooks, S3RecordsWriter.java:16-31). One task per
@@ -863,60 +851,23 @@ object GzArchive {
   def fileMeta(spark: SparkSession, root: String,
       filter: InputFilter = GunzipFilter): DataFrame = {
     import spark.implicits._
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metas = graft.lake.MetaIO.fetchAll(listIndexFiles(fs, new Path(root))) { f =>
-      val ts = tasksOf(fs, root, f)
-      val last = ts.maxBy(_.byteOffset)
-      FileMetaTask(last.file, f.topic, f.partition, f.firstOffset,
-        last.headerLen, last.byteOffset, last.byteLength, last.numRecords,
-        ts.map(_.numRecords).sum)
+    val tasks = listTasks(spark, root)
+    val span = tasks.groupBy(_.file).map { case (file, ts) =>
+      file -> ((ts.head.firstRecordOffset, ts.map(_.numRecords).sum))
     }
-    val conf = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    val n = math.max(1, math.min(metas.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(metas).repartition(n).mapPartitions { it =>
-      var fsx: FileSystem = null
-      it.map { m =>
-        if (fsx == null) fsx = new Path(m.file).getFileSystem(conf.value.value)
-        val header =
-          if (m.headerLen == 0) ""
-          else new String(filter.decodeTolerant(
-            rangedRead(fsx, m.file, 0L, m.headerLen)), "UTF-8")
-        val r = new BufferedReader(new InputStreamReader(
-          filter.wrap(new ByteArrayInputStream(
-            chunkBytes(fsx, m.file, m.lastByteOffset, m.lastByteLength, filter))),
-          "UTF-8"))
-        val trailer = new StringBuilder
-        var i = 0L
-        var line = r.readLine()
-        while (line != null) {
-          if (i >= m.lastNumRecords) trailer.append(line).append('\n')
-          i += 1
-          line = r.readLine()
-        }
-        FileMeta(m.file, m.topic, m.partition, m.firstRecordOffset,
-          m.totalRecords, header, trailer.toString)
-      }
+    scan(spark, root, tasks.filter(_.isLast), filter, textLines, withHeader = true) {
+      (t, header, _, trailer) =>
+        val (first, total) = span(t.file)
+        Iterator(FileMeta(t.file, t.topic, t.partition, first, total, header,
+          new String(trailer, "UTF-8")))
     }.toDF()
   }
 
-  /** Resume past per-partition committed offsets: whole chunks at or below
-    * the floor are PRUNED on the driver from the index alone (never opened
-    * — the ranged-GET skip, S3FilesReader.java:215-261); only the boundary
-    * chunk filters records below the floor after decode.
-    */
+  /** Resume past per-partition committed offsets (see [[above]]). */
   def readFrom(spark: SparkSession, root: String, committed: Map[Int, Long],
-      filter: InputFilter = GunzipFilter): DataFrame = {
-    val tasks = listTasks(spark, root).flatMap { t =>
-      committed.get(t.partition) match {
-        case None => Some(t)
-        case Some(c) if t.firstRecordOffset + t.numRecords > c + 1 =>
-          Some(t.copy(minOffsetExclusive = c))
-        case _ => None // chunk entirely at or below the committed offset
-      }
-    }
-    readTasks(spark, tasks, withHeader = false, filter)
-  }
+      filter: InputFilter = GunzipFilter): DataFrame =
+    readText(spark, root,
+      above(listTasks(spark, root))(t => committed.get(t.partition)), filter)
 
   /** [[readFrom]] keyed by (topic, partition) — the resume shape of a
     * multi-topic bucket ([[writeArchiveTopics]]): per-topic-partition
@@ -927,52 +878,12 @@ object GzArchive {
     */
   def readFromTopics(spark: SparkSession, root: String,
       committed: Map[(String, Int), Long],
-      filter: InputFilter = GunzipFilter): DataFrame = {
-    val tasks = listTasks(spark, root).flatMap { t =>
-      committed.get((t.topic, t.partition)) match {
-        case None => Some(t)
-        case Some(c) if t.firstRecordOffset + t.numRecords > c + 1 =>
-          Some(t.copy(minOffsetExclusive = c))
-        case _ => None
-      }
-    }
-    readTasks(spark, tasks, withHeader = false, filter)
-  }
+      filter: InputFilter = GunzipFilter): DataFrame =
+    readText(spark, root,
+      above(listTasks(spark, root))(t => committed.get((t.topic, t.partition))), filter)
 
   final case class GzBinRecord(topic: String, partition: Int, offset: Long,
       key: Array[Byte], value: Array[Byte])
-
-  private def readBinaryTasks(spark: SparkSession, tasks: Seq[ChunkTask],
-      includeKeys: Boolean, filter: InputFilter = GunzipFilter): DataFrame = {
-    import spark.implicits._
-    val conf = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    val n = math.max(1, math.min(tasks.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(tasks).repartition(n).mapPartitions { it =>
-      var fs: FileSystem = null
-      val fmt = new graft.functions.RecordFormats.ByteLengthFormat(includeKeys)
-      it.flatMap { t =>
-        if (fs == null) fs = new Path(t.file).getFileSystem(conf.value.value)
-        val data = filter.decode(
-          chunkBytes(fs, t.file, t.byteOffset, t.byteLength, filter))
-        // bounded decode: bytes past num_records in the LAST chunk are
-        // format trailer (same rule as the text read); anywhere else, or a
-        // short decode, is loud corruption
-        val (records, consumed) = fmt.decodeUpTo(data, t.numRecords)
-        require(records.length.toLong == t.numRecords,
-          s"chunk ${t.file}@${t.byteOffset} decoded ${records.length} binary " +
-            s"records, index says ${t.numRecords}")
-        require(t.isLast || consumed == data.length,
-          s"chunk ${t.file}@${t.byteOffset} has ${data.length - consumed} " +
-            "surplus bytes in a non-final chunk — corrupt data")
-        records.iterator.zipWithIndex.collect {
-          case (rec, i) if t.firstRecordOffset + i > t.minOffsetExclusive =>
-            GzBinRecord(t.topic, t.partition, t.firstRecordOffset + i,
-              rec.key, rec.value)
-        }
-      }
-    }.toDF()
-  }
 
   /** full scan of a BINARY-format archive (length-prefixed records —
     * [[writeArchiveBinary]]'s output or a reference `binary`-format bucket),
@@ -981,21 +892,17 @@ object GzArchive {
   def readBinary(spark: SparkSession, root: String,
       includeKeys: Boolean = true,
       filter: InputFilter = GunzipFilter): DataFrame =
-    readBinaryTasks(spark, listTasks(spark, root), includeKeys, filter)
+    readBinaryFrom(spark, root, Map.empty, includeKeys, filter)
 
   /** [[readFrom]] for binary archives: index-pruned ranged resume */
   def readBinaryFrom(spark: SparkSession, root: String, committed: Map[Int, Long],
       includeKeys: Boolean = true,
       filter: InputFilter = GunzipFilter): DataFrame = {
-    val tasks = listTasks(spark, root).flatMap { t =>
-      committed.get(t.partition) match {
-        case None => Some(t)
-        case Some(c) if t.firstRecordOffset + t.numRecords > c + 1 =>
-          Some(t.copy(minOffsetExclusive = c))
-        case _ => None
-      }
-    }
-    readBinaryTasks(spark, tasks, includeKeys, filter)
+    import spark.implicits._
+    scan(spark, root, above(listTasks(spark, root))(t => committed.get(t.partition)),
+      filter, lengthPrefixed(includeKeys)) { (t, _, records, _) =>
+      records.map { case (off, r) => GzBinRecord(t.topic, t.partition, off, r.key, r.value) }
+    }.toDF()
   }
 
   /** Cursor-derived per-partition NEXT offsets — the port of
@@ -1008,35 +915,33 @@ object GzArchive {
   def fetchOffsets(spark: SparkSession, root: String, topic: String): Map[Int, Long] =
     fetchOffsetsTopics(spark, root, Set(topic)).map { case ((_, p), o) => p -> o }
 
-  /** one bucket's cursor files for a topic SET (empty = every topic) — the
+  /** one bucket's cursors for a topic SET (empty = every topic) — the
     * reference's source task reads topic sets per task
-    * (S3SourceTask.java:82-94, topic filter S3FilesReader.java:82-105)
+    * (S3SourceTask.java:82-94, topic filter S3FilesReader.java:82-105):
+    * (topic, partition) → the index key its cursor names. Cursor reads fan
+    * out on the shared metadata pool — at the reference's own 200-partition
+    * cap a serial driver loop would be 200 round-trips before any task
+    * launches.
     */
-  private def cursorFiles(fs: FileSystem, rootPath: Path,
-      topics: Set[String]): Seq[(String, Int, Path)] =
-    if (!fs.exists(rootPath)) Nil
-    else fs.listStatus(rootPath).toSeq.flatMap { s =>
+  private def cursorKeys(tio: TableIO, topics: Set[String]): Seq[((String, Int), String)] = {
+    val cursors = tio.listOrEmpty(tio.rootPath).toSeq.flatMap { s =>
       s.getPath.getName match {
         case CursorName(t, p) if !s.isDirectory && (topics.isEmpty || topics(t)) =>
-          Some((t, p.toInt, s.getPath))
+          Some((t, p.toInt) -> s.getPath)
         case _ => None
       }
-    }.sortBy(c => (c._1, c._2))
+    }.sortBy(_._1)
+    graft.lake.MetaIO.fetchAll(cursors) { case (tp, path) => tp -> readSmall(tio.fs, path).trim }
+  }
 
-  /** [[fetchOffsets]] over a topic set: per-(topic, partition) next offsets.
-    * Cursor + index reads fan out on the shared metadata pool — at the
-    * reference's own 200-partition cap each cursor is two small object-store
-    * GETs, and a serial driver loop would be 400 round-trips before any
-    * task launches.
+  /** [[fetchOffsets]] over a topic set: per-(topic, partition) next
+    * offsets, the index reads fanned out like the cursor reads
     */
   def fetchOffsetsTopics(spark: SparkSession, root: String,
       topics: Set[String] = Set.empty): Map[(String, Int), Long] = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.lake.MetaIO.fetchAll(cursorFiles(fs, rootPath, topics)) {
-      case (t, p, path) =>
-        val key = readSmall(fs, path).trim
-        (t, p) -> parseIndex(readSmall(fs, new Path(rootPath, key))).nextOffset
+    val tio = new TableIO(root, spark)
+    graft.lake.MetaIO.fetchAll(cursorKeys(tio, topics)) { case (tp, key) =>
+      tp -> parseIndex(readSmall(tio.fs, new Path(tio.rootPath, key))).nextOffset
     }.toMap
   }
 
@@ -1055,27 +960,23 @@ object GzArchive {
   /** [[readCommitted]] over a topic SET (empty = every topic in the bucket):
     * the records of every cursor-acknowledged file whose topic is in the
     * set, in one chunk-parallel read — each record carries its topic, so
-    * callers split downstream with an ordinary filter. Cursor reads fan out
-    * on the shared metadata pool (two sequential fan-outs — cursors, then
-    * index fetches — never nested).
+    * callers split downstream with an ordinary filter. Cursor reads, then
+    * index fetches, fan out on the shared metadata pool (in sequence, never
+    * nested).
     */
   def readCommittedTopics(spark: SparkSession, root: String,
       topics: Set[String] = Set.empty,
       filter: InputFilter = GunzipFilter): DataFrame = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ackFirstOffset: Map[(String, Int), Long] =
-      graft.lake.MetaIO.fetchAll(cursorFiles(fs, rootPath, topics)) {
-        case (t, p, path) =>
-          val key = readSmall(fs, path).trim
-          new Path(key).getName match {
-            case FileName(_, _, off) => Some((t, p) -> off.toLong)
-            case _ => None
-          }
-      }.flatten.toMap
-    val acked = listIndexFiles(fs, rootPath)
+    val tio = new TableIO(root, spark)
+    val ackFirstOffset = cursorKeys(tio, topics).flatMap { case (tp, key) =>
+      new Path(key).getName match {
+        case FileName(_, _, off) => Some(tp -> off.toLong)
+        case _ => None
+      }
+    }.toMap
+    val acked = listIndexFiles(tio)
       .filter(f => ackFirstOffset.get((f.topic, f.partition)).exists(f.firstOffset <= _))
-    readTasks(spark, fetchTasks(fs, root, acked), withHeader = false, filter)
+    readText(spark, root, fetchTasks(tio.fs, acked), filter)
   }
 
   /** The reference source's per-topic OUTPUT remap, config shape
@@ -1129,13 +1030,12 @@ object GzArchive {
     remapTopics(readFromTopics(spark, root, committed, inputFilter(props)),
       topicRemap(props))
 
+  /** a cursor or index file, bounded at 16 MiB without a status probe */
   private def readSmall(fs: FileSystem, p: Path): String = {
-    val len = fs.getFileStatus(p).getLen
-    require(len <= (16 << 20), s"$p unreasonably large for a metadata file")
+    val limit = 16 << 20
     val in = fs.open(p)
-    val bytes = new Array[Byte](len.toInt)
-    in.readFully(0, bytes)
-    in.close()
+    val bytes = try in.readNBytes(limit + 1) finally in.close()
+    require(bytes.length <= limit, s"$p unreasonably large for a metadata file")
     new String(bytes, "UTF-8")
   }
 }

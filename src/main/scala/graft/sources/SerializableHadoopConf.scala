@@ -11,8 +11,8 @@ import org.apache.hadoop.conf.Configuration
   * setting — S3A credentials, endpoint overrides, custom FS options — and
   * works only on a local filesystem. This wrapper serializes via the
   * Writable protocol (`Configuration.write`/`readFields`), the same trick
-  * Spark uses internally, so a broadcast of the driver's
-  * `sparkContext.hadoopConfiguration` reconstitutes faithfully in each task.
+  * Spark uses internally, so a broadcast of the session's Hadoop conf
+  * (`sessionState.newHadoopConf()`) reconstitutes faithfully in each task.
   * Deserialization starts from `new Configuration(false)` (no default
   * resources) — the state is exactly what the driver had, nothing else.
   */

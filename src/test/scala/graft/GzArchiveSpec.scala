@@ -676,6 +676,47 @@ class GzArchiveSpec extends AnyFunSuite {
     }
   }
 
+  test("archive reads run as one exchange-free, sort-free stage") {
+    // the task rows are a local scan that Spark already slices over
+    // defaultParallelism partitions: a repartition on top only adds a
+    // shuffle stage
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import spark.implicits._
+    val text = SparkTestSession.tempDir("gzplan-text")
+    GzArchive.writeArchive((0 until 40).map(i => (i % 2, i.toLong, s"rec $i"))
+      .toDF("partition", "k", "line"), text, "t", "k", chunkThreshold = 64,
+      header = "H\n".getBytes("UTF-8"), trailer = "T\n".getBytes("UTF-8"))
+    val bin = SparkTestSession.tempDir("gzplan-bin")
+    GzArchive.writeArchiveBinary((0 until 40).map(i =>
+      (i % 2, i.toLong, Array(i.toByte), Array.fill(3)(i.toByte)))
+      .toDF("partition", "k", "key", "value"), bin, "t", "k", chunkThreshold = 64)
+    val frames: Seq[(String, DataFrame, Long)] = Seq(
+      ("read", GzArchive.read(spark, text), 40L),
+      ("readWithHeader", GzArchive.readWithHeader(spark, text), 40L),
+      ("readBinary", GzArchive.readBinary(spark, bin), 40L),
+      ("fileMeta", GzArchive.fileMeta(spark, text), 2L))
+    frames.foreach { case (name, df, rows) =>
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      assert(plan.collect { case e: Exchange => e }.isEmpty, s"$name:\n$plan")
+      assert(plan.collect { case s: SortExec => s }.isEmpty, s"$name:\n$plan")
+      assert(df.count() === rows, name)
+    }
+  }
+
+  test("a never-written root reads as empty") {
+    val root = SparkTestSession.tempDir("gznever") + "/never/written"
+    assert(GzArchive.read(spark, root).count() === 0L)
+    assert(GzArchive.readCommitted(spark, root, "t").count() === 0L)
+    assert(GzArchive.fetchOffsets(spark, root, "t") === Map.empty)
+    assert(!new java.io.File(root).exists())
+  }
+
   test("executor tasks see the session's Hadoop configuration") {
     // the regression this guards: executor-side `new Configuration()` drops
     // session settings (S3A credentials, endpoints) — archive tasks must

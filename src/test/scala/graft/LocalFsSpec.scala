@@ -242,6 +242,37 @@ class LocalFsSpec extends AnyFunSuite {
     keepsSessionClass(classOf[RecordingInJvmLocalFileSystem], viaSqlConf = true)
   }
 
+  test("archive reads open cursors, indexes and data through a file: class bound with spark.conf.set") {
+    val textRoot = SparkTestSession.tempDir("boundread-t")
+    val binRoot = SparkTestSession.tempDir("boundread-b")
+    val changes = ChangeGen.changes(spark, 400, nKeys = 40, partitions = 4)
+    GzArchive.writeArchive(changes.select(col("partition"), col("offset"),
+      coalesce(col("content"), lit("")).as("line")),
+      textRoot, "t", "offset", chunkThreshold = 4096)
+    GzArchive.writeArchiveBinary(changes.select(col("partition"), col("offset"),
+      encode(col("path"), "UTF-8").as("key"), encode(coalesce(col("content"), lit("")),
+        "UTF-8").as("value")), binRoot, "t", "offset", chunkThreshold = 4096)
+    /** the opens `read` makes with the recording class bound, as paths under `root` */
+    def opensOf(root: String)(read: => Long): Seq[String] = {
+      RecordsCreates.opened.clear()
+      val n = boundFileClass(classOf[RecordingInJvmLocalFileSystem], viaSqlConf = true)(read)
+      assert(n === 400L)
+      RecordsCreates.opened.asScala.toSeq.filter(_.startsWith(s"$root/"))
+        .map(_.stripPrefix(s"$root/"))
+    }
+    val committed = opensOf(textRoot)(GzArchive.readCommitted(spark, textRoot, "t").count())
+    assert(committed.count(_.startsWith("last_chunk_index.t-")) === 4, committed)
+    assert(committed.count(_.endsWith(".index.json")) === 4, committed)
+    assert(committed.exists(_.endsWith(".gz")), committed)
+    val resumed = opensOf(textRoot)(
+      GzArchive.readFrom(spark, textRoot, Map.empty).count())
+    assert(resumed.count(_.endsWith(".index.json")) === 4, resumed)
+    assert(resumed.exists(_.endsWith(".gz")), resumed)
+    val binary = opensOf(binRoot)(GzArchive.readBinary(spark, binRoot).count())
+    assert(binary.count(_.endsWith(".index.json")) === 4, binary)
+    assert(binary.exists(_.endsWith(".gz")), binary)
+  }
+
   test("only file: roots are rebound") {
     val conf = new Configuration()
     conf.set("fs.recording.impl", classOf[RecordingLocalFileSystem].getName)
@@ -254,8 +285,8 @@ class LocalFsSpec extends AnyFunSuite {
   }
 }
 
-/** Records the path of every create: the mark of a session-bound `file:`
-  * class being used.
+/** Records the path of every create and open: the mark of a session-bound
+  * `file:` class being used.
   */
 trait RecordsCreates extends org.apache.hadoop.fs.FileSystem {
   abstract override def create(f: Path, permission: FsPermission, overwrite: Boolean,
@@ -265,10 +296,16 @@ trait RecordsCreates extends org.apache.hadoop.fs.FileSystem {
     RecordsCreates.created.add(f.toUri.getPath)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
+
+  abstract override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    RecordsCreates.opened.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
 }
 
 object RecordsCreates {
   val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 class RecordingLocalFileSystem extends LocalFileSystem with RecordsCreates
