@@ -4,8 +4,8 @@ import com.fasterxml.jackson.databind.JsonNode
 import graft.operators.Chunker
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -35,62 +35,36 @@ final class ChangeJournal(
     val appId: String = "graft",
     val checkpointEvery: Int = 16,
     commitStore: CommitStore = RenameCommitStore) {
-  require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-  // appId is interpolated into durable relative paths (data files, staging
-  // dirs) and into the CAS protocol's identity: a '/', '=' or whitespace
-  // would silently change the layout (nested dirs under data/ break the
-  // sweep's name comparisons), so fail loudly at construction (ADVICE r7)
-  require(appId.matches("[A-Za-z0-9._-]+"),
-    s"appId must match [A-Za-z0-9._-]+ (it names durable paths); got '$appId'")
-
   private val io = new TableIO(root, spark, commitStore)
+
+  /** The versioned log this journal runs on. Entries are the manifest's
+    * file nodes, keyed by path. A delta records only its commit's change —
+    * `added` (an append's new files) and/or `removed` (a truncate's dropped
+    * paths) — SURVEY.md §4.1 applied to the journal: commit JSON is
+    * O(change), never O(journal history). Truncation in particular stays
+    * O(dead), not O(kept): at long retention the kept set is the big one.
+    */
+  private val log = new SnapshotLog[String, JsonNode](io, appId, "journal",
+    checkpointEvery, new LogCodec[String, JsonNode] {
+      def key(f: JsonNode) = f.get("path").asText
+      def isDelta(m: JsonNode) = m.has("added")
+      def checkpoint(m: JsonNode) = m.get("files").elements().asScala.toSeq
+      def removed(d: JsonNode) =
+        Option(d.get("removed")).toSeq.flatMap(_.elements().asScala.map(_.asText))
+      def added(d: JsonNode) = d.get("added").elements().asScala.toSeq
+      def ordered(fs: Seq[JsonNode]) = fs
+    })
 
   // ---- snapshot / manifest ---------------------------------------------
 
   /** committed batch id, or -1 for a fresh table */
-  def lastBatchId: Long = io.readSnapshot().map(_.get("batchId").asLong).getOrElse(-1L)
-
-  private def currentVersion: Long =
-    io.readSnapshot().map(_.get("version").asLong).getOrElse(-1L)
-
-  /** Replay fence against a PINNED snapshot (see LakeTable.isReplayOf):
-    * same writer AND batch id at or below committed — a new appId's
-    * restarted numbering must not be swallowed as replays; the offset gate
-    * still dedups its rows.
-    */
-  private def isReplayOf(snap: Option[JsonNode], batchId: Long): Boolean =
-    snap.flatMap(s => Option(s.get("appId")).map(_.asText))
-      .getOrElse(appId) == appId &&
-      batchId <= snap.map(_.get("batchId").asLong).getOrElse(-1L)
-
-  // current-manifest cache keyed by snapshot version (same rationale as
-  // LakeTable: checkpoint manifests are O(history) JSON — parse once per
-  // version, not once per accessor)
-  @volatile private var manifestCache: Option[(Long, JsonNode)] = None
-
-  private def manifest(): Option[JsonNode] = manifestOf(io.readSnapshot())
-
-  /** manifest of a SPECIFIC snapshot node — the plan-consistency primitive
-    * (see LakeTable.manifestOf): append/commit read the snapshot once and
-    * derive every plan input from that node.
-    */
-  private def manifestOf(snap: Option[JsonNode]): Option[JsonNode] = snap.map { s =>
-    val v = s.get("version").asLong
-    manifestCache match {
-      case Some((cv, m)) if cv == v => m
-      case _ =>
-        val m = Json.parse(
-          io.readString(new Path(io.rootPath, s.get("manifest").asText)))
-        manifestCache = Some((v, m))
-        m
-    }
-  }
+  def lastBatchId: Long = log.pin().batchId
 
   /** Per-partition next offset to write — the port of S3Writer.fetchOffset
     * (S3Writer.java:83-127): last chunk's `first_record_offset + num_records`;
     * missing table ⇒ empty map ⇒ 0 everywhere (the 404 case, :101-107).
     */
-  def nextOffsets(): Map[Int, Long] = nextOffsetsOf(manifest())
+  def nextOffsets(): Map[Int, Long] = nextOffsetsOf(log.pin().manifest)
 
   /** the manifest's partitions→nextOffset map — the ONE place that knows
     * the `partitions` JSON shape (nextOffsets / append / truncate all
@@ -102,62 +76,10 @@ final class ChangeJournal(
       .map(e => e.getKey.toInt -> e.getValue.get("nextOffset").asLong).toMap
   }
 
-  // read-and-catch, not exists-then-read (one RPC per chain step; see
-  // LakeTable.manifestAt)
-  private def manifestAt(version: Long): Option[JsonNode] = {
-    val p = new Path(io.rootPath, f"manifest-$version%012d.json")
-    try Some(Json.parse(io.readString(p)))
-    catch { case _: java.io.FileNotFoundException => None }
-  }
-
-  /** A delta manifest records only this commit's change: `added` (an
-    * append's new files) and/or `removed` (a truncate's dropped paths) —
-    * SURVEY.md §4.1 applied to the journal: commit JSON is O(change), never
-    * O(journal history). Truncation in particular stays O(dead), not
-    * O(kept): at long retention the kept set is the big one. Every
-    * `checkpointEvery`-th commit writes the full listing so readers fold a
-    * bounded chain.
-    */
-  private def isDelta(m: JsonNode): Boolean = m.has("added")
-
-  private def filesOf(m: JsonNode): Seq[JsonNode] = {
-    if (!isDelta(m)) return m.get("files").elements().asScala.toSeq
-    var chain = List(m)
-    while (isDelta(chain.head)) {
-      val pv = chain.head.get("version").asLong - 1
-      chain = manifestAt(pv).getOrElse(throw new IllegalStateException(
-        s"journal manifest chain broken at version $pv under $root")) :: chain
-    }
-    chain.tail.foldLeft(chain.head.get("files").elements().asScala.toSeq) {
-      (acc, d) =>
-        val rem = Option(d.get("removed"))
-          .map(_.elements().asScala.map(_.asText).toSet)
-          .getOrElse(Set.empty[String])
-        val base = if (rem.isEmpty) acc
-                   else acc.filterNot(f => rem(f.get("path").asText))
-        base ++ d.get("added").elements().asScala
-    }
-  }
-
-  // resolved listing cached per snapshot version (chain resolution reads up
-  // to checkpointEvery JSONs; an external writer bumps the version, which
-  // invalidates the cache for free)
-  @volatile private var filesCache: Option[(Long, Seq[JsonNode])] = None
-
-  private def liveFiles(): Seq[JsonNode] = liveFilesOf(io.readSnapshot())
-
-  private def liveFilesOf(snap: Option[JsonNode]): Seq[JsonNode] = snap match {
-    case None => Seq.empty
-    case Some(s) =>
-      val v = s.get("version").asLong
-      filesCache match {
-        case Some((cv, fs)) if cv == v => fs
-        case _ =>
-          val fs = filesOf(manifestOf(snap).get)
-          filesCache = Some((v, fs))
-          fs
-      }
-  }
+  /** the schema a manifest records (absent before the field landed) */
+  private def schemaOf(m: Option[JsonNode]): Option[StructType] =
+    m.flatMap(mm => Option(mm.get("schema")))
+      .map(s => DataType.fromJson(s.asText).asInstanceOf[StructType])
 
   // ---- append (the sink) ------------------------------------------------
 
@@ -178,25 +100,17 @@ final class ChangeJournal(
     require(required.forall(batch.columns.contains),
       s"change batch must carry ${required.mkString(",")}; got ${batch.columns.mkString(",")}")
 
-    // ONE snapshot read pins the whole plan (fence, CAS baseline, previous
-    // schema, resume offsets) — see LakeTable.merge / manifestOf for why
-    // per-accessor re-reads are both a plan-consistency race next to a
-    // concurrent writer and wasted metadata RPCs
-    val snap0 = io.readSnapshot()
-    if (isReplayOf(snap0, batchId)) return 0L // fenced replay: already durable
-
-    // CAS baseline: every read below plans against this version
-    val plannedVersion = snap0.map(_.get("version").asLong).getOrElse(-1L)
-    val m0 = manifestOf(snap0)
+    // ONE snapshot read pins the whole plan (see [[Head]]): fence, CAS
+    // baseline, previous schema, resume offsets
+    val h = log.pin()
+    if (log.isReplayOf(h, batchId)) return 0L // fenced replay: already durable
+    val m0 = h.manifest
 
     // the journal's current schema is KNOWN at every commit (this batch's
     // columns merged additively over the previous manifest's schema), so
     // persist it — a caught-up reader must not have to open parquet footers
     // to learn it (that scan grows O(total journal files) with history)
-    val mergedSchema = m0
-      .flatMap(m => Option(m.get("schema")).map(_.asText))
-      .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val mergedSchema = schemaOf(m0)
       .map(prev => SchemaEvolution.merge(prev, batch.schema))
       .getOrElse(batch.schema)
 
@@ -228,13 +142,12 @@ final class ChangeJournal(
       sum(col("bytes_uncompressed")).as("byte_length_uncompressed"))
       .collect()
     if (chunkStats.isEmpty) {
-      commitManifest(Nil, next, batchId, mergedSchema, plannedVersion)
+      commitManifest(h, Nil, next, batchId, mergedSchema)
       return 0L
     }
 
     val dataCols = batch.columns.toSeq
     val staging = new Path(io.rootPath, s"_staging/append-$appId-$batchId")
-    io.fs.delete(staging, true)
     // `_p` duplicates `partition` for the directory layout only: partitionBy
     // strips its column from file contents, and promoted files must stay
     // self-contained (the manifest, not the path, is the source of truth).
@@ -247,18 +160,12 @@ final class ChangeJournal(
     // dynamic partitions (prefix `_p`), so no second, UNSTABLE sort is
     // inserted — and files stay offset-ordered, which is what gives parquet
     // row-group min/max stats their pruning power on resume reads
-    fresh
+    io.writeStaged(fresh
       .select((dataCols.map(col) :+ col("partition").as("_p")).toIndexedSeq: _*)
-      // explicit count = touched partitions (capped by the session's tuned
-      // parallelism): one output FILE per partition, and AQE's byte-based
-      // coalescing would serialize them into one task (see LakeTable.merge)
-      .repartition(math.min(chunkStats.iterator.map(_.getInt(0)).toSet.size,
-        spark.sessionState.conf.numShufflePartitions).max(1), col("_p"))
-      .sortWithinPartitions(col("_p"), col("offset"))
-      .write.mode("overwrite").partitionBy("_p")
-      .option("compression", TableIO.dataCodec)
-      .options(TableIO.stagingWriteOptions ++ io.writeOptions)
-      .parquet(staging.toString)
+      // one output FILE per touched partition (see TableIO.writeTasks)
+      .repartition(io.writeTasks(chunkStats.iterator.map(_.getInt(0)).toSet.size),
+        col("_p"))
+      .sortWithinPartitions(col("_p"), col("offset")), staging, "_p")
 
     // promote each partition's single part file to its offset-keyed name —
     // located by ONE recursive staging listing (no per-partition
@@ -316,7 +223,7 @@ final class ChangeJournal(
     val newNext = next ++ byPartition.map { case (p, chunks) =>
       p -> (chunks.map(_.getLong(4)).max + 1L)
     }
-    commitManifest(newFiles, newNext, batchId, mergedSchema, plannedVersion)
+    commitManifest(h, newFiles, newNext, batchId, mergedSchema)
     appended
   }
 
@@ -354,19 +261,16 @@ final class ChangeJournal(
     */
   def truncate(watermarks: Map[Int, Long],
       graceMs: Long = 24L * 3600 * 1000): Int = {
-    // one pinned snapshot for the whole pass (see LakeTable.merge)
-    val snap0 = io.readSnapshot()
-    val plannedVersion = snap0.map(_.get("version").asLong).getOrElse(-1L)
-    val (dead, kept) = liveFilesOf(snap0).partition { f =>
+    // one pinned head for the whole pass (see [[Head]]): the plan, the
+    // schema carried over and the commit baseline are one version
+    val h = log.pin()
+    val (dead, kept) = log.files(h).partition { f =>
       watermarks.get(f.get("partition").asInt)
         .exists(w => f.get("max_offset").asLong <= w)
     }
     if (dead.nonEmpty) {
-      val m0 = manifestOf(snap0)
-      val next0 = nextOffsetsOf(m0)
-      commitManifest(Nil, next0,
-        snap0.map(_.get("batchId").asLong).getOrElse(-1L), journalSchema(kept),
-        plannedVersion, removed = dead.map(_.get("path").asText))
+      val written = commitManifest(h, Nil, nextOffsetsOf(h.manifest), h.batchId,
+        journalSchema(h, kept), removed = dead.map(_.get("path").asText))
       // Manifests strictly below the NEW current checkpoint version are
       // unreachable from any live fold chain. Their names are DERIVED, not
       // listed: versions are sequential, so the not-yet-tombstoned range is
@@ -379,10 +283,7 @@ final class ChangeJournal(
       // next truncate (deduped below, bounded by the grace window). The
       // first truncate of a pre-watermark journal migrates with one root
       // listing.
-      val ckpt = manifest()
-        .map(m => Option(m.get("checkpointVersion")).map(_.asLong)
-          .getOrElse(m.get("version").asLong))
-        .getOrElse(0L)
+      val ckpt = written.get("checkpointVersion").asLong
       // a regressed/ancient watermark could derive a range of millions of
       // synthetic names (driver memory + delete-RPC cliff the old bounded
       // listing could never hit) — past this bound the listing, bounded by
@@ -397,7 +298,7 @@ final class ChangeJournal(
       // rewrite after it self-heals the watermark back to ckpt.
       val supersededManifests = tombstoneWatermark() match {
         case Some(w) if w <= ckpt && ckpt - w <= maxDerivedRange =>
-          (w until ckpt).map(v => f"manifest-$v%012d.json")
+          (w until ckpt).map(SnapshotLog.manifestRel)
         case _ => io.fs.listStatus(io.rootPath).toSeq
           .map(_.getPath.getName)
           .filter(_.matches("""manifest-\d{12,}\.json""")) // %012d grows past 12 digits
@@ -452,9 +353,8 @@ final class ChangeJournal(
         // object store. A concurrent reaper may delete a ripe tombstone
         // between our listing and this read — its paths are then simply
         // not "pending".
-        try Json.parse(io.readString(st.getPath))
-          .get("paths").elements().asScala.map(_.asText).toSeq
-        catch { case _: java.io.FileNotFoundException => Nil }
+        io.readIfExists(st.getPath).toSeq
+          .flatMap(Json.parse(_).get("paths").elements().asScala.map(_.asText))
       }.flatten.toSet
 
   /** record paths that just became unreferenced as ONE immutable tombstone
@@ -462,15 +362,16 @@ final class ChangeJournal(
     * writeAtomic (unique tmp + rename), never a bare create: a torn del-*
     * file would poison every later reap's JSON parse.
     */
-  private def pendingAdd(paths: Seq[String]): Unit = {
-    if (paths.isEmpty) return
-    val now = System.currentTimeMillis()
+  private def pendingAdd(paths: Seq[String]): Unit =
+    if (paths.nonEmpty) writeTombstone(System.currentTimeMillis(), paths)
+
+  private def writeTombstone(droppedAt: Long, paths: Seq[String]): Unit = {
     val o = Json.obj()
-    o.put("droppedAt", now)
+    o.put("droppedAt", droppedAt)
     val arr = o.putArray("paths")
     paths.distinct.foreach(arr.add)
     io.writeAtomic(new Path(pendingDir,
-      f"del-$now%013d-${java.util.UUID.randomUUID()}.json"), Json.write(o))
+      f"del-$droppedAt%013d-${java.util.UUID.randomUUID()}.json"), Json.write(o))
   }
 
   /** reclaim tombstone files whose grace window has fully elapsed (all of a
@@ -488,8 +389,7 @@ final class ChangeJournal(
       st.getPath.getName.matches("""del-.*\.json""") && {
         // a concurrent reaper may have taken this tombstone already —
         // its deletes were idempotent with ours, nothing left to do
-        val node = try Json.parse(io.readString(st.getPath))
-                   catch { case _: java.io.FileNotFoundException => null }
+        val node = io.readIfExists(st.getPath).map(Json.parse).orNull
         node == null || node.get("droppedAt").asLong <= cutoff && {
           node.get("paths").elements().asScala.foreach(p =>
             io.fs.delete(new Path(io.rootPath, p.asText), false): Unit)
@@ -512,101 +412,59 @@ final class ChangeJournal(
     */
   private def migrateLegacyPending(): Unit = {
     // read-and-catch: one RPC per truncate, no exists probe
-    val legacy =
-      try io.readString(legacyPendingPath)
-      catch { case _: java.io.FileNotFoundException => return }
-    Json.parse(legacy).elements().asScala.toSeq
-      .groupBy(_.get("droppedAt").asLong).foreach { case (at, entries) =>
-        val o = Json.obj()
-        o.put("droppedAt", at)
-        val arr = o.putArray("paths")
-        entries.map(_.get("path").asText).distinct.foreach(arr.add)
-        io.writeAtomic(new Path(pendingDir,
-          f"del-$at%013d-${java.util.UUID.randomUUID()}.json"), Json.write(o))
-      }
-    io.fs.delete(legacyPendingPath, false): Unit
+    io.readIfExists(legacyPendingPath).foreach { legacy =>
+      Json.parse(legacy).elements().asScala.toSeq
+        .groupBy(_.get("droppedAt").asLong).foreach { case (at, entries) =>
+          writeTombstone(at, entries.map(_.get("path").asText))
+        }
+      io.fs.delete(legacyPendingPath, false): Unit
+    }
   }
 
-  /** The journal's schema: from the manifest when persisted (every commit
-    * since the schema field landed), else inferred from the newest file per
-    * partition (O(partitions) footers), else the minimal meta trio.
+  /** The journal's schema at head `h`, whose live files are `all`: from the
+    * manifest when persisted (every commit since the schema field landed),
+    * else inferred from the newest file per partition (O(partitions)
+    * footers), else the minimal meta trio.
     */
-  private def journalSchema(all: Seq[JsonNode]): org.apache.spark.sql.types.StructType =
-    manifest()
-      .flatMap(m => Option(m.get("schema")).map(_.asText))
-      .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse {
-        if (all.isEmpty) org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("partition",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("offset",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("op",
-            org.apache.spark.sql.types.StringType)))
-        else {
-          val newestPerPartition = all
-            .groupBy(_.get("partition").asInt)
-            .values.map(_.maxBy(_.get("max_offset").asLong).get("path").asText)
-            .toSeq
-          spark.read.option("mergeSchema", "true")
-            .parquet(newestPerPartition.map(r => new Path(io.rootPath, r).toString): _*)
-            .schema
-        }
+  private def journalSchema(h: Head, all: Seq[JsonNode]): StructType =
+    schemaOf(h.manifest).getOrElse {
+      if (all.isEmpty) StructType(Seq(
+        StructField("partition", IntegerType),
+        StructField("offset", LongType),
+        StructField("op", StringType)))
+      else {
+        val newestPerPartition = all
+          .groupBy(_.get("partition").asInt)
+          .values.map(_.maxBy(_.get("max_offset").asLong).get("path").asText)
+          .toSeq
+        spark.read.option("mergeSchema", "true")
+          .parquet(newestPerPartition.map(r => new Path(io.rootPath, r).toString): _*)
+          .schema
       }
+    }
 
   /** Commit this batch's change — `added` files and/or `removed` paths
-    * (truncation) — on top of the current listing, written as a delta
-    * except at checkpoint cadence or first commit.
+    * (truncation) — on top of the pinned head's listing, written as a delta
+    * except at checkpoint cadence or first commit. Returns the manifest
+    * written.
     */
-  private def commitManifest(
-      added: Seq[JsonNode], next: Map[Int, Long], batchId: Long,
-      schema: org.apache.spark.sql.types.StructType,
-      plannedVersion: Long,
-      removed: Seq[String] = Nil): Unit = {
-    val prev = io.requirePlanCoherent(plannedVersion, "journal")
-    val version = plannedVersion + 1
-    // pinned to `prev` (the coherence-checked node) — a peer committing
-    // right after the check must fail the claim/CAS, not leak its state
-    // into this commit's bookkeeping (see LakeTable.commit)
-    val prevCkpt = prev.map { _ =>
-      val pm = manifestOf(prev).get
-      Option(pm.get("checkpointVersion")).map(_.asLong)
-        .getOrElse(pm.get("version").asLong)
+  private def commitManifest(planned: Head, added: Seq[JsonNode],
+      next: Map[Int, Long], batchId: Long, schema: StructType,
+      removed: Seq[String] = Nil): JsonNode =
+    log.commit(planned, batchId, Delta(removed, added)) { (m, c) =>
+      m.put("schema", schema.json)
+      m.put("checkpointVersion", c.checkpointVersion)
+      val pn = m.putObject("partitions")
+      next.keySet.toSeq.sorted.foreach { p =>
+        pn.putObject(p.toString).put("nextOffset", next.getOrElse(p, 0L)): Unit
+      }
+      val fa = m.putArray(if (c.full) "files" else "added")
+      (if (c.full) c.files else added).foreach(fa.add)
+      if (!c.full && removed.nonEmpty) {
+        val ra = m.putArray("removed")
+        removed.foreach(ra.add)
+      }
     }
-    val removedSet = removed.toSet
-    val base = if (removedSet.isEmpty) liveFilesOf(prev)
-               else liveFilesOf(prev).filterNot(f => removedSet(f.get("path").asText))
-    val resolved = base ++ added
-    val writeFull = prev.isEmpty || version - prevCkpt.get >= checkpointEvery
-    val m = Json.obj()
-    m.put("version", version)
-    m.put("batchId", batchId)
-    m.put("appId", appId)
-    m.put("schema", schema.json)
-    m.put("checkpointVersion", if (writeFull) version else prevCkpt.get)
-    val pn = m.putObject("partitions")
-    next.keySet.toSeq.sorted.foreach { p =>
-      val o = pn.putObject(p.toString)
-      o.put("nextOffset", next.getOrElse(p, 0L))
-    }
-    val fa = m.putArray(if (writeFull) "files" else "added")
-    (if (writeFull) resolved else added).foreach(fa.add)
-    if (!writeFull && removed.nonEmpty) {
-      val ra = m.putArray("removed")
-      removed.foreach(ra.add)
-    }
-    // exclusive claim + CAS, exactly the lake's commit discipline (see
-    // LakeTable.commit): a raced loser must never overwrite the winner's
-    // version-named manifest, and a crashed claimer's commit rolls forward
-    val manifestRel = f"manifest-$version%012d.json"
-    if (!io.createVersioned(new Path(io.rootPath, manifestRel), Json.write(m)))
-      io.resolveLostVersionClaim(manifestRel, version, plannedVersion)
-    io.swapSnapshot(
-      io.snapshotJson(version, manifestRel, batchId, appId), version - 1)
-    filesCache = Some((version, resolved))
-    manifestCache = Some((version, m))
-  }
 
   // ---- read / replay (the source) ---------------------------------------
 
@@ -624,20 +482,19 @@ final class ChangeJournal(
     * parquet row-group stats prune the rest.
     */
   def readFrom(committed: Map[Int, Long]): DataFrame = {
-    val all = liveFiles()
+    val h = log.pin()
+    val all = log.files(h)
     val files = all.filter { f =>
       committed.get(f.get("partition").asInt)
         .forall(c => f.get("max_offset").asLong > c)
     }
     if (files.isEmpty) {
       // fully-caught-up resume must still carry the journal's schema, not a
-      // zero-column frame (downstream selects/aggs would fail to resolve).
-      // The schema comes from the MANIFEST (persisted at every commit) — a
-      // caught-up consumer polling frequently must not pay an O(total
-      // journal files) parquet footer scan per call. Footer fallback (newest
-      // file per partition only, O(partitions)) covers pre-schema manifests.
+      // zero-column frame (downstream selects/aggs would fail to resolve);
+      // a frequent poller reads it from the manifest, not from footers (see
+      // append)
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], journalSchema(all))
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], journalSchema(h, all))
     }
     val pathsAbs = files.map(f => new Path(io.rootPath, f.get("path").asText).toString)
     // mergeSchema: appends may add payload columns over time (additive only;
@@ -653,7 +510,7 @@ final class ChangeJournal(
   /** Manifest chunk descriptors as a DataFrame (for tests and metrics). */
   def chunkIndex(): DataFrame = {
     val rows = for {
-      f <- liveFiles()
+      f <- log.files(log.pin())
       c <- f.get("chunks").elements().asScala.toSeq
     } yield (f.get("partition").asInt, f.get("path").asText,
       c.get("first_record_offset").asLong, c.get("num_records").asLong,

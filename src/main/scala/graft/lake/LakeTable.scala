@@ -3,7 +3,6 @@ package graft.lake
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -51,17 +50,24 @@ final class LakeTable(
     val checkpointEvery: Int = 16,
     val shardGroupSize: Int = 64,
     commitStore: CommitStore = RenameCommitStore) {
-  require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
   require(shardGroupSize >= 1, "shardGroupSize must be >= 1")
-  // appId names durable paths (data/part-...-$appId-..., _staging/merge-...,
-  // shards/...) and carries the CAS writer identity: reject anything that
-  // could nest directories or break the sweep/parse layout (ADVICE r7).
-  // Concurrent writers must use DISTINCT appIds — the no-collision story of
-  // staging and promoted names assumes it.
-  require(appId.matches("[A-Za-z0-9._-]+"),
-    s"appId must match [A-Za-z0-9._-]+ (it names durable paths); got '$appId'")
 
   private val io = new TableIO(root, spark, commitStore)
+
+  /** The versioned log this table runs on. Entries key on (partition,
+    * sub): merge/compact maintain exactly one live file per bucket, so a
+    * delta's `touched` removes the bucket's previous file and `added`
+    * supplies its replacement (absent when deletes emptied the bucket).
+    */
+  private val log = new SnapshotLog[(Int, Int), FileEntry](io, appId, "table",
+    checkpointEvery, new LogCodec[(Int, Int), FileEntry] {
+      def key(f: FileEntry) = (f.partition, f.sub)
+      def isDelta(m: JsonNode) = LakeTable.this.isDelta(m)
+      def checkpoint(m: JsonNode) = checkpointEntries(m)
+      def removed(d: JsonNode) = touchedOf(d)
+      def added(d: JsonNode) = entriesOf(d.get("added"))
+      def ordered(fs: Seq[FileEntry]) = fs.sortBy(f => (f.partition, f.sub))
+    })
 
   // dropped-column keys already warned about (once per instance, not per
   // batch — a CDC tail resends the column every batch by nature)
@@ -71,91 +77,41 @@ final class LakeTable(
   /** columns that are engine metadata, not user payload */
   private val metaCols = Seq("partition", "offset", "_sub")
 
-  def lastBatchId: Long = io.readSnapshot().map(_.get("batchId").asLong).getOrElse(-1L)
+  def lastBatchId: Long = log.pin().batchId
 
-  /** Replay fence against a PINNED snapshot (the batch's one snapshot read
-    * — see [[merge]]): same writer identity AND a batch id at or below the
-    * committed one. A different appId is a new writer whose numbering
-    * restarted — its data passes the fence and dedups on watermarks.
-    * Missing appId (old manifests) ⇒ same-app.
-    */
-  private def isReplayOf(snap: Option[JsonNode], batchId: Long): Boolean =
-    snap.flatMap(s => Option(s.get("appId")).map(_.asText))
-      .getOrElse(appId) == appId &&
-      batchId <= snap.map(_.get("batchId").asLong).getOrElse(-1L)
-
-  def currentVersion: Long =
-    io.readSnapshot().map(_.get("version").asLong).getOrElse(-1L)
+  def currentVersion: Long = log.pin().version
 
   /** The table's live bucket count — table metadata, not caller choice: the
     * manifest value (set at first commit, changed only by [[compact]]) wins
     * over the constructor default, so a re-bucketing survives restarts.
     */
-  def layoutSubBuckets: Int = manifest()
+  def layoutSubBuckets: Int = subBucketsOf(log.pin())
+
+  private def subBucketsOf(h: Head): Int = h.manifest
     .flatMap(m => Option(m.get("subBuckets")).map(_.asInt))
     .getOrElse(subBuckets)
 
   private def subExpr(n: Int) =
     pmod(xxhash64(col("repo"), col("path")), lit(n.toLong)).cast("int")
 
-  // current-manifest cache keyed by snapshot version: watermarks / layout /
-  // schemas / fencing each consult the manifest within one batch, and a
-  // checkpoint manifest is O(live files) of JSON — parse it once per version,
-  // not once per accessor (an external writer's commit bumps the version,
-  // invalidating for free).
-  @volatile private var manifestCache: Option[(Long, JsonNode)] = None
-
-  private def manifest(): Option[JsonNode] = manifestOf(io.readSnapshot())
-
-  /** The manifest of a SPECIFIC snapshot node (cache keyed by version).
-    * Plan-consistency primitive: merge/commit read the snapshot ONCE and
-    * derive every plan input (watermarks, schema ladder, layout, live
-    * files) from that one node — independent re-reads per accessor let a
-    * peer's commit land in between and produce an INCONSISTENT plan (e.g.
-    * an empty schema ladder with a non-empty file set, observed as
-    * "empty lake table" in the 3-writer soak) instead of a clean
-    * ConcurrentCommitException at the CAS. One snapshot read per batch is
-    * also ~5 fewer metadata RPCs per merge.
-    */
-  private def manifestOf(snap: Option[JsonNode]): Option[JsonNode] = snap.map { s =>
-    val v = s.get("version").asLong
-    manifestCache match {
-      case Some((cv, m)) if cv == v => m
-      case _ =>
-        val m = Json.parse(
-          io.readString(new Path(io.rootPath, s.get("manifest").asText)))
-        manifestCache = Some((v, m))
-        m
-    }
-  }
-
-  // read-and-catch, not exists-then-read: one RPC instead of two on every
-  // chain-resolution step (this runs per delta on each liveFiles cache
-  // miss and throughout vacuum), and no TOCTOU against a concurrent vacuum
-  // deleting the manifest between the probe and the open
-  private def manifestAt(version: Long): Option[JsonNode] = {
-    val p = new Path(io.rootPath, f"manifest-$version%012d.json")
-    try Some(Json.parse(io.readString(p)))
-    catch { case _: java.io.FileNotFoundException => None }
-  }
-
   /** Per-partition max applied offset (the dedup gate / resume point). */
   def watermarks(): Map[Int, Long] =
-    manifest().map(wmOf).getOrElse(Map.empty)
+    wmOf(log.pin())
 
-  private def wmOf(m: JsonNode): Map[Int, Long] =
-    m.get("watermarks").properties().asScala
-      .map(e => e.getKey.toInt -> e.getValue.asLong).toMap
+  private def wmOf(h: Head): Map[Int, Long] = h.manifest
+    .map(_.get("watermarks").properties().asScala
+      .map(e => e.getKey.toInt -> e.getValue.asLong).toMap)
+    .getOrElse(Map.empty)
 
   private def schemasOf(m: JsonNode): IndexedSeq[StructType] =
     m.get("schemas").elements().asScala
       .map(n => DataType.fromJson(n.asText).asInstanceOf[StructType]).toIndexedSeq
 
   /** All schema versions ever committed; last is current. */
-  private def schemas(): IndexedSeq[StructType] =
-    manifest().map(schemasOf).getOrElse(IndexedSeq.empty)
+  private def schemasOf(h: Head): IndexedSeq[StructType] =
+    h.manifest.map(schemasOf).getOrElse(IndexedSeq.empty)
 
-  def currentSchema: Option[StructType] = schemas().lastOption
+  def currentSchema: Option[StructType] = schemasOf(log.pin()).lastOption
 
   private case class FileEntry(partition: Int, sub: Int, path: String,
       schemaId: Int)
@@ -168,10 +124,8 @@ final class LakeTable(
         f.get("path").asText, f.get("schemaId").asInt)
     }.toSeq
 
-  /** A delta manifest records only the buckets its commit touched; a full
-    * manifest (checkpoint) records every live file. SURVEY.md §4.1 step 1:
-    * commit cost drops from O(live files) to O(touched buckets).
-    */
+  // a delta manifest records only the buckets its commit touched (see
+  // LakeChange); a checkpoint records every live file
   private def isDelta(m: JsonNode): Boolean = m.has("touched")
 
   private def touchedOf(m: JsonNode): Seq[(Int, Int)] =
@@ -213,78 +167,16 @@ final class LakeTable(
   private def shardKey(partition: Int, sub: Int): String =
     s"$partition-${sub / shardGroupSize}"
 
-  /** Resolve a manifest's live-file set. Checkpoints answer directly; a delta
-    * folds forward from the nearest checkpoint at or below it (walk back
-    * until a non-delta appears — chain length is bounded by `checkpointEvery`,
-    * or shorter after a vacuum materialized a checkpoint). The fold keys on
-    * (partition, sub): merge/compact maintain exactly one live file per
-    * bucket, so `touched` removes the bucket's previous file and `added`
-    * supplies its replacement (absent when deletes emptied the bucket).
-    */
-  private def filesOf(m: JsonNode): Seq[FileEntry] = resolveChain(m, retried = false)
-
-  private def resolveChain(m: JsonNode, retried: Boolean): Seq[FileEntry] = {
-    if (!isDelta(m)) return checkpointEntries(m)
-    val v = m.get("version").asLong
-    var chain = List(m)
-    while (isDelta(chain.head)) {
-      val pv = chain.head.get("version").asLong - 1
-      manifestAt(pv) match {
-        case Some(n) => chain = n :: chain
-        case None if !retried =>
-          // Self-heal against a concurrent vacuum: it materializes the
-          // oldest kept version IN PLACE before deleting the chain below
-          // it, so a reader holding pre-materialization nodes restarts the
-          // walk ONCE from a fresh read of its version — if v is retained,
-          // the new walk terminates at the materialized checkpoint before
-          // ever reaching the deleted range. One retry suffices:
-          // materialization is monotone.
-          val refreshed = manifestAt(v).getOrElse(
-            throw new IllegalArgumentException(
-              s"manifest chain for version $v broken at $pv (vacuumed)"))
-          return resolveChain(refreshed, retried = true)
-        case None => throw new IllegalArgumentException(
-          s"manifest chain for version $v broken at $pv (vacuumed)")
-      }
-    }
-    val state = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), FileEntry]
-    checkpointEntries(chain.head).foreach(f => state((f.partition, f.sub)) = f)
-    chain.tail.foreach { d =>
-      touchedOf(d).foreach(state.remove)
-      entriesOf(d.get("added")).foreach(f => state((f.partition, f.sub)) = f)
-    }
-    state.values.toSeq.sortBy(f => (f.partition, f.sub))
-  }
-
-  // resolved-file cache keyed by snapshot version: merge() consults
-  // liveFiles() more than once per batch, and chain resolution reads up to
-  // checkpointEvery small JSONs — cache per version, invalidated for free
-  // because an external writer's commit changes currentVersion.
-  @volatile private var filesCache: Option[(Long, Seq[FileEntry])] = None
-
-  private def liveFiles(): Seq[FileEntry] = liveFilesOf(io.readSnapshot())
-
-  /** live files of a SPECIFIC snapshot node — see [[manifestOf]] */
-  private def liveFilesOf(snap: Option[JsonNode]): Seq[FileEntry] = snap match {
-    case None => Seq.empty
-    case Some(s) =>
-      val v = s.get("version").asLong
-      filesCache match {
-        case Some((cv, fs)) if cv == v => fs
-        case _ =>
-          val fs = filesOf(manifestOf(snap).get)
-          filesCache = Some((v, fs))
-          fs
-      }
-  }
-
   // ---- read ---------------------------------------------------------------
 
   /** Current table state under the current (evolved) schema. Old files are
     * read per recorded schema version and aligned (missing columns null,
     * widened casts) — Catalyst sees plain unions of parquet scans.
     */
-  def read(): DataFrame = readFiles(liveFiles(), schemas())
+  def read(): DataFrame = {
+    val h = log.pin()
+    readFiles(log.files(h), schemasOf(h))
+  }
 
   /** Time travel: the table state as of snapshot `version`, under that
     * snapshot's schema. Every commit keeps its manifest on disk (the
@@ -293,9 +185,9 @@ final class LakeTable(
     * the reference's append-only offset-named file history.
     */
   def readVersion(version: Long): DataFrame = {
-    val m = manifestAt(version).getOrElse(throw new IllegalArgumentException(
+    val m = log.manifestAt(version).getOrElse(throw new IllegalArgumentException(
       s"no manifest for version $version at $root (vacuumed or never committed)"))
-    readFiles(filesOf(m), schemasOf(m))
+    readFiles(log.resolve(m), schemasOf(m))
   }
 
   /** Physical file schema = (partition, offset) provenance + that file's
@@ -329,25 +221,11 @@ final class LakeTable(
     * was fenced off as a replay.
     */
   def merge(batch: DataFrame, batchId: Long): Long = {
-    // ONE snapshot read pins the WHOLE plan: the epoch fence, the CAS
-    // baseline, and — via `m0`/`snap0` below — the watermark gate, schema
-    // ladder, layout and state file set. Per-accessor re-reads
-    // (watermarks() / schemas() / layoutSubBuckets / liveFiles() each
-    // re-opened snapshot.json) let a peer's commit land BETWEEN two reads
-    // and hand the merge an inconsistent plan — observed in the 3-writer
-    // soak as "empty lake table" (schema ladder from the pre-commit
-    // version, file set from the post-commit one). Pinning turns every
-    // such race into the one designed outcome: a clean
-    // ConcurrentCommitException at the CAS. Also ~5 fewer snapshot reads
-    // per batch on the commit path.
-    val snap0 = io.readSnapshot()
-    if (isReplayOf(snap0, batchId)) return -1L // epoch fence: replayed batch
-    // CAS baseline = the version this batch PLANS against. Baselining any
-    // later — e.g. a fresh read inside commit() — would let a concurrent
-    // writer's commit land mid-merge and be silently clobbered by a plan
-    // that never saw it; pinning here makes the CAS guard the WHOLE batch.
-    val plannedVersion = snap0.map(_.get("version").asLong).getOrElse(-1L)
-    val m0 = manifestOf(snap0)
+    // ONE snapshot read pins the WHOLE plan (see [[Head]]): the epoch fence,
+    // the CAS baseline, the watermark gate, schema ladder, layout and state
+    // file set
+    val h = log.pin()
+    if (log.isReplayOf(h, batchId)) return -1L // epoch fence: replayed batch
     var tMark = System.nanoTime()
     def mark(tag: String): Unit = {
       val now = System.nanoTime()
@@ -360,7 +238,7 @@ final class LakeTable(
       tMark = now
     }
 
-    val wm = m0.map(wmOf).getOrElse(Map.empty)
+    val wm = wmOf(h)
     // watermark dedup as an O(1)-per-row literal lookup, not a broadcast
     // join — see LakeTable.offsetGate
     val deduped = LakeTable.offsetGate(batch, wm, strict = true)
@@ -379,7 +257,7 @@ final class LakeTable(
     // schema FIRST: the CDC tail usually keeps sending a dropped column,
     // and letting it re-enter the evolution merge would silently resurrect
     // the drop on the very next batch.
-    val oldSchemas = m0.map(schemasOf).getOrElse(IndexedSeq.empty)
+    val oldSchemas = schemasOf(h)
     val droppedKeys = SchemaEvolution.droppedKeys(oldSchemas)
     // The discard is silent by data-path design (the column simply stops
     // being projected), so it must NOT be silent operationally: a source DB
@@ -409,8 +287,7 @@ final class LakeTable(
       else oldSchemas :+ target
     val schemaId = newSchemas.size - 1
 
-    val sb = m0.flatMap(m => Option(m.get("subBuckets")).map(_.asInt))
-      .getOrElse(subBuckets)
+    val sb = subBucketsOf(h)
     val withSub = deduped.withColumn("_sub", subExpr(sb))
 
     // ONE stats job over the gated batch, a codegen'd hash aggregate. Its
@@ -435,14 +312,13 @@ final class LakeTable(
     }.toSeq
     mark("stats")
     if (touched.isEmpty) {
-      commit(Delta(Nil, Nil), wm, newSchemas, batchId, Nil, sb,
-        plannedVersion)
+      commit(h, Delta(Nil, Nil), wm, newSchemas, batchId, Nil, sb)
       mark("commit")
       return 0L
     }
 
     val touchedFiles =
-      liveFilesOf(snap0).filter(f => touched.contains((f.partition, f.sub)))
+      log.files(h).filter(f => touched.contains((f.partition, f.sub)))
 
     // current state of touched buckets only (file-level pruning: untouched
     // buckets never leave disk; a file IS one bucket, so reading the touched
@@ -497,20 +373,10 @@ final class LakeTable(
     // definition.
     val groupCols = Seq("partition", "_sub", "repo", "path")
     val mcols = unioned.columns.filter(c => c != "_new" && !groupCols.contains(c))
-    // Explicit partition count, derived from the work's own shape (the
-    // touched-bucket count, capped by the session's tuned shuffle
-    // parallelism) rather than left to AQE: the reduce side of this
-    // exchange ends in one parquet FILE per touched bucket, and AQE's
-    // byte-based advisory coalescing — blind to per-file open/close/
-    // footer cost — collapses a small batch's shuffle to one task that
-    // writes every bucket file serially (measured: the dominant slice of
-    // merge/write at gate scale). min(touched, shuffle.partitions) is
-    // scale-adaptive in both directions: small batches parallelize by
-    // bucket, huge touched sets still respect the cluster-tuned cap.
-    val writeParts = math.min(touched.size,
-      spark.sessionState.conf.numShufflePartitions).max(1)
+    // the reduce side of this exchange ends in one parquet FILE per touched
+    // bucket (see TableIO.writeTasks)
     val merged0 = unioned
-      .repartition(writeParts, col("partition"), col("_sub"))
+      .repartition(io.writeTasks(touched.size), col("partition"), col("_sub"))
       .groupBy(col("partition"), col("_sub"), col("repo"), col("path"))
       .agg(max_by(struct(mcols.map(col).toIndexedSeq: _*),
         struct(col("_new"), col("offset"))).as("_m"))
@@ -534,13 +400,8 @@ final class LakeTable(
     // appId-namespaced: two writers legitimately race one root now (CAS
     // commit), and their staging must never collide on a shared batchId
     val staging = new Path(io.rootPath, s"_staging/merge-$appId-$batchId")
-    io.fs.delete(staging, true)
     LakeTable.planHook("merge-write", toWrite)
-    toWrite
-      .write.mode("overwrite").partitionBy("_pp", "_ss")
-      .option("compression", TableIO.dataCodec)
-      .options(TableIO.stagingWriteOptions ++ io.writeOptions)
-      .parquet(staging.toString)
+    io.writeStaged(toWrite, staging, "_pp", "_ss")
     mark("write")
 
     // The write evaluated the batch a second time (no persist): it must
@@ -548,42 +409,16 @@ final class LakeTable(
     // divergence means a nondeterministic source, which would silently
     // desynchronize watermarks/lineage from the written data. (The
     // converse — a touched bucket with no staged part file — is legal:
-    // deletes can empty a bucket.) ONE recursive listing answers the rogue
-    // check AND locates every part file for the promote fan-out — the old
-    // shape paid a per-level listStatus sweep plus an exists + listStatus
-    // per touched bucket, O(touched) metadata round-trips per batch on an
-    // object store. Loud failure beats silent corruption.
-    val stagedParts = io.listStagedParts(staging)
-    val staged = stagedParts.keys.toSeq.flatMap { rel =>
-      val m = LakeTable.stagedBucketRe.findFirstMatchIn(rel)
-      require(m.isDefined, s"unrecognized staged path $rel under $staging")
-      m.map(g => (g.group(1).toInt, g.group(2).toInt))
-    }
-    val rogue = staged.filterNot(touched.contains)
+    // deletes can empty a bucket.) Loud failure beats silent corruption.
+    val staged = stagedBuckets(staging)
+    val rogue = staged.keys.filterNot(touched.contains)
     require(rogue.isEmpty,
       s"merge write produced buckets outside the stats scan's touched set " +
         s"(${rogue.take(5)}…): batch source must be deterministic across scans")
 
-    // promote each touched bucket to its deterministic name. Promotes fan
-    // out on the SHARED metadata pool (MetaIO): on an object store each one
-    // is a copy+delete, and at 10^6 micro-batches a per-merge pool would be
-    // 10^6 create/destroy cycles on the driver. fetchAll cancels the queued
-    // remainder on failure, so a failed promote doesn't keep burning doomed
-    // copies before the batch retry touches the same staging dir. Results
-    // keep (p, s) order, so the manifest stays deterministic.
-    io.fs.mkdirs(new Path(io.rootPath, "data")) // once, not once per file
-    val newEntries = MetaIO.fetchAll(touched.toSeq.sorted) { case (p, s) =>
-      stagedParts.get(s"_pp=$p/_ss=$s").map { src =>
-        // deterministic per (writer, batch): a RETRY of this writer's batch
-        // overwrites its own names (the reference's offset-keyed dedup
-        // story), while a concurrent writer sharing a batchId — legal now
-        // that commits are CAS'd — can never overwrite this writer's
-        // promoted files out from under its committed manifest
-        val rel = f"data/part-$p%05d-s$s%04d-$appId-b$batchId%012d.parquet"
-        io.promoteListedFile(src, new Path(io.rootPath, rel))
-        FileEntry(p, s, rel, schemaId)
-      } // None = bucket emptied by deletes
-    }.flatten
+    // a touched bucket with no staged file was emptied by deletes
+    val newEntries = promote(touched.toSeq.flatMap(b => staged.get(b).map(b -> _)),
+      f"b$batchId%012d", schemaId)
     io.fs.delete(staging, true)
     mark("promote")
 
@@ -591,12 +426,47 @@ final class LakeTable(
     val lineage = statRows.map { case (p, maxOff, minOff, n, nUp) =>
       graft.model.LineageRow(batchId, p, minOff, maxOff, n, nUp, n - nUp, appId)
     }
-    commit(Delta(touched.toSeq.sorted, newEntries), newWm, newSchemas, batchId,
-      lineage, sb, plannedVersion)
+    commit(h, Delta(touched.toSeq.sorted, newEntries), newWm, newSchemas, batchId,
+      lineage, sb)
     mark("commit")
     // superseded files stay on disk unreferenced (GC-able), exactly like the
     // reference's orphaned uploads after a crash (SURVEY.md §4)
     statRows.map(_._4).sum
+  }
+
+  /** Each staged bucket's single part file, by ONE recursive listing of the
+    * staged tree — the old shape paid a per-level listStatus sweep plus an
+    * exists + listStatus per touched bucket, O(touched) metadata
+    * round-trips per batch on an object store.
+    */
+  private def stagedBuckets(staging: Path): Map[(Int, Int), Path] =
+    io.listStagedParts(staging).map { case (rel, src) =>
+      val m = LakeTable.stagedBucketRe.findFirstMatchIn(rel)
+      require(m.isDefined, s"unrecognized staged path $rel under $staging")
+      (m.get.group(1).toInt, m.get.group(2).toInt) -> src
+    }
+
+  /** Promote staged bucket files to their deterministic names,
+    * `data/part-{p}-s{sub}-{appId}-{tag}.parquet`: a RETRY of this writer's
+    * batch overwrites its own names (the reference's offset-keyed dedup
+    * story), while a concurrent writer sharing a batchId — legal now that
+    * commits are CAS'd — can never overwrite this writer's promoted files
+    * out from under its committed manifest. Promotes fan out on the SHARED
+    * metadata pool (MetaIO): on an object store each one is a copy+delete,
+    * and at 10^6 micro-batches a per-merge pool would be 10^6
+    * create/destroy cycles on the driver. fetchAll cancels the queued
+    * remainder on failure, so a failed promote doesn't keep burning doomed
+    * copies before the batch retry touches the same staging dir. Results
+    * keep (p, s) order, so the manifest stays deterministic.
+    */
+  private def promote(staged: Seq[((Int, Int), Path)], tag: String,
+      schemaId: Int): Seq[FileEntry] = {
+    io.fs.mkdirs(new Path(io.rootPath, "data")) // once, not once per file
+    MetaIO.fetchAll(staged.sortBy(_._1)) { case ((p, s), src) =>
+      val rel = f"data/part-$p%05d-s$s%04d-$appId-$tag.parquet"
+      io.promoteListedFile(src, new Path(io.rootPath, rel))
+      FileEntry(p, s, rel, schemaId)
+    }
   }
 
   /** SOFT-drop a payload column: a metadata-only commit appends a new
@@ -621,10 +491,8 @@ final class LakeTable(
   def dropColumn(name: String): Unit = {
     // one pinned snapshot: baseline, ladder, watermarks and layout must be
     // the same version (see merge)
-    val snap0 = io.readSnapshot()
-    val plannedVersion = snap0.map(_.get("version").asLong).getOrElse(-1L)
-    val m0 = manifestOf(snap0)
-    val ss = m0.map(schemasOf).getOrElse(IndexedSeq.empty)
+    val h = log.pin()
+    val ss = schemasOf(h)
     require(ss.nonEmpty, s"cannot drop '$name': empty lake table at $root")
     val cur = ss.last
     val k = SchemaEvolution.keyOf(name)
@@ -637,26 +505,17 @@ final class LakeTable(
     require(next.fields.nonEmpty, "cannot drop the last payload column")
     // same empty-delta commit shape as a no-row merge: live files, batch
     // fence, and watermarks all carry over; only the ladder grows
-    commit(Delta(Nil, Nil), m0.map(wmOf).getOrElse(Map.empty), ss :+ next,
-      snap0.map(_.get("batchId").asLong).getOrElse(-1L), Nil,
-      m0.flatMap(m => Option(m.get("subBuckets")).map(_.asInt))
-        .getOrElse(subBuckets),
-      plannedVersion)
+    commit(h, Delta(Nil, Nil), wmOf(h), ss :+ next, h.batchId, Nil, subBucketsOf(h))
   }
 
-  /** How a commit changes the live-file set. `Full` replaces it wholesale
-    * (compaction); `Delta` replaces the files of `touched` buckets with
-    * `added` (a MERGE). Deltas are written log-structured (SURVEY.md §4.1):
-    * the manifest records only the change, so commit JSON is O(touched
-    * buckets) not O(live files) — at 2^14 buckets × hundreds of partitions a
-    * batch touching 0.1% of keys writes KBs, not the whole table listing.
-    * Every `checkpointEvery`-th commit materializes a full checkpoint to
-    * bound the reader's fold-forward chain (the Delta Lake checkpoint shape).
+  /** A `Full` change replaces the live-file set wholesale (compaction); a
+    * `Delta` replaces the files of `touched` buckets with `added` (a
+    * MERGE). Deltas are written log-structured (SURVEY.md §4.1): the
+    * manifest records only the change, so commit JSON is O(touched buckets)
+    * not O(live files) — at 2^14 buckets × hundreds of partitions a batch
+    * touching 0.1% of keys writes KBs, not the whole table listing.
     */
-  private sealed trait CommitChange
-  private case class Full(files: Seq[FileEntry]) extends CommitChange
-  private case class Delta(touched: Seq[(Int, Int)], added: Seq[FileEntry])
-    extends CommitChange
+  private type LakeChange = Change[(Int, Int), FileEntry]
 
   private def fileEntryJson(f: FileEntry): JsonNode = {
     val n = Json.obj()
@@ -676,13 +535,13 @@ final class LakeTable(
     * simply misses on every key and rewrites everything once — safe.
     *
     * Reuse is existence-checked at plan time AND re-verified just before
-    * the snapshot swap ([[verifyShards]]): a concurrent vacuum's shard GC
-    * may have reclaimed a shard between our read of the previous
-    * checkpoint's map and this commit's publish — a reuse of a vanished
-    * path would otherwise surface as FileNotFound on every cold read of
-    * the new checkpoint, with no way to self-heal (the listing exists
-    * nowhere else). A vanished shard is simply rewritten fresh under this
-    * version.
+    * the snapshot swap (a second pass over the written map with nothing
+    * dirty): a concurrent vacuum's shard GC may have reclaimed a shard
+    * between our read of the previous checkpoint's map and this commit's
+    * publish — a reuse of a vanished path would otherwise surface as
+    * FileNotFound on every cold read of the new checkpoint, with no way to
+    * self-heal (the listing exists nowhere else). A vanished shard is
+    * simply rewritten fresh under this version.
     */
   private def writeShards(node: com.fasterxml.jackson.databind.node.ObjectNode,
       version: Long, resolved: Seq[FileEntry],
@@ -721,133 +580,69 @@ final class LakeTable(
     r
   }
 
-  /** Last-moment re-verification of shard reuse (see [[writeShards]]): any
-    * referenced shard that vanished since planning is rewritten under this
-    * version and the manifest updated IN PLACE — all before the snapshot
-    * pointer moves, so no reader can ever resolve the new checkpoint to a
-    * dangling shard path. Returns true if the manifest changed.
-    */
-  private def verifyShards(m: com.fasterxml.jackson.databind.node.ObjectNode,
-      version: Long, resolved: Seq[FileEntry]): Boolean = {
-    if (!m.has("shards")) return false
-    val existing = listShardRels() // one fresh listing, not O(shards) HEADs
-    val missing = shardMapOf(m).filter { case (_, rel) => !existing.contains(rel) }
-    if (missing.isEmpty) return false
-    val byKey = resolved.groupBy(f => shardKey(f.partition, f.sub))
-    val shardsNode = m.get("shards")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    missing.keys.toSeq.sorted.foreach { k =>
-      shardsNode.put(k, writeFreshShard(version, byKey(k)))
-    }
-    true
-  }
-
-  private def commit(change: CommitChange, wm: Map[Int, Long],
+  private def commit(planned: Head, change: LakeChange, wm: Map[Int, Long],
       schemaVersions: IndexedSeq[StructType], batchId: Long,
-      lineage: Seq[graft.model.LineageRow], sub: Int,
-      plannedVersion: Long): Unit = {
-    val prev = io.requirePlanCoherent(plannedVersion, "table")
-    val version = plannedVersion + 1
-    // nearest checkpoint at or below the previous version (advisory — the
-    // reader walks back to the first actual full manifest; this only drives
-    // the cadence decision, and a vacuum-materialized checkpoint in between
-    // merely checkpoints again sooner than strictly needed). Pinned to
-    // `prev` (the coherence-checked node), never a fresh manifest() read: a
-    // peer committing right after the coherence check must fail the
-    // claim/CAS below, not leak its state into this commit's bookkeeping.
-    val prevCkpt = prev.map { _ =>
-      val pm = manifestOf(prev).get
-      Option(pm.get("checkpointVersion")).map(_.asLong)
-        .getOrElse(pm.get("version").asLong)
-    }
-    // the post-commit live set (cheap: previous set comes from the cache;
-    // pinned to `prev` like the checkpoint lookup above)
-    val resolved: Seq[FileEntry] = (change match {
-      case Full(fs) => fs
-      case Delta(touched, added) =>
-        val t = touched.toSet
-        liveFilesOf(prev).filterNot(f => t.contains((f.partition, f.sub))) ++ added
-    }).sortBy(f => (f.partition, f.sub))
-    val writeFull = change.isInstanceOf[Full] || prev.isEmpty ||
-      version - prevCkpt.get >= checkpointEvery
-
-    val m = Json.obj()
-    m.put("version", version)
-    m.put("batchId", batchId)
-    m.put("appId", appId)
-    m.put("subBuckets", sub)
-    m.put("checkpointVersion", if (writeFull) version else prevCkpt.get)
-    val wmNode = m.putObject("watermarks")
-    wm.toSeq.sortBy(_._1).foreach { case (p, o) => wmNode.put(p.toString, o) }
-    val sArr = m.putArray("schemas")
-    schemaVersions.foreach(s => sArr.add(s.json))
-    if (writeFull) {
-      // sharded checkpoint: reuse the previous checkpoint's shards for
-      // bucket groups untouched since it. Dirty = groups touched by any
-      // delta in (ckpt, version) plus this commit's own change; a Full
-      // change (compaction) rewrites everything. The recorded
-      // checkpointVersion is advisory (a vacuum may have GC'd it and
-      // materialized a newer one without rewriting successors' fields), so
-      // fall back to walking back to the nearest SURVIVING checkpoint —
-      // without the fallback every shard would be rewritten after each
-      // such vacuum.
-      val prevCkptManifest: Option[JsonNode] =
-        prevCkpt.flatMap(manifestAt).filter(n => !isDelta(n)).orElse {
-          Iterator.iterate(version - 1)(_ - 1).takeWhile(_ >= 0)
-            .map(manifestAt)
-            .takeWhile(_.isDefined).flatten
-            .find(n => !isDelta(n))
-        }
-      val prevShards = prevCkptManifest.map(shardMapOf).getOrElse(Map.empty)
-      val dirty: Set[String] = change match {
-        case Full(_) => resolved.map(f => shardKey(f.partition, f.sub)).toSet
-        case Delta(touched, added) =>
-          val chainDirty = prevCkptManifest.toSeq.flatMap { pc =>
-            val cv = pc.get("version").asLong
-            ((cv + 1) until version).flatMap(v => manifestAt(v).toSeq
-              .filter(isDelta).flatMap(touchedOf(_).map((shardKey _).tupled)))
+      lineage: Seq[graft.model.LineageRow], sub: Int): Unit =
+    log.commit(planned, batchId, change) { (m, c) =>
+      m.put("subBuckets", sub)
+      m.put("checkpointVersion", c.checkpointVersion)
+      val wmNode = m.putObject("watermarks")
+      wm.toSeq.sortBy(_._1).foreach { case (p, o) => wmNode.put(p.toString, o) }
+      val sArr = m.putArray("schemas")
+      schemaVersions.foreach(s => sArr.add(s.json))
+      if (c.full) {
+        // sharded checkpoint: reuse the previous checkpoint's shards for
+        // bucket groups untouched since it. Dirty = groups touched by any
+        // delta in (ckpt, version) plus this commit's own change; a Full
+        // change (compaction) rewrites everything. The recorded
+        // checkpointVersion is advisory (a vacuum may have GC'd it and
+        // materialized a newer one without rewriting successors' fields),
+        // so fall back to walking back to the nearest SURVIVING checkpoint
+        // — without the fallback every shard would be rewritten after each
+        // such vacuum.
+        val prevCkptManifest: Option[JsonNode] =
+          c.prevCheckpoint.flatMap(log.manifestAt).filter(n => !isDelta(n)).orElse {
+            Iterator.iterate(c.version - 1)(_ - 1).takeWhile(_ >= 0)
+              .map(log.manifestAt)
+              .takeWhile(_.isDefined).flatten
+              .find(n => !isDelta(n))
           }
-          (touched.map((shardKey _).tupled) ++
-            added.map(f => shardKey(f.partition, f.sub)) ++ chainDirty).toSet
+        val prevShards = prevCkptManifest.map(shardMapOf).getOrElse(Map.empty)
+        val dirty: Set[String] = change match {
+          case Full(_) => c.files.map(f => shardKey(f.partition, f.sub)).toSet
+          case Delta(touched, added) =>
+            val chainDirty = prevCkptManifest.toSeq.flatMap { pc =>
+              val cv = pc.get("version").asLong
+              ((cv + 1) until c.version).flatMap(v => log.manifestAt(v).toSeq
+                .filter(isDelta).flatMap(touchedOf(_).map((shardKey _).tupled)))
+            }
+            (touched.map((shardKey _).tupled) ++
+              added.map(f => shardKey(f.partition, f.sub)) ++ chainDirty).toSet
+        }
+        writeShards(m, c.version, c.files, prevShards, dirty)
+      } else {
+        val Delta(touched, added) = change: @unchecked
+        val ta = m.putArray("touched")
+        touched.foreach { case (p, s) =>
+          val t = ta.addArray(); t.add(p); t.add(s): Unit
+        }
+        val aa = m.putArray("added")
+        added.sortBy(f => (f.partition, f.sub)).foreach(f => aa.add(fileEntryJson(f)))
       }
-      writeShards(m, version, resolved, prevShards, dirty)
-    } else {
-      val Delta(touched, added) = change: @unchecked
-      val ta = m.putArray("touched")
-      touched.foreach { case (p, s) =>
-        val t = ta.addArray(); t.add(p); t.add(s): Unit
+      val la = m.putArray("lineage")
+      lineage.foreach { l =>
+        val n = Json.obj()
+        n.put("batchId", l.batchId); n.put("partition", l.partition)
+        n.put("firstOffset", l.firstOffset); n.put("lastOffset", l.lastOffset)
+        n.put("numEvents", l.numEvents); n.put("numUpserts", l.numUpserts)
+        n.put("numDeletes", l.numDeletes); n.put("appId", l.appId)
+        la.add(n)
       }
-      val aa = m.putArray("added")
-      added.sortBy(f => (f.partition, f.sub)).foreach(f => aa.add(fileEntryJson(f)))
-    }
-    val la = m.putArray("lineage")
-    lineage.foreach { l =>
-      val n = Json.obj()
-      n.put("batchId", l.batchId); n.put("partition", l.partition)
-      n.put("firstOffset", l.firstOffset); n.put("lastOffset", l.lastOffset)
-      n.put("numEvents", l.numEvents); n.put("numUpserts", l.numUpserts)
-      n.put("numDeletes", l.numDeletes); n.put("appId", l.appId)
-      la.add(n)
-    }
-    // re-verify shard reuse against a concurrent vacuum's GC, as late as
-    // possible before the pointer moves (mutates `m` in place; the manifest
-    // file does not exist yet, so this is invisible to readers)
-    verifyShards(m, version, resolved): Unit
-    // the version-named manifest is an EXCLUSIVE claim, not an overwrite: a
-    // raced loser writing plainly here would corrupt the winner's
-    // already-referenced manifest even though its own pointer swap then
-    // fails loudly — the one silent-clobber window the snapshot CAS alone
-    // cannot close. Losing the claim resolves via roll-forward (a crashed
-    // claimer's durable commit is published, never wedged on) and always
-    // throws ConcurrentCommitException.
-    val manifestRel = f"manifest-$version%012d.json"
-    if (!io.createVersioned(new Path(io.rootPath, manifestRel), Json.write(m)))
-      io.resolveLostVersionClaim(manifestRel, version, plannedVersion)
-    io.swapSnapshot(
-      io.snapshotJson(version, manifestRel, batchId, appId), version - 1)
-    filesCache = Some((version, resolved))
-    manifestCache = Some((version, m))
-  }
+      // re-verify shard reuse against a concurrent vacuum's GC, as late as
+      // possible before the pointer moves (mutates `m` in place; the
+      // manifest file does not exist yet, so this is invisible to readers)
+      if (c.full) writeShards(m, c.version, c.files, shardMapOf(m), Set.empty)
+    }: Unit
 
   /** Garbage-collect history: keep the last `keepLast` snapshots readable,
     * delete superseded data files and manifests older than the horizon.
@@ -876,44 +671,28 @@ final class LakeTable(
     // identical) resolved checkpoint, so every manifest below keepFrom can
     // be deleted without breaking fold-forward resolution of kept versions.
     // Atomic rename: a crash mid-rewrite leaves the old delta intact.
-    manifestAt(keepFrom).foreach { m =>
-      if (isDelta(m)) {
-        val resolved = filesOf(m)
-        val o = m.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        o.remove("touched"); o.remove("added")
-        o.put("checkpointVersion", keepFrom)
-        // sharded, all partitions written fresh (no reuse bookkeeping at
-        // vacuum cadence); a crash after shards but before the atomic
-        // manifest rename leaves orphan shards for the grace-window pass
-        writeShards(o, keepFrom, resolved, Map.empty,
-          resolved.map(f => shardKey(f.partition, f.sub)).toSet)
-        io.writeAtomic(new Path(io.rootPath, f"manifest-$keepFrom%012d.json"),
-          Json.write(o))
-        // the rewrite may concern the CURRENT version (keepLast=1): drop
-        // the parsed-manifest cache so later reads see the checkpoint, not
-        // the stale delta node
-        manifestCache = None
-      }
+    log.materialize(keepFrom) { (o, resolved) =>
+      o.remove("touched"); o.remove("added")
+      // sharded, all partitions written fresh (no reuse bookkeeping at
+      // vacuum cadence); a crash after shards but before the atomic
+      // manifest rename leaves orphan shards for the grace-window pass
+      writeShards(o, keepFrom, resolved, Map.empty,
+        resolved.map(f => shardKey(f.partition, f.sub)).toSet)
     }
     // one forward fold over [horizon, cur] — one manifest read per version
     // and one shard read per referenced shard, instead of re-walking each
     // version's chain independently (O(range × chain) small GETs on an
     // object store)
-    val resolvedByVersion = resolveRange(horizon, cur)
+    val resolvedByVersion = log.resolveRange(horizon, cur)
     def pathsOf(v: Long): Seq[String] =
       resolvedByVersion.get(v).toSeq.flatten.map(_.path)
     val live: Set[String] = (keepFrom to cur).flatMap(pathsOf).toSet
-    val doomed = (horizon until keepFrom).flatMap(manifestAt)
+    val doomed = (horizon until keepFrom).flatMap(log.manifestAt)
     val superseded: Set[String] =
       (horizon until keepFrom).flatMap(pathsOf).toSet -- live
-    var dataDeleted = superseded.count(rel => io.fs.delete(new Path(io.rootPath, rel), false))
-    val dataCutoff = System.currentTimeMillis() - orphanGraceMs
-    val referenced = live ++ superseded
-    dataDeleted += io.listOrEmpty(new Path(io.rootPath, "data")).count { st =>
-      val rel = s"data/${st.getPath.getName}"
-      !referenced.contains(rel) && st.getModificationTime < dataCutoff &&
-        io.fs.delete(st.getPath, false)
-    }
+    val dataDeleted =
+      superseded.count(rel => io.fs.delete(new Path(io.rootPath, rel), false)) +
+        reapUnkept("data", live ++ superseded, orphanGraceMs)
     // The audit trail outlives snapshot retention: roll the lineage rows of
     // manifests about to be GC'd into an APPEND-ONLY PARQUET SEGMENT before
     // deleting them. One segment per vacuum, named by the GC range's upper
@@ -950,7 +729,7 @@ final class LakeTable(
     // returns false for a missing path, so the probe was a second metadata
     // RPC per doomed manifest (vacuum reaps O(retention) of them at once)
     val manifestsDeleted = (horizon until keepFrom).count { v =>
-      io.fs.delete(new Path(io.rootPath, f"manifest-$v%012d.json"), false)
+      io.fs.delete(new Path(io.rootPath, SnapshotLog.manifestRel(v)), false)
     }
     // Shard GC. Unlike data files, shards get NO immediate known-superseded
     // class: a concurrent writer's in-progress checkpoint commit may be
@@ -961,17 +740,9 @@ final class LakeTable(
     // past the mtime grace window, which by then covers any commit that
     // could have planned a reuse. Shards are small; delayed reclamation is
     // the cheap price of staying safe next to a live writer.
-    val shards = io.listOrEmpty(new Path(io.rootPath, "shards"))
-    if (shards.nonEmpty) {
-      val keptShards: Set[String] = (keepFrom to cur)
-        .flatMap(v => manifestAt(v).toSeq.flatMap(shardMapOf(_).values)).toSet
-      val cutoff = System.currentTimeMillis() - orphanGraceMs
-      shards.foreach { st =>
-        val rel = s"shards/${st.getPath.getName}"
-        if (!keptShards.contains(rel) && st.getModificationTime < cutoff)
-          io.fs.delete(st.getPath, false): Unit
-      }
-    }
+    reapUnkept("shards", (keepFrom to cur)
+      .flatMap(v => log.manifestAt(v).toSeq.flatMap(shardMapOf(_).values)).toSet,
+      orphanGraceMs): Unit
     if (keepFrom > horizon) // O(keepLast) future walks, not O(lifetime)
       io.writeAtomic(horizonPath, keepFrom.toString)
     // crashed peers' abandoned staging reclaims at maintenance cadence,
@@ -981,36 +752,18 @@ final class LakeTable(
     (dataDeleted, manifestsDeleted)
   }
 
-  /** Resolve the live-file set of every existing version in [from, to] with
-    * ONE manifest read per version: fold each delta onto the running state;
-    * a checkpoint (or a gap) resets the fold. Only vacuum needs a whole
-    * range — everything else resolves single versions via [[filesOf]].
+  /** Delete the files directly under `dir` that `keep` (root-relative
+    * paths, evaluated only when `dir` lists non-empty) does not name and
+    * whose mtime is older than `graceMs`; returns how many went.
     */
-  private def resolveRange(from: Long, to: Long): Map[Long, Seq[FileEntry]] = {
-    val out = scala.collection.mutable.Map.empty[Long, Seq[FileEntry]]
-    var state: Option[scala.collection.mutable.LinkedHashMap[(Int, Int), FileEntry]] = None
-    var v = from
-    while (v <= to) {
-      manifestAt(v) match {
-        case None => state = None
-        case Some(m) =>
-          val st = (if (isDelta(m)) state else None) match {
-            case Some(prev) =>
-              touchedOf(m).foreach(prev.remove)
-              entriesOf(m.get("added")).foreach(f => prev((f.partition, f.sub)) = f)
-              prev
-            case None =>
-              val fresh =
-                scala.collection.mutable.LinkedHashMap.empty[(Int, Int), FileEntry]
-              filesOf(m).foreach(f => fresh((f.partition, f.sub)) = f)
-              fresh
-          }
-          out(v) = st.values.toSeq.sortBy(f => (f.partition, f.sub))
-          state = Some(st)
-      }
-      v += 1
+  private def reapUnkept(dir: String, keep: => Set[String], graceMs: Long): Int = {
+    val listed = io.listOrEmpty(new Path(io.rootPath, dir))
+    if (listed.isEmpty) return 0
+    val (kept, cutoff) = (keep, System.currentTimeMillis() - graceMs)
+    listed.count { st =>
+      !kept.contains(s"$dir/${st.getPath.getName}") &&
+        st.getModificationTime < cutoff && io.fs.delete(st.getPath, false)
     }
-    out.toMap
   }
 
   private def legacyArchivePath = new Path(io.rootPath, "lineage-archive.json")
@@ -1019,8 +772,7 @@ final class LakeTable(
     * (read-and-catch: one RPC on every vacuum, no exists probe)
     */
   private def legacyArchiveRows(): Option[Seq[graft.model.LineageRow]] =
-    try Some(lineageRowsOf(Json.parse(io.readString(legacyArchivePath))).toSeq)
-    catch { case _: java.io.FileNotFoundException => None }
+    io.readIfExists(legacyArchivePath).map(s => lineageRowsOf(Json.parse(s)).toSeq)
   private def lineageSegDir = new Path(io.rootPath, "_lineage")
   private def horizonPath = new Path(io.rootPath, "gc-horizon.txt")
 
@@ -1037,8 +789,7 @@ final class LakeTable(
     * vacuumed). Bounds lineage()/vacuum() walks to O(retained versions).
     */
   private def gcHorizon: Long = // read-and-catch: one RPC, no TOCTOU
-    try io.readString(horizonPath).trim.toLong
-    catch { case _: java.io.FileNotFoundException => 0L }
+    io.readIfExists(horizonPath).map(_.trim.toLong).getOrElse(0L)
 
   /** Re-bucket the table to a new sub-bucket count — the rewrite-
     * amplification knob turned at runtime: more buckets = smaller COW
@@ -1050,55 +801,32 @@ final class LakeTable(
     */
   def compact(newSubBuckets: Int): Unit = {
     require(newSubBuckets >= 1)
-    // one pinned snapshot: baseline and manifest must be the same version
-    val snap0 = io.readSnapshot()
-    val plannedVersion = snap0.map(_.get("version").asLong).getOrElse(-1L)
-    val m = manifestOf(snap0).getOrElse(
+    // one pinned head: baseline and manifest must be the same version
+    val h = log.pin()
+    val m = h.manifest.getOrElse(
       throw new IllegalStateException(s"cannot compact empty table at $root"))
     val ss = schemasOf(m)
-    val version = plannedVersion + 1
+    val version = h.version + 1
     val staging = new Path(io.rootPath, s"_staging/compact-$appId-$version")
-    io.fs.delete(staging, true)
-    val live = filesOf(m)
-    // same explicit-parallelism rule as the merge write: one file per
-    // (partition, sub) bucket comes out of this exchange, so derive the
-    // partition count from the post-compaction bucket count instead of
-    // letting AQE's byte heuristic serialize the file writes
-    val compactParts = math.min(
-      live.map(_.partition).distinct.size.toLong * newSubBuckets,
-      spark.sessionState.conf.numShufflePartitions.toLong).max(1L).toInt
-    readFiles(live, ss)
+    val live = log.files(h)
+    // one file per post-compaction (partition, sub) bucket comes out of
+    // this exchange (see TableIO.writeTasks)
+    val buckets = live.map(_.partition).distinct.size.toLong * newSubBuckets
+    io.writeStaged(readFiles(live, ss)
       .withColumn("_sub", subExpr(newSubBuckets))
-      .repartition(compactParts, col("partition"), col("_sub"))
+      .repartition(io.writeTasks(buckets), col("partition"), col("_sub"))
       .withColumn("_pp", col("partition")).withColumn("_ss", col("_sub"))
       .sortWithinPartitions(col("_pp"), col("_ss"), col("repo"), col("path"))
-      .drop("_sub")
-      .write.mode("overwrite").partitionBy("_pp", "_ss")
-      .option("compression", TableIO.dataCodec)
-      .options(TableIO.stagingWriteOptions ++ io.writeOptions)
-      .parquet(staging.toString)
+      .drop("_sub"), staging, "_pp", "_ss")
     // one recursive listing + promote fan-out on the shared metadata
     // pool — the old shape was a SERIAL driver loop of listStatus + rename
     // + footer read per bucket (the r7 VERDICT's measured 100×-scale
     // bottleneck: ~800k sequential driver RPCs at the published sizing);
     // bounded parallel renames are the object-store-friendly shape
-    val stagedParts = io.listStagedParts(staging)
-    io.fs.mkdirs(new Path(io.rootPath, "data"))
-    val entries = MetaIO.fetchAll(stagedParts.toSeq.sortBy(_._1)) {
-      case (relDir, src) =>
-        val m = LakeTable.stagedBucketRe.findFirstMatchIn(relDir).getOrElse(
-          throw new IllegalStateException(
-            s"unrecognized staged path $relDir under $staging"))
-        val (p, sub) = (m.group(1).toInt, m.group(2).toInt)
-        val rel = f"data/part-$p%05d-s$sub%04d-$appId-c$version%012d.parquet"
-        io.promoteListedFile(src, new Path(io.rootPath, rel))
-        FileEntry(p, sub, rel, ss.size - 1)
-    }.sortBy(f => (f.partition, f.sub))
+    val entries = promote(stagedBuckets(staging).toSeq, f"c$version%012d", ss.size - 1)
     io.fs.delete(staging, true)
     io.sweepStaleStaging()
-    commit(Full(entries), wmOf(m), ss,
-      snap0.map(_.get("batchId").asLong).getOrElse(-1L), Nil, newSubBuckets,
-      plannedVersion)
+    commit(h, Full(entries), wmOf(h), ss, h.batchId, Nil, newSubBuckets)
   }
 
   /** Re-bucket by the measured sizing rule instead of a hand-picked count:
@@ -1109,7 +837,7 @@ final class LakeTable(
     * dominates the rewrite it sizes. Returns the applied count.
     */
   def compactToTargetFileSize(targetFileBytes: Long = 256L << 20): Int = {
-    val live = liveFiles()
+    val live = log.files(log.pin())
     require(live.nonEmpty, s"cannot compact empty table at $root")
     val partitions = live.map(_.partition).distinct.size
     val bytes = live.iterator
@@ -1132,7 +860,7 @@ final class LakeTable(
       .filter(_.getPath.getName.startsWith("seg-")).map(_.getPath.toString)
     val legacy = legacyArchiveRows().getOrElse(Nil)
     val liveRows = (gcHorizon to currentVersion).flatMap(v =>
-      manifestAt(v).toSeq.flatMap(m => lineageRowsOf(m.get("lineage"))))
+      log.manifestAt(v).toSeq.flatMap(m => lineageRowsOf(m.get("lineage"))))
     val driverSide = spark.createDataFrame(legacy ++ liveRows)
     val all =
       if (segs.isEmpty) driverSide

@@ -1,0 +1,273 @@
+package graft.lake
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.Path
+
+/** A table's pinned head: the ONE snapshot read a batch plans against.
+  * Every plan input (fence, CAS baseline, manifest, listing) derives from
+  * it. Per-accessor re-reads let a peer's commit land BETWEEN two reads and
+  * hand a batch an inconsistent plan — observed in the 3-writer soak as
+  * "empty lake table" (schema ladder from the pre-commit version, file set
+  * from the post-commit one) — and a baseline read any later than the plan
+  * lets a peer's commit be silently clobbered by a plan that never saw it.
+  * Pinning turns every such race into the one designed outcome: a clean
+  * ConcurrentCommitException at the commit (and saves the re-reads).
+  * `version` and `batchId` are -1 for a brand-new table; `appId` is None
+  * there and on snapshots written before writers were named. The manifest
+  * is read on first use, so a fenced replay never reads it.
+  */
+private[lake] final class Head(val version: Long, val batchId: Long,
+    val appId: Option[String], readManifest: () => JsonNode) {
+  lazy val manifest: Option[JsonNode] =
+    if (version < 0) None else Some(readManifest())
+}
+
+/** How one table encodes its live listing in manifests. A checkpoint
+  * manifest lists every live entry; a delta manifest records only one
+  * commit's change, as the keys it removes and the entries it adds (an
+  * added entry replaces any live entry with the same key).
+  */
+private[lake] trait LogCodec[K, E] {
+  def key(e: E): K
+  def isDelta(m: JsonNode): Boolean
+  def checkpoint(m: JsonNode): Seq[E]
+  def removed(delta: JsonNode): Seq[K]
+  def added(delta: JsonNode): Seq[E]
+  /** the order a resolved listing is kept in */
+  def ordered(es: Seq[E]): Seq[E]
+}
+
+/** What a commit does to the live listing: replace it wholesale (always
+  * written as a checkpoint), or remove keys and add entries.
+  */
+private[lake] sealed trait Change[K, E]
+private[lake] final case class Full[K, E](entries: Seq[E]) extends Change[K, E]
+private[lake] final case class Delta[K, E](removed: Seq[K], added: Seq[E])
+  extends Change[K, E]
+
+/** One commit being written: its version, whether it is a checkpoint, the
+  * checkpoint version to record, the previous commit's recorded checkpoint
+  * (None on a brand-new table) and the post-commit listing.
+  */
+private[lake] final class Commit[E](val version: Long, val full: Boolean,
+    val checkpointVersion: Long, val prevCheckpoint: Option[Long],
+    val files: Seq[E])
+
+/** The versioned log both engine tables run on — the Iceberg-style snapshot
+  * log of SURVEY.md §4.1 with Delta Lake's checkpoint cadence: version-named
+  * manifests (`manifest-{v:012d}.json`), each a checkpoint or a delta on top
+  * of its predecessor, and one `snapshot.json` pointer swapped by CAS. This
+  * is the reference's data + index + cursor trio (S3Writer.java:61-81)
+  * generalized; the tables keep only their entry codec and data path.
+  *
+  * Owns the per-batch pinned head, the replay fence, the version-keyed
+  * manifest and listing caches, the delta fold, and the commit: plan
+  * coherence, checkpoint cadence, exclusive manifest claim and snapshot CAS.
+  */
+private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
+    what: String, checkpointEvery: Int, codec: LogCodec[K, E]) {
+  require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
+  // appId names durable paths (data files, staging dirs, shards) and carries
+  // the CAS writer identity: a '/', '=' or whitespace would silently change
+  // the layout (nested dirs under data/ break the sweep's name comparisons),
+  // so fail loudly at construction (ADVICE r7). Concurrent writers must use
+  // DISTINCT appIds — the no-collision story of staging and promoted names
+  // assumes it.
+  require(appId.matches("[A-Za-z0-9._-]+"),
+    s"appId must match [A-Za-z0-9._-]+ (it names durable paths); got '$appId'")
+
+  // current-manifest and resolved-listing caches keyed by snapshot version:
+  // a checkpoint manifest is O(live files) of JSON and chain resolution
+  // reads up to checkpointEvery of them, so both are computed once per
+  // version, not once per accessor (another writer's commit bumps the
+  // version, which invalidates them for free)
+  @volatile private var manifestCache: Option[(Long, JsonNode)] = None
+  @volatile private var filesCache: Option[(Long, Seq[E])] = None
+
+  def pin(): Head = io.readSnapshot() match {
+    case None => new Head(-1L, -1L, None, () => null) // no manifest to read
+    case Some(s) =>
+      val v = s.get("version").asLong
+      val rel = s.get("manifest").asText
+      new Head(v, s.get("batchId").asLong, Option(s.get("appId")).map(_.asText),
+        () => manifestOf(v, rel))
+  }
+
+  /** the manifest `rel` of snapshot `version` (parsed once per version) */
+  private def manifestOf(version: Long, rel: String): JsonNode = manifestCache match {
+    case Some((v, m)) if v == version => m
+    case _ =>
+      val m = Json.parse(io.readString(new Path(io.rootPath, rel)))
+      manifestCache = Some((version, m))
+      m
+  }
+
+  /** Replay fence against a pinned head: same writer identity AND a batch
+    * id at or below the committed one. A different appId is a new writer
+    * whose numbering restarted (the Delta txnAppId pattern) — its data
+    * passes the fence and dedups on offsets. Missing appId (old snapshots)
+    * ⇒ same writer.
+    */
+  def isReplayOf(h: Head, batchId: Long): Boolean =
+    h.appId.getOrElse(appId) == appId && batchId <= h.batchId
+
+  // read-and-catch: one RPC on every chain-resolution step, and no TOCTOU
+  // against a concurrent GC deleting the manifest
+  def manifestAt(version: Long): Option[JsonNode] =
+    io.readIfExists(new Path(io.rootPath, SnapshotLog.manifestRel(version)))
+      .map(Json.parse)
+
+  /** live listing of a pinned head (cached per version) */
+  def files(h: Head): Seq[E] =
+    if (h.version < 0) Nil
+    else filesCache match {
+      case Some((v, fs)) if v == h.version => fs
+      case _ =>
+        val fs = resolve(h.manifest.get)
+        filesCache = Some((h.version, fs))
+        fs
+    }
+
+  private type State = scala.collection.mutable.LinkedHashMap[K, E]
+
+  private def stateOf(es: Seq[E]): State = {
+    val st = scala.collection.mutable.LinkedHashMap.empty[K, E]
+    es.foreach(e => st(codec.key(e)) = e)
+    st
+  }
+
+  private def applyDelta(st: State, removed: Seq[K], added: Seq[E]): State = {
+    removed.foreach(st.remove)
+    added.foreach(e => st(codec.key(e)) = e)
+    st
+  }
+
+  /** Resolve a manifest's live listing. A checkpoint answers directly; a
+    * delta folds forward from the nearest checkpoint at or below it (walk
+    * back until a checkpoint appears — the chain is at most
+    * `checkpointEvery` long, shorter after a GC materialized a checkpoint).
+    */
+  def resolve(m: JsonNode): Seq[E] = resolve(m, retried = false)
+
+  private def resolve(m: JsonNode, retried: Boolean): Seq[E] = {
+    if (!codec.isDelta(m)) return codec.checkpoint(m)
+    val v = m.get("version").asLong
+    var chain = List(m)
+    while (codec.isDelta(chain.head)) {
+      val pv = chain.head.get("version").asLong - 1
+      manifestAt(pv) match {
+        case Some(n) => chain = n :: chain
+        case None if !retried =>
+          // Self-heal against a concurrent vacuum: it materializes the
+          // oldest kept version IN PLACE before deleting the chain below
+          // it, so a reader holding pre-materialization nodes restarts the
+          // walk ONCE from a fresh read of its version — if v is retained,
+          // the new walk terminates at the materialized checkpoint before
+          // ever reaching the deleted range. One retry suffices:
+          // materialization is monotone.
+          return resolve(manifestAt(v).getOrElse(throw broken(v, pv)), retried = true)
+        case None => throw broken(v, pv)
+      }
+    }
+    val st = stateOf(codec.checkpoint(chain.head))
+    chain.tail.foreach(d => applyDelta(st, codec.removed(d), codec.added(d)))
+    codec.ordered(st.values.toSeq)
+  }
+
+  private def broken(v: Long, pv: Long) = new IllegalStateException(
+    s"$what manifest chain for version $v broken at $pv under ${io.root} (vacuumed)")
+
+  /** The live listing of every existing version in [from, to] with ONE
+    * manifest read per version: fold each delta onto the running state; a
+    * checkpoint (or a gap) resets the fold. Only GC needs a whole range —
+    * everything else resolves single versions.
+    */
+  def resolveRange(from: Long, to: Long): Map[Long, Seq[E]] = {
+    val out = scala.collection.mutable.Map.empty[Long, Seq[E]]
+    var state: Option[State] = None
+    for (v <- from to to) manifestAt(v) match {
+      case None => state = None
+      case Some(m) =>
+        val st = state.filter(_ => codec.isDelta(m)) match {
+          case Some(prev) => applyDelta(prev, codec.removed(m), codec.added(m))
+          case None => stateOf(resolve(m))
+        }
+        out(v) = codec.ordered(st.values.toSeq)
+        state = Some(st)
+    }
+    out.toMap
+  }
+
+  /** Rewrite delta manifest `version` in place as its (semantically
+    * identical) resolved checkpoint, so every manifest below it can be
+    * deleted without breaking fold-forward resolution of the versions
+    * above. `listing` drops the delta fields and writes the listing.
+    * Atomic rename: a crash mid-rewrite leaves the old delta intact.
+    */
+  def materialize(version: Long)(listing: (ObjectNode, Seq[E]) => Unit): Unit =
+    manifestAt(version).filter(codec.isDelta).foreach { m =>
+      val resolved = resolve(m)
+      val o = m.asInstanceOf[ObjectNode]
+      o.put("checkpointVersion", version)
+      listing(o, resolved)
+      io.writeAtomic(new Path(io.rootPath, SnapshotLog.manifestRel(version)),
+        Json.write(o))
+      // the rewrite may concern the CURRENT version: drop the parsed
+      // manifest so later reads see the checkpoint, not the stale delta
+      manifestCache = None
+    }
+
+  /** Commit `change` on top of the pinned head `planned`, as batch
+    * `batchId`. `body` writes the table's manifest fields after the header
+    * (`version`, `batchId`, `appId`), including the `checkpointVersion` it
+    * is handed and either the checkpoint listing or the delta. Returns the
+    * manifest written.
+    *
+    * The manifest is checkpointed every `checkpointEvery` versions (and on
+    * the first commit and every `Full` change), bounding readers' fold
+    * chains. It is claimed exclusively ([[TableIO.createVersioned]]); a lost
+    * claim rolls a crashed claimer's commit forward and always throws
+    * ConcurrentCommitException ([[TableIO.resolveLostVersionClaim]]).
+    */
+  def commit(planned: Head, batchId: Long, change: Change[K, E])
+      (body: (ObjectNode, Commit[E]) => Unit): JsonNode = {
+    io.requirePlanCoherent(planned.version, what)
+    val version = planned.version + 1
+    // nearest checkpoint at or below the previous version (advisory — the
+    // reader walks back to the first actual checkpoint; this drives the
+    // cadence, and a GC-materialized checkpoint in between merely
+    // checkpoints again sooner than strictly needed). Pinned to the
+    // coherence-checked head, never a fresh read: a peer committing right
+    // after the check must fail the claim/CAS below, not leak its state
+    // into this commit's bookkeeping.
+    val prevCkpt = planned.manifest.map(pm =>
+      Option(pm.get("checkpointVersion")).map(_.asLong)
+        .getOrElse(pm.get("version").asLong))
+    val (files, full) = change match {
+      case Full(es) => (codec.ordered(es), true)
+      case Delta(removed, added) =>
+        (codec.ordered(applyDelta(stateOf(this.files(planned)), removed, added)
+          .values.toSeq),
+          prevCkpt.forall(version - _ >= checkpointEvery))
+    }
+    val m = Json.obj()
+    m.put("version", version)
+    m.put("batchId", batchId)
+    m.put("appId", appId)
+    body(m, new Commit(version, full, if (full) version else prevCkpt.get,
+      prevCkpt, files))
+    val rel = SnapshotLog.manifestRel(version)
+    if (!io.createVersioned(new Path(io.rootPath, rel), Json.write(m)))
+      io.resolveLostVersionClaim(rel, version, planned.version)
+    io.swapSnapshot(io.snapshotJson(version, rel, batchId, appId), planned.version)
+    filesCache = Some((version, files))
+    manifestCache = Some((version, m))
+    m
+  }
+}
+
+private[lake] object SnapshotLog {
+  /** the version-named manifest (zero-padded: lexicographic = numeric order) */
+  def manifestRel(version: Long): String = f"manifest-$version%012d.json"
+}

@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, FsConstants, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets
 
 /** Filesystem plumbing shared by the journal and the lake table: snapshot
@@ -188,13 +188,8 @@ trait CommitStore {
   */
 object RenameCommitStore extends CommitStore {
   def putAtomic(io: TableIO, dest: Path, content: String): Unit = {
-    // The tmp name is unique per attempt: a FIXED tmp name would let two
-    // racing writers (a zombie and its fenced successor both commit here by
-    // design) interleave writes into one tmp file and rename a torn mix
-    // over the destination — the exact torn-read failure this method
-    // exists to prevent. A failed attempt best-effort reclaims its own tmp.
-    val tmp = new Path(dest.getParent, dest.getName +
-      s".tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+    // a failed attempt best-effort reclaims its own tmp
+    val tmp = tmpFor(dest)
     try {
       io.writeString(tmp, content)
       io.renameOverwrite(tmp, dest)
@@ -225,10 +220,44 @@ object RenameCommitStore extends CommitStore {
     */
   private[lake] val markerRetain = 8L
 
-  /** Exclusive create: complete tmp + no-overwrite rename (same primitive
-    * as the CAS markers below — atomic on HDFS, JVM-lock-backstopped on a
-    * raw local fs). A crash mid-write leaves only an unreferenced tmp, so
-    * an existing `dest` is always COMPLETE — the invariant the orphan
+  /** A tmp name next to `dest`, unique per attempt: a FIXED tmp name would
+    * let two racing writers (a zombie and its fenced successor both commit
+    * here by design) interleave writes into one tmp file and rename a torn
+    * mix over the destination — the exact torn-read failure the publishes
+    * exist to prevent.
+    */
+  private def tmpFor(dest: Path) = new Path(dest.getParent, dest.getName +
+    s".tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+
+  /** Write a complete tmp file and rename it onto `dest` WITHOUT overwrite:
+    * false when `dest` already exists. A crash mid-write leaves only an
+    * unreferenced tmp, so an existing `dest` is always complete. No
+    * exists() pre-check: the no-overwrite rename is the authority (throws
+    * FileAlreadyExists on both HDFS and local FileContext), and the commit
+    * path pays for every metadata RPC here (measured in BENCH/BASELINE.md,
+    * "r07: the claim protocol's driver-side cost").
+    */
+  private def claim(io: TableIO, dest: Path, content: String): Boolean = {
+    val tmp = tmpFor(dest)
+    try {
+      io.writeString(tmp, content)
+      io.renameNoOverwrite(tmp, dest)
+      true
+    } catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        try io.fs.delete(tmp, false): Unit
+        catch { case _: Throwable => () }
+        false // another writer claimed the name first
+      case t: Throwable =>
+        try io.fs.delete(tmp, false): Unit
+        catch { case _: Throwable => () }
+        throw t
+    }
+  }
+
+  /** Exclusive create: [[claim]], the same primitive as the CAS markers
+    * below — atomic on HDFS, JVM-lock-backstopped on a raw local fs. An
+    * existing `dest` is always COMPLETE — the invariant the orphan
     * roll-forward in [[TableIO.resolveLostVersionClaim]] relies on.
     */
   def putIfAbsent(io: TableIO, dest: Path, content: String): Boolean = {
@@ -239,28 +268,7 @@ object RenameCommitStore extends CommitStore {
     // the one snapshot path).
     val q = io.fs.makeQualified(dest.getParent).toString
     val lock = casLocks.computeIfAbsent(q, _ => new Object)
-    lock.synchronized {
-      // no exists() pre-check: the no-overwrite rename is the authority
-      // (throws FileAlreadyExists on both HDFS and local FileContext), and
-      // the commit path pays for every metadata RPC here (measured in
-      // BENCH/BASELINE.md, "r07: the claim protocol's driver-side cost")
-      val tmp = new Path(dest.getParent, dest.getName +
-        s".tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      try {
-        io.writeString(tmp, content)
-        io.renameNoOverwrite(tmp, dest)
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          try io.fs.delete(tmp, false): Unit
-          catch { case _: Throwable => () }
-          false // a cross-process writer claimed the name first
-        case t: Throwable =>
-          try io.fs.delete(tmp, false): Unit
-          catch { case _: Throwable => () }
-          throw t
-      }
-    }
+    lock.synchronized(claim(io, dest, content))
   }
 
   /** CAS via version-named claim markers + roll-forward.
@@ -291,15 +299,12 @@ object RenameCommitStore extends CommitStore {
       }
       // list-and-catch / read-and-catch, not exists-then-act: each probe
       // is one metadata RPC the commit path pays every swap (BENCH/BASELINE.md,
-      // r07 claim protocol), and the catch closes the probe→act TOCTOU
-      def listMarkers(): Seq[(Path, Long)] =
-        try io.fs.listStatus(casDir).toSeq.map(_.getPath)
-          .flatMap(p => markerVersion(p).map(p -> _))
-        catch { case _: java.io.FileNotFoundException => Nil }
+      // r07 claim protocol)
+      def listMarkers(): Seq[(Path, Long)] = io.listOrEmpty(casDir).toSeq
+        .map(_.getPath).flatMap(p => markerVersion(p).map(p -> _))
       val markers = listMarkers()
       def destVersion(): Long =
-        try Json.parse(io.readString(dest)).get("version").asLong
-        catch { case _: java.io.FileNotFoundException => -1L }
+        io.readIfExists(dest).map(Json.parse(_).get("version").asLong).getOrElse(-1L)
       // Publish `content` (version v) only if dest is still BEHIND v,
       // re-reading immediately before the PUT: in-JVM callers are
       // serialized by casLocks, but a peer PROCESS may have published a
@@ -322,9 +327,8 @@ object RenameCommitStore extends CommitStore {
           val cur2 = destVersion()
           listMarkers().filter(_._2 > cur2).sortBy(_._2).lastOption.foreach {
             case (p, mv) =>
-              val mc = try Some(io.readString(p))
-                       catch { case _: java.io.FileNotFoundException => None }
-              mc.foreach(c2 => if (destVersion() < mv) putAtomic(io, dest, c2))
+              io.readIfExists(p).foreach(c2 =>
+                if (destVersion() < mv) putAtomic(io, dest, c2))
           }
         }
       var cur = destVersion()
@@ -336,22 +340,8 @@ object RenameCommitStore extends CommitStore {
         return true // idempotent retry of our own completed publish
       if (cur != expected) return false
       val v = expected + 1
-      val marker = new Path(casDir, f"$prefix$v%012d")
-      val tmp = new Path(casDir, marker.getName +
-        s".tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      try {
-        io.writeString(tmp, content)
-        io.renameNoOverwrite(tmp, marker)
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          try io.fs.delete(tmp, false): Unit
-          catch { case _: Throwable => () }
-          return false // a cross-process claimer beat us to v
-        case t: Throwable =>
-          try io.fs.delete(tmp, false): Unit
-          catch { case _: Throwable => () }
-          throw t
-      }
+      // a cross-process claimer may beat us to v
+      if (!claim(io, new Path(casDir, f"$prefix$v%012d"), content)) return false
       // our marker IS the commit point; the pointer publish is conditional
       // too (a peer that rolled our marker forward and committed v+1 must
       // not be regressed by our own delayed PUT)
@@ -427,6 +417,14 @@ final class TableIO(val root: String, spark: SparkSession,
     } finally in.close()
   }
 
+  /** `p`'s content, None when it does not exist. Read-and-catch, not
+    * exists-then-read: one RPC instead of two, and no TOCTOU against a
+    * concurrent create or delete between the probe and the open.
+    */
+  def readIfExists(p: Path): Option[String] =
+    try Some(readString(p))
+    catch { case _: java.io.FileNotFoundException => None }
+
   def writeString(p: Path, s: String): Unit = {
     // no mkdirs: FileSystem.create makes parents (Hadoop contract, all
     // impls here), and the commit path pays 3 writeStrings per commit —
@@ -481,10 +479,7 @@ final class TableIO(val root: String, spark: SparkSession,
       store.putIfVersion(this, snapshotPath, json, expected)
     }
     if (!won) {
-      val cur = readSnapshot()
-      val curV = cur.map(_.get("version").asLong).getOrElse(-1L)
-      val curApp = cur.flatMap(s => Option(s.get("appId")).map(_.asText))
-        .getOrElse("?")
+      val (curV, curApp) = currentWriter()
       throw new ConcurrentCommitException(
         s"lost commit race at $root: expected snapshot version $expected " +
           s"but found $curV (appId=$curApp); this batch did NOT commit — " +
@@ -496,11 +491,16 @@ final class TableIO(val root: String, spark: SparkSession,
     * case (S3Writer.java:101-107).
     */
   def readSnapshot(): Option[com.fasterxml.jackson.databind.JsonNode] =
-    // read-and-catch, not exists-then-read: one RPC instead of two on the
-    // per-commit plan-coherence check, and no TOCTOU between the probe and
-    // the open (a concurrent first commit between them read as a crash)
-    try Some(Json.parse(readString(snapshotPath)))
-    catch { case _: java.io.FileNotFoundException => None }
+    // one RPC on the per-commit plan-coherence check (a concurrent first
+    // commit between an exists probe and the open would read as a crash)
+    readIfExists(snapshotPath).map(Json.parse)
+
+  /** the current snapshot's version (-1 for none) and writer ("?" if unnamed) */
+  private def currentWriter(): (Long, String) = {
+    val s = readSnapshot()
+    (s.map(_.get("version").asLong).getOrElse(-1L),
+      s.flatMap(n => Option(n.get("appId")).map(_.asText)).getOrElse("?"))
+  }
 
   /** The plan-coherence guard at the door of every commit — ONE
     * implementation for both tables (the protocol's most safety-critical
@@ -509,21 +509,13 @@ final class TableIO(val root: String, spark: SparkSession,
     * `plannedVersion`; a foreign commit that landed mid-batch makes it
     * stale — fail LOUDLY here, before anything is written. The exclusive
     * manifest claim and the pointer CAS close the remaining windows.
-    * Returns the snapshot it judged, for the caller's own use.
     */
-  def requirePlanCoherent(plannedVersion: Long, what: String)
-      : Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val prev = readSnapshot()
-    val current = prev.map(_.get("version").asLong).getOrElse(-1L)
-    if (current != plannedVersion) {
-      val who = prev.flatMap(s => Option(s.get("appId")).map(_.asText))
-        .getOrElse("?")
-      throw new ConcurrentCommitException(
-        s"$what $root advanced while this batch was planned/written: " +
-          s"planned against version $plannedVersion, found $current " +
-          s"(appId=$who); this batch did NOT commit — re-read and retry")
-    }
-    prev
+  def requirePlanCoherent(plannedVersion: Long, what: String): Unit = {
+    val (current, who) = currentWriter()
+    if (current != plannedVersion) throw new ConcurrentCommitException(
+      s"$what $root advanced while this batch was planned/written: " +
+        s"planned against version $plannedVersion, found $current " +
+        s"(appId=$who); this batch did NOT commit — re-read and retry")
   }
 
   /** The snapshot pointer's canonical serialization. ONE builder for every
@@ -556,7 +548,7 @@ final class TableIO(val root: String, spark: SparkSession,
       store.putIfAbsent(this, dest, content) ||
         // a transient failure AFTER our create succeeded retries into
         // "already exists" — identical content means it is ours
-        (fs.exists(dest) && readString(dest) == content)
+        readIfExists(dest).contains(content)
     }
 
   /** A version-named manifest claim was lost: either a concurrent writer
@@ -571,9 +563,7 @@ final class TableIO(val root: String, spark: SparkSession,
     */
   def resolveLostVersionClaim(manifestRel: String, version: Long,
       plannedVersion: Long): Nothing = {
-    val cur = readSnapshot()
-    val curV = cur.map(_.get("version").asLong).getOrElse(-1L)
-    if (curV == plannedVersion) {
+    if (currentWriter()._1 == plannedVersion) {
       val m = Json.parse(readString(new Path(rootPath, manifestRel)))
       val who = Option(m.get("appId")).map(_.asText).getOrElse("?")
       try {
@@ -587,15 +577,12 @@ final class TableIO(val root: String, spark: SparkSession,
         case _: ConcurrentCommitException => ()
       }
     }
-    val who = readSnapshot()
-      .flatMap(s => Option(s.get("appId")).map(_.asText)).getOrElse("?")
+    val who = currentWriter()._2
     throw new ConcurrentCommitException(
       s"lost the claim on $manifestRel at $root: another writer " +
         s"(appId=$who) holds version $version; this batch did NOT commit " +
         "— re-read the table state before retrying")
   }
-
-  def delete(rel: String): Unit = fs.delete(new Path(rootPath, rel), true)
 
   def exists(rel: String): Boolean = fs.exists(new Path(rootPath, rel))
 
@@ -605,6 +592,32 @@ final class TableIO(val root: String, spark: SparkSession,
   def listOrEmpty(dir: Path): Array[org.apache.hadoop.fs.FileStatus] =
     try fs.listStatus(dir)
     catch { case _: java.io.FileNotFoundException => Array.empty }
+
+  /** Tasks for a write that ends in one parquet FILE per bucket: the
+    * bucket count, capped by the session's tuned shuffle parallelism —
+    * derived from the work's own shape rather than left to AQE, whose
+    * byte-based advisory coalescing (blind to per-file open/close/footer
+    * cost) collapses a small batch's shuffle into one task that writes
+    * every file serially (measured: the dominant slice of merge/write at
+    * gate scale). Scale-adaptive in both directions: small batches
+    * parallelize by bucket, huge bucket sets still respect the
+    * cluster-tuned cap.
+    */
+  def writeTasks(buckets: Long): Int =
+    math.min(buckets, spark.sessionState.conf.numShufflePartitions.toLong)
+      .max(1L).toInt
+
+  /** Write `df` as the staged parquet tree under `staging` (wiped first, so
+    * a retried batch starts clean), one directory per value of
+    * `partitionBy`, with the data codec and the staging committer options.
+    */
+  def writeStaged(df: DataFrame, staging: Path, partitionBy: String*): Unit = {
+    fs.delete(staging, true)
+    df.write.mode("overwrite").partitionBy(partitionBy: _*)
+      .option("compression", TableIO.dataCodec)
+      .options(TableIO.stagingWriteOptions ++ writeOptions)
+      .parquet(staging.toString)
+  }
 
   /** ONE recursive listing of a staged write tree → relative bucket dir
     * (e.g. `_pp=3/_ss=7`, or `_p=2` for the journal) → that dir's single

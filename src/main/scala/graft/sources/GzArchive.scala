@@ -698,11 +698,20 @@ object GzArchive {
       s"chunk $file@$off is ${len}B compressed — past the 2 GiB buffer " +
         "bound; re-archive with a smaller chunkThreshold (a single " +
         "record larger than 2 GiB compressed cannot be ranged-read)")
+    // seek + sequential read on the one stream. On Hadoop's checksummed
+    // local FS a positioned read builds a second checker per call (one more
+    // getFileStatus and a reopen of the data and .crc files), and the
+    // stream it returns answers seek with a getContentSummary (a status
+    // call) for its EOF bound. The wrapped stream — Seekable for every
+    // FSDataInputStream — seeks without either; a range past EOF still
+    // fails in readFully.
     val in = fs.open(new Path(file))
-    val buf = new Array[Byte](len.toInt)
-    in.readFully(off, buf)
-    in.close()
-    buf
+    try {
+      val buf = new Array[Byte](len.toInt)
+      in.getWrappedStream.asInstanceOf[org.apache.hadoop.fs.Seekable].seek(off)
+      in.readFully(buf)
+      buf
+    } finally in.close()
   }
 
   /** Read one chunk's compressed bytes, correcting reference-written

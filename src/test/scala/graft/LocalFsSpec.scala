@@ -252,13 +252,25 @@ class LocalFsSpec extends AnyFunSuite {
     GzArchive.writeArchiveBinary(changes.select(col("partition"), col("offset"),
       encode(col("path"), "UTF-8").as("key"), encode(coalesce(col("content"), lit("")),
         "UTF-8").as("value")), binRoot, "t", "offset", chunkThreshold = 4096)
-    /** the opens `read` makes with the recording class bound, as paths under `root` */
+    /** the opens `read` makes with the recording class bound, as paths
+      * under `root`; every `.gz` open costs one status call (the checksummed
+      * FS's checker makes it), so chunk and header reads take no second
+      * checker
+      */
     def opensOf(root: String)(read: => Long): Seq[String] = {
       RecordsCreates.opened.clear()
+      RecordsCreates.statused.clear()
       val n = boundFileClass(classOf[RecordingInJvmLocalFileSystem], viaSqlConf = true)(read)
       assert(n === 400L)
-      RecordsCreates.opened.asScala.toSeq.filter(_.startsWith(s"$root/"))
-        .map(_.stripPrefix(s"$root/"))
+      def under(q: java.util.concurrent.ConcurrentLinkedQueue[String]) =
+        q.asScala.toSeq.filter(_.startsWith(s"$root/")).map(_.stripPrefix(s"$root/"))
+      val opens = under(RecordsCreates.opened)
+      val statuses = under(RecordsCreates.statused)
+      (opens ++ statuses).filter(_.endsWith(".gz")).distinct.foreach { gz =>
+        assert(statuses.count(_ == gz) === opens.count(_ == gz),
+          s"$gz: status calls per open")
+      }
+      opens
     }
     val committed = opensOf(textRoot)(GzArchive.readCommitted(spark, textRoot, "t").count())
     assert(committed.count(_.startsWith("last_chunk_index.t-")) === 4, committed)
@@ -285,8 +297,8 @@ class LocalFsSpec extends AnyFunSuite {
   }
 }
 
-/** Records the path of every create and open: the mark of a session-bound
-  * `file:` class being used.
+/** Records the path of every create, open and status call: the mark of a
+  * session-bound `file:` class being used.
   */
 trait RecordsCreates extends org.apache.hadoop.fs.FileSystem {
   abstract override def create(f: Path, permission: FsPermission, overwrite: Boolean,
@@ -301,11 +313,17 @@ trait RecordsCreates extends org.apache.hadoop.fs.FileSystem {
     RecordsCreates.opened.add(f.toUri.getPath)
     super.open(f, bufferSize)
   }
+
+  abstract override def getFileStatus(f: Path): org.apache.hadoop.fs.FileStatus = {
+    RecordsCreates.statused.add(f.toUri.getPath)
+    super.getFileStatus(f)
+  }
 }
 
 object RecordsCreates {
   val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val statused = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 class RecordingLocalFileSystem extends LocalFileSystem with RecordsCreates
