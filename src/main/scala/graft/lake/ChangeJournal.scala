@@ -167,46 +167,44 @@ final class ChangeJournal(
         col("_p"))
       .sortWithinPartitions(col("_p"), col("offset")), staging, "_p")
 
-    // promote each partition's single part file to its offset-keyed name —
-    // located by ONE recursive staging listing (no per-partition
-    // exists/listStatus probes; see TableIO.listStagedParts)
-    val stagedParts = io.listStagedParts(staging)
-    io.fs.mkdirs(new Path(io.rootPath, "data"))
     val byPartition = chunkStats.groupBy(_.getInt(0))
-    var appended = 0L
-    val newFiles = byPartition.toSeq.sortBy(_._1).map { case (p, chunks) =>
-      val sorted = chunks.sortBy(_.getLong(1))
-      val firstOffset = sorted.map(_.getLong(2)).min
-      // appId-qualified like the lake's data files: deterministic for THIS
-      // writer's retry (same name overwrites, the reference's offset-keyed
-      // dedup story) but never collidable with a raced peer, whose promote
-      // would otherwise overwrite a committed, manifest-referenced file
-      // before its own commit loses the CAS
-      val rel = f"data/part-$p%05d-$appId-$firstOffset%012d.parquet"
-      val src = stagedParts.getOrElse(s"_p=$p", throw new IllegalStateException(
-        s"journal append staged no file for partition $p (stats saw rows) — " +
-          "batch source must be deterministic across scans"))
-      io.promoteListedFile(src, new Path(io.rootPath, rel))
+      .map { case (p, chunks) => p -> chunks.sortBy(_.getLong(1)) }
+    // promote each partition's single part file to its offset-keyed name,
+    // appId-qualified like the lake's data files: deterministic for THIS
+    // writer's retry (same name overwrites, the reference's offset-keyed
+    // dedup story) but never collidable with a raced peer, whose promote
+    // would otherwise overwrite a committed, manifest-referenced file
+    // before its own commit loses the CAS
+    val published = io.promoteStaged(staging) { (dir, src) =>
+      val p = dir.stripPrefix("_p=").toInt
+      val chunks = byPartition.getOrElse(p, throw new IllegalStateException(
+        s"journal append staged partition $p, which the stats pass never " +
+          "saw — batch source must be deterministic across scans"))
       // The write evaluated the batch a second time (no persist): the
       // parquet footer must agree with the stats pass's row count, else the
       // source violated the determinism precondition and the manifest's
       // chunk descriptors would silently disagree with the file. Footer
       // read is one metadata fetch — cheap insurance that turns silent
-      // corruption into a loud failure.
+      // corruption into a loud failure, before anything is published.
       val statRows = chunks.map(_.getLong(3)).sum
-      val footerRows = io.parquetRowCount(new Path(io.rootPath, rel))
+      val footerRows = io.parquetRowCount(src)
       require(footerRows == statRows,
         s"journal append stats/write divergence on partition $p: stats saw " +
           s"$statRows rows, write produced $footerRows — batch source must " +
           "be deterministic across scans")
+      f"data/part-$p%05d-$appId-${chunks.map(_.getLong(2)).min}%012d.parquet"
+    }
+    val newFiles = byPartition.toSeq.sortBy(_._1).map { case (p, chunks) =>
       val fileNode = Json.obj()
       fileNode.put("partition", p)
-      fileNode.put("path", rel)
-      fileNode.put("first_record_offset", firstOffset)
-      fileNode.put("max_offset", sorted.map(_.getLong(4)).max)
+      fileNode.put("path", published.getOrElse(s"_p=$p", throw new IllegalStateException(
+        s"journal append staged no file for partition $p (stats saw rows) — " +
+          "batch source must be deterministic across scans")))
+      fileNode.put("first_record_offset", chunks.map(_.getLong(2)).min)
+      fileNode.put("max_offset", chunks.map(_.getLong(4)).max)
       val arr = fileNode.putArray("chunks")
       var byteOffset = 0L // chunks tile the file's byte space from 0
-      sorted.foreach { r =>
+      chunks.foreach { r =>
         val c = Json.obj()
         c.put("first_record_offset", r.getLong(2))
         c.put("num_records", r.getLong(3))
@@ -215,16 +213,14 @@ final class ChangeJournal(
         byteOffset += r.getLong(5)
         arr.add(c)
       }
-      appended += statRows
       fileNode
     }
-    io.fs.delete(staging, true)
 
     val newNext = next ++ byPartition.map { case (p, chunks) =>
       p -> (chunks.map(_.getLong(4)).max + 1L)
     }
     commitManifest(h, newFiles, newNext, batchId, mergedSchema)
-    appended
+    chunkStats.map(_.getLong(3)).sum
   }
 
   /** Retention truncation — the Kafka log-retention / S3 lifecycle analogue

@@ -407,19 +407,15 @@ final class LakeTable(
     // The write evaluated the batch a second time (no persist): it must
     // not have produced any bucket outside the stats pass's touched set —
     // divergence means a nondeterministic source, which would silently
-    // desynchronize watermarks/lineage from the written data. (The
-    // converse — a touched bucket with no staged part file — is legal:
-    // deletes can empty a bucket.) Loud failure beats silent corruption.
-    val staged = stagedBuckets(staging)
-    val rogue = staged.keys.filterNot(touched.contains)
-    require(rogue.isEmpty,
-      s"merge write produced buckets outside the stats scan's touched set " +
-        s"(${rogue.take(5)}…): batch source must be deterministic across scans")
-
-    // a touched bucket with no staged file was emptied by deletes
-    val newEntries = promote(touched.toSeq.flatMap(b => staged.get(b).map(b -> _)),
-      f"b$batchId%012d", schemaId)
-    io.fs.delete(staging, true)
+    // desynchronize watermarks/lineage from the written data. Loud failure
+    // beats silent corruption, and it comes before anything is published.
+    // (The converse — a touched bucket with no staged part file — is
+    // legal: deletes can empty a bucket.)
+    val newEntries = promote(staging, f"b$batchId%012d", schemaId) { b =>
+      require(touched.contains(b),
+        s"merge write produced bucket $b outside the stats scan's touched " +
+          "set: batch source must be deterministic across scans")
+    }
     mark("promote")
 
     val newWm = wm ++ statRows.map { case (p, maxOff, _, _, _) => p -> maxOff }
@@ -434,40 +430,24 @@ final class LakeTable(
     statRows.map(_._4).sum
   }
 
-  /** Each staged bucket's single part file, by ONE recursive listing of the
-    * staged tree — the old shape paid a per-level listStatus sweep plus an
-    * exists + listStatus per touched bucket, O(touched) metadata
-    * round-trips per batch on an object store.
+  /** Promote a merge/compact staging tree (one dir `_pp={p}/_ss={sub}` per
+    * bucket) to `data/part-{p}-s{sub}-{appId}-{tag}.parquet`: a RETRY of
+    * this writer's batch overwrites its own names (the reference's
+    * offset-keyed dedup story), while a concurrent writer sharing a batchId
+    * — legal now that commits are CAS'd — can never overwrite this writer's
+    * promoted files out from under its committed manifest. `admit` sees
+    * every staged bucket before anything is published and may reject it.
     */
-  private def stagedBuckets(staging: Path): Map[(Int, Int), Path] =
-    io.listStagedParts(staging).map { case (rel, src) =>
-      val m = LakeTable.stagedBucketRe.findFirstMatchIn(rel)
-      require(m.isDefined, s"unrecognized staged path $rel under $staging")
-      (m.get.group(1).toInt, m.get.group(2).toInt) -> src
-    }
-
-  /** Promote staged bucket files to their deterministic names,
-    * `data/part-{p}-s{sub}-{appId}-{tag}.parquet`: a RETRY of this writer's
-    * batch overwrites its own names (the reference's offset-keyed dedup
-    * story), while a concurrent writer sharing a batchId — legal now that
-    * commits are CAS'd — can never overwrite this writer's promoted files
-    * out from under its committed manifest. Promotes fan out on the SHARED
-    * metadata pool (MetaIO): on an object store each one is a copy+delete,
-    * and at 10^6 micro-batches a per-merge pool would be 10^6
-    * create/destroy cycles on the driver. fetchAll cancels the queued
-    * remainder on failure, so a failed promote doesn't keep burning doomed
-    * copies before the batch retry touches the same staging dir. Results
-    * keep (p, s) order, so the manifest stays deterministic.
-    */
-  private def promote(staged: Seq[((Int, Int), Path)], tag: String,
-      schemaId: Int): Seq[FileEntry] = {
-    io.fs.mkdirs(new Path(io.rootPath, "data")) // once, not once per file
-    MetaIO.fetchAll(staged.sortBy(_._1)) { case ((p, s), src) =>
-      val rel = f"data/part-$p%05d-s$s%04d-$appId-$tag.parquet"
-      io.promoteListedFile(src, new Path(io.rootPath, rel))
+  private def promote(staging: Path, tag: String, schemaId: Int)(
+      admit: ((Int, Int)) => Unit): Seq[FileEntry] =
+    io.promoteStaged(staging) { (dir, _) =>
+      val (p, s) = LakeTable.bucketOf(dir)
+      admit((p, s))
+      f"data/part-$p%05d-s$s%04d-$appId-$tag.parquet"
+    }.toSeq.map { case (dir, rel) =>
+      val (p, s) = LakeTable.bucketOf(dir)
       FileEntry(p, s, rel, schemaId)
     }
-  }
 
   /** SOFT-drop a payload column: a metadata-only commit appends a new
     * schema version without it. No file is rewritten — old files keep the
@@ -682,12 +662,13 @@ final class LakeTable(
     // one forward fold over [horizon, cur] — one manifest read per version
     // and one shard read per referenced shard, instead of re-walking each
     // version's chain independently (O(range × chain) small GETs on an
-    // object store)
-    val resolvedByVersion = log.resolveRange(horizon, cur)
-    def pathsOf(v: Long): Seq[String] =
-      resolvedByVersion.get(v).toSeq.flatten.map(_.path)
+    // object store). The lineage roll-up and the shard GC below take the
+    // manifests it parsed; neither reads one again.
+    val range = log.resolveRange(horizon, cur)
+    def manifests(vs: Seq[Long]): Seq[JsonNode] = vs.flatMap(range.get).map(_._1)
+    def pathsOf(v: Long): Seq[String] = range.get(v).toSeq.flatMap(_._2).map(_.path)
     val live: Set[String] = (keepFrom to cur).flatMap(pathsOf).toSet
-    val doomed = (horizon until keepFrom).flatMap(log.manifestAt)
+    val doomed = manifests(horizon until keepFrom)
     val superseded: Set[String] =
       (horizon until keepFrom).flatMap(pathsOf).toSet -- live
     val dataDeleted =
@@ -740,8 +721,7 @@ final class LakeTable(
     // past the mtime grace window, which by then covers any commit that
     // could have planned a reuse. Shards are small; delayed reclamation is
     // the cheap price of staying safe next to a live writer.
-    reapUnkept("shards", (keepFrom to cur)
-      .flatMap(v => log.manifestAt(v).toSeq.flatMap(shardMapOf(_).values)).toSet,
+    reapUnkept("shards", manifests(keepFrom to cur).flatMap(shardMapOf(_).values).toSet,
       orphanGraceMs): Unit
     if (keepFrom > horizon) // O(keepLast) future walks, not O(lifetime)
       io.writeAtomic(horizonPath, keepFrom.toString)
@@ -823,8 +803,7 @@ final class LakeTable(
     // + footer read per bucket (the r7 VERDICT's measured 100×-scale
     // bottleneck: ~800k sequential driver RPCs at the published sizing);
     // bounded parallel renames are the object-store-friendly shape
-    val entries = promote(stagedBuckets(staging).toSeq, f"c$version%012d", ss.size - 1)
-    io.fs.delete(staging, true)
+    val entries = promote(staging, f"c$version%012d", ss.size - 1)(_ => ())
     io.sweepStaleStaging()
     commit(h, Full(entries), wmOf(h), ss, h.batchId, Nil, newSubBuckets)
   }
@@ -870,8 +849,13 @@ final class LakeTable(
 }
 
 object LakeTable {
-  /** staged bucket dir shape under a merge/compact staging tree */
-  private[lake] val stagedBucketRe = """^_pp=(\d+)/_ss=(\d+)$""".r
+  private val stagedBucketRe = """_pp=(\d+)/_ss=(\d+)""".r
+
+  /** (partition, sub) of a merge/compact staging tree's bucket dir */
+  private def bucketOf(dir: String): (Int, Int) = dir match {
+    case stagedBucketRe(p, s) => (p.toInt, s.toInt)
+    case _ => throw new IllegalArgumentException(s"unrecognized staged bucket dir $dir")
+  }
 
   /** Bucket files this small pay more in promote RPCs, manifest entries and
     * parquet footers than they save in pruning (measured: the clustered-key

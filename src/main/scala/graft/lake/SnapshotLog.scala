@@ -178,13 +178,13 @@ private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
   private def broken(v: Long, pv: Long) = new IllegalStateException(
     s"$what manifest chain for version $v broken at $pv under ${io.root} (vacuumed)")
 
-  /** The live listing of every existing version in [from, to] with ONE
-    * manifest read per version: fold each delta onto the running state; a
-    * checkpoint (or a gap) resets the fold. Only GC needs a whole range —
-    * everything else resolves single versions.
+  /** The parsed manifest and live listing of every existing version in
+    * [from, to] with ONE manifest read per version: fold each delta onto
+    * the running state; a checkpoint (or a gap) resets the fold. Only GC
+    * needs a whole range — everything else resolves single versions.
     */
-  def resolveRange(from: Long, to: Long): Map[Long, Seq[E]] = {
-    val out = scala.collection.mutable.Map.empty[Long, Seq[E]]
+  def resolveRange(from: Long, to: Long): Map[Long, (JsonNode, Seq[E])] = {
+    val out = scala.collection.mutable.Map.empty[Long, (JsonNode, Seq[E])]
     var state: Option[State] = None
     for (v <- from to to) manifestAt(v) match {
       case None => state = None
@@ -193,7 +193,7 @@ private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
           case Some(prev) => applyDelta(prev, codec.removed(m), codec.added(m))
           case None => stateOf(resolve(m))
         }
-        out(v) = codec.ordered(st.values.toSeq)
+        out(v) = (m, codec.ordered(st.values.toSeq))
         state = Some(st)
     }
     out.toMap

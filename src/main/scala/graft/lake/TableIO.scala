@@ -5,9 +5,11 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, FsConstants, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets
 
-/** Filesystem plumbing shared by the journal and the lake table: snapshot
-  * pointer swap + manifest read/write, via the Hadoop FileSystem API so the
-  * same code runs on local disk here and on HDFS/S3A on a real cluster.
+/** Filesystem plumbing shared by the journal, the lake table and the
+  * archive writer: snapshot pointer swap + manifest read/write, the one
+  * publish path for staged files and the one stale-scratch sweep, via the
+  * Hadoop FileSystem API so the same code runs on local disk here and on
+  * HDFS/S3A on a real cluster.
   *
   * This is the generalization of the reference's publish protocol
   * (sink/.../S3Writer.java:61-81: upload data, then index, then overwrite the
@@ -22,8 +24,6 @@ object TableIO {
     * object-store failure. Production never touches it.
     */
   @volatile private[graft] var faultHook: String => Unit = _ => ()
-
-  private val knownCodecs = Set("snappy", "zstd", "lz4", "gzip", "uncompressed")
 
   /** Write-time Hadoop overrides for the engine's STAGING parquet writes
     * (merge/append/compact). These dirs are consumed solely by our own
@@ -97,20 +97,14 @@ object TableIO {
       "fs.file.impl" -> classOf[InJvmLocalFileSystem].getName,
       "fs.file.impl.disable.cache" -> "true")
 
-  /** Parquet codec for DATA files (`graft.lake.codec`, default zstd).
-    * A 100-TB lever: storage cost and scan IO trade against write CPU.
-    * Measured on the full pipeline shape (BENCH/BASELINE.md, "r07: parquet
-    * codec"): zstd stores 43% fewer bytes than snappy at indistinguishable
-    * ingest and scan time — on an object store those bytes are also the
-    * transfer and request cost, so zstd dominates. Manifests and snapshots
-    * are tiny JSON and unaffected.
+  /** Parquet codec for DATA files: zstd. A 100-TB lever: storage cost and
+    * scan IO trade against write CPU. Measured on the full pipeline shape
+    * (BENCH/BASELINE.md, "r07: parquet codec"): zstd stores 43% fewer bytes
+    * than snappy at indistinguishable ingest and scan time — on an object
+    * store those bytes are also the transfer and request cost, so zstd
+    * dominates. Manifests and snapshots are tiny JSON and unaffected.
     */
-  private[lake] def dataCodec: String = {
-    val c = sys.props.getOrElse("graft.lake.codec", "zstd").toLowerCase
-    require(knownCodecs(c),
-      s"graft.lake.codec must be one of ${knownCodecs.mkString(", ")}; got '$c'")
-    c
-  }
+  private[lake] val dataCodec = "zstd"
 }
 
 /** A conditional snapshot publish lost its compare-and-swap: another writer
@@ -128,7 +122,9 @@ final class ConcurrentCommitException(msg: String)
 /** The atomic-publish primitive as a SEAM. Every durable mutation this
   * engine's commit protocol performs reduces to two operations — publish a
   * complete small object at a known name (snapshot/manifest/cursor swap) and
-  * publish a staged data file at its deterministic name — and WHICH
+  * publish a staged file at its deterministic name (the tables' data files
+  * and the archive's data and index files, all through
+  * [[TableIO.publish]]) — and WHICH
   * filesystem mutation implements them atomically differs by store:
   * rename-with-overwrite on HDFS/local (the default below), a whole-object
   * overwrite PUT on S3 (the one mutation S3 does atomically — the
@@ -200,11 +196,12 @@ object RenameCommitStore extends CommitStore {
     }
   }
 
-  def publishFile(io: TableIO, src: Path, dest: Path): Unit = {
-    io.fs.delete(dest, false)
-    if (!io.fs.rename(src, dest))
-      throw new java.io.IOException(s"rename $src -> $dest failed")
-  }
+  /** one rename-with-overwrite: `dest` holds the previous file or the new
+    * one, never nothing (a delete followed by a rename would leave it
+    * absent in between)
+    */
+  def publishFile(io: TableIO, src: Path, dest: Path): Unit =
+    io.renameOverwrite(src, dest)
 
   // Per-destination JVM locks: same-process writers (the spec's race, or two
   // pipelines in one driver) serialize the check-and-claim exactly; the
@@ -619,24 +616,35 @@ final class TableIO(val root: String, spark: SparkSession,
       .parquet(staging.toString)
   }
 
-  /** ONE recursive listing of a staged write tree → relative bucket dir
-    * (e.g. `_pp=3/_ss=7`, or `_p=2` for the journal) → that dir's single
-    * part file. Replaces the per-bucket exists + listStatus probes the
-    * promote loop used to pay — O(touched buckets) metadata round-trips per
-    * batch collapse into one paged LIST on an object store. Exactly-one
-    * part file per bucket dir is REQUIRED here (same invariant the old
-    * per-dir listing enforced): a second part would mean the write lost its
-    * one-task-per-bucket clustering.
+  /** Promote the staged write tree under `staging` and delete it — the
+    * step every table write ends in. ONE recursive listing finds each
+    * bucket dir's single part file (no per-bucket probes: on an object
+    * store the listing is one paged LIST); `dest(bucketDir, part)` names its
+    * root-relative destination, e.g. `_pp=3/_ss=7` or `_p=2` to a
+    * `data/...` name, and may throw to reject a bucket before anything is
+    * published. Returns bucket dir → destination.
     */
-  def listStagedParts(staging: Path): Map[String, Path] = {
+  def promoteStaged(staging: Path)(dest: (String, Path) => String): Map[String, String] = {
+    val named = listStagedParts(staging).toSeq.sortBy(_._1).map {
+      case (bucket, src) => (bucket, src, dest(bucket, src))
+    }
+    publish(Seq(named.map { case (_, src, rel) => src -> new Path(rootPath, rel) }))
+    fs.delete(staging, true)
+    named.map { case (bucket, _, rel) => bucket -> rel }.toMap
+  }
+
+  /** Each staged write tree bucket dir (relative) → its single part file.
+    * Exactly one part file per bucket dir is REQUIRED: a second part would
+    * mean the write lost its one-task-per-bucket clustering.
+    */
+  private def listStagedParts(staging: Path): Map[String, Path] = {
     // plain listStatus recursion over the (two-level) staging tree, NOT
     // FileSystem.listFiles(recursive=true): the generic recursive iterator
     // materializes LocatedFileStatus — block locations per file — and
     // measured ~230 ms per merge batch on a 32-bucket local tree vs ~5 ms
     // for this walk (the exact regression the promote-phase counter
     // caught). An object-store backend would implement this seam as one
-    // flat prefix LIST; the structural point — one sweep, no per-bucket
-    // probes — is what the promote callers rely on.
+    // flat prefix LIST.
     val base = fs.makeQualified(staging).toString
     val out = scala.collection.mutable.HashMap.empty[String, Path]
     def walk(dir: Path): Unit = {
@@ -659,39 +667,59 @@ final class TableIO(val root: String, spark: SparkSession,
     out.toMap
   }
 
-  /** Publish a staged part file (already located by [[listStagedParts]] —
-    * no per-file probes) at its deterministic, offset-keyed destination
-    * name. Deterministic names are load-bearing: re-running a batch
-    * overwrites the same keys instead of appending, which is the
-    * reference's whole dedup story (offset-named S3 keys,
-    * BlockGZIPFileWriter.java:161-163). The caller creates `dest`'s parent
-    * dir ONCE per batch, not per file. A RETRY that finds the source gone
-    * and the destination present treats the previous attempt's publish as
-    * complete (failure hit after the move) — the old per-dir listing's
-    * no-op case, reached here only on the failure path where the extra
-    * probes are free.
+  /** Publish staged files at their deterministic destinations: each
+    * destination dir is created once, then each wave's (source,
+    * destination) pairs fan out on the shared metadata pool (MetaIO), one
+    * wave after another (the archive's data files, then its indexes). On
+    * an object store each publish is a copy, and at 10^6 micro-batches a
+    * per-call pool would be 10^6 create/destroy cycles on the driver;
+    * fetchAll cancels the queued remainder on failure, so a failed publish
+    * does not keep burning doomed copies before the caller's retry.
     */
-  def promoteListedFile(src: Path, dest: Path): Unit = {
+  def publish(waves: Seq[Seq[(Path, Path)]]): Unit = {
+    waves.flatten.map(_._2.getParent).distinct.foreach(fs.mkdirs)
+    waves.foreach(moves => MetaIO.fetchAll(moves) { case (src, dst) => promote(src, dst) })
+  }
+
+  /** Publish one staged file at `dest` through the [[CommitStore]].
+    * Deterministic names are load-bearing: re-running a batch overwrites
+    * the same keys instead of appending, which is the reference's whole
+    * dedup story (offset-named S3 keys, BlockGZIPFileWriter.java:161-163).
+    * A RETRY that finds the source gone and the destination present treats
+    * the previous attempt's publish as complete (the failure hit after the
+    * move). A source missing at a publish is never retried: the name at
+    * `dest` may be an earlier writer's file (archive names repeat across
+    * jobs), which that shortcut would take as this write's.
+    */
+  private def promote(src: Path, dest: Path): Unit = {
     var attempt = 0
     retry("promote") {
       attempt += 1
       if (attempt > 1 && !fs.exists(src)) {
         if (!fs.exists(dest)) throw new java.io.IOException(
           s"staged $src vanished mid-promote and $dest is absent")
-      } else store.publishFile(this, src, dest)
+      } else try store.publishFile(this, src, dest) catch {
+        case e: java.io.FileNotFoundException => throw new IllegalStateException(
+          s"staged $src is missing at its publish to $dest", e)
+      }
     }
   }
 
-  /** Opportunistic reclamation of ABANDONED staging (crashed writers'
-    * leftovers under `_staging/`): only entries past the grace window — a
-    * live peer's in-flight staging is always younger than its own batch.
-    * Replaces the old wholesale `_staging` delete, which was safe only
-    * under single-writer exclusivity (it would nuke a concurrent writer's
-    * in-flight promote sources mid-batch).
+  /** Opportunistic reclamation of ABANDONED scratch: the entries of
+    * `staging` (the tables' `_staging/`, the archive's `.inprogress/`)
+    * that crashed writers left, and the `*.tmp-{pid}-{nanos}` files the
+    * atomic-publish primitives (putAtomic / putIfAbsent / the CAS marker
+    * claim) leak at the root and in `_cas/` when a writer crashes
+    * mid-publish (ADVICE r7: unbounded residue across crashes). Only what
+    * is past the grace window goes — a live peer's in-flight staging and
+    * tmps are always younger than its own batch. Replaces the old
+    * wholesale `_staging` delete, which was safe only under single-writer
+    * exclusivity (it would nuke a concurrent writer's in-flight promote
+    * sources mid-batch).
     *
-    * An entry's age is the NEWEST DESCENDANT FILE, never the top-level
-    * directory mtime: object stores have no real directories (an S3A
-    * fake-dir prefix reports mtime 0 or probe time — trusting it would
+    * A staging entry's age is its NEWEST DESCENDANT FILE, never the
+    * top-level directory mtime: object stores have no real directories (an
+    * S3A fake-dir prefix reports mtime 0 or probe time — trusting it would
     * either reclaim a live peer's in-flight staging or never reclaim at
     * all), and a long-running job that is still writing keeps its staging
     * alive file by file, so the grace window no longer needs to outlast
@@ -701,23 +729,22 @@ final class TableIO(val root: String, spark: SparkSession,
     * per-entry recursive listing runs at maintenance cadence, not on the
     * commit path (BENCH/BASELINE.md, r07 claim protocol).
     */
-  def sweepStaleStaging(graceMs: Long = 7L * 24 * 3600 * 1000): Unit = {
-    // crashed writers also leak `*.tmp-{pid}-{nanos}` files from the
-    // atomic-publish primitives (putAtomic / putIfAbsent / the CAS marker
-    // claim) in _cas/ and next to their destinations at the root; nothing
-    // referenced them, and until r8 nothing ever reclaimed them (ADVICE r7:
-    // unbounded residue across crashes). Same grace window, same
-    // maintenance cadence — a live writer's in-flight tmp is always
-    // younger than its own publish.
+  def sweepStaleStaging(staging: Path = new Path(rootPath, "_staging"),
+      graceMs: Long = 7L * 24 * 3600 * 1000): Unit = {
     val cutoff = System.currentTimeMillis() - graceMs
-    Seq(rootPath, new Path(rootPath, "_cas")).foreach { d =>
-      listOrEmpty(d).foreach { st =>
+    def reapTmps(listed: Array[org.apache.hadoop.fs.FileStatus]): Unit =
+      listed.foreach { st =>
         if (st.isFile && st.getPath.getName.matches(""".*\.tmp-\d+-\d+""") &&
             st.getModificationTime < cutoff)
           try fs.delete(st.getPath, false): Unit catch { case _: Throwable => () }
       }
-    }
-    listOrEmpty(new Path(rootPath, "_staging")).foreach { st =>
+    val top = listOrEmpty(rootPath)
+    reapTmps(top)
+    // `_cas/` holds the CAS markers; a root without one (an archive) costs
+    // no listing
+    if (top.exists(st => st.isDirectory && st.getPath.getName == "_cas"))
+      reapTmps(listOrEmpty(new Path(rootPath, "_cas")))
+    listOrEmpty(staging).foreach { st =>
       // files are the SOLE age authority when any exist: folding in a
       // fake-dir mtime that reports probe time would read as forever-fresh
       // and the entry would never reclaim. The top-level mtime is only the

@@ -392,7 +392,7 @@ object GzArchive {
     // bucket listing — a listing would also acknowledge ORPHANS from
     // previously crashed writers, exactly the files the cursor protocol
     // exists to exclude).
-    val jobTag = java.util.UUID.randomUUID().toString
+    val jobDir = new Path(root, s".inprogress/job-${java.util.UUID.randomUUID()}")
     val written = spark.sparkContext
       .collectionAccumulator[(String, Int, Long, Long)]("gzarchive-written")
     // NO second exchange: WindowExec already sorted each task by (_task,
@@ -405,7 +405,7 @@ object GzArchive {
       .foreachPartition { rows: Iterator[Row] =>
         val fs = TableIO.fileSystem(new Path(root), conf.value.value)
         val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
-        val tmpDir = new Path(root, s".inprogress/job-$jobTag/attempt-$attempt")
+        val tmpDir = new Path(jobDir, s"attempt-$attempt")
         var curTopic: String = null
         var curPart = -1
         var curFile = -1L
@@ -443,37 +443,22 @@ object GzArchive {
         commitW()
       }
 
-    // Driver-side job commit: publish exactly one attempt per file (data
-    // first, then index — the reference's upload order), fanned out on the
-    // metadata pool, then advance cursors atomically. Partitions this job
-    // did not write keep their existing cursors, and pre-existing orphans
-    // stay unacknowledged.
+    // Driver-side job commit: publish exactly one attempt per file through
+    // the tables' publish path (retried, one rename each): every data
+    // file, then every index, then the cursors — the reference's upload
+    // order. Partitions this job did not write keep their existing
+    // cursors, and pre-existing orphans stay unacknowledged.
     val tio = new TableIO(root, spark)
-    val fs = tio.fs
     val destDir = if (datePrefix.isEmpty) new Path(root) else new Path(root, datePrefix)
     import scala.jdk.CollectionConverters._
     val acks = written.value.asScala.toSeq
       .groupBy(t => (t._1, t._2, t._3)) // a retried task reports twice; pick one
       .map { case ((t, p, first), reports) => (t, p, first, reports.map(_._4).max) }
       .toSeq.sortBy(a => (a._1, a._2, a._3))
-    if (acks.nonEmpty) fs.mkdirs(destDir)
-    // rename-with-OVERWRITE (FileContext is thread-safe), never
-    // delete-then-rename: a crash between the two would leave a
-    // cursor-acknowledged index pointing at a vanished data file
-    graft.lake.MetaIO.fetchAll(acks) { case (t, p, first, attempt) =>
-      val attemptDir = new Path(root, s".inprogress/job-$jobTag/attempt-$attempt")
-      Seq(f"$t-$p%05d-$first%012d.gz", f"$t-$p%05d-$first%012d.index.json")
-        .foreach { name =>
-          val tmp = new Path(attemptDir, name)
-          val dst = new Path(destDir, name)
-          // read-and-catch: the rename itself reports a missing source
-          try tio.renameOverwrite(tmp, dst)
-          catch {
-            case e: java.io.FileNotFoundException => throw new IllegalArgumentException(
-              s"attempt $attempt reported $name but left no file", e)
-          }
-        }
-    }
+    tio.publish(Seq(".gz", ".index.json").map(ext => acks.map { case (t, p, first, attempt) =>
+      val name = f"$t-$p%05d-$first%012d$ext"
+      new Path(jobDir, s"attempt-$attempt/$name") -> new Path(destDir, name)
+    }))
     // atomic cursor swap: readers trust only the cursor, so there must
     // never be a truncated or missing one. TableIO.writeAtomic supplies the
     // per-attempt-unique tmp + rename-with-overwrite — a FIXED tmp name
@@ -485,29 +470,11 @@ object GzArchive {
       val key = if (datePrefix.isEmpty) rel else s"$datePrefix/$rel"
       tio.writeAtomic(new Path(root, cursorFileName(t, p)), key)
     }
-    fs.delete(new Path(root, s".inprogress/job-$jobTag"), true)
-    // reap stale job dirs from FAILED/crashed writers: each job's staging is
-    // UUID-named, so nothing else would ever reclaim it — without this
-    // sweep a flaky pipeline accumulates dead .gz bytes forever (the same
-    // lazy-reap pattern as Staging.maintain and the journal's tombstones)
-    val jobs = tio.listOrEmpty(new Path(root, ".inprogress"))
-    val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
-    // staleness = the NEWEST mtime anywhere under the job dir, not the
-    // top-level dir's (which goes stale as soon as its attempt dirs are
-    // created — a long-running concurrent writer's live staging must not
-    // be swept from under it)
-    def newestMtime(st: FileStatus): Long =
-      (st.getModificationTime +: fs.listStatus(st.getPath).toSeq.map { s =>
-        if (s.isDirectory) newestMtime(s) else s.getModificationTime
-      }).max
-    jobs.foreach { st =>
-      val newest =
-        try newestMtime(st)
-        catch { // the owner's own cleanup raced the walk: nothing to reap
-          case _: java.io.FileNotFoundException => Long.MaxValue
-        }
-      if (newest < cutoff) fs.delete(st.getPath, true): Unit
-    }
+    tio.fs.delete(jobDir, true)
+    // each job's staging is UUID-named, so nothing else would ever reclaim
+    // a FAILED or crashed writer's: past a day, its job dir and leaked
+    // cursor tmps go (the same sweep as the tables' `_staging`)
+    tio.sweepStaleStaging(jobDir.getParent, graceMs = 24L * 3600 * 1000)
   }
 
   // ----------------------------------------------------------------- read

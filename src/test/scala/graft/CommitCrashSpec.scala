@@ -8,6 +8,7 @@ import scala.util.Try
 
 import graft.gen.ChangeGen
 import graft.lake.{ChangeJournal, ConcurrentCommitException, InJvmLocalFileSystem, InJvmLocalFs, Json, LakeTable}
+import graft.sources.GzArchive
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -15,16 +16,21 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Crash points of the commit window: every metadata operation from a
-  * commit's plan-coherence read to its snapshot swap fails once, either
-  * before the operation or after it (a lost acknowledgement), for one
-  * steady-state lake merge and one journal append. Whatever the faulted call
-  * did, fresh instances on the same roots then replay the batch, and the
-  * tables must hold exactly once: the lake equals the LWW oracle, the
-  * journal yields each offset once, and no manifest names a missing file.
-  * The faults go through a `file:` class bound with `spark.conf.set`, the
-  * seam [[LocalFsSpec]] uses, so they hit the engine's own filesystem calls
-  * and its FileContext renames alike.
+/** Crash points of the publish and commit windows: every metadata
+  * operation fails once, either before the operation or after it (a lost
+  * acknowledgement). The commit window runs from a commit's plan-coherence
+  * read to its snapshot swap; the publish window from the first operation
+  * of `TableIO.publish` (staged files promoted to their names) to the
+  * commit, or to the end of an archive write (indexes, cursors, scratch
+  * sweep). Covered: one steady-state lake merge and one journal append in
+  * both windows, and one archive write into an existing root. Whatever the
+  * faulted call did, fresh instances on the same roots then replay the
+  * batch, and it must hold exactly once: the lake equals the LWW oracle,
+  * the journal yields each offset once, no manifest names a missing file;
+  * the archive's committed read equals its input and every cursor names an
+  * index whose data file exists. The faults go through a `file:` class
+  * bound with `spark.conf.set`, the seam [[LocalFsSpec]] uses, so they hit
+  * the engine's own filesystem calls and its FileContext renames alike.
   */
 class CommitCrashSpec extends AnyFunSuite {
   import CommitCrashSpec.Point
@@ -92,32 +98,33 @@ class CommitCrashSpec extends AnyFunSuite {
     }
   }
 
-  /** The window's operations, by a dry run with counting only, then one
-    * faulted run per (operation, before/after). Points are independent
-    * roots, so they run three at a time.
+  /** The window's operations, by a dry run with counting only (which must
+    * see each of `kinds`), then one faulted run per (operation,
+    * before/after). A point names its operation by kind, path and
+    * occurrence, so the publish fan-out's parallel renames are found in any
+    * order. Points are independent roots, so they run three at a time.
     */
-  private def enumerate(template: String, tag: String)(batch: String => Long)
+  private def enumerate(template: String, tag: String, window: CommitFaults.Window,
+      kinds: Set[String])(batch: String => Long)
       (check: (String, String) => Unit): Seq[Point] = {
     val dry = copyTree(template, s"$tag-dry")
-    CommitFaults.arm(dry, failAt = 0, after = false)
+    CommitFaults.arm(dry, window)
     batch(dry): Unit
-    val ops = CommitFaults.disarm(dry)
-    assert(Set("open", "create", "rename").subsetOf(ops.map(_.kind).toSet), ops)
+    val ops = CommitFaults.disarm(dry).ops
+    assert(kinds.subsetOf(ops.map(_.kind).toSet), ops)
     val points = for {
       (op, i) <- ops.zipWithIndex
       after <- Seq(false, true)
-    } yield Point(i + 1, after, op.kind, op.rel)
+    } yield Point(i + 1, after, op)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     try points.map { pt =>
       pool.submit(new java.util.concurrent.Callable[Unit] {
         def call(): Unit = {
           val root = copyTree(template, tag)
-          CommitFaults.arm(root, pt.k, pt.after)
+          CommitFaults.arm(root, window, Some(pt.op), pt.after)
           Try(batch(root)): Unit
           val seen = CommitFaults.disarm(root)
-          assert(seen.size >= pt.k && seen(pt.k - 1).kind == pt.kind &&
-            seen(pt.k - 1).rel == pt.rel,
-            s"$pt: the faulted run took other operations: $seen")
+          assert(seen.fired, s"$pt: the faulted run took other operations: ${seen.ops}")
           replay(pt.toString)(batch(root))
           check(root, pt.toString)
         }
@@ -140,45 +147,86 @@ class CommitCrashSpec extends AnyFunSuite {
     (changes, changes.where(col("offset") < 60), changes.where(col("offset") >= 60))
   }
 
-  test("every commit-window operation of a steady-state lake merge recovers exactly once") {
-    val (changes, b0, b1) = fixture()
-    val want = rows(ChangeGen.oracleFinalState(changes))
-    withFaultingFs {
-      val template = SparkTestSession.tempDir("crash-lake")
-      new LakeTable(template, spark, subBuckets = 2).merge(b0, 0L)
-      val points = enumerate(template, "crash-lake-pt") { root =>
-        new LakeTable(root, spark, subBuckets = 2).merge(b1, 1L)
-      } { (root, what) =>
-        val lake = new LakeTable(root, spark, subBuckets = 2)
-        assert(lake.lastBatchId === 1L, what)
-        assert(rows(lake.read()) === want, what)
-        assertManifestsResolve(root, what)
+  // the commit window, then the promotes before it
+  private val windows = Seq(
+    ("commit-window", CommitFaults.commitWindow, Set("open", "create", "rename")),
+    ("publish-window", CommitFaults.publishWindow, Set("mkdirs", "rename", "delete")))
+
+  for ((name, window, kinds) <- windows) {
+    test(s"every $name operation of a steady-state lake merge recovers exactly once") {
+      val (changes, b0, b1) = fixture()
+      val want = rows(ChangeGen.oracleFinalState(changes))
+      withFaultingFs {
+        val template = SparkTestSession.tempDir("crash-lake")
+        new LakeTable(template, spark, subBuckets = 2).merge(b0, 0L)
+        val points = enumerate(template, "crash-lake-pt", window, kinds) { root =>
+          new LakeTable(root, spark, subBuckets = 2).merge(b1, 1L)
+        } { (root, what) =>
+          val lake = new LakeTable(root, spark, subBuckets = 2)
+          assert(lake.lastBatchId === 1L, what)
+          assert(rows(lake.read()) === want, what)
+          assertManifestsResolve(root, what)
+        }
+        info(s"${points.size} crash points: ${points.mkString("; ")}")
       }
-      info(s"${points.size} crash points: ${points.mkString("; ")}")
+      changes.unpersist()
     }
-    changes.unpersist()
+
+    test(s"every $name operation of a steady-state journal append recovers exactly once") {
+      val (changes, b0, b1) = fixture()
+      val want = changes.select(col("partition"), col("offset")).collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+      withFaultingFs {
+        val template = SparkTestSession.tempDir("crash-journal")
+        new ChangeJournal(template, spark, chunkBytes = 2048).append(b0, 0L)
+        val points = enumerate(template, "crash-journal-pt", window, kinds) { root =>
+          new ChangeJournal(root, spark, chunkBytes = 2048).append(b1, 1L)
+        } { (root, what) =>
+          val journal = new ChangeJournal(root, spark, chunkBytes = 2048)
+          assert(journal.lastBatchId === 1L, what)
+          val got = journal.readFrom(Map.empty).select(col("partition"), col("offset"))
+            .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+          assert(got === want, s"$what: each offset exactly once")
+          assertManifestsResolve(root, what)
+        }
+        info(s"${points.size} crash points: ${points.mkString("; ")}")
+      }
+      changes.unpersist()
+    }
   }
 
-  test("every commit-window operation of a steady-state journal append recovers exactly once") {
-    val (changes, b0, b1) = fixture()
-    val want = changes.select(col("partition"), col("offset")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+  test("every publish-window operation of an archive write into an existing root recovers exactly once") {
+    import spark.implicits._
+    // 2 partitions × 40 records; the template holds offsets 0-19 of each,
+    // the enumerated write appends 20-39 at the offsets the caller knows
+    val all = for (p <- 0 until 2; o <- 0 until 40) yield (p, o.toLong, s"p$p rec $o")
+    def frame(from: Int) = all.filter(r => r._2 >= from && r._2 < from + 20)
+      .toDF("partition", "k", "line")
+    def write(root: String, from: Int): Long = {
+      GzArchive.writeArchive(frame(from), root, "t", "k", chunkThreshold = 256,
+        startOffsets = if (from == 0) Map.empty else Map(0 -> 20L, 1 -> 20L))
+      0L
+    }
     withFaultingFs {
-      val template = SparkTestSession.tempDir("crash-journal")
-      new ChangeJournal(template, spark, chunkBytes = 2048).append(b0, 0L)
-      val points = enumerate(template, "crash-journal-pt") { root =>
-        new ChangeJournal(root, spark, chunkBytes = 2048).append(b1, 1L)
-      } { (root, what) =>
-        val journal = new ChangeJournal(root, spark, chunkBytes = 2048)
-        assert(journal.lastBatchId === 1L, what)
-        val got = journal.readFrom(Map.empty).select(col("partition"), col("offset"))
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
-        assert(got === want, s"$what: each offset exactly once")
-        assertManifestsResolve(root, what)
+      val template = SparkTestSession.tempDir("crash-archive")
+      write(template, 0)
+      val points = enumerate(template, "crash-archive-pt", CommitFaults.archiveWindow,
+        Set("mkdirs", "rename", "create", "delete", "list"))(write(_, 20)) { (root, what) =>
+        val got = GzArchive.readCommitted(spark, root, "t")
+          .select(col("partition"), col("offset"), col("value")).collect()
+          .map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq.sorted
+        assert(got === all.sorted, s"$what: the committed read is the input, once")
+        assert(GzArchive.fetchOffsets(spark, root, "t") === Map(0 -> 40L, 1 -> 40L), what)
+        (0 until 2).foreach { p =>
+          val key = new String(Files.readAllBytes(
+            Paths.get(root, GzArchive.cursorFileName("t", p))), "UTF-8").trim
+          assert(Files.exists(Paths.get(root, key)), s"$what: cursor $p names $key")
+          assert(Files.exists(Paths.get(root, key.stripSuffix(".index.json") + ".gz")),
+            s"$what: cursor $p names an index without its data file")
+        }
       }
       info(s"${points.size} crash points: ${points.mkString("; ")}")
     }
-    changes.unpersist()
   }
 
   test("a truncating maintenance pass opens snapshot.json twice outside the CAS") {
@@ -191,43 +239,110 @@ class CommitCrashSpec extends AnyFunSuite {
       val journal = new ChangeJournal(root, spark, chunkBytes = 2048)
       journal.append(b0, 0L)
       journal.append(b1, 1L)
-      CommitFaults.arm(root, failAt = 0, after = false, fromStart = true)
+      CommitFaults.arm(root, CommitFaults.fromStart)
       assert(journal.truncate(Map(0 -> 59L, 1 -> 59L), graceMs = 0L) === 2)
-      val ops = CommitFaults.disarm(root)
+      val ops = CommitFaults.disarm(root).ops
       val opens = ops.filter(o => o.kind == "open" && o.rel == "snapshot.json")
       assert(opens.count(!_.inCas) === 2, ops)
       assert(journal.readFrom(Map.empty).count() === 120L)
     }
     changes.unpersist()
   }
-}
 
-object CommitCrashSpec {
-  /** fail window operation `k` (1-based) of `kind` on `rel`, before or after it runs */
-  final case class Point(k: Int, after: Boolean, kind: String, rel: String) {
-    override def toString = s"${if (after) "after" else "before"} op $k ($kind $rel)"
+  test("vacuum opens no manifest after its range fold") {
+    // the fold parses each version once; the lineage roll-up of the doomed
+    // versions and the shard GC of the kept ones take those manifests
+    val changes = ChangeGen.changes(spark, 240, nKeys = 24, partitions = 2).cache()
+    withFaultingFs {
+      val root = SparkTestSession.tempDir("crash-vacuum")
+      val lake = new LakeTable(root, spark, subBuckets = 2, checkpointEvery = 2,
+        shardGroupSize = 1)
+      (0 until 4).foreach { b =>
+        lake.merge(changes.where(col("offset") >= b * 30 && col("offset") < b * 30 + 30), b)
+      }
+      val lineage = lake.lineage().collect().toSet
+      CommitFaults.arm(root, CommitFaults.fromStart)
+      val (_, manifestsDeleted) = lake.vacuum(keepLast = 2, orphanGraceMs = 0L)
+      val ops = CommitFaults.disarm(root).ops
+      assert(manifestsDeleted === 2)
+      val fold = ops.lastIndexWhere(_.in("resolveRange"))
+      assert(fold >= 0, ops)
+      val reread = ops.drop(fold + 1)
+        .filter(o => o.kind == "open" && o.rel.matches("""manifest-\d+\.json"""))
+      assert(reread.isEmpty, ops)
+      assert(lake.lineage().collect().toSet === lineage)
+      assert(rows(lake.read()) === rows(ChangeGen.oracleFinalState(changes)))
+    }
+    changes.unpersist()
   }
 }
 
-/** Counts, and fails once, the metadata operations of one commit window
-  * per armed root (roots may be armed concurrently). The window opens at the
-  * first operation on the root whose stack runs through
-  * `requirePlanCoherent` (the commit's plan-coherence read), or at once for
-  * a root armed `fromStart`, and lasts until [[disarm]]. Only the outermost
-  * call on a thread is an operation, so `create` → `mkdirs` or `exists` →
-  * `getFileStatus` count once.
+object CommitCrashSpec {
+  /** fail window operation `op` (the `k`-th of the dry run), before or after it runs */
+  final case class Point(k: Int, after: Boolean, op: CommitFaults.Op) {
+    override def toString = s"${if (after) "after" else "before"} op $k (${op.kind} ${op.rel}" +
+      s"${if (op.n > 1) s" #${op.n}" else ""})"
+  }
+}
+
+/** Counts, and fails once, the metadata operations of one window per armed
+  * root (roots may be armed concurrently). A [[CommitFaults.Window]] opens
+  * at the first operation on the root whose stack runs through its opening
+  * method (or at once) and lasts until one runs through its closing method,
+  * or until [[disarm]]. Only the outermost call on a thread is an
+  * operation, so `create` → `mkdirs` or `exists` → `getFileStatus` count
+  * once.
   */
 object CommitFaults {
   final class InjectedFault(msg: String) extends java.io.IOException(msg)
 
-  /** one operation: kind, root-relative path (tmp names shortened to
-    * `<name>.tmp`, their pid and clock dropped) and whether it ran inside
-    * the snapshot CAS (`putIfVersion`)
+  /** one operation: kind, root-relative path (a rename's destination; tmp
+    * names shortened to `<name>.tmp`, their pid and clock dropped, and job
+    * UUIDs to `<uuid>`), its occurrence among the
+    * window's operations of that kind and path, and the methods on its
+    * thread's stack
     */
-  final case class Op(kind: String, rel: String, inCas: Boolean)
+  final case class Op(kind: String, rel: String, n: Int, methods: Set[String]) {
+    def in(method: String): Boolean = methods(method)
+    /** ran inside the snapshot CAS */
+    def inCas: Boolean = in("putIfVersion")
+  }
 
-  private final class Armed(val failAt: Int, val after: Boolean, var open: Boolean) {
-    val ops = scala.collection.mutable.ArrayBuffer.empty[Op]
+  final case class Window(opensAt: Option[String], closesAt: Option[String])
+  /** a commit's plan-coherence read to its snapshot swap */
+  val commitWindow = Window(Some("requirePlanCoherent"), None)
+  /** a table write's promotes, up to its commit */
+  val publishWindow = Window(Some("publish"), Some("requirePlanCoherent"))
+  /** an archive write's promotes, cursors and scratch sweep */
+  val archiveWindow = Window(Some("publish"), None)
+  val fromStart = Window(None, None)
+
+  /** what [[disarm]] returns: the window's operations, and whether the
+    * armed fault fired
+    */
+  final case class Seen(ops: Seq[Op], fired: Boolean)
+
+  private final class Armed(window: Window, fail: Option[Op], after: Boolean) {
+    private var state = 0 // 0 before the window, 1 in it, 2 past it
+    private val ops = scala.collection.mutable.ArrayBuffer.empty[Op]
+    private var fired = false
+
+    /** records an operation; Some(after) when it is the one to fail */
+    def record(kind: String, rel: String): Option[Boolean] = synchronized {
+      lazy val methods = Thread.currentThread().getStackTrace.map(_.getMethodName).toSet
+      if (state == 0 && window.opensAt.forall(methods)) state = 1
+      if (state == 1 && window.closesAt.exists(methods)) state = 2
+      if (state != 1) None
+      else {
+        val op = Op(kind, rel, ops.count(o => o.kind == kind && o.rel == rel) + 1, methods)
+        ops += op
+        val hit = fail.exists(f => f.kind == kind && f.rel == rel && f.n == op.n)
+        if (hit) fired = true
+        if (hit) Some(after) else None
+      }
+    }
+
+    def seen: Seen = synchronized(Seen(ops.toList, fired))
   }
 
   private val armed = new java.util.concurrent.ConcurrentHashMap[String, Armed]()
@@ -235,13 +350,15 @@ object CommitFaults {
 
   private def prefix(dir: String) = new Path(dir).toUri.getPath.stripSuffix("/") + "/"
 
-  /** `failAt` = 1-based index of the window operation to fail, 0 = count only */
-  def arm(dir: String, failAt: Int, after: Boolean, fromStart: Boolean = false): Unit =
-    armed.put(prefix(dir), new Armed(failAt, after, fromStart)): Unit
+  /** count `dir`'s operations in `window`, failing `fail` (by kind, path
+    * and occurrence) before it runs or, with `after`, after it
+    */
+  def arm(dir: String, window: Window, fail: Option[Op] = None, after: Boolean = false): Unit =
+    armed.put(prefix(dir), new Armed(window, fail, after)): Unit
 
   /** the window's operations on `dir` since [[arm]] */
-  def disarm(dir: String): Seq[Op] =
-    Option(armed.remove(prefix(dir))).map(a => a.synchronized(a.ops.toList)).getOrElse(Nil)
+  def disarm(dir: String): Seen =
+    Option(armed.remove(prefix(dir))).map(_.seen).getOrElse(Seen(Nil, fired = false))
 
   def disarmAll(): Unit = armed.clear()
 
@@ -253,31 +370,21 @@ object CommitFaults {
 
   def op[T](p: Path, kind: String)(body: => T): T = {
     if (depth.get()(0) > 0 || armed.isEmpty) return nested(body)
-    val path = p.toUri.getPath
-    val hit = armed.asScala.collectFirst { case (r, a) if path.startsWith(r) => (r, a) }
-    val (idx, failing, failAfter) = hit match {
-      case None => (0, false, false)
-      case Some((root, a)) =>
-        lazy val stack = Thread.currentThread().getStackTrace.map(_.getMethodName)
-        a.synchronized {
-          if (!a.open && stack.contains("requirePlanCoherent")) a.open = true
-          if (!a.open) (0, false, false)
-          else {
-            a.ops += Op(kind, path.stripPrefix(root).replaceAll("""\.tmp-\d+-\d+$""", ".tmp"),
-              stack.contains("putIfVersion"))
-            (a.ops.size, a.ops.size == a.failAt, a.after)
-          }
-        }
-    }
-    if (failing && !failAfter)
-      throw new InjectedFault(s"injected failure before op $idx ($kind $path)")
+    val path = p.toUri.getPath + "/" // the root itself too
+    val failing = armed.asScala.collectFirst { case (r, a) if path.startsWith(r) =>
+      a.record(kind, ("./" + path.stripPrefix(r)).stripSuffix("/").stripPrefix("./")
+        .replaceAll("""\.tmp-\d+-\d+$""", ".tmp").replaceAll(
+          """[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""", "<uuid>"))
+    }.flatten
+    if (failing.contains(false))
+      throw new InjectedFault(s"injected failure before $kind $p")
     val r = nested(body)
-    if (failing) {
+    if (failing.contains(true)) {
       r match {
         case c: java.io.Closeable => c.close()
         case _ => ()
       }
-      throw new InjectedFault(s"injected lost acknowledgement of op $idx ($kind $path)")
+      throw new InjectedFault(s"injected lost acknowledgement of $kind $p")
     }
     r
   }
@@ -295,7 +402,7 @@ class FaultingLocalFileSystem extends InJvmLocalFileSystem {
     CommitFaults.op(f, "create")(super.create(f, permission, overwrite, bufferSize,
       replication, blockSize, progress))
   override def rename(src: Path, dst: Path): Boolean =
-    CommitFaults.op(src, "rename")(super.rename(src, dst))
+    CommitFaults.op(dst, "rename")(super.rename(src, dst))
   override def delete(f: Path, recursive: Boolean): Boolean =
     CommitFaults.op(f, "delete")(super.delete(f, recursive))
   override def listStatus(f: Path): Array[FileStatus] =
@@ -304,6 +411,9 @@ class FaultingLocalFileSystem extends InJvmLocalFileSystem {
     CommitFaults.op(f, "get_status")(super.getFileStatus(f))
   override def mkdirs(f: Path, permission: FsPermission): Boolean =
     CommitFaults.op(f, "mkdirs")(super.mkdirs(f, permission))
+  // FilterFileSystem sends the one-argument form straight to the raw FS
+  override def mkdirs(f: Path): Boolean =
+    CommitFaults.op(f, "mkdirs")(super.mkdirs(f))
 }
 
 /** The matching `file:` AbstractFileSystem: FileContext renames (the
@@ -311,7 +421,7 @@ class FaultingLocalFileSystem extends InJvmLocalFileSystem {
   */
 class FaultingLocalFs(uri: URI, conf: Configuration) extends InJvmLocalFs(uri, conf) {
   override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit =
-    CommitFaults.op(src, "rename")(super.renameInternal(src, dst, overwrite))
+    CommitFaults.op(dst, "rename")(super.renameInternal(src, dst, overwrite))
   override def renameInternal(src: Path, dst: Path): Unit =
-    CommitFaults.op(src, "rename")(super.renameInternal(src, dst))
+    CommitFaults.op(dst, "rename")(super.renameInternal(src, dst))
 }

@@ -782,4 +782,61 @@ class GzArchiveSpec extends AnyFunSuite {
     val loud = intercept[Throwable](GzArchive.read(spark, root).collect())
     assert(loud.getMessage != null)
   }
+
+  test("a staged file missing at its publish fails the write, never taking an older job's file") {
+    import spark.implicits._
+    val root = SparkTestSession.tempDir("gzmissing")
+    val df = (0 until 20).map(i => (0, i.toLong, s"rec $i")).toDF("partition", "k", "line")
+    GzArchive.writeArchive(df, root, "t", "k", chunkThreshold = 256)
+    val cursor = new java.io.File(root, GzArchive.cursorFileName("t", 0))
+    val cursorBefore = java.nio.file.Files.readString(cursor.toPath)
+    // the same input again: every destination name already holds the
+    // earlier job's file, so a retry's "source gone and destination
+    // present" shortcut would take it as published
+    val promotes = new java.util.concurrent.atomic.AtomicInteger(0)
+    graft.lake.TableIO.faultHook = { tag =>
+      if (tag == "promote" && promotes.getAndIncrement() == 0)
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root, ".inprogress"))
+    }
+    val e = try intercept[IllegalStateException] {
+      GzArchive.writeArchive(df, root, "t", "k", chunkThreshold = 256)
+    } finally graft.lake.TableIO.faultHook = _ => ()
+    assert(e.getMessage.contains("missing at its publish"), e.getMessage)
+    assert(promotes.get() === 1, "a missing source is not retried")
+    assert(java.nio.file.Files.readString(cursor.toPath) === cursorBefore)
+    assert(GzArchive.readCommitted(spark, root, "t").count() === 20L)
+  }
+
+  test("the next write reclaims stale job dirs and cursor tmps past a day, not live ones") {
+    import spark.implicits._
+    val root = SparkTestSession.tempDir("gzsweep")
+    def write(from: Int): Unit = GzArchive.writeArchive(
+      (from until from + 10).map(i => (0, i.toLong, s"rec $i")).toDF("partition", "k", "line"),
+      root, "t", "k", chunkThreshold = 256, startOffsets = Map(0 -> from.toLong))
+    write(0)
+    val past = System.currentTimeMillis() - 25L * 3600 * 1000
+    def file(rel: String, old: Boolean): java.io.File = {
+      val f = new java.io.File(root, rel)
+      f.getParentFile.mkdirs()
+      assert(f.createNewFile())
+      if (old) assert(f.setLastModified(past))
+      f
+    }
+    // a crashed job (its newest file past the grace), a crashed cursor
+    // publish's tmp, a live cursor tmp, and a long-running job whose dirs
+    // are old but which is still writing
+    val dead = file(".inprogress/job-dead/attempt-1/t-00000-000000000000.gz", old = true)
+    val deadTmp = file(GzArchive.cursorFileName("t", 0) + ".tmp-123-456", old = true)
+    val liveTmp = file(GzArchive.cursorFileName("t", 0) + ".tmp-123-789", old = false)
+    val slow = file(".inprogress/job-slow/attempt-2/t-00001-000000000000.gz", old = false)
+    Seq(dead.getParentFile, dead.getParentFile.getParentFile, slow.getParentFile,
+      slow.getParentFile.getParentFile).foreach(d => assert(d.setLastModified(past)))
+    write(10)
+    assert(!dead.getParentFile.getParentFile.exists, "a stale job dir is reclaimed")
+    assert(!deadTmp.exists, "a stale cursor tmp is reclaimed")
+    assert(liveTmp.exists, "a fresh cursor tmp survives")
+    assert(slow.exists, "an old job dir holding a fresh file survives")
+    assert(GzArchive.fetchOffsets(spark, root, "t") === Map(0 -> 20L))
+    assert(GzArchive.readCommitted(spark, root, "t").count() === 20L)
+  }
 }
