@@ -1,13 +1,12 @@
 package graft.lake
 
-import com.fasterxml.jackson.databind.JsonNode
 import graft.operators.Chunker
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
-import scala.jdk.CollectionConverters._
+import scala.collection.immutable.SortedMap
 
 /** The chunked, offset-keyed change journal — the Spark-native port of the
   * reference sink's storage trio (SURVEY.md §1.3):
@@ -17,7 +16,8 @@ import scala.jdk.CollectionConverters._
   *     (BlockGZIPFileWriter.java:161-163; zero-padded fixed width so
   *     lexicographic = numeric order, load-bearing in the reference's
   *     resume skip, S3FilesReader.java:167)
-  *   - manifest JSON with per-file ChunkDescriptor lists
+  *   - manifest JSON with per-file chunk lists (`JournalChunk`, the
+  *     reference's ChunkDescriptor)
   *     ↔ `…index.json` (BlockGZIPFileWriter.java:242-250)
   *   - `snapshot.json` pointer, atomically swapped
   *     ↔ `last_chunk_index.{topic}-{partition}.txt` cursor (S3Writer.java:138-153)
@@ -38,21 +38,17 @@ final class ChangeJournal(
   private val io = new TableIO(root, spark, commitStore)
 
   /** The versioned log this journal runs on. Entries are the manifest's
-    * file nodes, keyed by path. A delta records only its commit's change —
+    * files, keyed by path. A delta records only its commit's change —
     * `added` (an append's new files) and/or `removed` (a truncate's dropped
     * paths) — SURVEY.md §4.1 applied to the journal: commit JSON is
     * O(change), never O(journal history). Truncation in particular stays
     * O(dead), not O(kept): at long retention the kept set is the big one.
     */
-  private val log = new SnapshotLog[String, JsonNode](io, appId, "journal",
-    checkpointEvery, new LogCodec[String, JsonNode] {
-      def key(f: JsonNode) = f.get("path").asText
-      def isDelta(m: JsonNode) = m.has("added")
-      def checkpoint(m: JsonNode) = m.get("files").elements().asScala.toSeq
-      def removed(d: JsonNode) =
-        Option(d.get("removed")).toSeq.flatMap(_.elements().asScala.map(_.asText))
-      def added(d: JsonNode) = d.get("added").elements().asScala.toSeq
-      def ordered(fs: Seq[JsonNode]) = fs
+  private val log = new SnapshotLog[String, JournalFile, JournalManifest](io, appId,
+    "journal", checkpointEvery, new LogCodec[String, JournalFile, JournalManifest] {
+      def key(f: JournalFile) = f.path
+      def checkpoint(m: JournalManifest) = m.files.getOrElse(Nil)
+      def ordered(fs: Seq[JournalFile]) = fs
     })
 
   // ---- snapshot / manifest ---------------------------------------------
@@ -66,20 +62,14 @@ final class ChangeJournal(
     */
   def nextOffsets(): Map[Int, Long] = nextOffsetsOf(log.pin().manifest)
 
-  /** the manifest's partitions→nextOffset map — the ONE place that knows
-    * the `partitions` JSON shape (nextOffsets / append / truncate all
-    * route through it, each against its own pinned manifest)
+  /** the manifest's partitions→nextOffset map (nextOffsets / append /
+    * truncate each read it from their own pinned manifest)
     */
-  private def nextOffsetsOf(m: Option[JsonNode]): Map[Int, Long] = m match {
-    case None => Map.empty
-    case Some(mm) => mm.get("partitions").properties().asScala
-      .map(e => e.getKey.toInt -> e.getValue.get("nextOffset").asLong).toMap
-  }
+  private def nextOffsetsOf(m: Option[JournalManifest]): Map[Int, Long] =
+    m.map(_.partitions.map { case (p, n) => p -> n.nextOffset }).getOrElse(Map.empty)
 
-  /** the schema a manifest records (absent before the field landed) */
-  private def schemaOf(m: Option[JsonNode]): Option[StructType] =
-    m.flatMap(mm => Option(mm.get("schema")))
-      .map(s => DataType.fromJson(s.asText).asInstanceOf[StructType])
+  private def schemaOf(m: JournalManifest): StructType =
+    DataType.fromJson(m.schema).asInstanceOf[StructType]
 
   // ---- append (the sink) ------------------------------------------------
 
@@ -110,7 +100,7 @@ final class ChangeJournal(
     // columns merged additively over the previous manifest's schema), so
     // persist it — a caught-up reader must not have to open parquet footers
     // to learn it (that scan grows O(total journal files) with history)
-    val mergedSchema = schemaOf(m0)
+    val mergedSchema = m0.map(schemaOf)
       .map(prev => SchemaEvolution.merge(prev, batch.schema))
       .getOrElse(batch.schema)
 
@@ -195,25 +185,16 @@ final class ChangeJournal(
       f"data/part-$p%05d-$appId-${chunks.map(_.getLong(2)).min}%012d.parquet"
     }
     val newFiles = byPartition.toSeq.sortBy(_._1).map { case (p, chunks) =>
-      val fileNode = Json.obj()
-      fileNode.put("partition", p)
-      fileNode.put("path", published.getOrElse(s"_p=$p", throw new IllegalStateException(
-        s"journal append staged no file for partition $p (stats saw rows) — " +
-          "batch source must be deterministic across scans")))
-      fileNode.put("first_record_offset", chunks.map(_.getLong(2)).min)
-      fileNode.put("max_offset", chunks.map(_.getLong(4)).max)
-      val arr = fileNode.putArray("chunks")
-      var byteOffset = 0L // chunks tile the file's byte space from 0
-      chunks.foreach { r =>
-        val c = Json.obj()
-        c.put("first_record_offset", r.getLong(2))
-        c.put("num_records", r.getLong(3))
-        c.put("byte_offset", byteOffset)
-        c.put("byte_length_uncompressed", r.getLong(5))
-        byteOffset += r.getLong(5)
-        arr.add(c)
-      }
-      fileNode
+      // chunks tile the file's byte space from 0
+      val byteOffsets = chunks.scanLeft(0L)(_ + _.getLong(5))
+      JournalFile(p,
+        published.getOrElse(s"_p=$p", throw new IllegalStateException(
+          s"journal append staged no file for partition $p (stats saw rows) — " +
+            "batch source must be deterministic across scans")),
+        chunks.map(_.getLong(2)).min, chunks.map(_.getLong(4)).max,
+        chunks.toSeq.zip(byteOffsets).map { case (r, at) =>
+          JournalChunk(r.getLong(2), r.getLong(3), at, r.getLong(5))
+        })
     }
 
     val newNext = next ++ byPartition.map { case (p, chunks) =>
@@ -260,13 +241,10 @@ final class ChangeJournal(
     // one pinned head for the whole pass (see [[Head]]): the plan, the
     // schema carried over and the commit baseline are one version
     val h = log.pin()
-    val (dead, kept) = log.files(h).partition { f =>
-      watermarks.get(f.get("partition").asInt)
-        .exists(w => f.get("max_offset").asLong <= w)
-    }
+    val dead = log.files(h).filter(f => watermarks.get(f.partition).exists(f.maxOffset <= _))
     if (dead.nonEmpty) {
       val written = commitManifest(h, Nil, nextOffsetsOf(h.manifest), h.batchId,
-        journalSchema(h, kept), removed = dead.map(_.get("path").asText))
+        journalSchema(h), removed = dead.map(_.path))
       // Manifests strictly below the NEW current checkpoint version are
       // unreachable from any live fold chain. Their names are DERIVED, not
       // listed: versions are sequential, so the not-yet-tombstoned range is
@@ -279,7 +257,7 @@ final class ChangeJournal(
       // next truncate (deduped below, bounded by the grace window). The
       // first truncate of a pre-watermark journal migrates with one root
       // listing.
-      val ckpt = written.get("checkpointVersion").asLong
+      val ckpt = written.checkpointVersion
       // a regressed/ancient watermark could derive a range of millions of
       // synthetic names (driver memory + delete-RPC cliff the old bounded
       // listing could never hit) — past this bound the listing, bounded by
@@ -305,9 +283,9 @@ final class ChangeJournal(
       // truncate would pile up duplicate tombstone files at a
       // truncate-per-batch cadence (the old single-list code deduped the
       // same way via its known set)
-      pendingAdd((dead.map(_.get("path").asText) ++ supersededManifests)
-        .filterNot(alreadyPending()))
-      io.writeAtomic(tombstoneWatermarkPath, s"""{"manifestsBelow":$ckpt}""")
+      pendingAdd((dead.map(_.path) ++ supersededManifests).filterNot(alreadyPending()))
+      io.writeAtomic(tombstoneWatermarkPath,
+        Json.mapper.writeValueAsString(TombstoneWatermark(ckpt)))
     }
     reapPending(graceMs)
     // crashed peers' abandoned staging reclaims at maintenance cadence,
@@ -317,7 +295,6 @@ final class ChangeJournal(
   }
 
   private def pendingDir = new Path(io.rootPath, "pending-delete")
-  private def legacyPendingPath = new Path(io.rootPath, "pending-delete.json")
   private def tombstoneWatermarkPath =
     new Path(io.rootPath, "tombstone-watermark.json")
 
@@ -329,13 +306,14 @@ final class ChangeJournal(
     */
   private def tombstoneWatermark(): Option[Long] =
     // read-and-catch (one RPC, no probe). ANY unreadable state — absent
-    // file, torn file on a non-atomic-rename fs, missing field, foreign
-    // content — degrades to the root-listing path, which self-heals: the
-    // next truncate rewrites the file. A throw here would fail every
+    // file, torn file on a non-atomic-rename fs, foreign content — degrades
+    // to the root-listing path, which self-heals: the next truncate
+    // rewrites the file. (A missing field reads as 0: the whole range from
+    // version 0, which dedup + idempotent reap absorb.) A throw here would fail every
     // retention pass (and, wired into CdcPipeline's cadence, the streaming
     // query itself) until someone hand-deletes the file.
-    try Option(Json.parse(io.readString(tombstoneWatermarkPath))
-      .get("manifestsBelow")).map(_.asLong)
+    try Some(Json.read[TombstoneWatermark](io.readString(tombstoneWatermarkPath))
+      .manifestsBelow)
     catch { case scala.util.control.NonFatal(_) => None }
 
   /** paths already named by a pending tombstone (so truncates don't re-name
@@ -349,8 +327,7 @@ final class ChangeJournal(
         // object store. A concurrent reaper may delete a ripe tombstone
         // between our listing and this read — its paths are then simply
         // not "pending".
-        io.readIfExists(st.getPath).toSeq
-          .flatMap(Json.parse(_).get("paths").elements().asScala.map(_.asText))
+        io.readIfExists(st.getPath).toSeq.flatMap(Json.read[Tombstone](_).paths)
       }.flatten.toSet
 
   /** record paths that just became unreferenced as ONE immutable tombstone
@@ -359,23 +336,18 @@ final class ChangeJournal(
     * file would poison every later reap's JSON parse.
     */
   private def pendingAdd(paths: Seq[String]): Unit =
-    if (paths.nonEmpty) writeTombstone(System.currentTimeMillis(), paths)
-
-  private def writeTombstone(droppedAt: Long, paths: Seq[String]): Unit = {
-    val o = Json.obj()
-    o.put("droppedAt", droppedAt)
-    val arr = o.putArray("paths")
-    paths.distinct.foreach(arr.add)
-    io.writeAtomic(new Path(pendingDir,
-      f"del-$droppedAt%013d-${java.util.UUID.randomUUID()}.json"), Json.write(o))
-  }
+    if (paths.nonEmpty) {
+      val droppedAt = System.currentTimeMillis()
+      io.writeAtomic(new Path(pendingDir,
+        f"del-$droppedAt%013d-${java.util.UUID.randomUUID()}.json"),
+        Json.write(Tombstone(droppedAt, paths.distinct)))
+    }
 
   /** reclaim tombstone files whose grace window has fully elapsed (all of a
     * file's entries share one droppedAt, so per-file reaping is exact);
     * deletes are idempotent, so concurrent reapers are safe
     */
   private def reapPending(graceMs: Long): Unit = {
-    migrateLegacyPending()
     val listed = io.listOrEmpty(pendingDir)
     if (listed.isEmpty) return
     val cutoff = System.currentTimeMillis() - graceMs
@@ -385,13 +357,12 @@ final class ChangeJournal(
       st.getPath.getName.matches("""del-.*\.json""") && {
         // a concurrent reaper may have taken this tombstone already —
         // its deletes were idempotent with ours, nothing left to do
-        val node = io.readIfExists(st.getPath).map(Json.parse).orNull
-        node == null || node.get("droppedAt").asLong <= cutoff && {
-          node.get("paths").elements().asScala.foreach(p =>
-            io.fs.delete(new Path(io.rootPath, p.asText), false): Unit)
-          io.fs.delete(st.getPath, false): Unit
-          true
-        }
+        io.readIfExists(st.getPath).map(Json.read[Tombstone](_)).forall(t =>
+          t.droppedAt <= cutoff && {
+            t.paths.foreach(p => io.fs.delete(new Path(io.rootPath, p), false): Unit)
+            io.fs.delete(st.getPath, false): Unit
+            true
+          })
       }
     }
     // cosmetic empty-dir cleanup once everything listed is gone, best-effort
@@ -403,63 +374,29 @@ final class ChangeJournal(
       catch { case _: java.io.IOException => () }
   }
 
-  /** one-time migration of the old read-modify-write pending-delete.json:
-    * rewrite each drop-time group as its own immutable tombstone file
+  /** The journal's schema at head `h`: the manifest's, or the minimal meta
+    * trio for an empty journal.
     */
-  private def migrateLegacyPending(): Unit = {
-    // read-and-catch: one RPC per truncate, no exists probe
-    io.readIfExists(legacyPendingPath).foreach { legacy =>
-      Json.parse(legacy).elements().asScala.toSeq
-        .groupBy(_.get("droppedAt").asLong).foreach { case (at, entries) =>
-          writeTombstone(at, entries.map(_.get("path").asText))
-        }
-      io.fs.delete(legacyPendingPath, false): Unit
-    }
-  }
-
-  /** The journal's schema at head `h`, whose live files are `all`: from the
-    * manifest when persisted (every commit since the schema field landed),
-    * else inferred from the newest file per partition (O(partitions)
-    * footers), else the minimal meta trio.
-    */
-  private def journalSchema(h: Head, all: Seq[JsonNode]): StructType =
-    schemaOf(h.manifest).getOrElse {
-      if (all.isEmpty) StructType(Seq(
-        StructField("partition", IntegerType),
-        StructField("offset", LongType),
-        StructField("op", StringType)))
-      else {
-        val newestPerPartition = all
-          .groupBy(_.get("partition").asInt)
-          .values.map(_.maxBy(_.get("max_offset").asLong).get("path").asText)
-          .toSeq
-        spark.read.option("mergeSchema", "true")
-          .parquet(newestPerPartition.map(r => new Path(io.rootPath, r).toString): _*)
-          .schema
-      }
-    }
+  private def journalSchema(h: Head[JournalManifest]): StructType =
+    h.manifest.map(schemaOf).getOrElse(StructType(Seq(
+      StructField("partition", IntegerType),
+      StructField("offset", LongType),
+      StructField("op", StringType))))
 
   /** Commit this batch's change — `added` files and/or `removed` paths
     * (truncation) — on top of the pinned head's listing, written as a delta
     * except at checkpoint cadence or first commit. Returns the manifest
     * written.
     */
-  private def commitManifest(planned: Head, added: Seq[JsonNode],
+  private def commitManifest(planned: Head[JournalManifest], added: Seq[JournalFile],
       next: Map[Int, Long], batchId: Long, schema: StructType,
-      removed: Seq[String] = Nil): JsonNode =
-    log.commit(planned, batchId, Delta(removed, added)) { (m, c) =>
-      m.put("schema", schema.json)
-      m.put("checkpointVersion", c.checkpointVersion)
-      val pn = m.putObject("partitions")
-      next.keySet.toSeq.sorted.foreach { p =>
-        pn.putObject(p.toString).put("nextOffset", next.getOrElse(p, 0L)): Unit
-      }
-      val fa = m.putArray(if (c.full) "files" else "added")
-      (if (c.full) c.files else added).foreach(fa.add)
-      if (!c.full && removed.nonEmpty) {
-        val ra = m.putArray("removed")
-        removed.foreach(ra.add)
-      }
+      removed: Seq[String] = Nil): JournalManifest =
+    log.commit(planned, batchId, Delta(removed, added)) { c =>
+      JournalManifest(c.version, c.batchId, c.appId, schema.json, c.checkpointVersion,
+        SortedMap.from(next.map { case (p, o) => p -> NextOffset(o) }),
+        files = if (c.full) Some(c.files) else None,
+        added = if (c.full) None else Some(added),
+        removed = if (!c.full && removed.nonEmpty) Some(removed) else None)
     }
 
   // ---- read / replay (the source) ---------------------------------------
@@ -479,20 +416,16 @@ final class ChangeJournal(
     */
   def readFrom(committed: Map[Int, Long]): DataFrame = {
     val h = log.pin()
-    val all = log.files(h)
-    val files = all.filter { f =>
-      committed.get(f.get("partition").asInt)
-        .forall(c => f.get("max_offset").asLong > c)
-    }
+    val files = log.files(h).filter(f => committed.get(f.partition).forall(f.maxOffset > _))
     if (files.isEmpty) {
       // fully-caught-up resume must still carry the journal's schema, not a
       // zero-column frame (downstream selects/aggs would fail to resolve);
       // a frequent poller reads it from the manifest, not from footers (see
       // append)
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], journalSchema(h, all))
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], journalSchema(h))
     }
-    val pathsAbs = files.map(f => new Path(io.rootPath, f.get("path").asText).toString)
+    val pathsAbs = files.map(f => new Path(io.rootPath, f.path).toString)
     // mergeSchema: appends may add payload columns over time (additive only;
     // type widening is the lake table's job, which tracks schema versions)
     val df = spark.read.option("mergeSchema", "true").parquet(pathsAbs: _*)
@@ -507,10 +440,9 @@ final class ChangeJournal(
   def chunkIndex(): DataFrame = {
     val rows = for {
       f <- log.files(log.pin())
-      c <- f.get("chunks").elements().asScala.toSeq
-    } yield (f.get("partition").asInt, f.get("path").asText,
-      c.get("first_record_offset").asLong, c.get("num_records").asLong,
-      c.get("byte_offset").asLong, c.get("byte_length_uncompressed").asLong)
+      c <- f.chunks
+    } yield (f.partition, f.path, c.firstRecordOffset, c.numRecords, c.byteOffset,
+      c.byteLengthUncompressed)
     spark.createDataFrame(rows).toDF(
       "partition", "path", "first_record_offset", "num_records",
       "byte_offset", "byte_length_uncompressed")

@@ -1,7 +1,8 @@
 package graft.lake
 
+import java.io.IOException
 import java.net.URI
-import java.nio.file.Files
+import java.nio.file.{Files, LinkOption}
 import java.nio.file.attribute.{PosixFilePermission, PosixFilePermissions}
 
 import org.apache.hadoop.conf.Configuration
@@ -81,6 +82,24 @@ class InJvmRawLocalFs(uri: URI, conf: Configuration)
   override def getServerDefaults(): FsServerDefaults =
     LocalConfigKeys.getServerDefaults()
   override def isValidName(src: String): Boolean = true
+
+  /** An overwrite-rename of a plain file onto a plain file, or onto a free
+    * name in an existing directory, is the raw FS's `rename`: ONE
+    * `rename(2)`, which replaces the destination atomically. The inherited
+    * default reads both link statuses, then DELETES the destination and
+    * renames — a window with nothing at `dst` (for `snapshot.json`: no
+    * table at all). Directories, symlinks, a missing source and the
+    * no-overwrite case keep the default and its checks.
+    */
+  override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit = {
+    def local(p: Path) = fsImpl.asInstanceOf[RawLocalFileSystem].pathToFile(p).toPath
+    def plainFile(p: java.nio.file.Path) = Files.isRegularFile(p, LinkOption.NOFOLLOW_LINKS)
+    val (s, d) = (local(src), local(dst))
+    if (overwrite && src != dst && plainFile(s) && (plainFile(d) ||
+        Files.notExists(d, LinkOption.NOFOLLOW_LINKS) && Files.isDirectory(d.getParent))) {
+      if (!fsImpl.rename(src, dst)) throw new IOException(s"rename $src to $dst failed")
+    } else super.renameInternal(src, dst, overwrite)
+  }
 }
 
 /** Hadoop's checksummed `file:` AbstractFileSystem (`LocalFs`) over

@@ -1,12 +1,12 @@
 package graft.lake
 
-import com.fasterxml.jackson.databind.JsonNode
+import graft.model.LineageRow
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import scala.jdk.CollectionConverters._
+import scala.collection.immutable.SortedMap
 
 /** The merged lake table: live state per (repo, path), maintained by
   * copy-on-write MERGE of change-event batches. An Iceberg-style table built
@@ -23,8 +23,10 @@ import scala.jdk.CollectionConverters._
   * Exactly-once: commits are fenced by batchId (replayed epochs are skipped),
   * per-partition offset watermarks dedup at-least-once redelivery, and file
   * names derive only from (partition, subBucket, batchId), so a retried batch
-  * rewrites identical paths with identical bytes (the reference's offset-named
-  * S3 key idempotence, BlockGZIPFileWriter.java:161-163).
+  * rewrites identical paths with identical rows (the reference's offset-named
+  * S3 key idempotence, BlockGZIPFileWriter.java:161-163). Not identical
+  * bytes: parquet-mr writes each column chunk's encoding list from a hash
+  * set, so its order in the footer can differ between JVMs.
   *
   * Schema evolution: the snapshot carries every schema version; incoming
   * batches merge their schema in (add / widen via [[SchemaEvolution]]) and old
@@ -59,13 +61,10 @@ final class LakeTable(
     * delta's `touched` removes the bucket's previous file and `added`
     * supplies its replacement (absent when deletes emptied the bucket).
     */
-  private val log = new SnapshotLog[(Int, Int), FileEntry](io, appId, "table",
-    checkpointEvery, new LogCodec[(Int, Int), FileEntry] {
+  private val log = new SnapshotLog[(Int, Int), FileEntry, LakeManifest](io, appId,
+    "table", checkpointEvery, new LogCodec[(Int, Int), FileEntry, LakeManifest] {
       def key(f: FileEntry) = (f.partition, f.sub)
-      def isDelta(m: JsonNode) = LakeTable.this.isDelta(m)
-      def checkpoint(m: JsonNode) = checkpointEntries(m)
-      def removed(d: JsonNode) = touchedOf(d)
-      def added(d: JsonNode) = entriesOf(d.get("added"))
+      def checkpoint(m: LakeManifest) = checkpointEntries(m)
       def ordered(fs: Seq[FileEntry]) = fs.sortBy(f => (f.partition, f.sub))
     })
 
@@ -87,9 +86,8 @@ final class LakeTable(
     */
   def layoutSubBuckets: Int = subBucketsOf(log.pin())
 
-  private def subBucketsOf(h: Head): Int = h.manifest
-    .flatMap(m => Option(m.get("subBuckets")).map(_.asInt))
-    .getOrElse(subBuckets)
+  private def subBucketsOf(h: Head[LakeManifest]): Int =
+    h.manifest.map(_.subBuckets).getOrElse(subBuckets)
 
   private def subExpr(n: Int) =
     pmod(xxhash64(col("repo"), col("path")), lit(n.toLong)).cast("int")
@@ -98,42 +96,20 @@ final class LakeTable(
   def watermarks(): Map[Int, Long] =
     wmOf(log.pin())
 
-  private def wmOf(h: Head): Map[Int, Long] = h.manifest
-    .map(_.get("watermarks").properties().asScala
-      .map(e => e.getKey.toInt -> e.getValue.asLong).toMap)
-    .getOrElse(Map.empty)
+  private def wmOf(h: Head[LakeManifest]): Map[Int, Long] =
+    h.manifest.map(_.watermarks).getOrElse(Map.empty)
 
-  private def schemasOf(m: JsonNode): IndexedSeq[StructType] =
-    m.get("schemas").elements().asScala
-      .map(n => DataType.fromJson(n.asText).asInstanceOf[StructType]).toIndexedSeq
+  private def schemasOf(m: LakeManifest): IndexedSeq[StructType] =
+    m.schemas.map(DataType.fromJson(_).asInstanceOf[StructType]).toIndexedSeq
 
   /** All schema versions ever committed; last is current. */
-  private def schemasOf(h: Head): IndexedSeq[StructType] =
+  private def schemasOf(h: Head[LakeManifest]): IndexedSeq[StructType] =
     h.manifest.map(schemasOf).getOrElse(IndexedSeq.empty)
 
   def currentSchema: Option[StructType] = schemasOf(log.pin()).lastOption
 
-  private case class FileEntry(partition: Int, sub: Int, path: String,
-      schemaId: Int)
-
-  // manifests written before num_records was dropped still carry it per
-  // entry; it is ignored here like any other unknown field
-  private def entriesOf(arr: JsonNode): Seq[FileEntry] =
-    arr.elements().asScala.map { f =>
-      FileEntry(f.get("partition").asInt, f.get("sub").asInt,
-        f.get("path").asText, f.get("schemaId").asInt)
-    }.toSeq
-
-  // a delta manifest records only the buckets its commit touched (see
-  // LakeChange); a checkpoint records every live file
-  private def isDelta(m: JsonNode): Boolean = m.has("touched")
-
-  private def touchedOf(m: JsonNode): Seq[(Int, Int)] =
-    m.get("touched").elements().asScala
-      .map(t => (t.get(0).asInt, t.get(1).asInt)).toSeq
-
-  /** A checkpoint's listing: inline `files` (legacy/simple) or sharded
-    * (SURVEY.md §4.1 step 2, the Iceberg manifest-list shape). Shard key =
+  /** A checkpoint's listing, sharded (SURVEY.md §4.1 step 2, the Iceberg
+    * manifest-list shape). Shard key =
     * (partition, sub-bucket group of `shardGroupSize`): the root manifest
     * holds only key → shard-path, each shard lists one group's files, and
     * groups containing no touched bucket REUSE the previous checkpoint's
@@ -143,26 +119,19 @@ final class LakeTable(
     * checkpoint write O(buckets touched since the last checkpoint), never
     * O(table).
     */
-  private def checkpointEntries(m: JsonNode): Seq[FileEntry] =
-    if (m.has("files")) entriesOf(m.get("files"))
-    else {
-      // cold resolution reads one JSON per shard — on an object store that
-      // is thousands of small GETs at scale, so fetch on the shared bounded
-      // pool (MetaIO; order restored by the sorted key sequence, so the
-      // result is deterministic). Shared, not per-call: cold resolution
-      // recurs on every reader and cache miss, and MetaIO's failure path
-      // (abort + in-flight join) now covers the promote path's old
-      // shutdownNow semantics too.
-      val keys = m.get("shards").properties().asScala.toSeq.sortBy(_.getKey)
-      MetaIO.fetchAll(keys)(e => entriesOf(Json.parse(
-        io.readString(new Path(io.rootPath, e.getValue.asText))))).flatten
-    }
+  private def checkpointEntries(m: LakeManifest): Seq[FileEntry] =
+    // cold resolution reads one JSON per shard — on an object store that
+    // is thousands of small GETs at scale, so fetch on the shared bounded
+    // pool (MetaIO; order follows the sorted shard keys, so the result is
+    // deterministic). Shared, not per-call: cold resolution recurs on every
+    // reader and cache miss, and MetaIO's failure path (abort + in-flight
+    // join) covers the promote path too.
+    MetaIO.fetchAll(shardMapOf(m).values.toSeq)(rel =>
+      Json.read[Seq[FileEntry]](io.readString(new Path(io.rootPath, rel)))).flatten
 
   /** shard key "p-g" → shard path, from a checkpoint manifest */
-  private def shardMapOf(m: JsonNode): Map[String, String] =
-    if (!m.has("shards")) Map.empty
-    else m.get("shards").properties().asScala
-      .map(e => e.getKey -> e.getValue.asText).toMap
+  private def shardMapOf(m: LakeManifest): SortedMap[String, String] =
+    m.shards.getOrElse(SortedMap.empty)
 
   private def shardKey(partition: Int, sub: Int): String =
     s"$partition-${sub / shardGroupSize}"
@@ -420,7 +389,7 @@ final class LakeTable(
 
     val newWm = wm ++ statRows.map { case (p, maxOff, _, _, _) => p -> maxOff }
     val lineage = statRows.map { case (p, maxOff, minOff, n, nUp) =>
-      graft.model.LineageRow(batchId, p, minOff, maxOff, n, nUp, n - nUp, appId)
+      LineageRow(batchId, p, minOff, maxOff, n, nUp, n - nUp, appId)
     }
     commit(h, Delta(touched.toSeq.sorted, newEntries), newWm, newSchemas, batchId,
       lineage, sb)
@@ -497,14 +466,7 @@ final class LakeTable(
     */
   private type LakeChange = Change[(Int, Int), FileEntry]
 
-  private def fileEntryJson(f: FileEntry): JsonNode = {
-    val n = Json.obj()
-    n.put("partition", f.partition); n.put("sub", f.sub)
-    n.put("path", f.path); n.put("schemaId", f.schemaId)
-    n
-  }
-
-  /** Write a sharded checkpoint listing into `node`: one shard file per
+  /** Write a sharded checkpoint listing: one shard file per
     * (partition, bucket-group), REUSING the previous checkpoint's shard for
     * keys not in `dirty` (dirty must be a superset of keys whose file set
     * changed since that checkpoint — reuse of a stale shard would corrupt
@@ -521,25 +483,22 @@ final class LakeTable(
     * publish — a reuse of a vanished path would otherwise surface as
     * FileNotFound on every cold read of the new checkpoint, with no way to
     * self-heal (the listing exists nowhere else). A vanished shard is
-    * simply rewritten fresh under this version.
+    * simply rewritten fresh under this version. Returns the shard map.
     */
-  private def writeShards(node: com.fasterxml.jackson.databind.node.ObjectNode,
-      version: Long, resolved: Seq[FileEntry],
-      prevShards: Map[String, String], dirty: Set[String]): Unit = {
+  private def writeShards(version: Long, resolved: Seq[FileEntry],
+      prevShards: Map[String, String], dirty: Set[String]): SortedMap[String, String] = {
     // ONE listing of shards/ answers every reuse existence check — a
     // per-shard fs.exists would be O(shards) serial HEADs on the commit
     // critical path (the probe-per-version shape the journal GC also
     // avoids)
     val existing = listShardRels()
-    val shardsNode = node.putObject("shards")
-    resolved.groupBy(f => shardKey(f.partition, f.sub)).toSeq.sortBy(_._1)
-      .foreach { case (k, fs) =>
-        val rel = prevShards.get(k) match {
+    SortedMap.from(resolved.groupBy(f => shardKey(f.partition, f.sub)).toSeq.sortBy(_._1)
+      .map { case (k, fs) =>
+        k -> (prevShards.get(k) match {
           case Some(prev) if !dirty.contains(k) && existing.contains(prev) => prev
           case _ => writeFreshShard(version, fs)
-        }
-        shardsNode.put(k, rel)
-      }
+        })
+      })
   }
 
   private def listShardRels(): Set[String] =
@@ -554,22 +513,16 @@ final class LakeTable(
     // (readers resolve shards by the NAME RECORDED in the manifest, so the
     // qualifier is free; reuse carries recorded names across writers)
     val r = f"shards/p$p%05d-g$g%04d-$appId-v$version%012d.json"
-    val arr = Json.arr()
-    fs.sortBy(_.sub).foreach(f => arr.add(fileEntryJson(f)): Unit)
-    io.writeString(new Path(io.rootPath, r), Json.write(arr))
+    io.writeString(new Path(io.rootPath, r), Json.write(fs.sortBy(_.sub)))
     r
   }
 
-  private def commit(planned: Head, change: LakeChange, wm: Map[Int, Long],
-      schemaVersions: IndexedSeq[StructType], batchId: Long,
-      lineage: Seq[graft.model.LineageRow], sub: Int): Unit =
-    log.commit(planned, batchId, change) { (m, c) =>
-      m.put("subBuckets", sub)
-      m.put("checkpointVersion", c.checkpointVersion)
-      val wmNode = m.putObject("watermarks")
-      wm.toSeq.sortBy(_._1).foreach { case (p, o) => wmNode.put(p.toString, o) }
-      val sArr = m.putArray("schemas")
-      schemaVersions.foreach(s => sArr.add(s.json))
+  private def commit(planned: Head[LakeManifest], change: LakeChange,
+      wm: Map[Int, Long], schemaVersions: IndexedSeq[StructType], batchId: Long,
+      lineage: Seq[LineageRow], sub: Int): Unit =
+    log.commit(planned, batchId, change) { c =>
+      val m = LakeManifest(c.version, c.batchId, c.appId, sub, c.checkpointVersion,
+        SortedMap.from(wm), schemaVersions.map(_.json), lineage = lineage)
       if (c.full) {
         // sharded checkpoint: reuse the previous checkpoint's shards for
         // bucket groups untouched since it. Dirty = groups touched by any
@@ -580,48 +533,33 @@ final class LakeTable(
         // so fall back to walking back to the nearest SURVIVING checkpoint
         // — without the fallback every shard would be rewritten after each
         // such vacuum.
-        val prevCkptManifest: Option[JsonNode] =
-          c.prevCheckpoint.flatMap(log.manifestAt).filter(n => !isDelta(n)).orElse {
+        val prevCkptManifest: Option[LakeManifest] =
+          c.prevCheckpoint.flatMap(log.manifestAt).filter(!_.delta).orElse {
             Iterator.iterate(c.version - 1)(_ - 1).takeWhile(_ >= 0)
               .map(log.manifestAt)
               .takeWhile(_.isDefined).flatten
-              .find(n => !isDelta(n))
+              .find(!_.delta)
           }
-        val prevShards = prevCkptManifest.map(shardMapOf).getOrElse(Map.empty)
+        val prevShards = prevCkptManifest.map(shardMapOf).getOrElse(Map.empty[String, String])
         val dirty: Set[String] = change match {
           case Full(_) => c.files.map(f => shardKey(f.partition, f.sub)).toSet
           case Delta(touched, added) =>
             val chainDirty = prevCkptManifest.toSeq.flatMap { pc =>
-              val cv = pc.get("version").asLong
-              ((cv + 1) until c.version).flatMap(v => log.manifestAt(v).toSeq
-                .filter(isDelta).flatMap(touchedOf(_).map((shardKey _).tupled)))
+              ((pc.version + 1) until c.version).flatMap(v => log.manifestAt(v).toSeq
+                .flatMap(_.removedKeys.map((shardKey _).tupled)))
             }
             (touched.map((shardKey _).tupled) ++
               added.map(f => shardKey(f.partition, f.sub)) ++ chainDirty).toSet
         }
-        writeShards(m, c.version, c.files, prevShards, dirty)
+        val shards = writeShards(c.version, c.files, prevShards, dirty)
+        // re-verify shard reuse against a concurrent vacuum's GC, as late as
+        // possible before the pointer moves (the manifest file does not
+        // exist yet, so this is invisible to readers)
+        m.copy(shards = Some(writeShards(c.version, c.files, shards, Set.empty)))
       } else {
         val Delta(touched, added) = change: @unchecked
-        val ta = m.putArray("touched")
-        touched.foreach { case (p, s) =>
-          val t = ta.addArray(); t.add(p); t.add(s): Unit
-        }
-        val aa = m.putArray("added")
-        added.sortBy(f => (f.partition, f.sub)).foreach(f => aa.add(fileEntryJson(f)))
+        m.copy(touched = Some(touched), added = Some(added.sortBy(f => (f.partition, f.sub))))
       }
-      val la = m.putArray("lineage")
-      lineage.foreach { l =>
-        val n = Json.obj()
-        n.put("batchId", l.batchId); n.put("partition", l.partition)
-        n.put("firstOffset", l.firstOffset); n.put("lastOffset", l.lastOffset)
-        n.put("numEvents", l.numEvents); n.put("numUpserts", l.numUpserts)
-        n.put("numDeletes", l.numDeletes); n.put("appId", l.appId)
-        la.add(n)
-      }
-      // re-verify shard reuse against a concurrent vacuum's GC, as late as
-      // possible before the pointer moves (mutates `m` in place; the
-      // manifest file does not exist yet, so this is invisible to readers)
-      if (c.full) writeShards(m, c.version, c.files, shardMapOf(m), Set.empty)
     }: Unit
 
   /** Garbage-collect history: keep the last `keepLast` snapshots readable,
@@ -651,13 +589,13 @@ final class LakeTable(
     // identical) resolved checkpoint, so every manifest below keepFrom can
     // be deleted without breaking fold-forward resolution of kept versions.
     // Atomic rename: a crash mid-rewrite leaves the old delta intact.
-    log.materialize(keepFrom) { (o, resolved) =>
-      o.remove("touched"); o.remove("added")
+    log.materialize(keepFrom) { (m, resolved) =>
       // sharded, all partitions written fresh (no reuse bookkeeping at
       // vacuum cadence); a crash after shards but before the atomic
       // manifest rename leaves orphan shards for the grace-window pass
-      writeShards(o, keepFrom, resolved, Map.empty,
-        resolved.map(f => shardKey(f.partition, f.sub)).toSet)
+      m.copy(checkpointVersion = keepFrom, touched = None, added = None,
+        shards = Some(writeShards(keepFrom, resolved, Map.empty,
+          resolved.map(f => shardKey(f.partition, f.sub)).toSet)))
     }
     // one forward fold over [horizon, cur] — one manifest read per version
     // and one shard read per referenced shard, instead of re-walking each
@@ -665,7 +603,7 @@ final class LakeTable(
     // object store). The lineage roll-up and the shard GC below take the
     // manifests it parsed; neither reads one again.
     val range = log.resolveRange(horizon, cur)
-    def manifests(vs: Seq[Long]): Seq[JsonNode] = vs.flatMap(range.get).map(_._1)
+    def manifests(vs: Seq[Long]): Seq[LakeManifest] = vs.flatMap(range.get).map(_._1)
     def pathsOf(v: Long): Seq[String] = range.get(v).toSeq.flatMap(_._2).map(_.path)
     val live: Set[String] = (keepFrom to cur).flatMap(pathsOf).toSet
     val doomed = manifests(horizon until keepFrom)
@@ -689,7 +627,7 @@ final class LakeTable(
     // JSON array) is folded into this pass's segment and removed.
     val legacyRows = legacyArchiveRows()
     if (doomed.nonEmpty || legacyRows.isDefined) {
-      val doomedRows = doomed.flatMap(m => lineageRowsOf(m.get("lineage")))
+      val doomedRows = doomed.flatMap(_.lineage)
       val rows = (doomedRows ++ legacyRows.getOrElse(Nil)).distinct
       if (rows.nonEmpty) {
         // UNIQUE segment name, never overwrite: a crash mid-manifest-delete
@@ -708,8 +646,12 @@ final class LakeTable(
     }
     // delete-and-count, not exists-then-delete: FileSystem.delete already
     // returns false for a missing path, so the probe was a second metadata
-    // RPC per doomed manifest (vacuum reaps O(retention) of them at once)
-    val manifestsDeleted = (horizon until keepFrom).count { v =>
+    // RPC per doomed manifest (vacuum reaps O(retention) of them at once).
+    // Newest first: a delta resolves down to its checkpoint, so a crash
+    // part-way leaves a prefix of versions whose chains are intact. A
+    // checkpoint deleted before the deltas above it would leave chains no
+    // later vacuum's range fold can resolve.
+    val manifestsDeleted = (horizon until keepFrom).reverse.count { v =>
       io.fs.delete(new Path(io.rootPath, SnapshotLog.manifestRel(v)), false)
     }
     // Shard GC. Unlike data files, shards get NO immediate known-superseded
@@ -751,19 +693,10 @@ final class LakeTable(
   /** rows of a legacy lineage-archive.json, None when there is none
     * (read-and-catch: one RPC on every vacuum, no exists probe)
     */
-  private def legacyArchiveRows(): Option[Seq[graft.model.LineageRow]] =
-    io.readIfExists(legacyArchivePath).map(s => lineageRowsOf(Json.parse(s)).toSeq)
+  private def legacyArchiveRows(): Option[Seq[LineageRow]] =
+    io.readIfExists(legacyArchivePath).map(Json.read[Seq[LineageRow]](_))
   private def lineageSegDir = new Path(io.rootPath, "_lineage")
   private def horizonPath = new Path(io.rootPath, "gc-horizon.txt")
-
-  private def lineageRowsOf(n: JsonNode): Iterator[graft.model.LineageRow] =
-    n.elements().asScala.map { l =>
-      graft.model.LineageRow(l.get("batchId").asLong, l.get("partition").asInt,
-        l.get("firstOffset").asLong, l.get("lastOffset").asLong,
-        l.get("numEvents").asLong, l.get("numUpserts").asLong,
-        l.get("numDeletes").asLong,
-        Option(l.get("appId")).map(_.asText).getOrElse(""))
-    }
 
   /** Oldest snapshot version that may still exist (everything below was
     * vacuumed). Bounds lineage()/vacuum() walks to O(retained versions).
@@ -839,7 +772,7 @@ final class LakeTable(
       .filter(_.getPath.getName.startsWith("seg-")).map(_.getPath.toString)
     val legacy = legacyArchiveRows().getOrElse(Nil)
     val liveRows = (gcHorizon to currentVersion).flatMap(v =>
-      log.manifestAt(v).toSeq.flatMap(m => lineageRowsOf(m.get("lineage"))))
+      log.manifestAt(v).toSeq.flatMap(_.lineage))
     val driverSide = spark.createDataFrame(legacy ++ liveRows)
     val all =
       if (segs.isEmpty) driverSide

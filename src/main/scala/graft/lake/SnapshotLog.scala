@@ -1,7 +1,6 @@
 package graft.lake
 
-import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.module.scala.JavaTypeable
 import org.apache.hadoop.fs.Path
 
 /** A table's pinned head: the ONE snapshot read a batch plans against.
@@ -13,28 +12,22 @@ import org.apache.hadoop.fs.Path
   * lets a peer's commit be silently clobbered by a plan that never saw it.
   * Pinning turns every such race into the one designed outcome: a clean
   * ConcurrentCommitException at the commit (and saves the re-reads).
-  * `version` and `batchId` are -1 for a brand-new table; `appId` is None
-  * there and on snapshots written before writers were named. The manifest
-  * is read on first use, so a fenced replay never reads it.
+  * `version` and `batchId` are -1 for a brand-new table. The manifest is
+  * read on first use, so a fenced replay never reads it.
   */
-private[lake] final class Head(val version: Long, val batchId: Long,
-    val appId: Option[String], readManifest: () => JsonNode) {
-  lazy val manifest: Option[JsonNode] =
+private[lake] final class Head[M](val version: Long, val batchId: Long,
+    val appId: String, readManifest: () => M) {
+  lazy val manifest: Option[M] =
     if (version < 0) None else Some(readManifest())
 }
 
-/** How one table encodes its live listing in manifests. A checkpoint
-  * manifest lists every live entry; a delta manifest records only one
-  * commit's change, as the keys it removes and the entries it adds (an
-  * added entry replaces any live entry with the same key).
+/** What a table adds to its manifests for the log: the key of a live
+  * entry, a checkpoint's listing (which may need IO, like the lake's
+  * shards) and the order a resolved listing is kept in.
   */
-private[lake] trait LogCodec[K, E] {
+private[lake] trait LogCodec[K, E, M] {
   def key(e: E): K
-  def isDelta(m: JsonNode): Boolean
-  def checkpoint(m: JsonNode): Seq[E]
-  def removed(delta: JsonNode): Seq[K]
-  def added(delta: JsonNode): Seq[E]
-  /** the order a resolved listing is kept in */
+  def checkpoint(m: M): Seq[E]
   def ordered(es: Seq[E]): Seq[E]
 }
 
@@ -46,27 +39,30 @@ private[lake] final case class Full[K, E](entries: Seq[E]) extends Change[K, E]
 private[lake] final case class Delta[K, E](removed: Seq[K], added: Seq[E])
   extends Change[K, E]
 
-/** One commit being written: its version, whether it is a checkpoint, the
-  * checkpoint version to record, the previous commit's recorded checkpoint
-  * (None on a brand-new table) and the post-commit listing.
+/** One commit being written: its header (version, batch, writer), whether
+  * it is a checkpoint, the checkpoint version to record, the previous
+  * commit's recorded checkpoint (None on a brand-new table) and the
+  * post-commit listing.
   */
-private[lake] final class Commit[E](val version: Long, val full: Boolean,
-    val checkpointVersion: Long, val prevCheckpoint: Option[Long],
-    val files: Seq[E])
+private[lake] final class Commit[E](val version: Long, val batchId: Long,
+    val appId: String, val full: Boolean, val checkpointVersion: Long,
+    val prevCheckpoint: Option[Long], val files: Seq[E])
 
 /** The versioned log both engine tables run on — the Iceberg-style snapshot
   * log of SURVEY.md §4.1 with Delta Lake's checkpoint cadence: version-named
   * manifests (`manifest-{v:012d}.json`), each a checkpoint or a delta on top
   * of its predecessor, and one `snapshot.json` pointer swapped by CAS. This
   * is the reference's data + index + cursor trio (S3Writer.java:61-81)
-  * generalized; the tables keep only their entry codec and data path.
+  * generalized; the tables keep only their manifest type, entry codec and
+  * data path.
   *
   * Owns the per-batch pinned head, the replay fence, the version-keyed
   * manifest and listing caches, the delta fold, and the commit: plan
   * coherence, checkpoint cadence, exclusive manifest claim and snapshot CAS.
   */
-private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
-    what: String, checkpointEvery: Int, codec: LogCodec[K, E]) {
+private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeable](
+    io: TableIO, appId: String, what: String, checkpointEvery: Int,
+    codec: LogCodec[K, E, M]) {
   require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
   // appId names durable paths (data files, staging dirs, shards) and carries
   // the CAS writer identity: a '/', '=' or whitespace would silently change
@@ -82,23 +78,19 @@ private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
   // reads up to checkpointEvery of them, so both are computed once per
   // version, not once per accessor (another writer's commit bumps the
   // version, which invalidates them for free)
-  @volatile private var manifestCache: Option[(Long, JsonNode)] = None
+  @volatile private var manifestCache: Option[(Long, M)] = None
   @volatile private var filesCache: Option[(Long, Seq[E])] = None
 
-  def pin(): Head = io.readSnapshot() match {
-    case None => new Head(-1L, -1L, None, () => null) // no manifest to read
-    case Some(s) =>
-      val v = s.get("version").asLong
-      val rel = s.get("manifest").asText
-      new Head(v, s.get("batchId").asLong, Option(s.get("appId")).map(_.asText),
-        () => manifestOf(v, rel))
+  def pin(): Head[M] = io.readSnapshot() match {
+    case None => new Head(-1L, -1L, "", () => throw new IllegalStateException("no manifest"))
+    case Some(s) => new Head(s.version, s.batchId, s.appId, () => manifestOf(s.version, s.manifest))
   }
 
   /** the manifest `rel` of snapshot `version` (parsed once per version) */
-  private def manifestOf(version: Long, rel: String): JsonNode = manifestCache match {
+  private def manifestOf(version: Long, rel: String): M = manifestCache match {
     case Some((v, m)) if v == version => m
     case _ =>
-      val m = Json.parse(io.readString(new Path(io.rootPath, rel)))
+      val m = Json.read[M](io.readString(new Path(io.rootPath, rel)))
       manifestCache = Some((version, m))
       m
   }
@@ -106,20 +98,19 @@ private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
   /** Replay fence against a pinned head: same writer identity AND a batch
     * id at or below the committed one. A different appId is a new writer
     * whose numbering restarted (the Delta txnAppId pattern) — its data
-    * passes the fence and dedups on offsets. Missing appId (old snapshots)
-    * ⇒ same writer.
+    * passes the fence and dedups on offsets.
     */
-  def isReplayOf(h: Head, batchId: Long): Boolean =
-    h.appId.getOrElse(appId) == appId && batchId <= h.batchId
+  def isReplayOf(h: Head[M], batchId: Long): Boolean =
+    h.appId == appId && batchId <= h.batchId
 
   // read-and-catch: one RPC on every chain-resolution step, and no TOCTOU
   // against a concurrent GC deleting the manifest
-  def manifestAt(version: Long): Option[JsonNode] =
+  def manifestAt(version: Long): Option[M] =
     io.readIfExists(new Path(io.rootPath, SnapshotLog.manifestRel(version)))
-      .map(Json.parse)
+      .map(Json.read[M](_))
 
   /** live listing of a pinned head (cached per version) */
-  def files(h: Head): Seq[E] =
+  def files(h: Head[M]): Seq[E] =
     if (h.version < 0) Nil
     else filesCache match {
       case Some((v, fs)) if v == h.version => fs
@@ -148,49 +139,49 @@ private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
     * back until a checkpoint appears — the chain is at most
     * `checkpointEvery` long, shorter after a GC materialized a checkpoint).
     */
-  def resolve(m: JsonNode): Seq[E] = resolve(m, retried = false)
+  def resolve(m: M): Seq[E] = resolve(m, retried = false)
 
-  private def resolve(m: JsonNode, retried: Boolean): Seq[E] = {
-    if (!codec.isDelta(m)) return codec.checkpoint(m)
-    val v = m.get("version").asLong
+  private def resolve(m: M, retried: Boolean): Seq[E] = {
+    if (!m.delta) return codec.checkpoint(m)
     var chain = List(m)
-    while (codec.isDelta(chain.head)) {
-      val pv = chain.head.get("version").asLong - 1
+    while (chain.head.delta) {
+      val pv = chain.head.version - 1
       manifestAt(pv) match {
         case Some(n) => chain = n :: chain
         case None if !retried =>
           // Self-heal against a concurrent vacuum: it materializes the
           // oldest kept version IN PLACE before deleting the chain below
-          // it, so a reader holding pre-materialization nodes restarts the
-          // walk ONCE from a fresh read of its version — if v is retained,
-          // the new walk terminates at the materialized checkpoint before
-          // ever reaching the deleted range. One retry suffices:
-          // materialization is monotone.
-          return resolve(manifestAt(v).getOrElse(throw broken(v, pv)), retried = true)
-        case None => throw broken(v, pv)
+          // it, so a reader holding pre-materialization manifests restarts
+          // the walk ONCE from a fresh read of its version — if it is
+          // retained, the new walk terminates at the materialized
+          // checkpoint before ever reaching the deleted range. One retry
+          // suffices: materialization is monotone.
+          return resolve(manifestAt(m.version).getOrElse(throw broken(m.version, pv)),
+            retried = true)
+        case None => throw broken(m.version, pv)
       }
     }
     val st = stateOf(codec.checkpoint(chain.head))
-    chain.tail.foreach(d => applyDelta(st, codec.removed(d), codec.added(d)))
+    chain.tail.foreach(d => applyDelta(st, d.removedKeys, d.addedEntries))
     codec.ordered(st.values.toSeq)
   }
 
   private def broken(v: Long, pv: Long) = new IllegalStateException(
     s"$what manifest chain for version $v broken at $pv under ${io.root} (vacuumed)")
 
-  /** The parsed manifest and live listing of every existing version in
-    * [from, to] with ONE manifest read per version: fold each delta onto
-    * the running state; a checkpoint (or a gap) resets the fold. Only GC
-    * needs a whole range — everything else resolves single versions.
+  /** The manifest and live listing of every existing version in [from, to]
+    * with ONE manifest read per version: fold each delta onto the running
+    * state; a checkpoint (or a gap) resets the fold. Only GC needs a whole
+    * range — everything else resolves single versions.
     */
-  def resolveRange(from: Long, to: Long): Map[Long, (JsonNode, Seq[E])] = {
-    val out = scala.collection.mutable.Map.empty[Long, (JsonNode, Seq[E])]
+  def resolveRange(from: Long, to: Long): Map[Long, (M, Seq[E])] = {
+    val out = scala.collection.mutable.Map.empty[Long, (M, Seq[E])]
     var state: Option[State] = None
     for (v <- from to to) manifestAt(v) match {
       case None => state = None
       case Some(m) =>
-        val st = state.filter(_ => codec.isDelta(m)) match {
-          case Some(prev) => applyDelta(prev, codec.removed(m), codec.added(m))
+        val st = state.filter(_ => m.delta) match {
+          case Some(prev) => applyDelta(prev, m.removedKeys, m.addedEntries)
           case None => stateOf(resolve(m))
         }
         out(v) = (m, codec.ordered(st.values.toSeq))
@@ -202,27 +193,23 @@ private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
   /** Rewrite delta manifest `version` in place as its (semantically
     * identical) resolved checkpoint, so every manifest below it can be
     * deleted without breaking fold-forward resolution of the versions
-    * above. `listing` drops the delta fields and writes the listing.
-    * Atomic rename: a crash mid-rewrite leaves the old delta intact.
+    * above. `checkpoint` turns the delta and its resolved listing into
+    * that checkpoint. Atomic rename: a crash mid-rewrite leaves the old
+    * delta intact.
     */
-  def materialize(version: Long)(listing: (ObjectNode, Seq[E]) => Unit): Unit =
-    manifestAt(version).filter(codec.isDelta).foreach { m =>
-      val resolved = resolve(m)
-      val o = m.asInstanceOf[ObjectNode]
-      o.put("checkpointVersion", version)
-      listing(o, resolved)
+  def materialize(version: Long)(checkpoint: (M, Seq[E]) => M): Unit =
+    manifestAt(version).filter(_.delta).foreach { m =>
       io.writeAtomic(new Path(io.rootPath, SnapshotLog.manifestRel(version)),
-        Json.write(o))
+        Json.write(checkpoint(m, resolve(m))))
       // the rewrite may concern the CURRENT version: drop the parsed
       // manifest so later reads see the checkpoint, not the stale delta
       manifestCache = None
     }
 
   /** Commit `change` on top of the pinned head `planned`, as batch
-    * `batchId`. `body` writes the table's manifest fields after the header
-    * (`version`, `batchId`, `appId`), including the `checkpointVersion` it
-    * is handed and either the checkpoint listing or the delta. Returns the
-    * manifest written.
+    * `batchId`. `build` makes the table's manifest from the [[Commit]]: its
+    * header, the `checkpointVersion` to record, and either the checkpoint
+    * listing or the delta. Returns the manifest written.
     *
     * The manifest is checkpointed every `checkpointEvery` versions (and on
     * the first commit and every `Full` change), bounding readers' fold
@@ -230,8 +217,8 @@ private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
     * claim rolls a crashed claimer's commit forward and always throws
     * ConcurrentCommitException ([[TableIO.resolveLostVersionClaim]]).
     */
-  def commit(planned: Head, batchId: Long, change: Change[K, E])
-      (body: (ObjectNode, Commit[E]) => Unit): JsonNode = {
+  def commit(planned: Head[M], batchId: Long, change: Change[K, E])
+      (build: Commit[E] => M): M = {
     io.requirePlanCoherent(planned.version, what)
     val version = planned.version + 1
     // nearest checkpoint at or below the previous version (advisory — the
@@ -241,9 +228,7 @@ private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
     // coherence-checked head, never a fresh read: a peer committing right
     // after the check must fail the claim/CAS below, not leak its state
     // into this commit's bookkeeping.
-    val prevCkpt = planned.manifest.map(pm =>
-      Option(pm.get("checkpointVersion")).map(_.asLong)
-        .getOrElse(pm.get("version").asLong))
+    val prevCkpt = planned.manifest.map(_.checkpointVersion)
     val (files, full) = change match {
       case Full(es) => (codec.ordered(es), true)
       case Delta(removed, added) =>
@@ -251,16 +236,16 @@ private[lake] final class SnapshotLog[K, E](io: TableIO, appId: String,
           .values.toSeq),
           prevCkpt.forall(version - _ >= checkpointEvery))
     }
-    val m = Json.obj()
-    m.put("version", version)
-    m.put("batchId", batchId)
-    m.put("appId", appId)
-    body(m, new Commit(version, full, if (full) version else prevCkpt.get,
-      prevCkpt, files))
+    val m = build(new Commit(version, batchId, appId, full,
+      if (full) version else prevCkpt.get, prevCkpt, files))
     val rel = SnapshotLog.manifestRel(version)
     if (!io.createVersioned(new Path(io.rootPath, rel), Json.write(m)))
-      io.resolveLostVersionClaim(rel, version, planned.version)
-    io.swapSnapshot(io.snapshotJson(version, rel, batchId, appId), planned.version)
+      io.resolveLostVersionClaim(rel, version, planned.version) {
+        val claimed = manifestAt(version).getOrElse(throw new IllegalStateException(
+          s"$what manifest $rel at ${io.root} vanished after its claim was lost"))
+        Snapshot(version, rel, claimed.batchId, claimed.appId)
+      }
+    io.swapSnapshot(Snapshot(version, rel, batchId, appId), planned.version)
     filesCache = Some((version, files))
     manifestCache = Some((version, m))
     m

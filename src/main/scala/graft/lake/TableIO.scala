@@ -179,8 +179,11 @@ trait CommitStore {
   def putIfAbsent(io: TableIO, dest: Path, content: String): Boolean
 }
 
-/** Default store: single rename-with-OVERWRITE, atomic on HDFS and local
-  * filesystems (a posix/HDFS rename either fully happens or doesn't).
+/** Default store: single rename-with-OVERWRITE, atomic on HDFS and on the
+  * engine's local binding, where it is one `rename(2)`
+  * ([[InJvmRawLocalFs]]). Hadoop's own local AbstractFileSystem deletes the
+  * destination before renaming, so a session that binds it (or another
+  * `file:` class built on it) gives up that atomicity.
   */
 object RenameCommitStore extends CommitStore {
   def putAtomic(io: TableIO, dest: Path, content: String): Unit = {
@@ -435,7 +438,7 @@ final class TableIO(val root: String, spark: SparkSession,
 
   /** Single rename-with-OVERWRITE (FileContext — FileSystem.rename has no
     * overwrite flag). Exposed for [[RenameCommitStore]]; atomic on HDFS and
-    * local fs.
+    * on the engine's local binding (see [[RenameCommitStore]]).
     */
   private[graft] def renameOverwrite(src: Path, dest: Path): Unit =
     fc.rename(fs.makeQualified(src), fs.makeQualified(dest),
@@ -450,10 +453,10 @@ final class TableIO(val root: String, spark: SparkSession,
       org.apache.hadoop.fs.Options.Rename.NONE)
 
   /** Atomic write via the [[CommitStore]] seam — there is never a window
-    * with the destination missing or truncated. (The previous
-    * delete-then-rename had a crash window that left NO snapshot, silently
-    * resetting the table to "brand new" and orphaning all history.) The
-    * default store renames (atomic on HDFS/local); an object-store backend
+    * with the destination missing or truncated: a crash in one would leave
+    * NO snapshot, silently resetting the table to "brand new" and orphaning
+    * all history. The default store renames (atomic on HDFS and on the
+    * engine's local binding, see [[RenameCommitStore]]); an object-store backend
     * plugs in its own atomic publish (on S3, the whole-object overwrite PUT
     * — the reference's cursor overwrite, S3Writer.java:142-153). The whole
     * publish retries as a unit.
@@ -471,7 +474,8 @@ final class TableIO(val root: String, spark: SparkSession,
     * the store's idempotency contract makes a retry of an own completed
     * swap read as success, never as a lost race.
     */
-  def swapSnapshot(json: String, expected: Long): Unit = {
+  def swapSnapshot(snapshot: Snapshot, expected: Long): Unit = {
+    val json = Json.write(snapshot)
     val won = retry("swapSnapshot") {
       store.putIfVersion(this, snapshotPath, json, expected)
     }
@@ -487,17 +491,14 @@ final class TableIO(val root: String, spark: SparkSession,
   /** Current snapshot, or None for a brand-new table — the 404 ⇒ offset 0
     * case (S3Writer.java:101-107).
     */
-  def readSnapshot(): Option[com.fasterxml.jackson.databind.JsonNode] =
+  def readSnapshot(): Option[Snapshot] =
     // one RPC on the per-commit plan-coherence check (a concurrent first
     // commit between an exists probe and the open would read as a crash)
-    readIfExists(snapshotPath).map(Json.parse)
+    readIfExists(snapshotPath).map(Json.read[Snapshot](_))
 
-  /** the current snapshot's version (-1 for none) and writer ("?" if unnamed) */
-  private def currentWriter(): (Long, String) = {
-    val s = readSnapshot()
-    (s.map(_.get("version").asLong).getOrElse(-1L),
-      s.flatMap(n => Option(n.get("appId")).map(_.asText)).getOrElse("?"))
-  }
+  /** the current snapshot's version and writer ((-1, "?") for none) */
+  private def currentWriter(): (Long, String) =
+    readSnapshot().map(s => (s.version, s.appId)).getOrElse((-1L, "?"))
 
   /** The plan-coherence guard at the door of every commit — ONE
     * implementation for both tables (the protocol's most safety-critical
@@ -513,22 +514,6 @@ final class TableIO(val root: String, spark: SparkSession,
       s"$what $root advanced while this batch was planned/written: " +
         s"planned against version $plannedVersion, found $current " +
         s"(appId=$who); this batch did NOT commit — re-read and retry")
-  }
-
-  /** The snapshot pointer's canonical serialization. ONE builder for every
-    * producer (lake commit, journal commit, orphan roll-forward): the CAS
-    * idempotency contract compares CONTENT byte-for-byte, so a roll-forward
-    * that publishes on a live claimer's behalf must produce exactly the
-    * bytes that claimer's own retry will present.
-    */
-  def snapshotJson(version: Long, manifestRel: String, batchId: Long,
-      appId: String): String = {
-    val snap = Json.obj()
-    snap.put("version", version)
-    snap.put("manifest", manifestRel)
-    snap.put("batchId", batchId)
-    snap.put("appId", appId)
-    Json.write(snap)
   }
 
   /** Exclusively claim the version-named meta file `dest` (manifest). True
@@ -555,18 +540,17 @@ final class TableIO(val root: String, spark: SparkSession,
     * `plannedVersion`, the existing manifest is a complete crashed commit
     * (exclusive creates are all-or-nothing, and every caller promotes data
     * files BEFORE committing) — ROLL IT FORWARD so the table never wedges
-    * on a dead writer's claim. Either way this writer's batch did not
+    * on a dead writer's claim: `claimed` is its snapshot, read from the
+    * claimed manifest's header. Either way this writer's batch did not
     * commit: always throws [[ConcurrentCommitException]].
     */
   def resolveLostVersionClaim(manifestRel: String, version: Long,
-      plannedVersion: Long): Nothing = {
+      plannedVersion: Long)(claimed: => Snapshot): Nothing = {
     if (currentWriter()._1 == plannedVersion) {
-      val m = Json.parse(readString(new Path(rootPath, manifestRel)))
-      val who = Option(m.get("appId")).map(_.asText).getOrElse("?")
+      val s = claimed
       try {
-        swapSnapshot(snapshotJson(version, manifestRel,
-          m.get("batchId").asLong, who), plannedVersion)
-        System.err.println(s"[graft] WARN: rolled forward writer $who's " +
+        swapSnapshot(s, plannedVersion)
+        System.err.println(s"[graft] WARN: rolled forward writer ${s.appId}'s " +
           s"committed-but-unpublished version $version at $root (claimed " +
           "but never swapped — a crash, or a live writer mid-publish)")
       } catch {

@@ -20,41 +20,6 @@ final case class ChangeEvent(
     content: String   // payload; null for deletes; invariant = sha256(content)
 )
 
-/** One row of the merged lake table: the live state per (repo, path). */
-final case class RepoFile(
-    repo: String,
-    path: String,
-    commit: String,
-    lang: String,
-    content: String,
-    partition: Int,
-    offset: Long // offset of the event that produced this version
-)
-
-/** Port of the reference's ChunkDescriptor (common/.../json/ChunkDescriptor.java:8-22):
-  * the per-chunk manifest stats that make ranged resume possible.
-  */
-final case class ChunkDescriptor(
-    firstRecordOffset: Long,
-    numRecords: Long,
-    byteOffset: Long,
-    byteLength: Long,
-    byteLengthUncompressed: Long
-)
-
-/** A manifest entry: one data file of the journal or lake, with the
-  * pruning stats (min/max offset) that replace the reference's
-  * lexicographic-key file skipping (source/.../S3FilesReader.java:164-171).
-  */
-final case class ManifestEntry(
-    partition: Int,
-    path: String,            // relative file path inside the table dir
-    firstRecordOffset: Long,
-    numRecords: Long,
-    maxOffset: Long,
-    byteLengthUncompressed: Long
-)
-
 /** Per-partition lineage/commit record (the audit trail the north star asks
   * for: per-partition throughput, lag, lineage).
   */

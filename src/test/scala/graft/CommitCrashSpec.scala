@@ -23,9 +23,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * of `TableIO.publish` (staged files promoted to their names) to the
   * commit, or to the end of an archive write (indexes, cursors, scratch
   * sweep). Covered: one steady-state lake merge and one journal append in
-  * both windows, and one archive write into an existing root. Whatever the
-  * faulted call did, fresh instances on the same roots then replay the
-  * batch, and it must hold exactly once: the lake equals the LWW oracle,
+  * both windows, one archive write into an existing root, and the metadata
+  * writes of one maintenance pass (a journal truncate, then a lake vacuum).
+  * Whatever the faulted call did, fresh instances on the same roots then
+  * replay the batch, and it must hold exactly once: the lake equals the LWW oracle,
   * the journal yields each offset once, no manifest names a missing file;
   * the archive's committed read equals its input and every cursor names an
   * index whose data file exists. The faults go through a `file:` class
@@ -100,12 +101,13 @@ class CommitCrashSpec extends AnyFunSuite {
 
   /** The window's operations, by a dry run with counting only (which must
     * see each of `kinds`), then one faulted run per (operation,
-    * before/after). A point names its operation by kind, path and
-    * occurrence, so the publish fan-out's parallel renames are found in any
-    * order. Points are independent roots, so they run three at a time.
+    * before/after) of the kinds `faulted` selects (all by default). A point
+    * names its operation by kind, path and occurrence, so the publish
+    * fan-out's parallel renames are found in any order. Points are
+    * independent roots, so they run three at a time.
     */
   private def enumerate(template: String, tag: String, window: CommitFaults.Window,
-      kinds: Set[String])(batch: String => Long)
+      kinds: Set[String], faulted: String => Boolean = _ => true)(batch: String => Long)
       (check: (String, String) => Unit): Seq[Point] = {
     val dry = copyTree(template, s"$tag-dry")
     CommitFaults.arm(dry, window)
@@ -113,7 +115,7 @@ class CommitCrashSpec extends AnyFunSuite {
     val ops = CommitFaults.disarm(dry).ops
     assert(kinds.subsetOf(ops.map(_.kind).toSet), ops)
     val points = for {
-      (op, i) <- ops.zipWithIndex
+      (op, i) <- ops.zipWithIndex if faulted(op.kind)
       after <- Seq(false, true)
     } yield Point(i + 1, after, op)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
@@ -146,6 +148,9 @@ class CommitCrashSpec extends AnyFunSuite {
     val changes = ChangeGen.changes(spark, 240, nKeys = 24, partitions = 2).cache()
     (changes, changes.where(col("offset") < 60), changes.where(col("offset") >= 60))
   }
+
+  /** the kinds a maintenance pass's points fail: its metadata writes */
+  private val maintenanceFaulted = Set("create", "rename", "delete")
 
   // the commit window, then the promotes before it
   private val windows = Seq(
@@ -229,6 +234,44 @@ class CommitCrashSpec extends AnyFunSuite {
     }
   }
 
+  test("every metadata write of a maintenance pass (journal truncate, lake vacuum) recovers exactly once") {
+    // four batches of 20 offsets of one partition into both tables. The
+    // pass truncates the journal's files at or below offset 19 (batch 0,
+    // reaped at once) and keeps the lake's last 2 versions, so vacuum
+    // materializes delta version 2 in place before it deletes versions 0
+    // (the checkpoint) and 1 (a delta on it).
+    val changes = ChangeGen.changes(spark, 80, nKeys = 12, partitions = 1).cache()
+    val want = rows(ChangeGen.oracleFinalState(changes))
+    val surviving = changes.where(col("offset") > 19).select(col("partition"), col("offset"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+    def journal(root: String) = new ChangeJournal(s"$root/journal", spark, chunkBytes = 2048)
+    def lake(root: String) = new LakeTable(s"$root/lake", spark, subBuckets = 1)
+    withFaultingFs {
+      val template = SparkTestSession.tempDir("crash-maint")
+      (0 until 4).foreach { b =>
+        val batch = changes.where(col("offset") >= b * 20 && col("offset") < b * 20 + 20)
+        journal(template).append(batch, b)
+        lake(template).merge(batch, b)
+      }
+      val points = enumerate(template, "crash-maint-pt", CommitFaults.maintenanceWindow,
+        Set("open", "create", "rename", "delete", "list"), maintenanceFaulted) { root =>
+        journal(root).truncate(Map(0 -> 19L), graceMs = 0L)
+        lake(root).vacuum(keepLast = 2, orphanGraceMs = 0L)._2.toLong
+      } { (root, what) =>
+        val l = lake(root)
+        assert(rows(l.read()) === want, what)
+        assertManifestsResolve(s"$root/lake", what)
+        val j = journal(root)
+        val got = j.readFrom(Map.empty).select(col("partition"), col("offset"))
+          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+        // (the read fails on a listed file that is missing)
+        assert(got === surviving, s"$what: each surviving offset exactly once")
+      }
+      info(s"${points.size} crash points: ${points.mkString("; ")}")
+    }
+    changes.unpersist()
+  }
+
   test("a truncating maintenance pass opens snapshot.json twice outside the CAS") {
     // the pin and the plan-coherence read: the schema the commit carries
     // over comes from the pinned head, and the checkpoint version that
@@ -297,8 +340,10 @@ object CommitFaults {
   final class InjectedFault(msg: String) extends java.io.IOException(msg)
 
   /** one operation: kind, root-relative path (a rename's destination; tmp
-    * names shortened to `<name>.tmp`, their pid and clock dropped, and job
-    * UUIDs to `<uuid>`), its occurrence among the
+    * names shortened to `<name>.tmp`, their pid and clock dropped, and the
+    * other per-run parts of a name — job UUIDs, Spark task attempt ids, a
+    * tombstone's drop time, a lineage segment's clock — to placeholders),
+    * its occurrence among the
     * window's operations of that kind and path, and the methods on its
     * thread's stack
     */
@@ -315,6 +360,8 @@ object CommitFaults {
   val publishWindow = Window(Some("publish"), Some("requirePlanCoherent"))
   /** an archive write's promotes, cursors and scratch sweep */
   val archiveWindow = Window(Some("publish"), None)
+  /** a maintenance pass: a journal truncate, then a lake vacuum */
+  val maintenanceWindow = Window(Some("truncate"), None)
   val fromStart = Window(None, None)
 
   /** what [[disarm]] returns: the window's operations, and whether the
@@ -374,7 +421,10 @@ object CommitFaults {
     val failing = armed.asScala.collectFirst { case (r, a) if path.startsWith(r) =>
       a.record(kind, ("./" + path.stripPrefix(r)).stripSuffix("/").stripPrefix("./")
         .replaceAll("""\.tmp-\d+-\d+$""", ".tmp").replaceAll(
-          """[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""", "<uuid>"))
+          """[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""", "<uuid>")
+        .replaceAll("""(attempt|task)_\d+_\d+_m_\d+(_\d+)?""", "$1_<id>")
+        .replaceAll("""del-\d{13}-""", "del-<ms>-")
+        .replaceAll("""(seg-\d{12})-[0-9a-f]{16}""", "$1-<ns>"))
     }.flatten
     if (failing.contains(false))
       throw new InjectedFault(s"injected failure before $kind $p")

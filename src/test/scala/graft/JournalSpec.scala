@@ -294,25 +294,6 @@ class JournalSpec extends AnyFunSuite {
       .get("manifestsBelow").asLong === ckptOf(j), "ahead watermark healed")
   }
 
-  test("legacy pending-delete.json migrates to append-only tombstone files") {
-    val root = SparkTestSession.tempDir("jlegacy")
-    val j = new ChangeJournal(root, spark, 100000, checkpointEvery = 2)
-    val changes = ChangeGen.changes(spark, 200, partitions = 2)
-    j.append(changes, 0L)
-    // plant a legacy read-modify-write tombstone list naming a real orphan
-    val orphan = java.nio.file.Paths.get(root, "data", "orphan.parquet")
-    java.nio.file.Files.write(orphan, Array[Byte](1, 2, 3))
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "pending-delete.json"),
-      """[{"path":"data/orphan.parquet","droppedAt":1}]""".getBytes("UTF-8"))
-    // a truncate that drops nothing still migrates + reaps ripe tombstones
-    assert(j.truncate(Map.empty, graceMs = 0L) === 0)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "pending-delete.json")),
-      "legacy list must be migrated away")
-    assert(!java.nio.file.Files.exists(orphan), "migrated tombstone must reap")
-    assert(j.read().count() === 200L)
-  }
-
   test("multi-append: offsets continue, journal holds the full log") {
     val root = SparkTestSession.tempDir("jmulti")
     val j = new ChangeJournal(root, spark, 2048)

@@ -6,11 +6,11 @@ import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 
 import graft.gen.ChangeGen
-import graft.lake.{InJvmLocalFileSystem, InJvmRawLocalFileSystem, TableIO}
+import graft.lake.{InJvmLocalFileSystem, InJvmRawLocalFileSystem, InJvmRawLocalFs, TableIO}
 import graft.pipeline.CdcPipeline
 import graft.sources.GzArchive
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, FileAlreadyExistsException, FileContext, FsConstants, LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
 import org.apache.spark.sql.functions._
@@ -181,6 +181,18 @@ class LocalFsSpec extends AnyFunSuite {
     intercept[java.io.FileNotFoundException](
       io.renameNoOverwrite(new Path(root, "gone.json"), new Path(root, "fresh.json")))
     assert(read("dest.json") === "new")
+
+    // an overwrite-rename onto an existing file replaces it with one raw
+    // rename: deleting the destination first would leave a window with
+    // nothing there (for snapshot.json, no table)
+    val conf = spark.sessionState.newHadoopConf()
+    val raw = new RecordingRawLocalFs(FsConstants.LOCAL_FS_URI, conf)
+    val fc = FileContext.getFileContext(new ChecksumFs(raw) {}, conf)
+    def qualified(rel: String) = new Path(Paths.get(root, rel).toUri)
+    io.writeString(new Path(root, "next.json"), "next")
+    fc.rename(qualified("next.json"), qualified("dest.json"), Options.Rename.OVERWRITE)
+    assert(read("dest.json") === "next" && crc("dest.json") && !crc("next.json"))
+    assert(!raw.ops.asScala.exists(_.startsWith("delete")), raw.ops)
   }
 
   /** Runs `body` with `cls` bound as the session's uncached `file:` class,
@@ -329,3 +341,19 @@ object RecordsCreates {
 class RecordingLocalFileSystem extends LocalFileSystem with RecordsCreates
 
 class RecordingInJvmLocalFileSystem extends InJvmLocalFileSystem with RecordsCreates
+
+/** The engine's raw `file:` AbstractFileSystem, recording the deletes and
+  * plain renames that FileContext renames issue on it.
+  */
+class RecordingRawLocalFs(uri: java.net.URI, conf: Configuration)
+    extends InJvmRawLocalFs(uri, conf) {
+  val ops = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    ops.add(s"delete ${f.getName}")
+    super.delete(f, recursive)
+  }
+  override def renameInternal(src: Path, dst: Path): Unit = {
+    ops.add(s"rename ${src.getName} -> ${dst.getName}")
+    super.renameInternal(src, dst)
+  }
+}
