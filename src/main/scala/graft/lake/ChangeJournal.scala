@@ -215,26 +215,23 @@ final class ChangeJournal(
     * untouched. Returns the number of files dropped from the manifest.
     *
     * Physical reclamation is DEFERRED: dropping a file from the manifest is
-    * immediate (a `removed` DELTA commit — O(dead paths) JSON, independent
-    * of how many files are kept, so long-retention journals truncate in
-    * constant metadata cost), but its bytes — and manifests that fell below
-    * the current checkpoint, which otherwise accumulate forever — are
-    * recorded as tombstones stamped with the DROP time and reclaimed only
-    * once `graceMs` has passed since the drop. A concurrent reader that
-    * resolved the previous snapshot's listing can therefore finish its
-    * scan; an mtime cutoff could not give that guarantee, because a journal
-    * file's mtime says when it was WRITTEN, not when a reader could last
-    * have planned to read it. A crash between the commit and the tombstone
-    * write leaves only unreferenced orphans, never a manifest referencing
-    * missing files.
+    * immediate (a `removed` commit — O(dead paths) JSON, independent of how
+    * many files are kept, so long-retention journals truncate in constant
+    * metadata cost), but its bytes are reclaimed only once `graceMs` has
+    * passed since the drop. A concurrent reader that resolved the previous
+    * snapshot's listing can therefore finish its scan; a data file's mtime
+    * could not give that guarantee, because it says when the file was
+    * WRITTEN, not when a reader could last have planned to read it.
     *
-    * Tombstones are APPEND-ONLY: each truncate writes its own immutable
-    * file under `pending-delete/` (all entries share that truncate's drop
-    * time, so reaping is per-file all-or-nothing). Two concurrent
-    * truncators — a zombie writer racing its fenced successor, the exact
-    * scenario TableIO.writeAtomic defends — write distinct files and can
-    * never clobber each other's tombstones, which a read-modify-write list
-    * could (the same reasoning as the lineage archive's segments).
+    * Before committing version v the truncate writes a COMMIT INTENT,
+    * `pending-delete/v{v:012d}-{appId}.json`, naming the dropped paths. It
+    * is written at the drop, so its own mtime is the drop time. The reap
+    * honors an intent only if manifest v landed as this writer's commit
+    * and removed those paths; an intent whose commit never landed is void
+    * and simply goes. So a crash anywhere in the pass leaves either an
+    * intent (reaped once ripe) or nothing dropped — never an unreferenced
+    * file no pass reclaims. A retry of the same version overwrites its
+    * intent; `appId` keeps racing writers' intents apart.
     */
   def truncate(watermarks: Map[Int, Long],
       graceMs: Long = 24L * 3600 * 1000): Int = {
@@ -243,51 +240,14 @@ final class ChangeJournal(
     val h = log.pin()
     val dead = log.files(h).filter(f => watermarks.get(f.partition).exists(f.maxOffset <= _))
     if (dead.nonEmpty) {
-      val written = commitManifest(h, Nil, nextOffsetsOf(h.manifest), h.batchId,
-        journalSchema(h), removed = dead.map(_.path))
-      // Manifests strictly below the NEW current checkpoint version are
-      // unreachable from any live fold chain. Their names are DERIVED, not
-      // listed: versions are sequential, so the not-yet-tombstoned range is
-      // exactly [W, ckpt) where W rides a tiny watermark file — no root
-      // listStatus per truncate (previously the one per-truncate cost that
-      // grew with unreaped history). Synthesizing a name whose manifest
-      // never landed or was already reaped is harmless — reap's deletes are
-      // idempotent — and the watermark advances only AFTER the tombstones
-      // are durable, so a crash in between merely re-covers the same range
-      // next truncate (deduped below, bounded by the grace window). The
-      // first truncate of a pre-watermark journal migrates with one root
-      // listing.
-      val ckpt = written.checkpointVersion
-      // a regressed/ancient watermark could derive a range of millions of
-      // synthetic names (driver memory + delete-RPC cliff the old bounded
-      // listing could never hit) — past this bound the listing, bounded by
-      // what actually exists, is the cheaper and safer source
-      val maxDerivedRange = 4096L
-      // w > ckpt is INVALID state (journal dir restored from a backup while
-      // a newer tombstone-watermark.json survived): ckpt - w goes negative,
-      // which would satisfy the bound, derive an empty range, then rewrite
-      // the watermark to ckpt below — permanently leaking every pre-restore
-      // superseded manifest the listing would have reclaimed. An ahead
-      // watermark therefore falls through to the root listing, and the
-      // rewrite after it self-heals the watermark back to ckpt.
-      val supersededManifests = tombstoneWatermark() match {
-        case Some(w) if w <= ckpt && ckpt - w <= maxDerivedRange =>
-          (w until ckpt).map(SnapshotLog.manifestRel)
-        case _ => io.fs.listStatus(io.rootPath).toSeq
-          .map(_.getPath.getName)
-          .filter(_.matches("""manifest-\d{12,}\.json""")) // %012d grows past 12 digits
-          .filter(_.stripPrefix("manifest-").stripSuffix(".json").toLong < ckpt)
-      }
-      // dedupe against tombstones already pending: unreaped manifests stay
-      // on disk for the whole grace window, and re-naming them every
-      // truncate would pile up duplicate tombstone files at a
-      // truncate-per-batch cadence (the old single-list code deduped the
-      // same way via its known set)
-      pendingAdd((dead.map(_.path) ++ supersededManifests).filterNot(alreadyPending()))
-      io.writeAtomic(tombstoneWatermarkPath,
-        Json.mapper.writeValueAsString(TombstoneWatermark(ckpt)))
+      val paths = dead.map(_.path)
+      // atomic, never a bare create: a torn intent would fail every reap's parse
+      io.writeAtomic(new Path(pendingDir, f"v${h.version + 1}%012d-$appId.json"),
+        Json.write(Tombstone(paths)))
+      commitManifest(h, Nil, nextOffsetsOf(h.manifest), h.batchId, journalSchema(h),
+        removed = paths)
     }
-    reapPending(graceMs)
+    reapPending(graceMs, if (dead.nonEmpty) h.version + 1 else h.version)
     // crashed peers' abandoned staging reclaims at maintenance cadence,
     // not per-append — off the commit hot path (BENCH/BASELINE.md, r07)
     io.sweepStaleStaging()
@@ -295,81 +255,49 @@ final class ChangeJournal(
   }
 
   private def pendingDir = new Path(io.rootPath, "pending-delete")
-  private def tombstoneWatermarkPath =
-    new Path(io.rootPath, "tombstone-watermark.json")
+  /** a commit intent's name: the version it commits and its writer */
+  private val intentName = """v(\d{12,})-([A-Za-z0-9._-]+)\.json""".r
 
-  /** manifest versions strictly below this are already tombstoned (or
-    * reaped); absent on journals that have never truncated post-upgrade.
-    * Concurrency is forgiving by construction: a zombie writer regressing
-    * the watermark only widens the next truncate's range over
-    * already-handled versions, which dedup + idempotent reap absorb.
+  /** Reclaim the commit intents whose grace window has passed: the listed
+    * mtime says so, so an unripe intent is never opened. An intent above
+    * the `committed` version may be a peer's commit still in flight, so it
+    * waits too. Every ripe intent is validated against its manifest first;
+    * then the honored ones' paths go, then the manifests below the newest
+    * honored checkpoint (no live fold chain reaches them, and any reader
+    * that could still resolve one planned before the grace window), then
+    * the intents themselves. A crash anywhere re-runs the same steps from
+    * the intents; every delete is idempotent, so concurrent reapers are
+    * safe too.
     */
-  private def tombstoneWatermark(): Option[Long] =
-    // read-and-catch (one RPC, no probe). ANY unreadable state — absent
-    // file, torn file on a non-atomic-rename fs, foreign content — degrades
-    // to the root-listing path, which self-heals: the next truncate
-    // rewrites the file. (A missing field reads as 0: the whole range from
-    // version 0, which dedup + idempotent reap absorb.) A throw here would fail every
-    // retention pass (and, wired into CdcPipeline's cadence, the streaming
-    // query itself) until someone hand-deletes the file.
-    try Some(Json.read[TombstoneWatermark](io.readString(tombstoneWatermarkPath))
-      .manifestsBelow)
-    catch { case scala.util.control.NonFatal(_) => None }
-
-  /** paths already named by a pending tombstone (so truncates don't re-name
-    * the same unreaped garbage every pass); bounded by the grace window
-    */
-  private def alreadyPending(): Set[String] =
-    MetaIO.fetchAll(io.listOrEmpty(pendingDir).toSeq
-      .filter(_.getPath.getName.matches("""del-.*\.json"""))) { st => // not .tmp-*
-        // fanned out on the shared metadata pool: at a truncate-per-batch
-        // cadence with a day's grace this is hundreds of small GETs on an
-        // object store. A concurrent reaper may delete a ripe tombstone
-        // between our listing and this read — its paths are then simply
-        // not "pending".
-        io.readIfExists(st.getPath).toSeq.flatMap(Json.read[Tombstone](_).paths)
-      }.flatten.toSet
-
-  /** record paths that just became unreferenced as ONE immutable tombstone
-    * file stamped with the drop time — append-only, concurrency-safe.
-    * writeAtomic (unique tmp + rename), never a bare create: a torn del-*
-    * file would poison every later reap's JSON parse.
-    */
-  private def pendingAdd(paths: Seq[String]): Unit =
-    if (paths.nonEmpty) {
-      val droppedAt = System.currentTimeMillis()
-      io.writeAtomic(new Path(pendingDir,
-        f"del-$droppedAt%013d-${java.util.UUID.randomUUID()}.json"),
-        Json.write(Tombstone(droppedAt, paths.distinct)))
-    }
-
-  /** reclaim tombstone files whose grace window has fully elapsed (all of a
-    * file's entries share one droppedAt, so per-file reaping is exact);
-    * deletes are idempotent, so concurrent reapers are safe
-    */
-  private def reapPending(graceMs: Long): Unit = {
+  private def reapPending(graceMs: Long, committed: Long): Unit = {
     val listed = io.listOrEmpty(pendingDir)
     if (listed.isEmpty) return
     val cutoff = System.currentTimeMillis() - graceMs
-    val reaped = listed.count { st =>
-      // exact .json names only: a crash-leaked writeAtomic tmp
-      // (del-*.json.tmp-*) must not be parsed — or reaped as if complete
-      st.getPath.getName.matches("""del-.*\.json""") && {
-        // a concurrent reaper may have taken this tombstone already —
-        // its deletes were idempotent with ours, nothing left to do
-        io.readIfExists(st.getPath).map(Json.read[Tombstone](_)).forall(t =>
-          t.droppedAt <= cutoff && {
-            t.paths.foreach(p => io.fs.delete(new Path(io.rootPath, p), false): Unit)
-            io.fs.delete(st.getPath, false): Unit
-            true
-          })
-      }
+    // exact names only: a crash-leaked writeAtomic tmp (….json.tmp-*) is
+    // neither parsed nor reaped as if complete
+    val ripe = listed.toSeq.flatMap(st => st.getPath.getName match {
+      case intentName(v, app) if st.getModificationTime <= cutoff && v.toLong <= committed =>
+        Some((st.getPath, v.toLong, app))
+      case _ => None
+    })
+    // (manifest, paths) of each intent whose commit landed; a concurrent
+    // reaper may have taken an intent already
+    val honored = ripe.flatMap { case (p, v, app) =>
+      io.readIfExists(p).map(Json.read[Tombstone](_).paths).flatMap(paths =>
+        log.manifestAt(v).filter(m => m.appId == app && paths.forall(m.removedKeys.toSet))
+          .map(_ -> paths))
     }
+    honored.flatMap(_._2).foreach(rel => io.fs.delete(new Path(io.rootPath, rel), false): Unit)
+    if (honored.nonEmpty) {
+      val below = honored.map(_._1.checkpointVersion).max
+      log.retire(log.horizon(below), below): Unit
+    }
+    ripe.foreach { case (p, _, _) => io.fs.delete(p, false): Unit }
     // cosmetic empty-dir cleanup once everything listed is gone, best-effort
-    // ONLY: a concurrent truncator may add a tombstone after our listing
+    // ONLY: a concurrent truncator may add an intent after our listing
     // (non-recursive delete of a non-empty dir throws), and a concurrent
     // reaper may have removed the dir already — both races are benign
-    if (reaped == listed.length)
+    if (ripe.length == listed.length)
       try io.fs.delete(pendingDir, false): Unit
       catch { case _: java.io.IOException => () }
   }
@@ -396,7 +324,7 @@ final class ChangeJournal(
         SortedMap.from(next.map { case (p, o) => p -> NextOffset(o) }),
         files = if (c.full) Some(c.files) else None,
         added = if (c.full) None else Some(added),
-        removed = if (!c.full && removed.nonEmpty) Some(removed) else None)
+        removed = if (removed.nonEmpty) Some(removed) else None)
     }
 
   // ---- read / replay (the source) ---------------------------------------

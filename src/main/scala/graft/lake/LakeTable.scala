@@ -583,7 +583,7 @@ final class LakeTable(
     val cur = currentVersion
     if (cur < 0) return (0, 0)
     val keepFrom = math.max(0L, cur - (keepLast - 1))
-    val horizon = gcHorizon // versions below this were GC'd by earlier vacuums
+    val horizon = log.horizon(keepFrom) // versions below this were GC'd by earlier vacuums
     // Keep the kept versions' manifest chains self-contained: if the oldest
     // kept manifest is a delta, rewrite it in place as its (semantically
     // identical) resolved checkpoint, so every manifest below keepFrom can
@@ -644,16 +644,8 @@ final class LakeTable(
       }
       if (legacyRows.isDefined) io.fs.delete(legacyArchivePath, false): Unit
     }
-    // delete-and-count, not exists-then-delete: FileSystem.delete already
-    // returns false for a missing path, so the probe was a second metadata
-    // RPC per doomed manifest (vacuum reaps O(retention) of them at once).
-    // Newest first: a delta resolves down to its checkpoint, so a crash
-    // part-way leaves a prefix of versions whose chains are intact. A
-    // checkpoint deleted before the deltas above it would leave chains no
-    // later vacuum's range fold can resolve.
-    val manifestsDeleted = (horizon until keepFrom).reverse.count { v =>
-      io.fs.delete(new Path(io.rootPath, SnapshotLog.manifestRel(v)), false)
-    }
+    // the advanced horizon bounds later walks to O(keepLast), not O(lifetime)
+    val manifestsDeleted = log.retire(horizon, keepFrom)
     // Shard GC. Unlike data files, shards get NO immediate known-superseded
     // class: a concurrent writer's in-progress checkpoint commit may be
     // about to REFERENCE a doomed checkpoint's shard via shard reuse (it
@@ -665,8 +657,6 @@ final class LakeTable(
     // the cheap price of staying safe next to a live writer.
     reapUnkept("shards", manifests(keepFrom to cur).flatMap(shardMapOf(_).values).toSet,
       orphanGraceMs): Unit
-    if (keepFrom > horizon) // O(keepLast) future walks, not O(lifetime)
-      io.writeAtomic(horizonPath, keepFrom.toString)
     // crashed peers' abandoned staging reclaims at maintenance cadence,
     // not per-merge: the sweep's listStatus belongs with the other GC
     // passes, off the commit hot path (BENCH/BASELINE.md, r07 claim protocol)
@@ -696,13 +686,6 @@ final class LakeTable(
   private def legacyArchiveRows(): Option[Seq[LineageRow]] =
     io.readIfExists(legacyArchivePath).map(Json.read[Seq[LineageRow]](_))
   private def lineageSegDir = new Path(io.rootPath, "_lineage")
-  private def horizonPath = new Path(io.rootPath, "gc-horizon.txt")
-
-  /** Oldest snapshot version that may still exist (everything below was
-    * vacuumed). Bounds lineage()/vacuum() walks to O(retained versions).
-    */
-  private def gcHorizon: Long = // read-and-catch: one RPC, no TOCTOU
-    io.readIfExists(horizonPath).map(_.trim.toLong).getOrElse(0L)
 
   /** Re-bucket the table to a new sub-bucket count — the rewrite-
     * amplification knob turned at runtime: more buckets = smaller COW
@@ -771,7 +754,8 @@ final class LakeTable(
     val segs = io.listOrEmpty(lineageSegDir).toSeq
       .filter(_.getPath.getName.startsWith("seg-")).map(_.getPath.toString)
     val legacy = legacyArchiveRows().getOrElse(Nil)
-    val liveRows = (gcHorizon to currentVersion).flatMap(v =>
+    val cur = currentVersion
+    val liveRows = (log.horizon(cur + 1) to cur).flatMap(v =>
       log.manifestAt(v).toSeq.flatMap(_.lineage))
     val driverSide = spark.createDataFrame(legacy ++ liveRows)
     val all =
@@ -834,10 +818,11 @@ object LakeTable {
     * small non-negative ints (Kafka-shaped), so the common case is a DENSE
     * ARRAY literal indexed by `partition` — `element_at` on an array is a
     * constant-time load (a MAP literal's GetMapValue would be a per-row
-    * linear probe). Rows with a partition outside the array (or beyond a
-    * degenerate 64k bound) fall back to, respectively, the coalesce
-    * identity (no watermark ⇒ admit: offsets are non-negative, so
-    * Long.MinValue is the identity) and the original broadcast join.
+    * linear probe). Rows with a partition outside the array get the
+    * coalesce identity (no watermark ⇒ admit: offsets are non-negative, so
+    * Long.MinValue is the identity). A gate with keys beyond a degenerate
+    * 64k bound (or negative) is looked up as a map literal instead — the
+    * same admit-on-miss semantics in the same single expression.
     *
     * `strict` selects `>` (merge watermark: admit strictly newer) vs `>=`
     * (journal next-offset: admit at or past the next expected).
@@ -846,7 +831,7 @@ object LakeTable {
       strict: Boolean): DataFrame = {
     if (gate.isEmpty) return batch
     val maxP = gate.keys.max
-    if (gate.keys.min >= 0 && maxP < 65536) {
+    val g = if (gate.keys.min >= 0 && maxP < 65536) {
       val arr = IndexedSeq.tabulate(maxP + 1)(p =>
         gate.getOrElse(p, Long.MinValue))
       // The lookup runs ONLY for partitions inside the array's domain
@@ -861,20 +846,12 @@ object LakeTable {
       // null-gate behavior. try_element_at stays for the 1-based bound
       // check; a partition first appearing mid-stream
       // (eng_partition_expand) lands in the between() miss -> admit.
-      val g = coalesce(
+      coalesce(
         when(col("partition").between(0, maxP),
           try_element_at(typedlit(arr), col("partition") + 1)),
         lit(Long.MinValue))
-      batch.filter(if (strict) col("offset") > g else col("offset") >= g)
-    } else {
-      val gDf = batch.sparkSession.createDataFrame(gate.toSeq)
-        .toDF("partition", "_gate")
-      batch.join(broadcast(gDf), Seq("partition"), "left")
-        .filter(col("_gate").isNull ||
-          (if (strict) col("offset") > col("_gate")
-           else col("offset") >= col("_gate")))
-        .drop("_gate")
-    }
+    } else coalesce(element_at(typedlit(gate), col("partition")), lit(Long.MinValue))
+    batch.filter(if (strict) col("offset") > g else col("offset") >= g)
   }
 
   /** Audit seam: receives the merge's final write frame just before its

@@ -106,13 +106,8 @@ final case class JournalManifest(
   def addedEntries: Seq[JournalFile] = added.getOrElse(Nil)
 }
 
-/** `pending-delete/del-*.json`: the paths one journal truncate dropped,
-  * reclaimed once the grace window since `droppedAt` has passed.
+/** `pending-delete/v{v:012d}-{appId}.json`: the paths the journal truncate
+  * committing version v drops — a commit intent, written before the commit
+  * and honored only if that commit landed.
   */
-final case class Tombstone(droppedAt: Long, paths: Seq[String])
-
-/** `tombstone-watermark.json`: journal manifest versions below this are
-  * already tombstoned or reaped. Written on one line,
-  * `{"manifestsBelow":N}`.
-  */
-final case class TombstoneWatermark(manifestsBelow: Long)
+final case class Tombstone(paths: Seq[String])

@@ -206,6 +206,45 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
       manifestCache = None
     }
 
+  private def horizonPath = new Path(io.rootPath, "gc-horizon.txt")
+
+  /** Oldest manifest version that may still exist: every version below it
+    * was retired. Bounds GC folds and lineage walks to the retained
+    * versions. An absent file reads as 0. The file is trusted only while it
+    * is at most `below` and within [[SnapshotLog.maxHorizonLag]] of it;
+    * otherwise (unreadable or foreign content, a file that survived a
+    * restore of the table from a backup, or a horizon so old it would name
+    * thousands of long-gone versions) one root listing gives the oldest
+    * manifest on disk instead. Never throws on content: a throw here would
+    * fail every maintenance pass, and with it the stream, until someone
+    * deleted the file by hand.
+    */
+  def horizon(below: Long): Long = {
+    val stored =
+      try io.readIfExists(horizonPath).fold(0L)(_.trim.toLong)
+      catch { case scala.util.control.NonFatal(_) => -1L }
+    if (stored >= 0 && stored <= below && below - stored <= SnapshotLog.maxHorizonLag) stored
+    else io.listOrEmpty(io.rootPath).iterator.map(_.getPath.getName)
+      .collect { case SnapshotLog.manifestName(v) => v.toLong }
+      .minOption.getOrElse(below)
+  }
+
+  /** Retire manifests [`from`, `below`) — `from` is the caller's
+    * [[horizon]] read — then advance the horizon to `below`. Newest first:
+    * a delta resolves down to its checkpoint, so a crash part-way leaves a
+    * prefix of versions whose chains are intact (a checkpoint deleted
+    * before the deltas above it would leave chains no later fold can
+    * resolve). The horizon moves only after every delete, so a crash
+    * re-covers the same range; deletes of missing names are no-ops.
+    * Returns how many manifests went.
+    */
+  def retire(from: Long, below: Long): Int = {
+    val deleted = (from until below).reverse.count(v =>
+      io.fs.delete(new Path(io.rootPath, SnapshotLog.manifestRel(v)), false))
+    if (below > from) io.writeAtomic(horizonPath, below.toString)
+    deleted
+  }
+
   /** Commit `change` on top of the pinned head `planned`, as batch
     * `batchId`. `build` makes the table's manifest from the [[Commit]]: its
     * header, the `checkpointVersion` to record, and either the checkpoint
@@ -255,4 +294,8 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
 private[lake] object SnapshotLog {
   /** the version-named manifest (zero-padded: lexicographic = numeric order) */
   def manifestRel(version: Long): String = f"manifest-$version%012d.json"
+  /** a manifest's name; past 12 digits the zero-padded name just grows */
+  private val manifestName = """manifest-(\d{12,})\.json""".r
+  /** how far behind a stored horizon may be before a listing is cheaper */
+  private val maxHorizonLag = 4096L
 }

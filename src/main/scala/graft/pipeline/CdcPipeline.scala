@@ -141,7 +141,7 @@ final class CdcPipeline(
         // "cleanup converges eventually"), so a transient IO failure inside
         // it must not kill the stream the way a data-commit failure rightly
         // does — log loudly and retry at the next cadence hit, the same
-        // degrade-not-die contract as the tombstone-watermark read
+        // degrade-not-die contract as the GC horizon read (SnapshotLog.horizon)
         try {
           // test seam (PipelineFailureSpec): runs after the batch's data
           // commits and before any maintenance. Specs throw NonFatal here to

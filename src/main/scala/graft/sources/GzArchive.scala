@@ -3,6 +3,7 @@ package graft.sources
 import java.io.{BufferedReader, ByteArrayInputStream, ByteArrayOutputStream, InputStreamReader, OutputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
+import com.fasterxml.jackson.annotation.{JsonIgnoreProperties, JsonProperty, JsonPropertyOrder}
 import graft.functions.RecordFormats.{ByteLengthFormat, Framed}
 import graft.lake.{Json, TableIO}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -48,14 +49,25 @@ import org.apache.spark.sql.functions._
   */
 object GzArchive {
 
-  /** one gzip member's index entry (json field names are the wire format) */
+  /** one gzip member's index entry, serialized in the golden order the
+    * reference's jackson mapper emits (system_test/run.py:218 asserts the
+    * exact string). `byte_length_uncompressed` may be missing: the
+    * reference's sink always writes it, but its own offset-recovery test
+    * fixtures omit it (S3WriterTest.java:199-210) — offset arithmetic must
+    * not depend on it. Unknown fields are ignored, so a foreign writer's
+    * index still parses.
+    */
+  @JsonPropertyOrder(Array("byte_length_uncompressed", "num_records", "byte_length",
+    "byte_offset", "first_record_offset"))
+  @JsonIgnoreProperties(ignoreUnknown = true)
   final case class Chunk(
-      firstRecordOffset: Long,
-      numRecords: Long,
-      byteOffset: Long,
-      byteLength: Long,
-      byteLengthUncompressed: Long)
+      @JsonProperty("first_record_offset") firstRecordOffset: Long,
+      @JsonProperty("num_records") numRecords: Long,
+      @JsonProperty("byte_offset") byteOffset: Long,
+      @JsonProperty("byte_length") byteLength: Long,
+      @JsonProperty("byte_length_uncompressed") byteLengthUncompressed: Long = 0L)
 
+  @JsonIgnoreProperties(ignoreUnknown = true)
   final case class Index(chunks: Seq[Chunk]) {
     /** next offset after this file's records — the sink-resume arithmetic
       * (S3Writer.java:123-127) */
@@ -63,46 +75,9 @@ object GzArchive {
       chunks.lastOption.map(c => c.firstRecordOffset + c.numRecords).getOrElse(0L)
   }
 
-  /** golden-order serialization: byte_length_uncompressed, num_records,
-    * byte_length, byte_offset, first_record_offset — the order the
-    * reference's jackson mapper emits (system_test/run.py:218 asserts this
-    * exact string) */
-  def indexJson(index: Index): String = {
-    val root = Json.obj()
-    val arr = Json.arr()
-    index.chunks.foreach { c =>
-      val o = Json.obj()
-      o.put("byte_length_uncompressed", c.byteLengthUncompressed)
-      o.put("num_records", c.numRecords)
-      o.put("byte_length", c.byteLength)
-      o.put("byte_offset", c.byteOffset)
-      o.put("first_record_offset", c.firstRecordOffset)
-      arr.add(o): Unit
-    }
-    root.set[com.fasterxml.jackson.databind.JsonNode]("chunks", arr)
-    Json.mapper.writeValueAsString(root)
-  }
+  def indexJson(index: Index): String = Json.mapper.writeValueAsString(index)
 
-  /** Tolerant of a missing byte_length_uncompressed: the reference's sink
-    * always writes it, but its own offset-recovery test fixtures omit it
-    * (S3WriterTest.java:199-210) — offset arithmetic must not depend on it.
-    */
-  def parseIndex(s: String): Index = {
-    val node = Json.parse(s)
-    val it = node.get("chunks").elements()
-    val buf = Seq.newBuilder[Chunk]
-    while (it.hasNext) {
-      val c = it.next()
-      buf += Chunk(
-        firstRecordOffset = c.get("first_record_offset").asLong(),
-        numRecords = c.get("num_records").asLong(),
-        byteOffset = c.get("byte_offset").asLong(),
-        byteLength = c.get("byte_length").asLong(),
-        byteLengthUncompressed =
-          Option(c.get("byte_length_uncompressed")).map(_.asLong()).getOrElse(0L))
-    }
-    Index(buf.result())
-  }
+  def parseIndex(s: String): Index = Json.read[Index](s)
 
   /** cursor key for a topic-partition (S3Writer.java:138-140) */
   def cursorFileName(topic: String, partition: Int): String =

@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Crash points of the publish and commit windows: every metadata
   * operation fails once, either before the operation or after it (a lost
-  * acknowledgement). The commit window runs from a commit's plan-coherence
+  * acknowledgement); in the maintenance pass, the writer also dies there. The commit window runs from a commit's plan-coherence
   * read to its snapshot swap; the publish window from the first operation
   * of `TableIO.publish` (staged files promoted to their names) to the
   * commit, or to the end of an archive write (indexes, cursors, scratch
@@ -104,11 +104,13 @@ class CommitCrashSpec extends AnyFunSuite {
     * before/after) of the kinds `faulted` selects (all by default). A point
     * names its operation by kind, path and occurrence, so the publish
     * fan-out's parallel renames are found in any order. Points are
-    * independent roots, so they run three at a time.
+    * independent roots, so they run three at a time. With `crashStop` the
+    * faulted run dies at its point: every later operation on the root fails
+    * too, so no retry inside the run gets past it.
     */
   private def enumerate(template: String, tag: String, window: CommitFaults.Window,
-      kinds: Set[String], faulted: String => Boolean = _ => true)(batch: String => Long)
-      (check: (String, String) => Unit): Seq[Point] = {
+      kinds: Set[String], faulted: String => Boolean = _ => true, crashStop: Boolean = false)
+      (batch: String => Long)(check: (String, String) => Unit): Seq[Point] = {
     val dry = copyTree(template, s"$tag-dry")
     CommitFaults.arm(dry, window)
     batch(dry): Unit
@@ -123,7 +125,7 @@ class CommitCrashSpec extends AnyFunSuite {
       pool.submit(new java.util.concurrent.Callable[Unit] {
         def call(): Unit = {
           val root = copyTree(template, tag)
-          CommitFaults.arm(root, window, Some(pt.op), pt.after)
+          CommitFaults.arm(root, window, Some(pt.op), pt.after, crashStop)
           Try(batch(root)): Unit
           val seen = CommitFaults.disarm(root)
           assert(seen.fired, s"$pt: the faulted run took other operations: ${seen.ops}")
@@ -237,14 +239,17 @@ class CommitCrashSpec extends AnyFunSuite {
   test("every metadata write of a maintenance pass (journal truncate, lake vacuum) recovers exactly once") {
     // four batches of 20 offsets of one partition into both tables. The
     // pass truncates the journal's files at or below offset 19 (batch 0,
-    // reaped at once) and keeps the lake's last 2 versions, so vacuum
-    // materializes delta version 2 in place before it deletes versions 0
-    // (the checkpoint) and 1 (a delta on it).
+    // reaped at once, so after recovery data/ holds only live files). The
+    // truncate commits version 4, a checkpoint at the journal's cadence of
+    // 2, so the journal's manifests 0-3 retire with it. The pass keeps the
+    // lake's last 2 versions, so vacuum materializes delta version 2 in
+    // place before it deletes versions 0 (the checkpoint) and 1 (a delta).
     val changes = ChangeGen.changes(spark, 80, nKeys = 12, partitions = 1).cache()
     val want = rows(ChangeGen.oracleFinalState(changes))
     val surviving = changes.where(col("offset") > 19).select(col("partition"), col("offset"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
-    def journal(root: String) = new ChangeJournal(s"$root/journal", spark, chunkBytes = 2048)
+    def journal(root: String) =
+      new ChangeJournal(s"$root/journal", spark, chunkBytes = 2048, checkpointEvery = 2)
     def lake(root: String) = new LakeTable(s"$root/lake", spark, subBuckets = 1)
     withFaultingFs {
       val template = SparkTestSession.tempDir("crash-maint")
@@ -253,21 +258,32 @@ class CommitCrashSpec extends AnyFunSuite {
         journal(template).append(batch, b)
         lake(template).merge(batch, b)
       }
-      val points = enumerate(template, "crash-maint-pt", CommitFaults.maintenanceWindow,
-        Set("open", "create", "rename", "delete", "list"), maintenanceFaulted) { root =>
-        journal(root).truncate(Map(0 -> 19L), graceMs = 0L)
-        lake(root).vacuum(keepLast = 2, orphanGraceMs = 0L)._2.toLong
-      } { (root, what) =>
-        val l = lake(root)
-        assert(rows(l.read()) === want, what)
-        assertManifestsResolve(s"$root/lake", what)
-        val j = journal(root)
-        val got = j.readFrom(Map.empty).select(col("partition"), col("offset"))
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
-        // (the read fails on a listed file that is missing)
-        assert(got === surviving, s"$what: each surviving offset exactly once")
+      // each point once as one failed operation (which a retry inside the
+      // pass may absorb) and once as the pass dying there
+      for (crashStop <- Seq(false, true)) {
+        val points = enumerate(template, "crash-maint-pt", CommitFaults.maintenanceWindow,
+          Set("open", "create", "rename", "delete", "list"), maintenanceFaulted, crashStop) { root =>
+          journal(root).truncate(Map(0 -> 19L), graceMs = 0L)
+          lake(root).vacuum(keepLast = 2, orphanGraceMs = 0L)._2.toLong
+        } { (root, what0) =>
+          val what = if (crashStop) s"dying $what0" else what0
+          val l = lake(root)
+          assert(rows(l.read()) === want, what)
+          assertManifestsResolve(s"$root/lake", what)
+          val j = journal(root)
+          val got = j.readFrom(Map.empty).select(col("partition"), col("offset"))
+            .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+          // (the read fails on a listed file that is missing)
+          assert(got === surviving, s"$what: each surviving offset exactly once")
+          // and a dropped file is reclaimed (grace 0), never leaked
+          val live = j.chunkIndex().select("path").distinct().collect().map(_.getString(0)).toSet
+          val onDisk = new java.io.File(s"$root/journal/data").list().toSet
+            .filterNot(_.startsWith(".")).map("data/" + _)
+          assert(onDisk === live, s"$what: the journal's data/ holds exactly its live files")
+        }
+        info(s"${points.size} ${if (crashStop) "dying" else "failing"} points: " +
+          points.mkString("; "))
       }
-      info(s"${points.size} crash points: ${points.mkString("; ")}")
     }
     changes.unpersist()
   }
@@ -342,7 +358,7 @@ object CommitFaults {
   /** one operation: kind, root-relative path (a rename's destination; tmp
     * names shortened to `<name>.tmp`, their pid and clock dropped, and the
     * other per-run parts of a name — job UUIDs, Spark task attempt ids, a
-    * tombstone's drop time, a lineage segment's clock — to placeholders),
+    * lineage segment's clock — to placeholders),
     * its occurrence among the
     * window's operations of that kind and path, and the methods on its
     * thread's stack
@@ -369,7 +385,8 @@ object CommitFaults {
     */
   final case class Seen(ops: Seq[Op], fired: Boolean)
 
-  private final class Armed(window: Window, fail: Option[Op], after: Boolean) {
+  private final class Armed(window: Window, fail: Option[Op], after: Boolean,
+      crashStop: Boolean) {
     private var state = 0 // 0 before the window, 1 in it, 2 past it
     private val ops = scala.collection.mutable.ArrayBuffer.empty[Op]
     private var fired = false
@@ -384,8 +401,9 @@ object CommitFaults {
         val op = Op(kind, rel, ops.count(o => o.kind == kind && o.rel == rel) + 1, methods)
         ops += op
         val hit = fail.exists(f => f.kind == kind && f.rel == rel && f.n == op.n)
+        val dead = fired && crashStop
         if (hit) fired = true
-        if (hit) Some(after) else None
+        if (hit) Some(after) else if (dead) Some(false) else None
       }
     }
 
@@ -398,10 +416,12 @@ object CommitFaults {
   private def prefix(dir: String) = new Path(dir).toUri.getPath.stripSuffix("/") + "/"
 
   /** count `dir`'s operations in `window`, failing `fail` (by kind, path
-    * and occurrence) before it runs or, with `after`, after it
+    * and occurrence) before it runs or, with `after`, after it; with
+    * `crashStop`, every later operation of the window fails before it runs
     */
-  def arm(dir: String, window: Window, fail: Option[Op] = None, after: Boolean = false): Unit =
-    armed.put(prefix(dir), new Armed(window, fail, after)): Unit
+  def arm(dir: String, window: Window, fail: Option[Op] = None, after: Boolean = false,
+      crashStop: Boolean = false): Unit =
+    armed.put(prefix(dir), new Armed(window, fail, after, crashStop)): Unit
 
   /** the window's operations on `dir` since [[arm]] */
   def disarm(dir: String): Seen =
@@ -423,7 +443,6 @@ object CommitFaults {
         .replaceAll("""\.tmp-\d+-\d+$""", ".tmp").replaceAll(
           """[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""", "<uuid>")
         .replaceAll("""(attempt|task)_\d+_\d+_m_\d+(_\d+)?""", "$1_<id>")
-        .replaceAll("""del-\d{13}-""", "del-<ms>-")
         .replaceAll("""(seg-\d{12})-[0-9a-f]{16}""", "$1-<ns>"))
     }.flatten
     if (failing.contains(false))

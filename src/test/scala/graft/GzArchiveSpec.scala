@@ -196,6 +196,9 @@ class GzArchiveSpec extends AnyFunSuite {
         """{"first_record_offset":11042,"num_records":989,"byte_offset":10000,"byte_length":9890},""" +
         """{"first_record_offset":12031,"num_records":34,"byte_offset":19890,"byte_length":340}]}""")
     assert(GzArchive.fetchOffsets(spark, root.toString, "bar") === Map(0 -> 12065L))
+    // an index carrying fields this engine never writes still parses
+    assert(GzArchive.parseIndex("""{"chunks":[{"first_record_offset":5,"num_records":2,""" +
+      """"byte_offset":0,"byte_length":9,"crc32":7}],"writer":"other"}""").nextOffset === 7L)
     // missing cursor = the 404 case: partition absent (caller starts at 0)
     assert(GzArchive.fetchOffsets(spark, root.toString, "other") === Map.empty)
   }

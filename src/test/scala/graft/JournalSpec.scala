@@ -223,75 +223,91 @@ class JournalSpec extends AnyFunSuite {
     def slice(lo: Long, hi: Long) =
       changes.filter(col("offset") >= lo && col("offset") < hi)
     (0 until 4).foreach(i => j.append(slice(i * 150L, (i + 1) * 150L), i.toLong))
-    // first truncate: migration path (no watermark yet) — then the file
-    // exists and records the checkpoint version
+    // first truncate: no horizon yet (reads as 0) — then the file exists
+    // and records the checkpoint version
     j.truncate(Map(0 -> 299L, 1 -> 299L), graceMs = 0L)
-    val wmPath = java.nio.file.Paths.get(root, "tombstone-watermark.json")
-    assert(java.nio.file.Files.exists(wmPath), "watermark lands on truncate")
-    val w1 = Json.parse(java.nio.file.Files.readString(wmPath))
-      .get("manifestsBelow").asLong
+    val wmPath = java.nio.file.Paths.get(root, "gc-horizon.txt")
+    def horizon(): Long = java.nio.file.Files.readString(wmPath).trim.toLong
+    def overwriteHorizon(content: String): Unit = {
+      java.nio.file.Files.deleteIfExists( // hadoop LocalFS checksum sidecar
+        java.nio.file.Paths.get(root, ".gc-horizon.txt.crc"))
+      java.nio.file.Files.writeString(wmPath, content): Unit
+    }
+    assert(java.nio.file.Files.exists(wmPath), "horizon lands on truncate")
+    val w1 = horizon()
     assert(w1 === ckptOf(j))
     assert(manifestsOnDisk().forall(_ >= w1),
       s"zero-grace truncate reclaims every manifest below $w1: ${manifestsOnDisk()}")
-    // later truncates derive the range from the watermark alone; superseded
+    // later truncates derive the range from the horizon alone; superseded
     // manifests from the appends in between still get reclaimed
     (4 until 8).foreach(i => j.append(slice(i * 150L, (i + 1) * 150L), i.toLong))
     j.truncate(Map(0 -> 599L, 1 -> 599L), graceMs = 0L)
-    val w2 = Json.parse(java.nio.file.Files.readString(wmPath))
-      .get("manifestsBelow").asLong
+    val w2 = horizon()
     assert(w2 > w1 && w2 === ckptOf(j))
     assert(manifestsOnDisk().forall(_ >= w2),
-      s"watermark-derived truncate reclaims below $w2: ${manifestsOnDisk()}")
-    // a REGRESSED watermark (zombie writer raced the file) is absorbed:
+      s"horizon-derived truncate reclaims below $w2: ${manifestsOnDisk()}")
+    // a REGRESSED horizon (zombie writer raced the file) is absorbed:
     // the next DROPPING truncate re-covers already-reaped versions, whose
     // deletes are idempotent no-ops, and the cold log stays exact (the
-    // watermark advances only when a truncate commits, i.e. drops files)
-    java.nio.file.Files.deleteIfExists( // hadoop LocalFS checksum sidecar
-      java.nio.file.Paths.get(root, ".tombstone-watermark.json.crc"))
-    java.nio.file.Files.writeString(wmPath, """{"manifestsBelow":0}""")
+    // horizon advances only when a truncate commits, i.e. drops files)
+    overwriteHorizon("0")
     j.append(slice(1200L, 1350L), 8L) // empty-range append keeps ids moving
     j.truncate(Map(0 -> 899L, 1 -> 899L), graceMs = 0L)
-    assert(Json.parse(java.nio.file.Files.readString(wmPath))
-      .get("manifestsBelow").asLong === ckptOf(j))
+    assert(horizon() === ckptOf(j))
     val cold = new ChangeJournal(root, spark, 100000, checkpointEvery = 2)
     val want = changes.filter(col("offset") >= 900L)
       .select("partition", "offset", "content")
     val got = cold.read().select("partition", "offset", "content")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    // a CORRUPT watermark file (torn write on a non-atomic-rename fs, or
+    // a CORRUPT horizon file (torn write on a non-atomic-rename fs, or
     // foreign content) must degrade to the listing path and self-heal —
     // never fail the retention pass (wired into CdcPipeline's cadence, a
     // throw here would kill the streaming query every N batches)
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(root, ".tombstone-watermark.json.crc"))
-    java.nio.file.Files.writeString(wmPath, """{"manifests""")
+    overwriteHorizon("""{"manifests""")
     j.append(slice(1350L, 1500L), 9L)
     j.truncate(Map(0 -> 1049L, 1 -> 1049L), graceMs = 0L)
-    assert(Json.parse(java.nio.file.Files.readString(wmPath))
-      .get("manifestsBelow").asLong === ckptOf(j), "corrupt watermark healed")
+    assert(horizon() === ckptOf(j), "corrupt horizon healed")
     val want2 = changes.filter(col("offset") >= 1050L)
       .select("partition", "offset", "content")
     val got2 = new ChangeJournal(root, spark, 100000, checkpointEvery = 2)
       .read().select("partition", "offset", "content")
     assert(got2.exceptAll(want2).isEmpty && want2.exceptAll(got2).isEmpty)
-    // an AHEAD watermark (journal dir restored from a backup while a newer
-    // tombstone-watermark.json survived) is INVALID state: the derived range
+    // an AHEAD horizon (journal dir restored from a backup while a newer
+    // gc-horizon.txt survived) is INVALID state: the derived range
     // [w, ckpt) would be empty and the rewrite below would heal the
-    // watermark without ever reclaiming pre-restore superseded manifests —
+    // horizon without ever reclaiming pre-restore superseded manifests —
     // a permanent leak. The guard sends w > ckpt to the listing fallback,
-    // which reclaims them, then the watermark self-heals to ckpt.
+    // which reclaims them, then the horizon self-heals to ckpt.
     val stale = java.nio.file.Paths.get(root, "manifest-000000000003.json")
     java.nio.file.Files.writeString(stale, """{"version":3}""")
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(root, ".tombstone-watermark.json.crc"))
-    java.nio.file.Files.writeString(wmPath,
-      s"""{"manifestsBelow":${ckptOf(j) + 1000}}""")
+    overwriteHorizon(s"${ckptOf(j) + 1000}")
     j.append(slice(1500L, 1650L), 10L)
     j.truncate(Map(0 -> 1199L, 1 -> 1199L), graceMs = 0L)
     assert(!java.nio.file.Files.exists(stale),
-      "ahead watermark must fall back to the listing and reclaim the leak")
-    assert(Json.parse(java.nio.file.Files.readString(wmPath))
-      .get("manifestsBelow").asLong === ckptOf(j), "ahead watermark healed")
+      "ahead horizon must fall back to the listing and reclaim the leak")
+    assert(horizon() === ckptOf(j), "ahead horizon healed")
+  }
+
+  test("a void commit intent goes, a peer's in-flight one waits, neither deletes live files") {
+    import graft.lake.{Json, Tombstone}
+    import java.nio.file.{Files, Paths}
+    val root = SparkTestSession.tempDir("jintent")
+    val j = new ChangeJournal(root, spark, 100000)
+    j.append(ChangeGen.changes(spark, 200, partitions = 2), 0L) // version 0
+    val live = j.chunkIndex().select("path").distinct().collect().map(_.getString(0)).toSeq
+    def intent(v: Int, app: String) = Paths.get(root, "pending-delete", f"v$v%012d-$app.json")
+    Files.createDirectories(intent(0, "x").getParent)
+    // "crashed" names version 0, which another writer's append took, so it
+    // is void; "peer" names version 1, a commit that has not landed yet
+    for (p <- Seq(intent(0, "crashed"), intent(1, "peer"))) {
+      Files.writeString(p, Json.write(Tombstone(live)))
+      assert(p.toFile.setLastModified(System.currentTimeMillis() - 60000L))
+    }
+    assert(j.truncate(Map(0 -> -1L, 1 -> -1L), graceMs = 0L) === 0)
+    assert(!Files.exists(intent(0, "crashed")), "a void intent goes")
+    assert(Files.exists(intent(1, "peer")), "an intent above the head waits for its commit")
+    assert(live.forall(p => Files.exists(Paths.get(root, p))), "no live file is deleted")
+    assert(j.read().count() === 200L)
   }
 
   test("multi-append: offsets continue, journal holds the full log") {

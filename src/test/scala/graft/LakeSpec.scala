@@ -198,6 +198,42 @@ class LakeSpec extends AnyFunSuite {
     assert(lake.lineage().count() === lineageBefore)
   }
 
+  test("a garbage gc-horizon.txt degrades to a listing and heals") {
+    // the horizon is advisory: unreadable content must cost a root listing,
+    // never a failed vacuum, lineage read or retention pass (CdcPipeline
+    // escalates an IllegalArgumentException, so a throw here would kill the
+    // stream on every restart)
+    val changes = ChangeGen.changes(spark, 500, nKeys = 60, partitions = 2)
+    def batch(b: Int) = changes.filter(col("offset") >= b * 50 && col("offset") < b * 50 + 50)
+    val root = SparkTestSession.tempDir("lakehorizon")
+    val lake = new LakeTable(root, spark, subBuckets = 2)
+    (0 until 3).foreach(b => lake.merge(batch(b), b.toLong))
+    val horizonPath = java.nio.file.Paths.get(root, "gc-horizon.txt")
+    def horizon(): Long = java.nio.file.Files.readString(horizonPath).trim.toLong
+    def garble(): Unit = {
+      java.nio.file.Files.deleteIfExists( // hadoop LocalFS checksum sidecar
+        java.nio.file.Paths.get(root, ".gc-horizon.txt.crc"))
+      java.nio.file.Files.writeString(horizonPath, "not a version\n"): Unit
+    }
+    assert(lake.vacuum(keepLast = 2, orphanGraceMs = 0L)._2 === 1)
+    assert(horizon() === 1L)
+    val lineage = lake.lineage().collect().toSet
+    garble()
+    assert(lake.lineage().collect().toSet === lineage)
+    lake.merge(batch(3), 3L)
+    // the listing finds version 1 the oldest on disk; vacuum retires it
+    assert(lake.vacuum(keepLast = 2, orphanGraceMs = 0L)._2 === 1)
+    assert(horizon() === 2L, "vacuum heals the horizon")
+    garble()
+    val p = new CdcPipeline(spark, SparkTestSession.tempDir("lakehorizon-j"), root,
+      subBuckets = 2, retention = Some(graft.pipeline.RetentionPolicy(everyNBatches = 1,
+        journalGraceMs = 0L, vacuumKeepLast = 2, orphanGraceMs = 0L)))
+    p.applyBatch(batch(4), 4L) // a retention cadence hit
+    assert(horizon() === 3L, "the pipeline's retention pass heals the horizon")
+    assert(lake.currentVersion === 4L)
+    assertMatchesOracle(lake, changes)
+  }
+
   test("delta manifests: commits record only touched buckets; chains resolve") {
     import graft.lake.Json
     val changes = ChangeGen.changes(spark, 2400, nKeys = 200, partitions = 4,
