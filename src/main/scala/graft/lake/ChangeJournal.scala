@@ -122,51 +122,28 @@ final class ChangeJournal(
     // extra memory-bandwidth pass that measured slower and scaled worse
     // than the recompute on the scaling bench (same finding as
     // LakeTable.merge). Recompute is safe: sources are deterministic.
-    val fresh = Chunker.assignChunks(fresh0, chunkBytes)
-
-    // per-file (= per partition per append) and per-chunk stats, one pass
-    val chunkStats = fresh.groupBy(col("partition"), col("chunk_id")).agg(
-      min(col("offset")).as("first_record_offset"),
-      count(lit(1)).as("num_records"),
-      max(col("offset")).as("max_offset"),
-      sum(col("bytes_uncompressed")).as("byte_length_uncompressed"))
-      .collect()
+    val chunkStats = Chunker.chunkStats(Chunker.assignChunks(fresh0, chunkBytes)).collect()
     if (chunkStats.isEmpty) {
       commitManifest(h, Nil, next, batchId, mergedSchema)
       return 0L
     }
 
-    val dataCols = batch.columns.toSeq
-    val staging = new Path(io.rootPath, s"_staging/append-$appId-$batchId")
-    // `_p` duplicates `partition` for the directory layout only: partitionBy
-    // strips its column from file contents, and promoted files must stay
-    // self-contained (the manifest, not the path, is the source of truth).
-    // The repartition DECLARES the one-task-per-partition clustering the
-    // one-file-per-directory contract needs. (It cannot be inherited from
-    // the chunk window: this select uses no window column, so Catalyst
-    // rightly prunes the window AND its exchange from this job's plan —
-    // relying on it worked only while a persist froze the window output.)
-    // The explicit sort satisfies FileFormatWriter's required ordering for
-    // dynamic partitions (prefix `_p`), so no second, UNSTABLE sort is
-    // inserted — and files stay offset-ordered, which is what gives parquet
-    // row-group min/max stats their pruning power on resume reads
-    io.writeStaged(fresh
-      .select((dataCols.map(col) :+ col("partition").as("_p")).toIndexedSeq: _*)
-      // one output FILE per touched partition (see TableIO.writeTasks)
-      .repartition(io.writeTasks(chunkStats.iterator.map(_.getInt(0)).toSet.size),
-        col("_p"))
-      .sortWithinPartitions(col("_p"), col("offset")), staging, "_p")
-
     val byPartition = chunkStats.groupBy(_.getInt(0))
       .map { case (p, chunks) => p -> chunks.sortBy(_.getLong(1)) }
-    // promote each partition's single part file to its offset-keyed name,
-    // appId-qualified like the lake's data files: deterministic for THIS
-    // writer's retry (same name overwrites, the reference's offset-keyed
-    // dedup story) but never collidable with a raced peer, whose promote
-    // would otherwise overwrite a committed, manifest-referenced file
-    // before its own commit loses the CAS
-    val published = io.promoteStaged(staging) { (dir, src) =>
-      val p = dir.stripPrefix("_p=").toInt
+    // One file per touched partition, written from the gated batch, not the
+    // chunk-annotated frame, so a payload column named like a chunk column
+    // keeps its values; sorted by offset, which gives parquet row-group
+    // min/max stats their pruning power on resume reads. Each is published
+    // at its offset-keyed name, appId-qualified like the lake's data files:
+    // deterministic for THIS writer's retry (same name overwrites, the
+    // reference's offset-keyed dedup story) but never collidable with a
+    // raced peer, whose publish would otherwise overwrite a committed,
+    // manifest-referenced file before its own commit loses the CAS
+    val published = io.writeBuckets(
+        fresh0.repartition(io.writeTasks(byPartition.size), col("partition")),
+        s"append-$appId-$batchId", Seq("partition"), Seq("offset"),
+        batch.columns.toSeq) { (key, src) =>
+      val p = key.head
       val chunks = byPartition.getOrElse(p, throw new IllegalStateException(
         s"journal append staged partition $p, which the stats pass never " +
           "saw — batch source must be deterministic across scans"))
@@ -188,7 +165,7 @@ final class ChangeJournal(
       // chunks tile the file's byte space from 0
       val byteOffsets = chunks.scanLeft(0L)(_ + _.getLong(5))
       JournalFile(p,
-        published.getOrElse(s"_p=$p", throw new IllegalStateException(
+        published.getOrElse(Seq(p), throw new IllegalStateException(
           s"journal append staged no file for partition $p (stats saw rows) — " +
             "batch source must be deterministic across scans")),
         chunks.map(_.getLong(2)).min, chunks.map(_.getLong(4)).max,
@@ -274,7 +251,8 @@ final class ChangeJournal(
     if (listed.isEmpty) return
     val cutoff = System.currentTimeMillis() - graceMs
     // exact names only: a crash-leaked writeAtomic tmp (….json.tmp-*) is
-    // neither parsed nor reaped as if complete
+    // never parsed as if complete, just deleted once past the grace window
+    val leaked = listed.filter(TableIO.leakedTmp(_, cutoff))
     val ripe = listed.toSeq.flatMap(st => st.getPath.getName match {
       case intentName(v, app) if st.getModificationTime <= cutoff && v.toLong <= committed =>
         Some((st.getPath, v.toLong, app))
@@ -293,11 +271,12 @@ final class ChangeJournal(
       log.retire(log.horizon(below), below): Unit
     }
     ripe.foreach { case (p, _, _) => io.fs.delete(p, false): Unit }
+    leaked.foreach(st => io.fs.delete(st.getPath, false): Unit)
     // cosmetic empty-dir cleanup once everything listed is gone, best-effort
     // ONLY: a concurrent truncator may add an intent after our listing
     // (non-recursive delete of a non-empty dir throws), and a concurrent
     // reaper may have removed the dir already — both races are benign
-    if (ripe.length == listed.length)
+    if (ripe.length + leaked.length == listed.length)
       try io.fs.delete(pendingDir, false): Unit
       catch { case _: java.io.IOException => () }
   }
@@ -341,6 +320,13 @@ final class ChangeJournal(
     * skip-whole-files-behind-the-cursor (S3FilesReader.java:164-171); the
     * residual row filter replaces its in-file record-skip loop (:256-260) —
     * parquet row-group stats prune the rest.
+    *
+    * Files are read under the manifest's schema, never a footer merge (no
+    * footer-reading job per read): a column a file lacks reads as null, and
+    * a file written before an append widened a column reads it as the wider
+    * type — byte, short and int as long or double, float as double. Long
+    * does not read as double, so a journal whose long column an append
+    * widened to double fails loudly at read.
     */
   def readFrom(committed: Map[Int, Long]): DataFrame = {
     val h = log.pin()
@@ -354,9 +340,7 @@ final class ChangeJournal(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], journalSchema(h))
     }
     val pathsAbs = files.map(f => new Path(io.rootPath, f.path).toString)
-    // mergeSchema: appends may add payload columns over time (additive only;
-    // type widening is the lake table's job, which tracks schema versions)
-    val df = spark.read.option("mergeSchema", "true").parquet(pathsAbs: _*)
+    val df = spark.read.schema(journalSchema(h)).parquet(pathsAbs: _*)
     // residual row filter as the O(1) literal gate (LakeTable.offsetGate):
     // no broadcast join in the resume-read plan, and the predicate stays in
     // the scan's own stage

@@ -74,7 +74,7 @@ final class LakeTable(
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** columns that are engine metadata, not user payload */
-  private val metaCols = Seq("partition", "offset", "_sub")
+  private val metaCols = Seq("partition", "offset", "op")
 
   def lastBatchId: Long = log.pin().batchId
 
@@ -187,9 +187,14 @@ final class LakeTable(
 
   /** Apply one batch of change events (ChangeEvent columns + any evolved
     * payload columns). Returns rows applied after dedup, or -1 if the epoch
-    * was fenced off as a replay.
+    * was fenced off as a replay. A batch carrying `_sub` or `_new` (in any
+    * case) is refused before anything is written: those names are the
+    * merge's bucket column and its batch-vs-state tag.
     */
   def merge(batch: DataFrame, batchId: Long): Long = {
+    val reserved = batch.columns.filter(c => Set("_sub", "_new")(SchemaEvolution.keyOf(c)))
+    require(reserved.isEmpty, s"change batch carries ${reserved.mkString(", ")}, which " +
+      s"the merge into $root reserves for its own columns; rename it upstream")
     // ONE snapshot read pins the WHOLE plan (see [[Head]]): the epoch fence,
     // the CAS baseline, the watermark gate, schema ladder, layout and state
     // file set
@@ -247,7 +252,7 @@ final class LakeTable(
       }
     val incomingSchema = StructType(
       deduped.schema.fields.filterNot(f => metaCols.contains(f.name) ||
-        f.name == "op" || droppedKeys.contains(SchemaEvolution.keyOf(f.name))))
+        droppedKeys.contains(SchemaEvolution.keyOf(f.name))))
     val target = oldSchemas.lastOption
       .map(cur => SchemaEvolution.merge(cur, incomingSchema))
       .getOrElse(incomingSchema)
@@ -353,26 +358,12 @@ final class LakeTable(
         if (groupCols.contains(c)) col(c) else col(s"_m.$c")).toIndexedSeq: _*)
     val survivors = merged0.filter(col("op") === "upsert").drop("op")
 
-    // rewrite each touched bucket as exactly one deterministically named file;
-    // `_pp`/`_ss` duplicate the keys for the directory layout only (files stay
-    // self-contained — partitionBy strips its columns from file contents).
-    // sort prefix (_pp, _ss) satisfies the dynamic-partition write's required
-    // ordering — without it FileFormatWriter would insert its own UNSTABLE
-    // prefix-only sort (nondeterministic bytes on retry). The full
-    // (_pp, _ss, repo, path) key keeps retried batches byte-identical and
-    // the sort itself is ELIMINATED at physical planning whenever the
-    // aggregate's ordering reaches here (see groupCols above).
-    val toWrite = survivors
-      .withColumn("_pp", col("partition")).withColumn("_ss", col("_sub"))
-      .sortWithinPartitions(col("_pp"), col("_ss"), col("repo"), col("path"))
-      .drop("_sub")
-    // appId-namespaced: two writers legitimately race one root now (CAS
-    // commit), and their staging must never collide on a shared batchId
-    val staging = new Path(io.rootPath, s"_staging/merge-$appId-$batchId")
-    LakeTable.planHook("merge-write", toWrite)
-    io.writeStaged(toWrite, staging, "_pp", "_ss")
-    mark("write")
-
+    // rewrite each touched bucket as exactly one deterministically named
+    // file; the write's (partition, _sub, repo, path) sort is ELIMINATED at
+    // physical planning, because the aggregate's ordering reaches it (see
+    // groupCols above). The "write" phase ends when the first bucket is
+    // named; the publish and the staging delete after it are "promote".
+    lazy val written: Unit = mark("write")
     // The write evaluated the batch a second time (no persist): it must
     // not have produced any bucket outside the stats pass's touched set —
     // divergence means a nondeterministic source, which would silently
@@ -380,11 +371,14 @@ final class LakeTable(
     // beats silent corruption, and it comes before anything is published.
     // (The converse — a touched bucket with no staged part file — is
     // legal: deletes can empty a bucket.)
-    val newEntries = promote(staging, f"b$batchId%012d", schemaId) { b =>
+    val newEntries = writeBuckets(survivors, s"merge-$appId-$batchId", target, schemaId,
+        f"b$batchId%012d") { b =>
+      written
       require(touched.contains(b),
         s"merge write produced bucket $b outside the stats scan's touched " +
           "set: batch source must be deterministic across scans")
     }
+    written
     mark("promote")
 
     val newWm = wm ++ statRows.map { case (p, maxOff, _, _, _) => p -> maxOff }
@@ -399,24 +393,24 @@ final class LakeTable(
     statRows.map(_._4).sum
   }
 
-  /** Promote a merge/compact staging tree (one dir `_pp={p}/_ss={sub}` per
-    * bucket) to `data/part-{p}-s{sub}-{appId}-{tag}.parquet`: a RETRY of
-    * this writer's batch overwrites its own names (the reference's
-    * offset-keyed dedup story), while a concurrent writer sharing a batchId
-    * — legal now that commits are CAS'd — can never overwrite this writer's
-    * promoted files out from under its committed manifest. `admit` sees
-    * every staged bucket before anything is published and may reject it.
+  /** Write `df`, clustered one task per (partition, _sub) bucket, as one
+    * file per bucket under the file schema of `target`, published at
+    * `data/part-{p}-s{sub}-{appId}-{tag}.parquet`: a RETRY of this writer's
+    * batch overwrites its own names (the reference's offset-keyed dedup
+    * story), while a concurrent writer sharing a batchId — legal now that
+    * commits are CAS'd — can never overwrite this writer's published files
+    * out from under its committed manifest. The staging dir is
+    * `_staging/{staging}`, appId-namespaced for the same reason. `admit`
+    * sees every staged bucket before anything is published and may reject
+    * it.
     */
-  private def promote(staging: Path, tag: String, schemaId: Int)(
-      admit: ((Int, Int)) => Unit): Seq[FileEntry] =
-    io.promoteStaged(staging) { (dir, _) =>
-      val (p, s) = LakeTable.bucketOf(dir)
-      admit((p, s))
-      f"data/part-$p%05d-s$s%04d-$appId-$tag.parquet"
-    }.toSeq.map { case (dir, rel) =>
-      val (p, s) = LakeTable.bucketOf(dir)
-      FileEntry(p, s, rel, schemaId)
-    }
+  private def writeBuckets(df: DataFrame, staging: String, target: StructType,
+      schemaId: Int, tag: String)(admit: ((Int, Int)) => Unit): Seq[FileEntry] =
+    io.writeBuckets(df, staging, Seq("partition", "_sub"), Seq("repo", "path"),
+        fileSchema(target).fieldNames.toSeq) { (key, _) =>
+      admit((key(0), key(1)))
+      f"data/part-${key(0)}%05d-s${key(1)}%04d-$appId-$tag.parquet"
+    }.toSeq.map { case (key, rel) => FileEntry(key(0), key(1), rel, schemaId) }
 
   /** SOFT-drop a payload column: a metadata-only commit appends a new
     * schema version without it. No file is rewritten — old files keep the
@@ -703,23 +697,14 @@ final class LakeTable(
       throw new IllegalStateException(s"cannot compact empty table at $root"))
     val ss = schemasOf(m)
     val version = h.version + 1
-    val staging = new Path(io.rootPath, s"_staging/compact-$appId-$version")
     val live = log.files(h)
     // one file per post-compaction (partition, sub) bucket comes out of
     // this exchange (see TableIO.writeTasks)
     val buckets = live.map(_.partition).distinct.size.toLong * newSubBuckets
-    io.writeStaged(readFiles(live, ss)
-      .withColumn("_sub", subExpr(newSubBuckets))
-      .repartition(io.writeTasks(buckets), col("partition"), col("_sub"))
-      .withColumn("_pp", col("partition")).withColumn("_ss", col("_sub"))
-      .sortWithinPartitions(col("_pp"), col("_ss"), col("repo"), col("path"))
-      .drop("_sub"), staging, "_pp", "_ss")
-    // one recursive listing + promote fan-out on the shared metadata
-    // pool — the old shape was a SERIAL driver loop of listStatus + rename
-    // + footer read per bucket (the r7 VERDICT's measured 100×-scale
-    // bottleneck: ~800k sequential driver RPCs at the published sizing);
-    // bounded parallel renames are the object-store-friendly shape
-    val entries = promote(staging, f"c$version%012d", ss.size - 1)(_ => ())
+    val entries = writeBuckets(readFiles(live, ss)
+        .withColumn("_sub", subExpr(newSubBuckets))
+        .repartition(io.writeTasks(buckets), col("partition"), col("_sub")),
+      s"compact-$appId-$version", ss.last, ss.size - 1, f"c$version%012d")(_ => ())
     io.sweepStaleStaging()
     commit(h, Full(entries), wmOf(h), ss, h.batchId, Nil, newSubBuckets)
   }
@@ -766,14 +751,6 @@ final class LakeTable(
 }
 
 object LakeTable {
-  private val stagedBucketRe = """_pp=(\d+)/_ss=(\d+)""".r
-
-  /** (partition, sub) of a merge/compact staging tree's bucket dir */
-  private def bucketOf(dir: String): (Int, Int) = dir match {
-    case stagedBucketRe(p, s) => (p.toInt, s.toInt)
-    case _ => throw new IllegalArgumentException(s"unrecognized staged bucket dir $dir")
-  }
-
   /** Bucket files this small pay more in promote RPCs, manifest entries and
     * parquet footers than they save in pruning (measured: the clustered-key
     * amplification study's 30k-file row ballooned live bytes 11.9 → 93 MB
@@ -853,14 +830,6 @@ object LakeTable {
     } else coalesce(element_at(typedlit(gate), col("partition")), lit(Long.MinValue))
     batch.filter(if (strict) col("offset") > g else col("offset") >= g)
   }
-
-  /** Audit seam: receives the merge's final write frame just before its
-    * write action, so LakeSpec can assert the foreachBatch job's physical
-    * plan (the union→repartition→max_by→clustered-write chain) is one
-    * Exchange and one Sort. A no-op lambda in production.
-    */
-  @volatile private[graft] var planHook: (String, DataFrame) => Unit =
-    (_, _) => ()
 
   /** Cumulative per-phase merge wall seconds (stats/write/promote/commit)
     * across every merge in this JVM. Bench snapshots-and-resets it around

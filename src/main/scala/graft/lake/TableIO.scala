@@ -3,6 +3,7 @@ package graft.lake
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, FsConstants, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import java.nio.charset.StandardCharsets
 
 /** Filesystem plumbing shared by the journal, the lake table and the
@@ -24,6 +25,13 @@ object TableIO {
     * object-store failure. Production never touches it.
     */
   @volatile private[graft] var faultHook: String => Unit = _ => ()
+
+  /** Audit seam: receives each [[TableIO.writeBuckets]] frame just before
+    * its write action, tagged by the staging op (`merge`, `compact`,
+    * `append`), so specs can assert the write job's physical plan. A no-op
+    * in production.
+    */
+  @volatile private[graft] var planHook: (String, DataFrame) => Unit = (_, _) => ()
 
   /** Write-time Hadoop overrides for the engine's STAGING parquet writes
     * (merge/append/compact). These dirs are consumed solely by our own
@@ -105,6 +113,15 @@ object TableIO {
     * dominates. Manifests and snapshots are tiny JSON and unaffected.
     */
   private[lake] val dataCodec = "zstd"
+
+  /** Whether `st` is a `*.tmp-{pid}-{nanos}` file of an atomic publish
+    * (putAtomic / putIfAbsent / a CAS marker claim) last written before
+    * `cutoff`: a crashed writer's leak, never a live peer's in-flight tmp,
+    * which is younger than its own batch.
+    */
+  private[lake] def leakedTmp(st: org.apache.hadoop.fs.FileStatus, cutoff: Long): Boolean =
+    st.isFile && st.getPath.getName.matches(""".*\.tmp-\d+-\d+""") &&
+      st.getModificationTime < cutoff
 }
 
 /** A conditional snapshot publish lost its compare-and-swap: another writer
@@ -588,33 +605,59 @@ final class TableIO(val root: String, spark: SparkSession,
     math.min(buckets, spark.sessionState.conf.numShufflePartitions.toLong)
       .max(1L).toInt
 
-  /** Write `df` as the staged parquet tree under `staging` (wiped first, so
-    * a retried batch starts clean), one directory per value of
-    * `partitionBy`, with the data codec and the staging committer options.
+  /** Write `df` as one parquet file per bucket and publish them — the one
+    * lifecycle every table write runs, the reference's per-partition writer
+    * (group by TopicPartition, write, finish, upload, clean up;
+    * S3SinkTask.java:107-178). A bucket is one value of the integer columns
+    * `keys`, and the caller clusters `df` one task per bucket (an exchange
+    * on `keys` sized by [[writeTasks]]), so each bucket dir holds one part.
+    *
+    * The staged tree goes under `_staging/{staging}` (`{op}-{appId}-{id}`,
+    * wiped first, so a retried batch starts clean), one directory per key,
+    * on a copy of each key column: partitionBy strips its columns from the
+    * files, which must stay self-contained (the manifest, not the path, is
+    * the source of truth). Each copy is named like no column of `df`,
+    * case-insensitively, so a payload column is never overwritten by one or
+    * ambiguous with it. The sort by (copies, `order`) is the ordering
+    * FileFormatWriter requires of a dynamic-partition write: without it the
+    * writer inserts its own UNSTABLE prefix-only sort (rows in a different
+    * order on retry), and when `df` already arrives in that order the sort
+    * is removed as redundant. The files hold `columns`; [[planHook]] sees
+    * the final frame, tagged by `op`.
+    *
+    * ONE listing of the staged tree finds each bucket's part (no
+    * per-bucket probes: on an object store it is one paged LIST).
+    * `dest(key, part)` names each root-relative destination before anything
+    * is published and may throw to reject a bucket. Returns key →
+    * destination.
     */
-  def writeStaged(df: DataFrame, staging: Path, partitionBy: String*): Unit = {
-    fs.delete(staging, true)
-    df.write.mode("overwrite").partitionBy(partitionBy: _*)
+  def writeBuckets(df: DataFrame, staging: String, keys: Seq[String], order: Seq[String],
+      columns: Seq[String])(dest: (Seq[Int], Path) => String): Map[Seq[Int], String] = {
+    val taken = df.columns.map(SchemaEvolution.keyOf).toSet
+    val dirs = keys.indices.map(i => Iterator.iterate(s"_b$i")("_" + _).find(!taken(_)).get)
+    val out = df.select(col("*") +: keys.zip(dirs).map { case (k, d) => col(k).as(d) }: _*)
+      .sortWithinPartitions((dirs ++ order).map(col): _*)
+      .select((columns ++ dirs).map(col): _*)
+    TableIO.planHook(staging.takeWhile(_ != '-'), out)
+    val stagingPath = new Path(rootPath, s"_staging/$staging")
+    fs.delete(stagingPath, true)
+    out.write.mode("overwrite").partitionBy(dirs: _*)
       .option("compression", TableIO.dataCodec)
       .options(TableIO.stagingWriteOptions ++ writeOptions)
-      .parquet(staging.toString)
-  }
-
-  /** Promote the staged write tree under `staging` and delete it — the
-    * step every table write ends in. ONE recursive listing finds each
-    * bucket dir's single part file (no per-bucket probes: on an object
-    * store the listing is one paged LIST); `dest(bucketDir, part)` names its
-    * root-relative destination, e.g. `_pp=3/_ss=7` or `_p=2` to a
-    * `data/...` name, and may throw to reject a bucket before anything is
-    * published. Returns bucket dir → destination.
-    */
-  def promoteStaged(staging: Path)(dest: (String, Path) => String): Map[String, String] = {
-    val named = listStagedParts(staging).toSeq.sortBy(_._1).map {
-      case (bucket, src) => (bucket, src, dest(bucket, src))
+      .parquet(stagingPath.toString)
+    def bucketKey(bucket: String): Seq[Int] = {
+      val segs = bucket.split('/').toSeq
+      require(segs.map(_.takeWhile(_ != '=')) == dirs,
+        s"unrecognized staged bucket dir $bucket under $stagingPath")
+      segs.map(s => s.drop(s.indexOf('=') + 1).toInt)
+    }
+    val named = listStagedParts(stagingPath).toSeq.sortBy(_._1).map { case (bucket, src) =>
+      val key = bucketKey(bucket)
+      (key, src, dest(key, src))
     }
     publish(Seq(named.map { case (_, src, rel) => src -> new Path(rootPath, rel) }))
-    fs.delete(staging, true)
-    named.map { case (bucket, _, rel) => bucket -> rel }.toMap
+    fs.delete(stagingPath, true)
+    named.map { case (key, _, rel) => key -> rel }.toMap
   }
 
   /** Each staged write tree bucket dir (relative) → its single part file.
@@ -718,8 +761,7 @@ final class TableIO(val root: String, spark: SparkSession,
     val cutoff = System.currentTimeMillis() - graceMs
     def reapTmps(listed: Array[org.apache.hadoop.fs.FileStatus]): Unit =
       listed.foreach { st =>
-        if (st.isFile && st.getPath.getName.matches(""".*\.tmp-\d+-\d+""") &&
-            st.getModificationTime < cutoff)
+        if (TableIO.leakedTmp(st, cutoff))
           try fs.delete(st.getPath, false): Unit catch { case _: Throwable => () }
       }
     val top = listOrEmpty(rootPath)

@@ -64,23 +64,29 @@ object Chunker {
       .drop("_run_bytes")
   }
 
-  /** Roll chunk assignments up to ChunkDescriptor rows — the manifest stats
-    * (port of common/.../json/ChunkDescriptor.java:8-22 +
-    * BlockGZIPFileWriter.java:52-60). `byte_offset` is the running sum of
-    * preceding chunks' byte lengths within the partition, so descriptors
-    * tile the byte space exactly as the reference's index JSON does.
+  /** Roll chunk assignments up to one row per (partition, chunk_id):
+    * `first_record_offset`, `num_records`, `max_offset` and
+    * `byte_length_uncompressed` — the journal append's manifest stats (port
+    * of common/.../json/ChunkDescriptor.java:8-22 +
+    * BlockGZIPFileWriter.java:52-60).
     */
-  def chunkDescriptors(withChunks: DataFrame): DataFrame = {
-    val agg = withChunks
+  def chunkStats(withChunks: DataFrame): DataFrame =
+    withChunks
       .groupBy(col("partition"), col("chunk_id"))
       .agg(
         min(col("offset")).as("first_record_offset"),
         count(lit(1)).as("num_records"),
         max(col("offset")).as("max_offset"),
         sum(col("bytes_uncompressed")).as("byte_length_uncompressed"))
+
+  /** [[chunkStats]] plus `byte_offset`: the running sum of preceding
+    * chunks' byte lengths within the partition, so descriptors tile the
+    * byte space exactly as the reference's index JSON does.
+    */
+  def chunkDescriptors(withChunks: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("partition")).orderBy(col("chunk_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    agg.withColumn("byte_offset",
+    chunkStats(withChunks).withColumn("byte_offset",
       sum(col("byte_length_uncompressed")).over(w) - col("byte_length_uncompressed"))
   }
 }

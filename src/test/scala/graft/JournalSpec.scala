@@ -1,7 +1,7 @@
 package graft
 
 import graft.gen.ChangeGen
-import graft.lake.ChangeJournal
+import graft.lake.{ChangeJournal, TableIO}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -308,6 +308,103 @@ class JournalSpec extends AnyFunSuite {
     assert(Files.exists(intent(1, "peer")), "an intent above the head waits for its commit")
     assert(live.forall(p => Files.exists(Paths.get(root, p))), "no live file is deleted")
     assert(j.read().count() === 200L)
+  }
+
+  test("a crash-leaked commit-intent tmp is reclaimed past grace; pending-delete/ goes") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val root = SparkTestSession.tempDir("jtmp")
+    val j = new ChangeJournal(root, spark, 4096)
+    j.append(ChangeGen.changes(spark, 100, partitions = 2), 0L)
+    // what truncates that died between an intent's tmp create and its
+    // rename leave: the tmp and its .crc; the young one may be a live
+    // peer's in-flight intent
+    val fs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    def tmp(n: Int) = new Path(root, s"pending-delete/v000000000001-graft.json.tmp-4242-$n")
+    Seq(1, 2).foreach { n =>
+      val out = fs.create(tmp(n))
+      try out.write("{\"paths\":[".getBytes("UTF-8")) finally out.close()
+    }
+    assert(new java.io.File(root, "pending-delete/.v000000000001-graft.json.tmp-4242-1.crc").exists)
+    fs.setTimes(tmp(1), System.currentTimeMillis() - 3600000L, -1L)
+    assert(j.truncate(Map(0 -> -1L, 1 -> -1L), graceMs = 60000L) === 0)
+    assert(!fs.exists(tmp(1)), "a tmp past the grace window goes")
+    assert(fs.exists(tmp(2)), "a young tmp waits")
+    fs.setTimes(tmp(2), System.currentTimeMillis() - 3600000L, -1L)
+    assert(j.truncate(Map(0 -> -1L, 1 -> -1L), graceMs = 60000L) === 0)
+    assert(!new java.io.File(root, "pending-delete").exists,
+      "once everything listed is gone, pending-delete/ goes too")
+    assert(j.read().count() === 100L)
+  }
+
+  test("reads stay whole across a widening append (int score, then long score + license)") {
+    val root = SparkTestSession.tempDir("jwiden")
+    val j = new ChangeJournal(root, spark, 4096)
+    val changes = ChangeGen.changes(spark, 200, nKeys = 40, partitions = 2)
+    j.append(changes.filter(col("offset") < 50)
+      .withColumn("score", col("offset").cast("int")), 0L)
+    j.append(changes.filter(col("offset") >= 50)
+      .withColumn("score", col("offset") * 1000000000L)
+      .withColumn("license", lit("mit")), 1L)
+    val got = j.read()
+    assert(got.schema("score").dataType === org.apache.spark.sql.types.LongType)
+    assert(got.count() === 200L)
+    assert(got.filter(col("offset") < 50 &&
+      (col("score") =!= col("offset") || col("license").isNotNull)).isEmpty,
+      "rows written before the widening read their int score as long, license null")
+    assert(got.filter(col("offset") >= 50 &&
+      (col("score") =!= col("offset") * 1000000000L || col("license") =!= "mit")).isEmpty)
+    assert(j.readFrom(Map(0 -> 9L, 1 -> 9L)).count() === 180L)
+  }
+
+  test("payload columns named like engine internals round-trip") {
+    // the bucketed write's directory copy and the chunk stats' columns
+    // never overwrite a payload column
+    val changes = ChangeGen.changes(spark, 300, nKeys = 40, partitions = 3)
+    val batch = changes
+      .withColumn("_p", (col("offset") % 7).cast("int"))
+      .withColumn("chunk_id", lit(99))
+      .withColumn("bytes_uncompressed", lit(77L))
+      .withColumn("_b0", col("offset") * 2L)
+    val j = new ChangeJournal(SparkTestSession.tempDir("jinternal"), spark, 2048)
+    assert(j.append(batch, 0L) === 300L)
+    val got = j.read().select(batch.columns.toSeq.map(col): _*)
+    assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
+    // the manifest's chunks are the engine's: 2,048-byte chunks, not one
+    // chunk 99 per partition
+    assert(j.chunkIndex().count() > 3L)
+  }
+
+  test("the append write job is one Exchange on partition, one Sort, no Window") {
+    // the chunk window feeds only the stats pass; the write is the gated
+    // batch clustered one task per partition and sorted by offset
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val changes = ChangeGen.changes(spark, 400, nKeys = 40, partitions = 3)
+    val j = new ChangeJournal(SparkTestSession.tempDir("jplan"), spark, 2048)
+    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    TableIO.planHook = (tag, df) => if (tag == "append") frames += df
+    try {
+      j.append(changes.filter(col("offset") < 60), 0L) // ungated
+      j.append(changes, 1L) // gated
+    } finally TableIO.planHook = (_, _) => ()
+    assert(frames.size === 2)
+    frames.foreach { df =>
+      val plan = SparkTestSession.initialPlan(df)
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size === 1, plan)
+      shuffles.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.collect { case a: Attribute => a.name } === Seq("partition"), plan)
+        case other => fail(s"expected a hash exchange, got $other\n$plan")
+      }
+      assert(plan.collect { case s: SortExec => s }.size === 1, plan)
+      assert(plan.collect { case w: WindowExec => w }.isEmpty, plan)
+    }
+    assert(j.read().count() === 400L)
   }
 
   test("multi-append: offsets continue, journal holds the full log") {

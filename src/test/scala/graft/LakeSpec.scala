@@ -1,7 +1,7 @@
 package graft
 
 import graft.gen.ChangeGen
-import graft.lake.{LakeTable, SchemaEvolution}
+import graft.lake.{LakeTable, SchemaEvolution, TableIO}
 import graft.pipeline.CdcPipeline
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -120,24 +120,20 @@ class LakeSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.{CollectMetricsExec, SortExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     val changes = ChangeGen.changes(spark, 800, nKeys = 100, partitions = 4,
       deletePct = 10)
     val lake = new LakeTable(SparkTestSession.tempDir("lakeplan"), spark,
       subBuckets = 4)
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    LakeTable.planHook = (tag, df) => if (tag == "merge-write") frames += df
+    TableIO.planHook = (tag, df) => if (tag == "merge") frames += df
     try {
       lake.merge(changes.filter(col("offset") < 100), 0L) // no state yet
       lake.merge(changes.filter(col("offset") >= 100), 1L) // gated, with state
-    } finally LakeTable.planHook = (_, _) => ()
+    } finally TableIO.planHook = (_, _) => ()
     assert(frames.size === 2)
     frames.foreach { df =>
-      val plan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
+      val plan = SparkTestSession.initialPlan(df)
       val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
       assert(shuffles.size === 1, plan)
       val keys = shuffles.head.outputPartitioning match {
@@ -149,6 +145,69 @@ class LakeSpec extends AnyFunSuite {
       assert(plan.collect { case c: CollectMetricsExec => c }.isEmpty, plan)
       assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan)
     }
+    assertMatchesOracle(lake, changes)
+  }
+
+  test("the compact write job is one Exchange and one Sort") {
+    // compact's exchange on the new file key clusters one task per bucket,
+    // and the write's own sort is the only one
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val changes = ChangeGen.changes(spark, 600, nKeys = 100, partitions = 4,
+      deletePct = 10)
+    val lake = new LakeTable(SparkTestSession.tempDir("lakecplan"), spark,
+      subBuckets = 4)
+    lake.merge(changes, 0L)
+    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    TableIO.planHook = (tag, df) => if (tag == "compact") frames += df
+    try lake.compact(8)
+    finally TableIO.planHook = (_, _) => ()
+    assert(frames.size === 1)
+    val plan = SparkTestSession.initialPlan(frames.head)
+    val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size === 1, plan)
+    shuffles.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.collect { case a: Attribute => a.name } === Seq("partition", "_sub"), plan)
+      case other => fail(s"expected a hash exchange, got $other\n$plan")
+    }
+    assert(plan.collect { case s: SortExec => s }.size === 1, plan)
+    assertMatchesOracle(lake, changes)
+  }
+
+  test("payload columns named like engine internals are stored, or refused") {
+    // the bucketed write's directory copies never overwrite a payload
+    // column; the merge's own `_sub` and `_new` refuse the batch instead
+    val changes = ChangeGen.changes(spark, 400, nKeys = 60, partitions = 4,
+      deletePct = 0)
+    val batch = changes
+      .withColumn("_pp", concat(lit("pp-"), col("offset").cast("string")))
+      .withColumn("_ss", (col("offset") * 3).cast("int"))
+      .withColumn("_b0", col("offset") + 7L)
+    val lake = new LakeTable(SparkTestSession.tempDir("lakeinternal"), spark,
+      subBuckets = 4)
+    lake.merge(batch, 0L)
+    val got = lake.read()
+    assert(got.count() === ChangeGen.oracleFinalState(changes).count())
+    assert(got.filter(col("_pp") === concat(lit("pp-"), col("offset").cast("string")) &&
+      col("_ss") === col("offset") * 3 && col("_b0") === col("offset") + 7L)
+      .count() === got.count(), "payload columns must read back as written")
+    assertMatchesOracle(lake, changes)
+
+    val version = lake.currentVersion
+    def files(dir: String) = Option(new java.io.File(lake.root, dir).list).toSeq.flatten.toSet
+    val dataFiles = files("data")
+    Seq("_sub", "_NEW").foreach { c =>
+      val e = intercept[IllegalArgumentException](
+        lake.merge(changes.withColumn("offset", col("offset") + 1000L)
+          .withColumn(c, lit(1)), 1L))
+      assert(e.getMessage.contains(c))
+    }
+    assert(lake.currentVersion === version, "a refused batch commits nothing")
+    assert(files("data") === dataFiles && files("_staging").isEmpty, "and writes nothing")
     assertMatchesOracle(lake, changes)
   }
 
