@@ -4,7 +4,7 @@ import graft.operators.Chunker
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import scala.collection.immutable.SortedMap
 
@@ -68,8 +68,9 @@ final class ChangeJournal(
   private def nextOffsetsOf(m: Option[JournalManifest]): Map[Int, Long] =
     m.map(_.partitions.map { case (p, n) => p -> n.nextOffset }).getOrElse(Map.empty)
 
-  private def schemaOf(m: JournalManifest): StructType =
-    DataType.fromJson(m.schema).asInstanceOf[StructType]
+  /** every schema version the journal has committed; last is current */
+  private def schemasOf(h: Head[JournalManifest]): IndexedSeq[StructType] =
+    h.manifest.map(m => SchemaEvolution.ladder(m.schemas)).getOrElse(IndexedSeq.empty)
 
   // ---- append (the sink) ------------------------------------------------
 
@@ -83,28 +84,26 @@ final class ChangeJournal(
     * Returns the number of rows appended.
     */
   def append(batch: DataFrame, batchId: Long): Long = {
-    // journal stores exactly the batch's schema (schema-flexible: evolved
-    // payload columns flow straight through; only the meta trio is required
+    // journal stores the batch under its schema ladder (schema-flexible:
+    // evolved payload columns flow through; only the meta trio is required
     // — validate BEFORE any plan references the columns)
     val required = Seq("partition", "offset", "op")
     require(required.forall(batch.columns.contains),
       s"change batch must carry ${required.mkString(",")}; got ${batch.columns.mkString(",")}")
 
     // ONE snapshot read pins the whole plan (see [[Head]]): fence, CAS
-    // baseline, previous schema, resume offsets
+    // baseline, schema ladder, resume offsets
     val h = log.pin()
     if (log.isReplayOf(h, batchId)) return 0L // fenced replay: already durable
-    val m0 = h.manifest
 
-    // the journal's current schema is KNOWN at every commit (this batch's
-    // columns merged additively over the previous manifest's schema), so
-    // persist it — a caught-up reader must not have to open parquet footers
-    // to learn it (that scan grows O(total journal files) with history)
-    val mergedSchema = m0.map(schemaOf)
-      .map(prev => SchemaEvolution.merge(prev, batch.schema))
-      .getOrElse(batch.schema)
+    // the journal's schema ladder is KNOWN at every commit (this batch's
+    // columns merged over the current rung), so persist it — a caught-up
+    // reader must not have to open parquet footers to learn it (that scan
+    // grows O(total journal files) with history). This append's files are
+    // written under the last rung, so a reader reads them under it.
+    val ladder = SchemaEvolution.evolve(schemasOf(h), batch.schema)
 
-    val next = nextOffsetsOf(m0)
+    val next = nextOffsetsOf(h.manifest)
 
     // offset-skip gate (P2): drop rows the journal already has — an
     // O(1)-per-row literal lookup, not a broadcast join (the join shipped a
@@ -124,7 +123,7 @@ final class ChangeJournal(
     // LakeTable.merge). Recompute is safe: sources are deterministic.
     val chunkStats = Chunker.chunkStats(Chunker.assignChunks(fresh0, chunkBytes)).collect()
     if (chunkStats.isEmpty) {
-      commitManifest(h, Nil, next, batchId, mergedSchema)
+      commitManifest(h, Nil, next, batchId, ladder)
       return 0L
     }
 
@@ -139,10 +138,10 @@ final class ChangeJournal(
     // reference's offset-keyed dedup story) but never collidable with a
     // raced peer, whose publish would otherwise overwrite a committed,
     // manifest-referenced file before its own commit loses the CAS
-    val published = io.writeBuckets(
-        fresh0.repartition(io.writeTasks(byPartition.size), col("partition")),
+    val published = io.writeBuckets(SchemaEvolution.align(fresh0, ladder.last)
+        .repartition(io.writeTasks(byPartition.size), col("partition")),
         s"append-$appId-$batchId", Seq("partition"), Seq("offset"),
-        batch.columns.toSeq) { (key, src) =>
+        ladder.last.fieldNames.toSeq) { (key, src) =>
       val p = key.head
       val chunks = byPartition.getOrElse(p, throw new IllegalStateException(
         s"journal append staged partition $p, which the stats pass never " +
@@ -171,13 +170,13 @@ final class ChangeJournal(
         chunks.map(_.getLong(2)).min, chunks.map(_.getLong(4)).max,
         chunks.toSeq.zip(byteOffsets).map { case (r, at) =>
           JournalChunk(r.getLong(2), r.getLong(3), at, r.getLong(5))
-        })
+        }, ladder.size - 1)
     }
 
     val newNext = next ++ byPartition.map { case (p, chunks) =>
       p -> (chunks.map(_.getLong(4)).max + 1L)
     }
-    commitManifest(h, newFiles, newNext, batchId, mergedSchema)
+    commitManifest(h, newFiles, newNext, batchId, ladder)
     chunkStats.map(_.getLong(3)).sum
   }
 
@@ -213,7 +212,7 @@ final class ChangeJournal(
   def truncate(watermarks: Map[Int, Long],
       graceMs: Long = 24L * 3600 * 1000): Int = {
     // one pinned head for the whole pass (see [[Head]]): the plan, the
-    // schema carried over and the commit baseline are one version
+    // ladder carried over and the commit baseline are one version
     val h = log.pin()
     val dead = log.files(h).filter(f => watermarks.get(f.partition).exists(f.maxOffset <= _))
     if (dead.nonEmpty) {
@@ -221,7 +220,7 @@ final class ChangeJournal(
       // atomic, never a bare create: a torn intent would fail every reap's parse
       io.writeAtomic(new Path(pendingDir, f"v${h.version + 1}%012d-$appId.json"),
         Json.write(Tombstone(paths)))
-      commitManifest(h, Nil, nextOffsetsOf(h.manifest), h.batchId, journalSchema(h),
+      commitManifest(h, Nil, nextOffsetsOf(h.manifest), h.batchId, schemasOf(h),
         removed = paths)
     }
     reapPending(graceMs, if (dead.nonEmpty) h.version + 1 else h.version)
@@ -281,25 +280,17 @@ final class ChangeJournal(
       catch { case _: java.io.IOException => () }
   }
 
-  /** The journal's schema at head `h`: the manifest's, or the minimal meta
-    * trio for an empty journal.
-    */
-  private def journalSchema(h: Head[JournalManifest]): StructType =
-    h.manifest.map(schemaOf).getOrElse(StructType(Seq(
-      StructField("partition", IntegerType),
-      StructField("offset", LongType),
-      StructField("op", StringType))))
-
   /** Commit this batch's change — `added` files and/or `removed` paths
     * (truncation) — on top of the pinned head's listing, written as a delta
     * except at checkpoint cadence or first commit. Returns the manifest
     * written.
     */
   private def commitManifest(planned: Head[JournalManifest], added: Seq[JournalFile],
-      next: Map[Int, Long], batchId: Long, schema: StructType,
+      next: Map[Int, Long], batchId: Long, ladder: IndexedSeq[StructType],
       removed: Seq[String] = Nil): JournalManifest =
     log.commit(planned, batchId, Delta(removed, added)) { c =>
-      JournalManifest(c.version, c.batchId, c.appId, schema.json, c.checkpointVersion,
+      JournalManifest(c.version, c.batchId, c.appId, ladder.last.json,
+        Some(ladder.init.map(_.json)).filter(_.nonEmpty), c.checkpointVersion,
         SortedMap.from(next.map { case (p, o) => p -> NextOffset(o) }),
         files = if (c.full) Some(c.files) else None,
         added = if (c.full) None else Some(added),
@@ -321,26 +312,22 @@ final class ChangeJournal(
     * residual row filter replaces its in-file record-skip loop (:256-260) —
     * parquet row-group stats prune the rest.
     *
-    * Files are read under the manifest's schema, never a footer merge (no
-    * footer-reading job per read): a column a file lacks reads as null, and
-    * a file written before an append widened a column reads it as the wider
-    * type — byte, short and int as long or double, float as double. Long
-    * does not read as double, so a journal whose long column an append
-    * widened to double fails loudly at read.
+    * Each file is read under the schema version it was written with, from
+    * the manifest, never a footer merge (no footer-reading job per read),
+    * then aligned to the current one (see [[SchemaEvolution.read]]).
     */
   def readFrom(committed: Map[Int, Long]): DataFrame = {
     val h = log.pin()
     val files = log.files(h).filter(f => committed.get(f.partition).forall(f.maxOffset > _))
-    if (files.isEmpty) {
-      // fully-caught-up resume must still carry the journal's schema, not a
-      // zero-column frame (downstream selects/aggs would fail to resolve);
-      // a frequent poller reads it from the manifest, not from footers (see
-      // append)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], journalSchema(h))
-    }
-    val pathsAbs = files.map(f => new Path(io.rootPath, f.path).toString)
-    val df = spark.read.schema(journalSchema(h)).parquet(pathsAbs: _*)
+    // fully-caught-up resume must still carry the journal's schema, not a
+    // zero-column frame (downstream selects/aggs would fail to resolve); an
+    // empty journal carries the meta trio
+    val ladder = Some(schemasOf(h)).filter(_.nonEmpty).getOrElse(IndexedSeq(StructType(Seq(
+      StructField("partition", IntegerType),
+      StructField("offset", LongType),
+      StructField("op", StringType)))))
+    val df = SchemaEvolution.read(spark, ladder,
+      files.map(f => f.schemaId -> new Path(io.rootPath, f.path).toString))
     // residual row filter as the O(1) literal gate (LakeTable.offsetGate):
     // no broadcast join in the resume-read plan, and the predicate stays in
     // the scan's own stage

@@ -4,7 +4,7 @@ import graft.model.LineageRow
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import scala.collection.immutable.SortedMap
 
@@ -100,7 +100,7 @@ final class LakeTable(
     h.manifest.map(_.watermarks).getOrElse(Map.empty)
 
   private def schemasOf(m: LakeManifest): IndexedSeq[StructType] =
-    m.schemas.map(DataType.fromJson(_).asInstanceOf[StructType]).toIndexedSeq
+    SchemaEvolution.ladder(m.schemas)
 
   /** All schema versions ever committed; last is current. */
   private def schemasOf(h: Head[LakeManifest]): IndexedSeq[StructType] =
@@ -144,7 +144,8 @@ final class LakeTable(
     */
   def read(): DataFrame = {
     val h = log.pin()
-    readFiles(log.files(h), schemasOf(h))
+    val m = h.manifest.getOrElse(throw new IllegalStateException(s"empty lake table at $root"))
+    readLadder(log.files(h), schemasOf(m))
   }
 
   /** Time travel: the table state as of snapshot `version`, under that
@@ -156,7 +157,7 @@ final class LakeTable(
   def readVersion(version: Long): DataFrame = {
     val m = log.manifestAt(version).getOrElse(throw new IllegalArgumentException(
       s"no manifest for version $version at $root (vacuumed or never committed)"))
-    readFiles(log.resolve(m), schemasOf(m))
+    readLadder(log.resolve(m), schemasOf(m))
   }
 
   /** Physical file schema = (partition, offset) provenance + that file's
@@ -168,20 +169,10 @@ final class LakeTable(
         org.apache.spark.sql.types.StructField("offset",
           org.apache.spark.sql.types.LongType, nullable = false)) ++ payload.fields)
 
-  private def readFiles(files: Seq[FileEntry], ss: IndexedSeq[StructType]): DataFrame = {
-    val target = ss.lastOption.getOrElse(
-      throw new IllegalStateException(s"empty lake table at $root"))
-    val groups = files.groupBy(_.schemaId)
-    if (groups.isEmpty) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fileSchema(target))
-    }
-    groups.toSeq.sortBy(_._1).map { case (sid, fs) =>
-      val paths = fs.map(f => new Path(io.rootPath, f.path).toString)
-      val raw = spark.read.schema(fileSchema(ss(sid))).parquet(paths: _*)
-      SchemaEvolution.align(raw, fileSchema(target))
-    }.reduce(_.unionByName(_))
-  }
+  /** `files` through the ladder read, each rung with its provenance columns */
+  private def readLadder(files: Seq[FileEntry], ss: IndexedSeq[StructType]): DataFrame =
+    SchemaEvolution.read(spark, ss.map(fileSchema),
+      files.map(f => f.schemaId -> new Path(io.rootPath, f.path).toString))
 
   // ---- merge (the MERGE INTO) ----------------------------------------------
 
@@ -253,13 +244,8 @@ final class LakeTable(
     val incomingSchema = StructType(
       deduped.schema.fields.filterNot(f => metaCols.contains(f.name) ||
         droppedKeys.contains(SchemaEvolution.keyOf(f.name))))
-    val target = oldSchemas.lastOption
-      .map(cur => SchemaEvolution.merge(cur, incomingSchema))
-      .getOrElse(incomingSchema)
-    val newSchemas =
-      if (oldSchemas.lastOption.contains(target)) oldSchemas
-      else oldSchemas :+ target
-    val schemaId = newSchemas.size - 1
+    val newSchemas = SchemaEvolution.evolve(oldSchemas, incomingSchema)
+    val (target, schemaId) = (newSchemas.last, newSchemas.size - 1)
 
     val sb = subBucketsOf(h)
     val withSub = deduped.withColumn("_sub", subExpr(sb))
@@ -298,20 +284,14 @@ final class LakeTable(
     // buckets never leave disk; a file IS one bucket, so reading the touched
     // files is exactly reading the touched buckets)
     val state = if (touchedFiles.isEmpty) None else Some(
-      readFiles(touchedFiles, oldSchemas).withColumn("_sub", subExpr(sb)))
+      readLadder(touchedFiles, oldSchemas).withColumn("_sub", subExpr(sb)))
 
     // MERGE: new versions win over state rows for the same key; deletes drop
-    def shape(df: DataFrame): DataFrame = {
-      // one select: meta columns + payload aligned to the target schema
-      val have = df.columns.toSet
-      df.select(
-        (Seq(col("partition"), col("_sub"), col("offset"),
-          (if (have.contains("op")) col("op") else lit("upsert")).as("op")) ++
-          target.fields.toSeq.map { f =>
-            if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }): _*)
-    }
+    // one select: meta columns + payload aligned to the target schema
+    def shape(df: DataFrame): DataFrame = df.select(
+      Seq(col("partition"), col("_sub"), col("offset"),
+        (if (df.columns.contains("op")) col("op") else lit("upsert")).as("op")) ++
+        SchemaEvolution.project(df.columns.toSeq, target): _*)
     // ONE shuffle for the whole MERGE: union the raw batch (tagged _new=1)
     // with the touched state (tagged _new=0), repartition by the file key
     // (partition, _sub), then hash-aggregate max_by over (_new, offset) per
@@ -448,7 +428,8 @@ final class LakeTable(
     require(next.fields.nonEmpty, "cannot drop the last payload column")
     // same empty-delta commit shape as a no-row merge: live files, batch
     // fence, and watermarks all carry over; only the ladder grows
-    commit(h, Delta(Nil, Nil), wmOf(h), ss :+ next, h.batchId, Nil, subBucketsOf(h))
+    commit(h, Delta(Nil, Nil), wmOf(h), SchemaEvolution.grow(ss, next), h.batchId, Nil,
+      subBucketsOf(h))
   }
 
   /** A `Full` change replaces the live-file set wholesale (compaction); a
@@ -701,7 +682,7 @@ final class LakeTable(
     // one file per post-compaction (partition, sub) bucket comes out of
     // this exchange (see TableIO.writeTasks)
     val buckets = live.map(_.partition).distinct.size.toLong * newSubBuckets
-    val entries = writeBuckets(readFiles(live, ss)
+    val entries = writeBuckets(readLadder(live, ss)
         .withColumn("_sub", subExpr(newSubBuckets))
         .repartition(io.writeTasks(buckets), col("partition"), col("_sub")),
       s"compact-$appId-$version", ss.last, ss.size - 1, f"c$version%012d")(_ => ())

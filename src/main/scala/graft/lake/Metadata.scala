@@ -1,6 +1,6 @@
 package graft.lake
 
-import com.fasterxml.jackson.annotation.JsonProperty
+import com.fasterxml.jackson.annotation.{JsonInclude, JsonProperty}
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import graft.model.LineageRow
 
@@ -76,25 +76,30 @@ final case class JournalChunk(
     @JsonProperty("byte_offset") byteOffset: Long,
     @JsonProperty("byte_length_uncompressed") byteLengthUncompressed: Long)
 
-/** One journal data file: one partition's rows of one append. */
+/** One journal data file: one partition's rows of one append, and the
+  * schema version it was written under (absent on disk while it is 0).
+  */
 final case class JournalFile(
     partition: Int,
     path: String,
     @JsonProperty("first_record_offset") firstRecordOffset: Long,
     @JsonProperty("max_offset") maxOffset: Long,
-    chunks: Seq[JournalChunk])
+    chunks: Seq[JournalChunk],
+    @JsonInclude(JsonInclude.Include.NON_DEFAULT) schemaId: Int = 0)
 
 final case class NextOffset(nextOffset: Long)
 
 /** A journal manifest. A checkpoint lists every live file in `files`; a
   * delta lists an append's new files in `added` and a truncate's dropped
-  * paths in `removed`.
+  * paths in `removed`. `schema` is the current schema version; the earlier
+  * ones, oldest first, are absent until the schema first changes.
   */
 final case class JournalManifest(
     version: Long,
     batchId: Long,
     appId: String,
     schema: String, // StructType JSON
+    earlierSchemas: Option[Seq[String]] = None,
     checkpointVersion: Long,
     @JsonDeserialize(keyAs = classOf[java.lang.Integer])
     partitions: SortedMap[Int, NextOffset],
@@ -104,6 +109,7 @@ final case class JournalManifest(
   def delta: Boolean = added.isDefined
   def removedKeys: Seq[String] = removed.getOrElse(Nil)
   def addedEntries: Seq[JournalFile] = added.getOrElse(Nil)
+  def schemas: Seq[String] = earlierSchemas.getOrElse(Nil) :+ schema
 }
 
 /** `pending-delete/v{v:012d}-{appId}.json`: the paths the journal truncate

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
@@ -14,6 +14,12 @@ import org.apache.spark.sql.types._
   *
   * Anything else (narrowing, incompatible changes) fails fast — silent
   * coercion is how lakes rot.
+  *
+  * Both tables keep a LADDER: every schema version, oldest first, the last
+  * one current. Each data file records the rung it was written under and is
+  * read under it, then aligned to the last rung (Iceberg's rule) — so no
+  * file is rewritten on evolution and no reader has to widen what parquet
+  * cannot (an INT64 column read as double).
   *
   * The reference has no schema system at all (bytes in, bytes out —
   * common/.../AlreadyBytesConverter.java:20-33); this module is where the
@@ -96,18 +102,49 @@ object SchemaEvolution {
     StructType(mergedExisting ++ added)
   }
 
-  /** Project `df` onto `target`: cast widened columns, fill missing ones
-    * with nulls, keep target order (and target's name spelling — resolution
-    * is case-insensitive like Spark's own). Pure Column ops — stays inside
-    * whole-stage codegen.
+  /** A ladder from its JSON rungs, oldest first. */
+  def ladder(json: Seq[String]): IndexedSeq[StructType] =
+    json.map(DataType.fromJson(_).asInstanceOf[StructType]).toIndexedSeq
+
+  /** The ladder after a commit whose schema is `next`: a new rung only when
+    * `next` differs from the last one.
     */
-  def align(df: DataFrame, target: StructType): DataFrame = {
-    val have = df.schema.fieldNames.map(n => keyOf(n) -> n).toMap
-    df.select(target.fields.map { f =>
-      have.get(keyOf(f.name)) match {
+  def grow(ladder: IndexedSeq[StructType], next: StructType): IndexedSeq[StructType] =
+    if (ladder.lastOption.contains(next)) ladder else ladder :+ next
+
+  /** The ladder after a batch of schema `incoming` merges in (see [[merge]]). */
+  def evolve(ladder: IndexedSeq[StructType], incoming: StructType): IndexedSeq[StructType] =
+    grow(ladder, ladder.lastOption.fold(incoming)(merge(_, incoming)))
+
+  /** Read `files` — (rung id, path) pairs — each under the rung it was
+    * written with, aligned to the last rung and unioned by name. No file
+    * gives an empty frame under the last rung.
+    */
+  def read(spark: SparkSession, ladder: IndexedSeq[StructType],
+      files: Seq[(Int, String)]): DataFrame = {
+    val target = ladder.last
+    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], target)
+    else files.groupBy(_._1).toSeq.sortBy(_._1).map { case (rung, fs) =>
+      align(spark.read.schema(ladder(rung)).parquet(fs.map(_._2): _*), target)
+    }.reduce(_.unionByName(_))
+  }
+
+  /** The columns that project a frame with columns `have` onto `target`:
+    * widened columns cast, missing ones null, in target order and target's
+    * name spelling — resolution is case-insensitive like Spark's own. Pure
+    * Column ops — stays inside whole-stage codegen.
+    */
+  def project(have: Seq[String], target: StructType): Seq[Column] = {
+    val byKey = have.map(n => keyOf(n) -> n).toMap
+    target.fields.toSeq.map { f =>
+      byKey.get(keyOf(f.name)) match {
         case Some(actual) => col(actual).cast(f.dataType).as(f.name)
         case None => lit(null).cast(f.dataType).as(f.name)
       }
-    }.toIndexedSeq: _*)
+    }
   }
+
+  /** Project `df` onto `target` (see [[project]]). */
+  def align(df: DataFrame, target: StructType): DataFrame =
+    df.select(project(df.columns.toSeq, target): _*)
 }

@@ -22,8 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * read to its snapshot swap; the publish window from the first operation
   * of `TableIO.publish` (staged files promoted to their names) to the
   * commit, or to the end of an archive write (indexes, cursors, scratch
-  * sweep). Covered: one steady-state lake merge and one journal append in
-  * both windows, one archive write into an existing root, and the metadata
+  * sweep). Covered: one steady-state lake merge, one journal append and one
+  * lake compact in both windows, one archive write into an existing root, and the metadata
   * writes of one maintenance pass (a journal truncate, then a lake vacuum).
   * Whatever the faulted call did, fresh instances on the same roots then
   * replay the batch, and it must hold exactly once: the lake equals the LWW oracle,
@@ -194,6 +194,27 @@ class CommitCrashSpec extends AnyFunSuite {
           val got = journal.readFrom(Map.empty).select(col("partition"), col("offset"))
             .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
           assert(got === want, s"$what: each offset exactly once")
+          assertManifestsResolve(root, what)
+        }
+        info(s"${points.size} crash points: ${points.mkString("; ")}")
+      }
+      changes.unpersist()
+    }
+
+    test(s"every $name operation of a lake compact recovers exactly once") {
+      val (changes, b0, b1) = fixture()
+      val want = rows(ChangeGen.oracleFinalState(changes))
+      withFaultingFs {
+        val template = SparkTestSession.tempDir("crash-compact")
+        new LakeTable(template, spark, subBuckets = 2).merge(b0, 0L)
+        new LakeTable(template, spark, subBuckets = 2).merge(b1, 1L)
+        val points = enumerate(template, "crash-compact-pt", window, kinds) { root =>
+          new LakeTable(root, spark, subBuckets = 2).compact(3)
+          0L
+        } { (root, what) =>
+          val lake = new LakeTable(root, spark, subBuckets = 2)
+          assert(lake.layoutSubBuckets === 3, what)
+          assert(rows(lake.read()) === want, what)
           assertManifestsResolve(root, what)
         }
         info(s"${points.size} crash points: ${points.mkString("; ")}")

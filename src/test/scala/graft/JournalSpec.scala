@@ -3,6 +3,7 @@ package graft
 import graft.gen.ChangeGen
 import graft.lake.{ChangeJournal, TableIO}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ports of S3WriterTest (offset recovery) and S3FilesReaderTest (resume
@@ -354,6 +355,74 @@ class JournalSpec extends AnyFunSuite {
     assert(got.filter(col("offset") >= 50 &&
       (col("score") =!= col("offset") * 1000000000L || col("license") =!= "mit")).isEmpty)
     assert(j.readFrom(Map(0 -> 9L, 1 -> 9L)).count() === 180L)
+  }
+
+  test("a long column widened to double reads whole, across appends and a truncate") {
+    // each file is read under the schema version it was written with, then
+    // cast: parquet cannot read INT64 as double, so a single-schema read fails
+    val j = new ChangeJournal(SparkTestSession.tempDir("jdouble"), spark, 4096)
+    val changes = ChangeGen.changes(spark, 300, nKeys = 40, partitions = 2)
+    def slice(lo: Long) = changes.filter(col("offset") >= lo && col("offset") < lo + 50)
+    val asLong = col("offset") * 3L
+    val asDouble = col("offset") + 0.5
+    // per partition: 3 × (0..49), (50..99) + 0.5, 3 × (100..149)
+    val (s0, s1, s2) = (3.0 * (0 until 50).sum, (50 until 100).map(_ + 0.5).sum,
+      3.0 * (100 until 150).sum)
+    def sumOf(df: org.apache.spark.sql.DataFrame): Double =
+      df.agg(sum("score")).collect()(0).getDouble(0)
+    j.append(slice(0).withColumn("score", asLong), 0L)
+    j.append(slice(50).withColumn("score", asDouble), 1L)
+    assert(j.read().schema("score").dataType === org.apache.spark.sql.types.DoubleType)
+    assert(j.read().count() === 200L)
+    assert(sumOf(j.read()) === 2 * (s0 + s1))
+    // a long score again: stored under the current, double, version
+    j.append(slice(100).withColumn("score", asLong), 2L)
+    assert(sumOf(j.read()) === 2 * (s0 + s1 + s2))
+    assert(sumOf(j.readFrom(Map(0 -> 49L, 1 -> 49L))) === 2 * (s1 + s2))
+    assert(j.read().filter(col("offset") < 50 && col("score") =!= asLong).isEmpty)
+    // every file written under the first version goes
+    assert(j.truncate(Map(0 -> 49L, 1 -> 49L), graceMs = 0L) === 2)
+    assert(j.read().count() === 200L)
+    assert(sumOf(j.read()) === 2 * (s1 + s2))
+  }
+
+  test("a journal records its schema ladder only once its schema changes") {
+    // while the schema never changes, manifests carry no earlier versions
+    // and files no version id (the bytes of a one-version journal); after a
+    // widening append only the files written since carry one
+    import graft.lake.Json
+    val root = SparkTestSession.tempDir("jladder")
+    val j = new ChangeJournal(root, spark, 2048, checkpointEvery = 4)
+    val changes = ChangeGen.changes(spark, 500, partitions = 2)
+    def slice(b: Int) = changes.filter(col("offset") >= b * 50 && col("offset") < (b + 1) * 50)
+    def manifest(v: Int) = Json.parse(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, f"manifest-$v%012d.json")), "UTF-8"))
+    def files(v: Int) = Seq("files", "added").flatMap(k => Option(manifest(v).get(k)))
+      .flatMap(_.elements().asScala)
+    def ids(v: Int) = files(v).map(f => Option(f.get("schemaId")).map(_.asInt))
+    j.append(slice(0), 0L)
+    j.append(slice(1), 1L)
+    Seq(0, 1).foreach { v =>
+      assert(!manifest(v).has("earlierSchemas"), s"v$v")
+      assert(files(v).size === 2 && ids(v).forall(_.isEmpty), s"v$v")
+    }
+    j.append(slice(2).withColumn("license", lit("mit")), 2L)
+    j.append(slice(3).withColumn("license", lit("apache")), 3L)
+    val ladder = manifest(2).get("earlierSchemas")
+    assert(ladder.size === 1 && ladder.get(0).asText === manifest(1).get("schema").asText)
+    assert(ids(2) === Seq(Some(1), Some(1)))
+    assert(manifest(3).get("earlierSchemas") === ladder)
+    val schema = manifest(3).get("schema")
+    // the truncate carries the ladder over; its checkpoint at v4 lists every
+    // live file, the second append's without an id
+    assert(j.truncate(Map(0 -> 49L, 1 -> 49L), graceMs = 0L) === 2)
+    assert(manifest(4).has("files") && manifest(4).get("earlierSchemas") === ladder &&
+      manifest(4).get("schema") === schema)
+    assert(ids(4).sorted === Seq(None, None, Some(1), Some(1), Some(1), Some(1)))
+    val cold = new ChangeJournal(root, spark, 2048, checkpointEvery = 4)
+    assert(cold.read().count() === 300L)
+    assert(cold.read().filter(col("offset") < 100 && col("license").isNotNull).isEmpty)
+    assert(cold.read().filter(col("offset") >= 100 && col("license").isNull).isEmpty)
   }
 
   test("payload columns named like engine internals round-trip") {

@@ -623,6 +623,24 @@ class LakeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { SchemaEvolution.merge(cur, conflicted) }
   }
 
+  test("a batch that spells lang as Lang merges its values; no drifted row reads null") {
+    // the merge projects the batch onto the lake schema with the same
+    // case-insensitive rule as align: a drifted spelling is the same column
+    val changes = ChangeGen.changes(spark, 400, nKeys = 60, partitions = 2, deletePct = 10)
+    val lake = new LakeTable(SparkTestSession.tempDir("lakecase"), spark, subBuckets = 4)
+    lake.merge(changes.filter(col("offset") < 100), 0L)
+    lake.merge(changes.filter(col("offset") >= 100).withColumnRenamed("lang", "Lang"), 1L)
+    assert(lake.currentSchema.get.fieldNames.filter(_.equalsIgnoreCase("lang")).toSeq ===
+      Seq("lang"))
+    val drifted = lake.read().filter(col("offset") >= 100)
+    assert(drifted.count() > 0L)
+    assert(drifted.filter(col("lang").isNull).isEmpty, "a drifted row read back lang = null")
+    val key = Seq("repo", "path", "lang", "offset").map(col)
+    val got = lake.read().select(key: _*)
+    val want = ChangeGen.oracleFinalState(changes).select(key: _*)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
   test("a lake column absent from the batch flips to nullable") {
     // the batch fabricates nulls for the missing column; a non-nullable
     // schema over null-bearing files would be a false constraint Catalyst
