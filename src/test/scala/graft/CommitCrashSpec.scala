@@ -23,8 +23,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * of `TableIO.publish` (staged files promoted to their names) to the
   * commit, or to the end of an archive write (indexes, cursors, scratch
   * sweep). Covered: one steady-state lake merge, one journal append and one
-  * lake compact in both windows, one archive write into an existing root, and the metadata
-  * writes of one maintenance pass (a journal truncate, then a lake vacuum).
+  * lake compact in both windows, one archive write into an existing root,
+  * and the metadata writes of one maintenance pass (a journal truncate, then
+  * a lake vacuum).
   * Whatever the faulted call did, fresh instances on the same roots then
   * replay the batch, and it must hold exactly once: the lake equals the LWW oracle,
   * the journal yields each offset once, no manifest names a missing file;
