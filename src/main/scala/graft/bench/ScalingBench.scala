@@ -25,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   * Usage:
   *   runMain graft.bench.ScalingBench [nEvents] [nBatches] [loCores] [hiCores]
   *   runMain graft.bench.ScalingBench --single <cores> <nEvents> <nBatches>
-  * Driver mode writes BENCH/BASELINE.md and prints one JSON line.
+  * Driver mode prints a markdown report, then one JSON line, to stdout.
   */
 object ScalingBench {
 
@@ -307,9 +307,8 @@ object ScalingBench {
          |is O(#touched buckets) metadata, so nothing in the plan serializes
          |at 10^10 events beyond the snapshot pointer swap.
          |""".stripMargin
-    val out = new java.io.File("BENCH")
-    out.mkdirs()
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH/BASELINE.md"), md)
+    // UTF-8 whatever the locale: the report carries non-ASCII symbols
+    System.out.writeBytes(md.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(
       s"""{"metric":"cdc_replay_scaling","lo_cores":$lo,"hi_cores":$hi,"lo_eps":$epsLo,"hi_eps":$epsHi,"efficiency":$eff,"cpu_lo_eps":${n / cLo},"cpu_hi_eps":${n / cHi},"cpu_efficiency":$cEff,"events":$nEvents}""")
   }

@@ -499,32 +499,11 @@ final class LakeTable(
       val m = LakeManifest(c.version, c.batchId, c.appId, sub, c.checkpointVersion,
         SortedMap.from(wm), schemaVersions.map(_.json), lineage = lineage)
       if (c.full) {
-        // sharded checkpoint: reuse the previous checkpoint's shards for
-        // bucket groups untouched since it. Dirty = groups touched by any
-        // delta in (ckpt, version) plus this commit's own change; a Full
-        // change (compaction) rewrites everything. The recorded
-        // checkpointVersion is advisory (a vacuum may have GC'd it and
-        // materialized a newer one without rewriting successors' fields),
-        // so fall back to walking back to the nearest SURVIVING checkpoint
-        // — without the fallback every shard would be rewritten after each
-        // such vacuum.
-        val prevCkptManifest: Option[LakeManifest] =
-          c.prevCheckpoint.flatMap(log.manifestAt).filter(!_.delta).orElse {
-            Iterator.iterate(c.version - 1)(_ - 1).takeWhile(_ >= 0)
-              .map(log.manifestAt)
-              .takeWhile(_.isDefined).flatten
-              .find(!_.delta)
-          }
-        val prevShards = prevCkptManifest.map(shardMapOf).getOrElse(Map.empty[String, String])
-        val dirty: Set[String] = change match {
-          case Full(_) => c.files.map(f => shardKey(f.partition, f.sub)).toSet
-          case Delta(touched, added) =>
-            val chainDirty = prevCkptManifest.toSeq.flatMap { pc =>
-              ((pc.version + 1) until c.version).flatMap(v => log.manifestAt(v).toSeq
-                .flatMap(_.removedKeys.map((shardKey _).tupled)))
-            }
-            (touched.map((shardKey _).tupled) ++
-              added.map(f => shardKey(f.partition, f.sub)) ++ chainDirty).toSet
+        // sharded checkpoint: reuse the base checkpoint's shards for bucket
+        // groups no commit since it touched (a Full change, compaction, has
+        // no base: every shard is written fresh)
+        val (prevShards, dirty) = c.base().fold((Map.empty[String, String], Set.empty[String])) {
+          case (ckpt, changed) => (shardMapOf(ckpt), changed.map((shardKey _).tupled))
         }
         val shards = writeShards(c.version, c.files, prevShards, dirty)
         // re-verify shard reuse against a concurrent vacuum's GC, as late as
@@ -559,25 +538,27 @@ final class LakeTable(
     if (cur < 0) return (0, 0)
     val keepFrom = math.max(0L, cur - (keepLast - 1))
     val horizon = log.horizon(keepFrom) // versions below this were GC'd by earlier vacuums
+    // one forward fold over [horizon, cur] — one manifest read per version
+    // and one shard read per referenced shard, instead of re-walking each
+    // version's chain independently (O(range × chain) small GETs on an
+    // object store). The materialization, the lineage roll-up and the
+    // shard GC below take the manifests and listings it resolved; none
+    // reads one again.
+    val folded = log.resolveRange(horizon, cur)
     // Keep the kept versions' manifest chains self-contained: if the oldest
     // kept manifest is a delta, rewrite it in place as its (semantically
     // identical) resolved checkpoint, so every manifest below keepFrom can
     // be deleted without breaking fold-forward resolution of kept versions.
-    // Atomic rename: a crash mid-rewrite leaves the old delta intact.
-    log.materialize(keepFrom) { (m, resolved) =>
+    // The shard GC must see the rewrite's shards, so it replaces the delta.
+    val range = folded.get(keepFrom).filter(_._1.delta).fold(folded) { case (d, fs) =>
       // sharded, all partitions written fresh (no reuse bookkeeping at
       // vacuum cadence); a crash after shards but before the atomic
       // manifest rename leaves orphan shards for the grace-window pass
-      m.copy(checkpointVersion = keepFrom, touched = None, added = None,
-        shards = Some(writeShards(keepFrom, resolved, Map.empty,
-          resolved.map(f => shardKey(f.partition, f.sub)).toSet)))
+      val c = d.copy(checkpointVersion = keepFrom, touched = None, added = None,
+        shards = Some(writeShards(keepFrom, fs, Map.empty, Set.empty)))
+      log.materialize(c)
+      folded.updated(keepFrom, c -> fs)
     }
-    // one forward fold over [horizon, cur] — one manifest read per version
-    // and one shard read per referenced shard, instead of re-walking each
-    // version's chain independently (O(range × chain) small GETs on an
-    // object store). The lineage roll-up and the shard GC below take the
-    // manifests it parsed; neither reads one again.
-    val range = log.resolveRange(horizon, cur)
     def manifests(vs: Seq[Long]): Seq[LakeManifest] = vs.flatMap(range.get).map(_._1)
     def pathsOf(v: Long): Seq[String] = range.get(v).toSeq.flatMap(_._2).map(_.path)
     val live: Set[String] = (keepFrom to cur).flatMap(pathsOf).toSet

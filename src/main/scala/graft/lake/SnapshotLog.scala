@@ -40,13 +40,16 @@ private[lake] final case class Delta[K, E](removed: Seq[K], added: Seq[E])
   extends Change[K, E]
 
 /** One commit being written: its header (version, batch, writer), whether
-  * it is a checkpoint, the checkpoint version to record, the previous
-  * commit's recorded checkpoint (None on a brand-new table) and the
-  * post-commit listing.
+  * it is a checkpoint, the checkpoint version to record and the
+  * post-commit listing. `base()` walks the chain (only a checkpoint that
+  * reuses needs it): for a delta change, the nearest checkpoint at or below
+  * the planned head and every key changed since it, this commit's change
+  * included; None for a full change, on a brand-new table, or when the
+  * walk back cannot reach a checkpoint.
   */
-private[lake] final class Commit[E](val version: Long, val batchId: Long,
-    val appId: String, val full: Boolean, val checkpointVersion: Long,
-    val prevCheckpoint: Option[Long], val files: Seq[E])
+private[lake] final class Commit[K, E, M](val version: Long, val batchId: Long,
+    val appId: String, val full: Boolean, val checkpointVersion: Long, val files: Seq[E],
+    val base: () => Option[(M, Set[K])])
 
 /** The versioned log both engine tables run on — the Iceberg-style snapshot
   * log of SURVEY.md §4.1 with Delta Lake's checkpoint cadence: version-named
@@ -143,28 +146,35 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
 
   private def resolve(m: M, retried: Boolean): Seq[E] = {
     if (!m.delta) return codec.checkpoint(m)
-    var chain = List(m)
-    while (chain.head.delta) {
+    val chain = walk(List(m))
+    if (chain.head.delta) {
       val pv = chain.head.version - 1
-      manifestAt(pv) match {
-        case Some(n) => chain = n :: chain
-        case None if !retried =>
-          // Self-heal against a concurrent vacuum: it materializes the
-          // oldest kept version IN PLACE before deleting the chain below
-          // it, so a reader holding pre-materialization manifests restarts
-          // the walk ONCE from a fresh read of its version — if it is
-          // retained, the new walk terminates at the materialized
-          // checkpoint before ever reaching the deleted range. One retry
-          // suffices: materialization is monotone.
-          return resolve(manifestAt(m.version).getOrElse(throw broken(m.version, pv)),
-            retried = true)
-        case None => throw broken(m.version, pv)
-      }
+      // Self-heal against a concurrent vacuum: it materializes the oldest
+      // kept version IN PLACE before deleting the chain below it, so a
+      // reader holding pre-materialization manifests restarts the walk
+      // ONCE from a fresh read of its version — if it is retained, the new
+      // walk terminates at the materialized checkpoint before ever reaching
+      // the deleted range. One retry suffices: materialization is monotone.
+      if (retried) throw broken(m.version, pv)
+      return resolve(manifestAt(m.version).getOrElse(throw broken(m.version, pv)),
+        retried = true)
     }
     val st = stateOf(codec.checkpoint(chain.head))
     chain.tail.foreach(d => applyDelta(st, d.removedKeys, d.addedEntries))
     codec.ordered(st.values.toSeq)
   }
+
+  /** The one chain walk: prepend predecessors to `chain` (oldest first)
+    * until its head is a checkpoint, or until a predecessor is gone (then
+    * the head is still a delta).
+    */
+  @annotation.tailrec
+  private def walk(chain: List[M]): List[M] =
+    if (!chain.head.delta) chain
+    else manifestAt(chain.head.version - 1) match {
+      case Some(p) => walk(p :: chain)
+      case None => chain
+    }
 
   private def broken(v: Long, pv: Long) = new IllegalStateException(
     s"$what manifest chain for version $v broken at $pv under ${io.root} (vacuumed)")
@@ -190,21 +200,19 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
     out.toMap
   }
 
-  /** Rewrite delta manifest `version` in place as its (semantically
-    * identical) resolved checkpoint, so every manifest below it can be
-    * deleted without breaking fold-forward resolution of the versions
-    * above. `checkpoint` turns the delta and its resolved listing into
-    * that checkpoint. Atomic rename: a crash mid-rewrite leaves the old
-    * delta intact.
+  /** Rewrite a delta manifest in place as `checkpoint`, its (semantically
+    * identical) checkpoint made from a [[resolveRange]] fold's listing, so
+    * every manifest below it can be deleted without breaking fold-forward
+    * resolution of the versions above. Reads nothing. Atomic rename: a
+    * crash mid-rewrite leaves the old delta intact.
     */
-  def materialize(version: Long)(checkpoint: (M, Seq[E]) => M): Unit =
-    manifestAt(version).filter(_.delta).foreach { m =>
-      io.writeAtomic(new Path(io.rootPath, SnapshotLog.manifestRel(version)),
-        Json.write(checkpoint(m, resolve(m))))
-      // the rewrite may concern the CURRENT version: drop the parsed
-      // manifest so later reads see the checkpoint, not the stale delta
-      manifestCache = None
-    }
+  def materialize(checkpoint: M): Unit = {
+    io.writeAtomic(new Path(io.rootPath, SnapshotLog.manifestRel(checkpoint.version)),
+      Json.write(checkpoint))
+    // the rewrite may concern the CURRENT version: drop the parsed
+    // manifest so later reads see the checkpoint, not the stale delta
+    manifestCache = None
+  }
 
   private def horizonPath = new Path(io.rootPath, "gc-horizon.txt")
 
@@ -247,8 +255,9 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
 
   /** Commit `change` on top of the pinned head `planned`, as batch
     * `batchId`. `build` makes the table's manifest from the [[Commit]]: its
-    * header, the `checkpointVersion` to record, and either the checkpoint
-    * listing or the delta. Returns the manifest written.
+    * header, the `checkpointVersion` to record, either the checkpoint
+    * listing or the delta, and the base a checkpoint may reuse. Returns the
+    * manifest written.
     *
     * The manifest is checkpointed every `checkpointEvery` versions (and on
     * the first commit and every `Full` change), bounding readers' fold
@@ -257,7 +266,7 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
     * ConcurrentCommitException ([[TableIO.resolveLostVersionClaim]]).
     */
   def commit(planned: Head[M], batchId: Long, change: Change[K, E])
-      (build: Commit[E] => M): M = {
+      (build: Commit[K, E, M] => M): M = {
     io.requirePlanCoherent(planned.version, what)
     val version = planned.version + 1
     // nearest checkpoint at or below the previous version (advisory — the
@@ -275,8 +284,15 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
           .values.toSeq),
           prevCkpt.forall(version - _ >= checkpointEvery))
     }
+    val base = () => change match {
+      case Delta(removed, added) => planned.manifest.map(h => walk(List(h)))
+        .filterNot(_.head.delta).map(chain => chain.head -> (chain.tail
+          .flatMap(d => d.removedKeys ++ d.addedEntries.map(codec.key)) ++
+          removed ++ added.map(codec.key)).toSet)
+      case Full(_) => None
+    }
     val m = build(new Commit(version, batchId, appId, full,
-      if (full) version else prevCkpt.get, prevCkpt, files))
+      if (full) version else prevCkpt.get, files, base))
     val rel = SnapshotLog.manifestRel(version)
     if (!io.createVersioned(new Path(io.rootPath, rel), Json.write(m)))
       io.resolveLostVersionClaim(rel, version, planned.version) {

@@ -130,8 +130,9 @@ class CommitCrashSpec extends AnyFunSuite {
           Try(batch(root)): Unit
           val seen = CommitFaults.disarm(root)
           assert(seen.fired, s"$pt: the faulted run took other operations: ${seen.ops}")
-          replay(pt.toString)(batch(root))
-          check(root, pt.toString)
+          val what = if (crashStop) s"dying $pt" else pt.toString
+          replay(what)(batch(root))
+          check(root, what)
         }
       })
     }.foreach { f =>
@@ -152,6 +153,16 @@ class CommitCrashSpec extends AnyFunSuite {
     (changes, changes.where(col("offset") < 60), changes.where(col("offset") >= 60))
   }
 
+  /** Each point once as one failed operation (which a retry inside the
+    * run may absorb) and, if `dying`, once more as the writer dying there.
+    */
+  private def inModes(dying: Boolean)(enumerateIn: Boolean => Seq[Point]): Unit =
+    for (crashStop <- if (dying) Seq(false, true) else Seq(false)) {
+      val points = enumerateIn(crashStop)
+      info(s"${points.size} ${if (crashStop) "dying" else "failing"} points: " +
+        points.mkString("; "))
+    }
+
   /** the kinds a maintenance pass's points fail: its metadata writes */
   private val maintenanceFaulted = Set("create", "rename", "delete")
 
@@ -167,15 +178,16 @@ class CommitCrashSpec extends AnyFunSuite {
       withFaultingFs {
         val template = SparkTestSession.tempDir("crash-lake")
         new LakeTable(template, spark, subBuckets = 2).merge(b0, 0L)
-        val points = enumerate(template, "crash-lake-pt", window, kinds) { root =>
-          new LakeTable(root, spark, subBuckets = 2).merge(b1, 1L)
-        } { (root, what) =>
-          val lake = new LakeTable(root, spark, subBuckets = 2)
-          assert(lake.lastBatchId === 1L, what)
-          assert(rows(lake.read()) === want, what)
-          assertManifestsResolve(root, what)
+        inModes(dying = window == CommitFaults.commitWindow) { crashStop =>
+          enumerate(template, "crash-lake-pt", window, kinds, crashStop = crashStop) { root =>
+            new LakeTable(root, spark, subBuckets = 2).merge(b1, 1L)
+          } { (root, what) =>
+            val lake = new LakeTable(root, spark, subBuckets = 2)
+            assert(lake.lastBatchId === 1L, what)
+            assert(rows(lake.read()) === want, what)
+            assertManifestsResolve(root, what)
+          }
         }
-        info(s"${points.size} crash points: ${points.mkString("; ")}")
       }
       changes.unpersist()
     }
@@ -187,17 +199,18 @@ class CommitCrashSpec extends AnyFunSuite {
       withFaultingFs {
         val template = SparkTestSession.tempDir("crash-journal")
         new ChangeJournal(template, spark, chunkBytes = 2048).append(b0, 0L)
-        val points = enumerate(template, "crash-journal-pt", window, kinds) { root =>
-          new ChangeJournal(root, spark, chunkBytes = 2048).append(b1, 1L)
-        } { (root, what) =>
-          val journal = new ChangeJournal(root, spark, chunkBytes = 2048)
-          assert(journal.lastBatchId === 1L, what)
-          val got = journal.readFrom(Map.empty).select(col("partition"), col("offset"))
-            .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
-          assert(got === want, s"$what: each offset exactly once")
-          assertManifestsResolve(root, what)
+        inModes(dying = window == CommitFaults.commitWindow) { crashStop =>
+          enumerate(template, "crash-journal-pt", window, kinds, crashStop = crashStop) { root =>
+            new ChangeJournal(root, spark, chunkBytes = 2048).append(b1, 1L)
+          } { (root, what) =>
+            val journal = new ChangeJournal(root, spark, chunkBytes = 2048)
+            assert(journal.lastBatchId === 1L, what)
+            val got = journal.readFrom(Map.empty).select(col("partition"), col("offset"))
+              .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+            assert(got === want, s"$what: each offset exactly once")
+            assertManifestsResolve(root, what)
+          }
         }
-        info(s"${points.size} crash points: ${points.mkString("; ")}")
       }
       changes.unpersist()
     }
@@ -280,15 +293,12 @@ class CommitCrashSpec extends AnyFunSuite {
         journal(template).append(batch, b)
         lake(template).merge(batch, b)
       }
-      // each point once as one failed operation (which a retry inside the
-      // pass may absorb) and once as the pass dying there
-      for (crashStop <- Seq(false, true)) {
-        val points = enumerate(template, "crash-maint-pt", CommitFaults.maintenanceWindow,
+      inModes(dying = true) { crashStop =>
+        enumerate(template, "crash-maint-pt", CommitFaults.maintenanceWindow,
           Set("open", "create", "rename", "delete", "list"), maintenanceFaulted, crashStop) { root =>
           journal(root).truncate(Map(0 -> 19L), graceMs = 0L)
           lake(root).vacuum(keepLast = 2, orphanGraceMs = 0L)._2.toLong
-        } { (root, what0) =>
-          val what = if (crashStop) s"dying $what0" else what0
+        } { (root, what) =>
           val l = lake(root)
           assert(rows(l.read()) === want, what)
           assertManifestsResolve(s"$root/lake", what)
@@ -303,9 +313,106 @@ class CommitCrashSpec extends AnyFunSuite {
             .filterNot(_.startsWith(".")).map("data/" + _)
           assert(onDisk === live, s"$what: the journal's data/ holds exactly its live files")
         }
-        info(s"${points.size} ${if (crashStop) "dying" else "failing"} points: " +
-          points.mkString("; "))
       }
+    }
+    changes.unpersist()
+  }
+
+  /** Five batches of 24 offsets over 2 partitions, the last two of
+    * partition 0 only: the first four, the fifth, and all five. With
+    * `shardGroupSize = 1` each bucket has its own shard. Merges 0-3 leave
+    * checkpoint 0 and deltas 1-3.
+    */
+  private def cadenceFixture() = {
+    val changes = ChangeGen.changes(spark, 240, nKeys = 24, partitions = 2).cache()
+    val batches = (0 until 5).map(b => changes
+      .where(col("offset") >= b * 24 && col("offset") < b * 24 + 24)
+      .where(col("partition") === 0 || b < 3))
+    (changes, batches.init, batches.last, batches.reduce(_ unionByName _))
+  }
+
+  private def cadenceLake(root: String) =
+    new LakeTable(root, spark, subBuckets = 2, checkpointEvery = 4, shardGroupSize = 1)
+
+  private def shardsOf(root: String, version: Long): Map[String, String] =
+    Json.parse(new String(Files.readAllBytes(Paths.get(root, f"manifest-$version%012d.json")),
+      "UTF-8")).get("shards").properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+
+  test("every commit-window operation of a cadence checkpoint after a vacuum recovers exactly once") {
+    // the vacuum keeps versions 2-3: it materializes delta 2 and retires
+    // 0-1, so the checkpoint version 3 records (0) is gone. Merge 4 is a
+    // cadence checkpoint (4 - 0 >= 4); neither it nor delta 3 touches
+    // partition 1, so its base is checkpoint 2, whose partition-1 shards it
+    // reuses
+    val (changes, batches, last, delivered) = cadenceFixture()
+    val want = rows(ChangeGen.oracleFinalState(delivered))
+    withFaultingFs {
+      val template = SparkTestSession.tempDir("crash-cadence")
+      batches.zipWithIndex.foreach { case (b, i) => cadenceLake(template).merge(b, i) }
+      assert(cadenceLake(template).vacuum(keepLast = 2, orphanGraceMs = 0L)._2 === 2)
+      val untouched = shardsOf(template, 2L).filter(_._1.startsWith("1-"))
+      assert(untouched.size === 2)
+      inModes(dying = true) { crashStop =>
+        enumerate(template, "crash-cadence-pt", CommitFaults.commitWindow,
+          Set("open", "create", "rename"), crashStop = crashStop) { root =>
+          cadenceLake(root).merge(last, 4L)
+        } { (root, what) =>
+          val lake = cadenceLake(root)
+          assert(lake.lastBatchId === 4L, what)
+          assert(rows(lake.read()) === want, what)
+          assertManifestsResolve(root, what)
+          val shards = shardsOf(root, 4L)
+          assert(untouched.forall { case (k, rel) => shards(k) == rel },
+            s"$what: untouched groups must reuse checkpoint 2's shards, got $shards")
+        }
+      }
+    }
+    changes.unpersist()
+  }
+
+  test("a cadence checkpoint after a vacuum opens each manifest once and no retired one") {
+    // on the instance that ran the vacuum, as in a pipeline: the merge's
+    // pin reads head 3 and the checkpoint's base walk reads checkpoint 2;
+    // checkpoint 0, which version 3 records, is gone
+    val (changes, batches, last, delivered) = cadenceFixture()
+    withFaultingFs {
+      val root = SparkTestSession.tempDir("crash-cadence-reads")
+      val lake = cadenceLake(root)
+      batches.zipWithIndex.foreach { case (b, i) => lake.merge(b, i) }
+      lake.vacuum(keepLast = 2, orphanGraceMs = 0L)
+      CommitFaults.arm(root, CommitFaults.fromStart)
+      lake.merge(last, 4L)
+      val ops = CommitFaults.disarm(root).ops
+      val opens = ops.filter(o => o.kind == "open" && o.rel.matches("""manifest-\d+\.json"""))
+      assert(opens.map(_.rel).toSet === Set(2L, 3L).map(v => f"manifest-$v%012d.json"), ops)
+      assert(opens.forall(_.n == 1), ops)
+      assert(shardsOf(root, 4L).contains("0-0"), "merge 4 is a checkpoint")
+      assert(rows(lake.read()) === rows(ChangeGen.oracleFinalState(delivered)))
+    }
+    changes.unpersist()
+  }
+
+  test("a vacuum that materializes a delta opens each manifest and each shard once") {
+    // keepFrom 2 is a delta on checkpoint 0: the range fold reads manifests
+    // 0-3 and checkpoint 0's shards; the materialization of 2 writes its
+    // checkpoint from that fold and reads nothing
+    val (changes, batches, _, _) = cadenceFixture()
+    withFaultingFs {
+      val root = SparkTestSession.tempDir("crash-materialize")
+      val lake = new LakeTable(root, spark, subBuckets = 2, shardGroupSize = 1)
+      batches.zipWithIndex.foreach { case (b, i) => lake.merge(b, i) }
+      CommitFaults.arm(root, CommitFaults.fromStart)
+      assert(lake.vacuum(keepLast = 2, orphanGraceMs = 0L)._2 === 2)
+      val ops = CommitFaults.disarm(root).ops
+      val opens = ops.filter(o => o.kind == "open" &&
+        o.rel.matches("""manifest-\d+\.json|shards/.*\.json"""))
+      assert(opens.count(_.rel.startsWith("manifest-")) === 4, ops)
+      assert(opens.count(_.rel.startsWith("shards/")) === 4, ops)
+      assert(opens.forall(_.n == 1), ops)
+      assert(shardsOf(root, 2L).size === 4, "vacuum materializes version 2")
+      assertManifestsResolve(root, "after the vacuum")
+      assert(rows(new LakeTable(root, spark).read()) ===
+        rows(ChangeGen.oracleFinalState(batches.reduce(_ unionByName _))))
     }
     changes.unpersist()
   }
