@@ -41,11 +41,12 @@ private[lake] final case class Delta[K, E](removed: Seq[K], added: Seq[E])
 
 /** One commit being written: its header (version, batch, writer), whether
   * it is a checkpoint, the checkpoint version to record and the
-  * post-commit listing. `base()` walks the chain (only a checkpoint that
-  * reuses needs it): for a delta change, the nearest checkpoint at or below
-  * the planned head and every key changed since it, this commit's change
-  * included; None for a full change, on a brand-new table, or when the
-  * walk back cannot reach a checkpoint.
+  * post-commit listing. `base()` takes the chain the head's listing was
+  * folded from, or walks it (only a checkpoint that reuses needs it): for a
+  * delta change, the nearest checkpoint at or below the planned head and
+  * every key changed since it, this commit's change included; None for a
+  * full change, on a brand-new table, or when the walk back cannot reach a
+  * checkpoint.
   */
 private[lake] final class Commit[K, E, M](val version: Long, val batchId: Long,
     val appId: String, val full: Boolean, val checkpointVersion: Long, val files: Seq[E],
@@ -80,9 +81,11 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
   // a checkpoint manifest is O(live files) of JSON and chain resolution
   // reads up to checkpointEvery of them, so both are computed once per
   // version, not once per accessor (another writer's commit bumps the
-  // version, which invalidates them for free)
+  // version, which invalidates them for free). The listing keeps the chain
+  // it was folded from (oldest first; None when a commit wrote it), so a
+  // checkpoint commit on that head takes its base without a second walk.
   @volatile private var manifestCache: Option[(Long, M)] = None
-  @volatile private var filesCache: Option[(Long, Seq[E])] = None
+  @volatile private var filesCache: Option[(Long, Seq[E], Option[List[M]])] = None
 
   def pin(): Head[M] = io.readSnapshot() match {
     case None => new Head(-1L, -1L, "", () => throw new IllegalStateException("no manifest"))
@@ -116,10 +119,10 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
   def files(h: Head[M]): Seq[E] =
     if (h.version < 0) Nil
     else filesCache match {
-      case Some((v, fs)) if v == h.version => fs
+      case Some((v, fs, _)) if v == h.version => fs
       case _ =>
-        val fs = resolve(h.manifest.get)
-        filesCache = Some((h.version, fs))
+        val (chain, fs) = resolveChain(h.manifest.get, retried = false)
+        filesCache = Some((h.version, fs, Some(chain)))
         fs
     }
 
@@ -142,10 +145,11 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
     * back until a checkpoint appears — the chain is at most
     * `checkpointEvery` long, shorter after a GC materialized a checkpoint).
     */
-  def resolve(m: M): Seq[E] = resolve(m, retried = false)
+  def resolve(m: M): Seq[E] = resolveChain(m, retried = false)._2
 
-  private def resolve(m: M, retried: Boolean): Seq[E] = {
-    if (!m.delta) return codec.checkpoint(m)
+  /** [[resolve]], with the chain it folded (oldest first) */
+  private def resolveChain(m: M, retried: Boolean): (List[M], Seq[E]) = {
+    if (!m.delta) return (List(m), codec.checkpoint(m))
     val chain = walk(List(m))
     if (chain.head.delta) {
       val pv = chain.head.version - 1
@@ -156,12 +160,12 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
       // walk terminates at the materialized checkpoint before ever reaching
       // the deleted range. One retry suffices: materialization is monotone.
       if (retried) throw broken(m.version, pv)
-      return resolve(manifestAt(m.version).getOrElse(throw broken(m.version, pv)),
+      return resolveChain(manifestAt(m.version).getOrElse(throw broken(m.version, pv)),
         retried = true)
     }
     val st = stateOf(codec.checkpoint(chain.head))
     chain.tail.foreach(d => applyDelta(st, d.removedKeys, d.addedEntries))
-    codec.ordered(st.values.toSeq)
+    (chain, codec.ordered(st.values.toSeq))
   }
 
   /** The one chain walk: prepend predecessors to `chain` (oldest first)
@@ -210,8 +214,10 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
     io.writeAtomic(new Path(io.rootPath, SnapshotLog.manifestRel(checkpoint.version)),
       Json.write(checkpoint))
     // the rewrite may concern the CURRENT version: drop the parsed
-    // manifest so later reads see the checkpoint, not the stale delta
+    // manifest so later reads see the checkpoint, not the stale delta, and
+    // the cached chain, whose manifests below it are about to be retired
     manifestCache = None
+    filesCache = filesCache.map { case (v, fs, _) => (v, fs, None) }
   }
 
   private def horizonPath = new Path(io.rootPath, "gc-horizon.txt")
@@ -285,7 +291,9 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
           prevCkpt.forall(version - _ >= checkpointEvery))
     }
     val base = () => change match {
-      case Delta(removed, added) => planned.manifest.map(h => walk(List(h)))
+      case Delta(removed, added) => filesCache
+        .collect { case (v, _, Some(chain)) if v == planned.version => chain }
+        .orElse(planned.manifest.map(h => walk(List(h))))
         .filterNot(_.head.delta).map(chain => chain.head -> (chain.tail
           .flatMap(d => d.removedKeys ++ d.addedEntries.map(codec.key)) ++
           removed ++ added.map(codec.key)).toSet)
@@ -301,7 +309,7 @@ private[lake] final class SnapshotLog[K, E, M <: LogManifest[K, E] : JavaTypeabl
         Snapshot(version, rel, claimed.batchId, claimed.appId)
       }
     io.swapSnapshot(Snapshot(version, rel, batchId, appId), planned.version)
-    filesCache = Some((version, files))
+    filesCache = Some((version, files, None))
     manifestCache = Some((version, m))
     m
   }

@@ -425,13 +425,7 @@ final class TableIO(val root: String, spark: SparkSession,
 
   def readString(p: Path): String = {
     val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
   /** `p`'s content, None when it does not exist. Read-and-catch, not

@@ -48,25 +48,11 @@ object CdcQueries {
   /** stable staging tag suffix for a testdata dir */
   private def dirTag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
 
-  /** Loud guard for the line-framed archive container: a newline inside a
-    * record would be written as two physical lines but counted as one — on
-    * read every later record in the chunk silently shifts by an offset
-    * (the same unescapable-delimiter hazard cdc_text_decode guards). The
-    * reference's text format would corrupt identically; failing loudly at
-    * write time is strictly better.
-    */
-  private[queries] def noNewline(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    // both \n and \r: the read side's line decoder (BufferedReader.readLine)
-    // splits on either, so a bare carriage return would also shift offsets
-    when(c.contains("\n") || c.contains("\r"), raise_error(concat(
-      lit("archive record contains a line terminator — the line-framed "),
-      lit("container cannot represent it: "), c))).otherwise(c)
-
   /** the text-framed archive lines shared by the gz-archive gates */
   private def archiveLines(s: SparkSession, dir: String): DataFrame =
     changes(s, dir).select(col("partition"), col("offset"),
-      noNewline(concat(col("repo"), lit("/"), col("path"), lit("\t"),
-        coalesce(col("content"), lit("")))).as("line"))
+      concat(col("repo"), lit("/"), col("path"), lit("\t"),
+        coalesce(col("content"), lit(""))).as("line"))
 
   /** order-insensitive exact checksum term: md5-derived 60-bit value reduced
     * mod 2^31, so sums stay BIGINT on both engines (a DECIMAL/HUGEINT output
@@ -105,8 +91,8 @@ object CdcQueries {
         when(col("op") === "delete", lit("deletes"))
           .otherwise(lit("upserts")).as("topic"),
         col("partition"), col("offset"),
-        noNewline(concat(col("repo"), lit("/"), col("path"), lit("\t"),
-          coalesce(col("content"), lit("")))).as("line"))
+        concat(col("repo"), lit("/"), col("path"), lit("\t"),
+          coalesce(col("content"), lit(""))).as("line"))
       graft.sources.GzArchive.writeArchiveTopics(lines, root, "offset",
         chunkThreshold = 4096, recordsPerFile = 2000)
       Staging.markReady(s, root)

@@ -242,12 +242,12 @@ object EngineQueries {
       val root = workDir(s, "backfill")
       val c = CdcQueries.changes(s, dir)
       // text framing: op \t repo \t path \t content, null content as ∅.
-      // Newlines cannot ride a line-framed container (loud guard); tabs in
-      // content are safe because the decode splits with limit 4, so only
-      // the first three delimiters are structural.
+      // Newlines cannot ride a line-framed container (the writer refuses
+      // them); tabs in content are safe because the decode splits with
+      // limit 4, so only the first three delimiters are structural.
       val lines = c.select(col("partition"), col("offset"),
-        CdcQueries.noNewline(concat_ws("\t", col("op"), col("repo"), col("path"),
-          coalesce(col("content"), lit("∅")))).as("line"))
+        concat_ws("\t", col("op"), col("repo"), col("path"),
+          coalesce(col("content"), lit("∅"))).as("line"))
       // the full connector bucket layout: date-prefixed keys + cursor files,
       // then the cursor-TRUSTED read (only acknowledged files), exactly what
       // pointing the engine at a migrating user's real bucket does

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedReader, ByteArrayInputStream, ByteArrayOutputStream, InputStreamReader, OutputStream}
+import java.io.{BufferedReader, ByteArrayInputStream, ByteArrayOutputStream, InputStreamReader}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import com.fasterxml.jackson.annotation.{JsonIgnoreProperties, JsonProperty, JsonPropertyOrder}
@@ -11,6 +11,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Byte-level interop with the reference connector's on-disk archive: a
   * data file of CONCATENATED GZIP MEMBERS ("chunks", each a run of whole
@@ -83,24 +84,15 @@ object GzArchive {
   def cursorFileName(topic: String, partition: Int): String =
     f"last_chunk_index.$topic-$partition%05d.txt"
 
-  private final class CountingOutputStream(out: OutputStream) extends OutputStream {
-    var numBytes = 0L
-    override def write(b: Int): Unit = { out.write(b); numBytes += 1 }
-    override def write(b: Array[Byte]): Unit = { out.write(b); numBytes += b.length }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      out.write(b, off, len); numBytes += len
-    }
-    override def flush(): Unit = out.flush()
-    override def close(): Unit = out.close()
-  }
-
   /** Faithful re-expression of BlockGZIPFileWriter (sink/.../BlockGZIPFileWriter.java:103-250)
     * over a Hadoop FileSystem stream (local file, HDFS, or an object store —
     * the create/overwrite + sequential write pattern is what the reference's
     * upload needs). Chunk roll happens BEFORE a write that would push the
     * current member past chunkThreshold uncompressed bytes; an optional
     * header is written as its own leading member so readers know how many
-    * bytes to skip (BlockGZIPFileWriter.java:142-150).
+    * bytes to skip (BlockGZIPFileWriter.java:142-150). Member offsets are
+    * the data stream's own position (`FSDataOutputStream.getPos`), as the
+    * reference takes them from its counting stream.
     */
   final class BlockGzWriter(
       fs: FileSystem,
@@ -123,7 +115,7 @@ object GzArchive {
     def indexFilePath: Path = new Path(dir, indexFileName)
 
     private val chunks = scala.collection.mutable.ArrayBuffer(new MutChunk(firstRecordOffset))
-    private val fileStream = new CountingOutputStream(fs.create(dataFilePath, true))
+    private val fileStream = fs.create(dataFilePath, true)
     private var gzipStream = new GZIPOutputStream(fileStream)
     if (header.nonEmpty) {
       gzipStream.write(header)
@@ -137,7 +129,7 @@ object GzArchive {
       // non-header chunk offsets are derived arithmetically); fatal for our
       // ranged chunk reads, so deliberately fixed. The read side still
       // accepts reference-written (misaligned) files — see chunkBytes.
-      chunks.head.byteOffset = fileStream.numBytes
+      chunks.head.byteOffset = fileStream.getPos
       gzipStream = new GZIPOutputStream(fileStream)
     }
 
@@ -172,7 +164,7 @@ object GzArchive {
 
     private def finishChunk(): Unit = {
       gzipStream.finish() // complete the member without closing the stack
-      current.compressedByteLength = fileStream.numBytes - current.byteOffset
+      current.compressedByteLength = fileStream.getPos - current.byteOffset
     }
 
     def numRecords: Long = chunks.map(_.numRecords).sum
@@ -195,10 +187,11 @@ object GzArchive {
   // ---------------------------------------------------------------- write
 
   /** Distributed archive write: `df` must have (partition INT, a sort
-    * column, line STRING — newline-free). Archive offsets are per-partition
-    * consecutive from `startOffsets` (default 0), like Kafka offsets,
-    * assigned by rank over `sortCol` (which must therefore be unique per
-    * partition for a deterministic archive).
+    * column, line STRING — no `\n` or `\r`, see [[writeArchiveTopics]]).
+    * Archive offsets are per-partition consecutive from `startOffsets`
+    * (default 0), like Kafka offsets, assigned by rank over `sortCol`
+    * (which must therefore be unique per partition for a deterministic
+    * archive).
     *
     * Parallelism is PARTITION-grain: file boundaries are pre-assigned from
     * the offsets (a file starts at each multiple of `recordsPerFile`), the
@@ -239,6 +232,13 @@ object GzArchive {
     * offsets are per-(topic, partition) consecutive, cursors publish per
     * (topic, partition) — each topic's file family is exactly what
     * [[writeArchive]] would have produced alone.
+    *
+    * A `line` holding `\n` or `\r` fails the write before anything is
+    * published: the reader splits lines on either (`BufferedReader.readLine`),
+    * so such a record would be stored as two and read back with every later
+    * offset of its chunk shifted. The reference's text format would corrupt
+    * the same way; the binary container ([[writeArchiveBinary]]) takes any
+    * bytes.
     */
   def writeArchiveTopics(
       df: DataFrame,
@@ -249,14 +249,19 @@ object GzArchive {
       datePrefix: String = "",
       header: Array[Byte] = Array.emptyByteArray,
       trailer: Array[Byte] = Array.emptyByteArray,
-      startOffsets: Map[(String, Int), Long] = Map.empty): Unit =
+      startOffsets: Map[(String, Int), Long] = Map.empty): Unit = {
+    val line = col("line")
+    val framable = when(line.contains("\n") || line.contains("\r"), raise_error(concat(
+      lit("archive record contains a line terminator — the line-framed "),
+      lit("container cannot represent it: "), line))).otherwise(line)
     writeArchivePayload(
       df.select(col("topic"), col("partition"), col(sortCol).as("_sort"),
         // text framing: record bytes = line + trailing newline, UTF-8 (the
         // reference's text format emits its own delimiter)
-        encode(concat(col("line"), lit("\n")), "UTF-8").as("payload")),
+        encode(concat(framable, lit("\n")), "UTF-8").as("payload")),
       root, chunkThreshold, recordsPerFile, datePrefix, header,
       trailer, startOffsets)
+  }
 
   /** `[len:int4 BE][bytes]` built inside codegen (octet_length → hex →
     * 8-wide lpad → unhex = the big-endian 4-byte length the reference's
@@ -354,33 +359,33 @@ object GzArchive {
     // the conf Spark's writes use (context conf + session entries), so the
     // task-side writer picks the same FileSystem as the driver-side publish
     val conf = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
 
     // JOB-COMMIT PROTOCOL (the FileOutputCommitter shape): tasks write ONLY
     // inside their own attempt directory under a job-unique staging area
     // and never touch published paths, so a zombie or speculative attempt —
     // even one that wakes up after the job finished — cannot delete or
-    // clobber a published file. The DRIVER publishes after job success:
-    // rename one surviving attempt's files into place (any attempt — bytes
-    // are deterministic), then move cursors. Tasks report what they wrote
-    // via an accumulator; the driver acknowledges ONLY those files (never a
-    // bucket listing — a listing would also acknowledge ORPHANS from
-    // previously crashed writers, exactly the files the cursor protocol
-    // exists to exclude).
+    // clobber a published file. Each task returns the files it closed as its
+    // result, and Spark keeps exactly one successful attempt's result per
+    // partition. The DRIVER publishes after job success: rename those files
+    // into place, then move cursors. It acknowledges ONLY files a result
+    // names (never a bucket listing — a listing would also acknowledge
+    // ORPHANS from previously crashed writers, exactly the files the cursor
+    // protocol exists to exclude).
     val jobDir = new Path(root, s".inprogress/job-${java.util.UUID.randomUUID()}")
-    val written = spark.sparkContext
-      .collectionAccumulator[(String, Int, Long, Long)]("gzarchive-written")
     // NO second exchange: WindowExec already sorted each task by (_task,
     // topic, partition, _sort), `_aoff` is the row_number over that order
     // and `_file` is monotone in `_aoff`, so every task iterates contiguous
     // (topic, partition, _file) runs in ascending `_aoff` — what the writer
     // loop below needs. A backfill that needs finer fan-out than one task
     // per (topic, partition) can pre-split its input partitions upstream.
-    archiveWriteFrame(df, recordsPerFile, startOffsets)
-      .foreachPartition { rows: Iterator[Row] =>
+    import spark.implicits._
+    val written = archiveWriteFrame(df, recordsPerFile, startOffsets)
+      .mapPartitions { rows: Iterator[Row] =>
         val fs = TableIO.fileSystem(new Path(root), conf.value.value)
         val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
         val tmpDir = new Path(jobDir, s"attempt-$attempt")
+        val closed = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long, Long)]
         var curTopic: String = null
         var curPart = -1
         var curFile = -1L
@@ -388,7 +393,7 @@ object GzArchive {
         def commitW(): Unit = if (bw != null) {
           if (trailer.nonEmpty) bw.writeRaw(trailer, 0L) // format trailer, 0 records
           bw.close() // data then index, inside the attempt dir only
-          written.add((curTopic, curPart, bw.firstRecordOffset, attempt))
+          closed += ((curTopic, curPart, bw.firstRecordOffset, attempt))
           bw = null
         }
         rows.foreach { r =>
@@ -416,20 +421,17 @@ object GzArchive {
           bw.write(payload)
         }
         commitW()
-      }
+        closed.iterator
+      }.collect()
 
-    // Driver-side job commit: publish exactly one attempt per file through
-    // the tables' publish path (retried, one rename each): every data
-    // file, then every index, then the cursors — the reference's upload
-    // order. Partitions this job did not write keep their existing
-    // cursors, and pre-existing orphans stay unacknowledged.
+    // Driver-side job commit: publish the reported files through the
+    // tables' publish path (retried, one rename each): every data file,
+    // then every index, then the cursors — the reference's upload order.
+    // Partitions this job did not write keep their existing cursors, and
+    // pre-existing orphans stay unacknowledged.
     val tio = new TableIO(root, spark)
     val destDir = if (datePrefix.isEmpty) new Path(root) else new Path(root, datePrefix)
-    import scala.jdk.CollectionConverters._
-    val acks = written.value.asScala.toSeq
-      .groupBy(t => (t._1, t._2, t._3)) // a retried task reports twice; pick one
-      .map { case ((t, p, first), reports) => (t, p, first, reports.map(_._4).max) }
-      .toSeq.sortBy(a => (a._1, a._2, a._3))
+    val acks = written.toSeq.sortBy(a => (a._1, a._2, a._3))
     tio.publish(Seq(".gz", ".index.json").map(ext => acks.map { case (t, p, first, attempt) =>
       val name = f"$t-$p%05d-$first%012d$ext"
       new Path(jobDir, s"attempt-$attempt/$name") -> new Path(destDir, name)
@@ -724,7 +726,7 @@ object GzArchive {
       withHeader: Boolean = false)(
       emit: (ChunkTask, String, Iterator[(Long, V)], Array[Byte]) => Iterator[R]): Dataset[R] = {
     val conf = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     spark.createDataset(tasks)(Encoders.product[ChunkTask]).mapPartitions { it =>
       var fs: FileSystem = null
       val headers = scala.collection.mutable.HashMap.empty[String, String]

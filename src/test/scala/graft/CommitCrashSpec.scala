@@ -18,8 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Crash points of the publish and commit windows: every metadata
   * operation fails once, either before the operation or after it (a lost
-  * acknowledgement); in the maintenance pass, the writer also dies there. The commit window runs from a commit's plan-coherence
-  * read to its snapshot swap; the publish window from the first operation
+  * acknowledgement), and in a second run the writer dies there. The commit
+  * window runs from a commit's plan-coherence read to its snapshot swap;
+  * the publish window from the first operation
   * of `TableIO.publish` (staged files promoted to their names) to the
   * commit, or to the end of an archive write (indexes, cursors, scratch
   * sweep). Covered: one steady-state lake merge, one journal append and one
@@ -154,10 +155,10 @@ class CommitCrashSpec extends AnyFunSuite {
   }
 
   /** Each point once as one failed operation (which a retry inside the
-    * run may absorb) and, if `dying`, once more as the writer dying there.
+    * run may absorb) and once more as the writer dying there.
     */
-  private def inModes(dying: Boolean)(enumerateIn: Boolean => Seq[Point]): Unit =
-    for (crashStop <- if (dying) Seq(false, true) else Seq(false)) {
+  private def inModes(enumerateIn: Boolean => Seq[Point]): Unit =
+    for (crashStop <- Seq(false, true)) {
       val points = enumerateIn(crashStop)
       info(s"${points.size} ${if (crashStop) "dying" else "failing"} points: " +
         points.mkString("; "))
@@ -178,7 +179,7 @@ class CommitCrashSpec extends AnyFunSuite {
       withFaultingFs {
         val template = SparkTestSession.tempDir("crash-lake")
         new LakeTable(template, spark, subBuckets = 2).merge(b0, 0L)
-        inModes(dying = window == CommitFaults.commitWindow) { crashStop =>
+        inModes { crashStop =>
           enumerate(template, "crash-lake-pt", window, kinds, crashStop = crashStop) { root =>
             new LakeTable(root, spark, subBuckets = 2).merge(b1, 1L)
           } { (root, what) =>
@@ -199,7 +200,7 @@ class CommitCrashSpec extends AnyFunSuite {
       withFaultingFs {
         val template = SparkTestSession.tempDir("crash-journal")
         new ChangeJournal(template, spark, chunkBytes = 2048).append(b0, 0L)
-        inModes(dying = window == CommitFaults.commitWindow) { crashStop =>
+        inModes { crashStop =>
           enumerate(template, "crash-journal-pt", window, kinds, crashStop = crashStop) { root =>
             new ChangeJournal(root, spark, chunkBytes = 2048).append(b1, 1L)
           } { (root, what) =>
@@ -222,16 +223,17 @@ class CommitCrashSpec extends AnyFunSuite {
         val template = SparkTestSession.tempDir("crash-compact")
         new LakeTable(template, spark, subBuckets = 2).merge(b0, 0L)
         new LakeTable(template, spark, subBuckets = 2).merge(b1, 1L)
-        val points = enumerate(template, "crash-compact-pt", window, kinds) { root =>
-          new LakeTable(root, spark, subBuckets = 2).compact(3)
-          0L
-        } { (root, what) =>
-          val lake = new LakeTable(root, spark, subBuckets = 2)
-          assert(lake.layoutSubBuckets === 3, what)
-          assert(rows(lake.read()) === want, what)
-          assertManifestsResolve(root, what)
+        inModes { crashStop =>
+          enumerate(template, "crash-compact-pt", window, kinds, crashStop = crashStop) { root =>
+            new LakeTable(root, spark, subBuckets = 2).compact(3)
+            0L
+          } { (root, what) =>
+            val lake = new LakeTable(root, spark, subBuckets = 2)
+            assert(lake.layoutSubBuckets === 3, what)
+            assert(rows(lake.read()) === want, what)
+            assertManifestsResolve(root, what)
+          }
         }
-        info(s"${points.size} crash points: ${points.mkString("; ")}")
       }
       changes.unpersist()
     }
@@ -252,22 +254,24 @@ class CommitCrashSpec extends AnyFunSuite {
     withFaultingFs {
       val template = SparkTestSession.tempDir("crash-archive")
       write(template, 0)
-      val points = enumerate(template, "crash-archive-pt", CommitFaults.archiveWindow,
-        Set("mkdirs", "rename", "create", "delete", "list"))(write(_, 20)) { (root, what) =>
-        val got = GzArchive.readCommitted(spark, root, "t")
-          .select(col("partition"), col("offset"), col("value")).collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq.sorted
-        assert(got === all.sorted, s"$what: the committed read is the input, once")
-        assert(GzArchive.fetchOffsets(spark, root, "t") === Map(0 -> 40L, 1 -> 40L), what)
-        (0 until 2).foreach { p =>
-          val key = new String(Files.readAllBytes(
-            Paths.get(root, GzArchive.cursorFileName("t", p))), "UTF-8").trim
-          assert(Files.exists(Paths.get(root, key)), s"$what: cursor $p names $key")
-          assert(Files.exists(Paths.get(root, key.stripSuffix(".index.json") + ".gz")),
-            s"$what: cursor $p names an index without its data file")
+      inModes { crashStop =>
+        enumerate(template, "crash-archive-pt", CommitFaults.archiveWindow,
+          Set("mkdirs", "rename", "create", "delete", "list"), crashStop = crashStop)(
+          write(_, 20)) { (root, what) =>
+          val got = GzArchive.readCommitted(spark, root, "t")
+            .select(col("partition"), col("offset"), col("value")).collect()
+            .map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq.sorted
+          assert(got === all.sorted, s"$what: the committed read is the input, once")
+          assert(GzArchive.fetchOffsets(spark, root, "t") === Map(0 -> 40L, 1 -> 40L), what)
+          (0 until 2).foreach { p =>
+            val key = new String(Files.readAllBytes(
+              Paths.get(root, GzArchive.cursorFileName("t", p))), "UTF-8").trim
+            assert(Files.exists(Paths.get(root, key)), s"$what: cursor $p names $key")
+            assert(Files.exists(Paths.get(root, key.stripSuffix(".index.json") + ".gz")),
+              s"$what: cursor $p names an index without its data file")
+          }
         }
       }
-      info(s"${points.size} crash points: ${points.mkString("; ")}")
     }
   }
 
@@ -293,7 +297,7 @@ class CommitCrashSpec extends AnyFunSuite {
         journal(template).append(batch, b)
         lake(template).merge(batch, b)
       }
-      inModes(dying = true) { crashStop =>
+      inModes { crashStop =>
         enumerate(template, "crash-maint-pt", CommitFaults.maintenanceWindow,
           Set("open", "create", "rename", "delete", "list"), maintenanceFaulted, crashStop) { root =>
           journal(root).truncate(Map(0 -> 19L), graceMs = 0L)
@@ -352,7 +356,7 @@ class CommitCrashSpec extends AnyFunSuite {
       assert(cadenceLake(template).vacuum(keepLast = 2, orphanGraceMs = 0L)._2 === 2)
       val untouched = shardsOf(template, 2L).filter(_._1.startsWith("1-"))
       assert(untouched.size === 2)
-      inModes(dying = true) { crashStop =>
+      inModes { crashStop =>
         enumerate(template, "crash-cadence-pt", CommitFaults.commitWindow,
           Set("open", "create", "rename"), crashStop = crashStop) { root =>
           cadenceLake(root).merge(last, 4L)
@@ -380,6 +384,28 @@ class CommitCrashSpec extends AnyFunSuite {
       val lake = cadenceLake(root)
       batches.zipWithIndex.foreach { case (b, i) => lake.merge(b, i) }
       lake.vacuum(keepLast = 2, orphanGraceMs = 0L)
+      CommitFaults.arm(root, CommitFaults.fromStart)
+      lake.merge(last, 4L)
+      val ops = CommitFaults.disarm(root).ops
+      val opens = ops.filter(o => o.kind == "open" && o.rel.matches("""manifest-\d+\.json"""))
+      assert(opens.map(_.rel).toSet === Set(2L, 3L).map(v => f"manifest-$v%012d.json"), ops)
+      assert(opens.forall(_.n == 1), ops)
+      assert(shardsOf(root, 4L).contains("0-0"), "merge 4 is a checkpoint")
+      assert(rows(lake.read()) === rows(ChangeGen.oracleFinalState(delivered)))
+    }
+    changes.unpersist()
+  }
+
+  test("a fresh instance's cadence checkpoint after a vacuum opens each manifest once") {
+    // a restarted writer: its listing of head 3 folds checkpoint 2 and
+    // delta 3, and the checkpoint commit takes its base from that same
+    // chain instead of walking it again
+    val (changes, batches, last, delivered) = cadenceFixture()
+    withFaultingFs {
+      val root = SparkTestSession.tempDir("crash-cadence-cold")
+      batches.zipWithIndex.foreach { case (b, i) => cadenceLake(root).merge(b, i) }
+      cadenceLake(root).vacuum(keepLast = 2, orphanGraceMs = 0L)
+      val lake = cadenceLake(root)
       CommitFaults.arm(root, CommitFaults.fromStart)
       lake.merge(last, 4L)
       val ops = CommitFaults.disarm(root).ops

@@ -34,6 +34,10 @@ class GzArchiveSpec extends AnyFunSuite {
     Iterator.continually(r.readLine()).takeWhile(_ != null).toSeq
   }
 
+  /** the messages of `t` and its causes */
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+
   private def readFileBytes(p: Path, off: Long, len: Int): Array[Byte] = {
     val in = localFs.open(p)
     val buf = new Array[Byte](len)
@@ -384,8 +388,6 @@ class GzArchiveSpec extends AnyFunSuite {
     out.write(GzArchive.indexJson(huge).getBytes("UTF-8"))
     out.close()
     val e = intercept[Exception] { GzArchive.read(spark, root).count() }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("2 GiB")))
   }
 
@@ -449,9 +451,40 @@ class GzArchiveSpec extends AnyFunSuite {
     out.write(GzArchive.indexJson(skewed).getBytes("UTF-8"))
     out.close()
     val e = intercept[Exception] { GzArchive.read(spark, root).count() }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("surplus")))
+  }
+
+  test("a text record holding a line terminator fails the write; nothing is published") {
+    // the reader splits lines on \n, \r and \r\n, so such a record would be
+    // stored as two lines and read back with every later offset shifted
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val root = SparkTestSession.tempDir("gzterminator")
+    GzArchive.writeArchive((0 until 3).map(i => (0, i.toLong, s"rec $i"))
+      .toDF("partition", "k", "line"), root, "t", "k")
+    def published(): Set[String] = {
+      val base = java.nio.file.Paths.get(root)
+      val s = java.nio.file.Files.walk(base)
+      try s.iterator().asScala.map(base.relativize(_).toString)
+        .filterNot(r => r.isEmpty || r.startsWith(".")).toSet
+      finally s.close()
+    }
+    val before = published()
+    def committed() = GzArchive.readCommitted(spark, root, "t")
+      .select(col("offset"), col("value")).collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq.sortBy(_._1)
+    val want = (0 until 3).map(i => (i.toLong, s"rec $i"))
+    assert(committed() === want)
+    Seq("x\ny", "last\r").foreach { bad =>
+      val e = intercept[Exception] {
+        GzArchive.writeArchive(Seq((0, 3L, "first"), (0, 4L, bad), (0, 5L, "last"))
+          .toDF("partition", "k", "line"), root, "t", "k", startOffsets = Map(0 -> 3L))
+      }
+      assert(messages(e).exists(_.contains("line terminator")), e)
+      assert(published() === before, "no data file, index or cursor is published")
+      assert(committed() === want)
+      assert(GzArchive.fetchOffsets(spark, root, "t") === Map(0 -> 3L))
+    }
   }
 
   test("binary container round-trips arbitrary bytes; index-pruned resume") {
@@ -723,12 +756,12 @@ class GzArchiveSpec extends AnyFunSuite {
   test("executor tasks see the session's Hadoop configuration") {
     // the regression this guards: executor-side `new Configuration()` drops
     // session settings (S3A credentials, endpoints) — archive tasks must
-    // carry the driver's conf via SerializableHadoopConf
+    // carry the driver's conf via Spark's SerializableConfiguration
     import spark.implicits._
     spark.sparkContext.hadoopConfiguration.set("graft.test.key", "carried")
     try {
-      val bc = spark.sparkContext.broadcast(
-        new graft.sources.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+      val bc = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
       val seen = spark.range(4).mapPartitions { _ =>
         Iterator(Option(bc.value.value.get("graft.test.key")).getOrElse("MISSING"))
       }.collect().toSet
